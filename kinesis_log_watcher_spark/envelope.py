@@ -18,9 +18,10 @@ expression — no UDFs, fully codegen'd, and the whole projection is a
 narrow (shuffle-free) map over however many partitions the source has.
 
 ``Log`` is intentionally NOT materialized as a parsed column: the faithful
-translation of Go's ``interface{}`` payload is schema-on-read string access
-(``get_json_object`` per template reference), which also keeps the scan
-schema narrow. See template.py for the access semantics.
+translation of Go's ``interface{}`` payload is schema-on-read — the
+compiled template parses ``LogEntry`` once per row into a struct of only
+the keys it reads — which also keeps the scan schema narrow. See
+template.py for the access semantics.
 """
 
 from __future__ import annotations
@@ -75,9 +76,9 @@ def short_host_id(partition_key: Column) -> Column:
 
     Last ':'-segment of the partition key, then strip a leading ``task/``
     (ECS task ARN) or ``instance/`` (EC2 instance ARN) path prefix.
-    Pure built-ins: split + element_at + regexp_replace.
+    Pure built-ins: substring_index + regexp_replace (no per-row array).
     """
-    last_segment = F.element_at(F.split(partition_key, ":"), -1)
+    last_segment = F.substring_index(partition_key, ":", -1)
     return F.regexp_replace(last_segment, r"^(task/|instance/)", "")
 
 

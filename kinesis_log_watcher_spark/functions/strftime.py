@@ -132,10 +132,19 @@ def trimmed_fraction_col(ts: Column, digits: int = 6) -> Column:
 
     Matches Go's ``.999…`` layout / default time.Time rendering, which
     trims trailing fractional zeros (and the dot when the fraction is 0).
+    Built from the integer micros of the instant (``pmod`` keeps
+    pre-1970 fractions positive, as the seconds ``date_format`` renders
+    are floored) — no extra ``date_format`` or regex per row, and the
+    zone cannot shift it (offsets are whole seconds). Spark timestamps
+    are microsecond-precision, so more than 6 digits add only zeros,
+    which the trim removes.
     """
-    frac = F.date_format(ts, "." + "S" * digits)
-    trimmed = F.regexp_replace(frac, "0+$", "")
-    return F.when(trimmed == ".", F.lit("")).otherwise(trimmed)
+    width = min(digits, 6)
+    frac = F.pmod(F.unix_micros(ts), F.lit(1_000_000))
+    if width < 6:
+        frac = F.floor(frac / 10 ** (6 - width))
+    text = F.concat(F.lit("."), F.lpad(frac.cast("string"), width, "0"))
+    return F.rtrim(F.rtrim(text, F.lit("0")), F.lit("."))
 
 
 def rfc3339nano_col(ts: Column) -> Column:
@@ -154,18 +163,16 @@ def rfc3339nano_col(ts: Column) -> Column:
 
 
 def go_default_render_col(ts: Column) -> Column:
-    """Go's default ``%v`` rendering of time.Time (UTC):
-    ``2006-01-02 15:04:05.999999999 +0000 UTC`` — used when a template
-    says ``{{.Timestamp}}`` with no format (the reference's default
-    template does exactly this, main.go:65).
+    """Go's default ``%v`` rendering of time.Time:
+    ``2006-01-02 15:04:05.999999999 +0000 UTC`` in the session time zone
+    — used when a template says ``{{.Timestamp}}`` with no format (the
+    reference's default template does exactly this, main.go:65). Two
+    ``date_format`` calls: the seconds, then offset and zone name.
     """
     return F.concat(
         F.date_format(ts, "yyyy-MM-dd HH:mm:ss"),
         trimmed_fraction_col(ts),
-        F.lit(" "),
-        F.date_format(ts, "Z"),
-        F.lit(" "),
-        F.date_format(ts, "zzz"),
+        F.date_format(ts, " Z zzz"),
     )
 
 

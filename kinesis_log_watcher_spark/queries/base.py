@@ -104,12 +104,14 @@ _SPREAD_MIN_BYTES = 512 * 1024
 
 
 def _env_int(name: str, default: int) -> int:
-    """Defensive env parse: malformed values fall back to the default
-    instead of raising at query-build time; floors at 0."""
+    """Defensive env parse: a malformed or non-positive value falls back
+    to the default instead of raising at query-build time (a typo like
+    ``-1`` must not disable a floor), as ``sources.files._env_count``."""
     try:
-        return max(0, int(os.environ.get(name, "") or default))
+        n = int(os.environ.get(name, "") or default)
     except ValueError:
         return default
+    return n if n >= 1 else default
 
 
 def _spread_scan(

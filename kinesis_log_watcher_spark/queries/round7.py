@@ -26,9 +26,9 @@ pattern), so the plan a 100 TB user needs is code, not a docstring:
 
 Plus the two remaining round-7 punch-list items:
 
-- template_render_line_variant — the VariantType template engine
-  (compile_template(variant_log=True)) exercised against an oracle AND
-  cross-checked in-row against the string engine.
+- template_render_line_variant — the compiled template's nested
+  ``.Log`` access exercised against an oracle AND cross-checked in-row
+  against a hand-written ``get_json_object`` render.
 - kinesis_sim_shard_split_scan / stream_kinesis_sim_split_resume — the
   simulator's shard-split surface (parent closed at the split point,
   parity-rerouted children with fresh sequence numbers, Kinesis
@@ -471,17 +471,14 @@ def source_quantile_normalize_hist(
 
 
 # ---------------------------------------------------------------------------
-# 5. template_render_line_variant — the VariantType template engine
+# 5. template_render_line_variant — nested .Log access, cross-checked
 # ---------------------------------------------------------------------------
 #
-# compile_template(variant_log=True) routes {{.Log.x}} accesses through
-# Spark 4's VariantType (one parse_json per row, O(log fields) per
-# access) instead of per-access get_json_object. The engine option was
-# property-tested but never oracle-checked; this query renders a
-# 3-field nested-access template with BOTH engines over the same
-# synthesized nested payload, returns the variant engine's line, and
-# pins cross-engine agreement in-row (engines_agree must be TRUE for
-# every row or the hash diverges from the oracle's literal TRUE).
+# Renders a 3-field nested-access template over a synthesized nested
+# payload and pins in-row agreement with an independent render of the
+# same fields (engines_agree must be TRUE for every row or the hash
+# diverges from the oracle's literal TRUE). The name is kept from the
+# VariantType engine this query used to check.
 
 _VARIANT_TPL = (
     "{{.ShortHostId}} k={{.Log.k}} ty={{.Log.meta.ty}} seq={{.Log.meta.seq}}"
@@ -513,25 +510,20 @@ _VARIANT_SQL = """
 @register(
     "template_render_line_variant",
     _VARIANT_SQL,
-    doc="X5/T1 via VariantType (template.py _compile_log_access_variant): "
-    "the default-dialect template engine with variant_log=True — the "
-    "payload is parse_json'd ONCE per row and every {{.Log.*}} access "
-    "is a try_variant_get path lookup (plan shows variant_get, not "
-    "get_json_object). The same template is compiled with the string "
-    "engine in the same projection; engines_agree pins byte equality "
-    "between the two engines row-by-row, and the DuckDB oracle "
-    "independently restates the render. Nested access ({{.Log.meta.ty}}) "
-    "exercises the intermediate-object traversal path.",
+    doc="X5/T1: the compiled template parses the payload ONCE per row "
+    "into a struct of the top-level keys it reads (from_json), and "
+    "nested access ({{.Log.meta.ty}}) walks into the 'meta' field's "
+    "JSON text — the intermediate-object traversal path. engines_agree "
+    "pins byte equality row-by-row with a hand-written get_json_object "
+    "concat of the same fields over the raw payload, and the DuckDB "
+    "oracle independently restates the render.",
 )
 def template_render_line_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.envelope import short_host_id
     from kinesis_log_watcher_spark.queries.watcher_surface import _partition_key
     from kinesis_log_watcher_spark.template import compile_template
 
-    t_var = compile_template(_VARIANT_TPL, variant_log=True)
-    t_str = compile_template(_VARIANT_TPL)
-    # spread=True: the double render (variant + string) is a heavy map
-    # side (measured 2.8 -> 0.9s at sf0.1, A/B r12).
+    compiled = compile_template(_VARIANT_TPL)
     ev = load(spark, sf_dir, "events", spread=True)
     payload = F.concat(
         F.lit('{"k": '),
@@ -549,16 +541,16 @@ def template_render_line_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
         short_host_id(_partition_key()).alias("ShortHostId"),
         payload.alias("LogEntry"),
     )
-    # Hoisted prep for BOTH engines (prep column names are unique per
-    # compile, so the two preps chain on one DataFrame): each engine
-    # parses the payload ONCE per row — the self-contained columns
-    # would re-parse at every access site x both uses (measured 32s ->
-    # ~2s at sf0.1 for this 3-access template).
-    prepped = t_str._prepped(t_var._prepped(env))
-    return prepped.filter(~t_var.error_h).select(
-        "event_id",
-        t_var.line_h.alias("line"),
-        (t_var.line_h == t_str.line_h).alias("engines_agree"),
+    by_hand = F.concat(
+        F.col("ShortHostId"),
+        F.lit(" k="), F.get_json_object("LogEntry", "$.k"),
+        F.lit(" ty="), F.get_json_object("LogEntry", "$.meta.ty"),
+        F.lit(" seq="), F.get_json_object("LogEntry", "$.meta.seq"),
+    )
+    return compiled.apply(
+        env.withColumn("by_hand", by_hand), keep=("event_id", "by_hand")
+    ).select(
+        "event_id", "line", (F.col("line") == F.col("by_hand")).alias("engines_agree")
     )
 
 

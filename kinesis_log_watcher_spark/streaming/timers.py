@@ -219,10 +219,14 @@ def run_timer_sessions(
     # sentinel file, with the cross-batch state continuation preserved
     # by the time split. Both halves are staged by ONE partitioned write
     # (part = which side of the median ts) instead of two filter+
-    # coalesce(1) write jobs — events is scanned once, not twice.
-    staged = ev.withColumn(
-        "part", F.when(F.col("ts") <= bounds.mid, 0).otherwise(1)
-    ).unionAll(sentinel.withColumn("part", F.lit(1)))
+    # coalesce(1) write jobs — events is scanned once, not twice. Null-ts
+    # rows are dropped first, as the two ts filters did (the CASE below
+    # would route them to part 1).
+    staged = (
+        ev.filter(F.col("ts").isNotNull())
+        .withColumn("part", F.when(F.col("ts") <= bounds.mid, 0).otherwise(1))
+        .unionAll(sentinel.withColumn("part", F.lit(1)))
+    )
     replay = stage_replay_files_split(spark, staged, "part", 2, prefix="timer_sess_")
     stream = normalize_ts_cols(
         read_parquet_stream(spark, replay, max_files_per_trigger=1)

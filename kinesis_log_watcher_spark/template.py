@@ -74,6 +74,10 @@ reference's execution semantics declaratively:
   ``CompiledTemplate.apply`` and watcher.py.
 - unparseable payload → ``Log`` is nil (main.go:276-279); any
   ``{{.Log.x}}`` then errors → row dropped.
+- the payload is parsed ONCE per row (a hoisted ``from_json`` into a
+  struct of exactly the top-level keys the template reads — see
+  ``_hoisted_payload``); a key repeated at the top level of the payload
+  renders its LAST value, as Go's ``encoding/json`` decodes it.
 - a *missing* key on a parsed JSON object renders Go's ``<no value>``
   placeholder (Go map semantics), not an error.
 - an unknown top-level field likewise renders ``<no value>`` (the
@@ -84,15 +88,21 @@ Documented divergences (all on contrived payloads, none load-bearing):
   errors, not supported — the range body compiles to a per-element
   ``transform``, which has no early exit. Loud failure, never silent
   wrong output.
-- JSON leaves are accessed as their text (``get_json_object``), so a JSON
-  string ``"false"``/``"0"`` is indistinguishable from boolean
-  false / number 0 for truthiness and ``eq``.
+- JSON leaves are accessed as their text (struct fields of type
+  ``string`` / ``get_json_object``), so a JSON string ``"false"``/``"0"``
+  is indistinguishable from boolean false / number 0 for truthiness and
+  ``eq``.
+- duplicate keys BELOW the top level (``.Log.a.b``), and under
+  ``{{range .Log…}}``, resolve to the FIRST value (``get_json_object`` /
+  map parse); Go keeps the last.
+- a JSON object followed by trailing data (``{"a":1} x``) parses as the
+  object (Jackson stops after the first value); Go rejects it.
 - ``lt/le/gt/ge`` compare numerically when both sides cast to double,
   else lexicographically (Go compares within one static type).
 - a ``printf`` numeric verb (%d/%f/…) whose argument doesn't parse is a
   render error (Go renders a ``%!d(...)`` marker instead).
 
-Everything is built-ins (``concat``, ``get_json_object``,
+Everything is built-ins (``concat``, ``from_json``, ``get_json_object``,
 ``json_object_keys``, ``date_format``, ``format_string``): the whole
 render — control flow included, compiled to ``CASE WHEN`` — is a
 codegen'd narrow projection. No Python in the per-row path, no shuffle,
@@ -101,12 +111,14 @@ linear scale-out with input partitions.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
-import threading
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from kinesis_log_watcher_spark.envelope import ENVELOPE_ALIASES, ENVELOPE_FIELDS
 from kinesis_log_watcher_spark.functions.strftime import (
@@ -153,25 +165,22 @@ def _canonical(name: str) -> str | None:
 class CompiledTemplate:
     """A template compiled to (rendered line, render-error condition).
 
-    ``line``/``error`` are self-contained Columns — usable in any
-    projection over an envelope DataFrame. ``prep``/``line_h``/``error_h``
-    are the *hoisted* variants: the whole-payload parse and every
-    ``{{range}}`` collection parse are lifted into named prep columns
-    that ``line_h``/``error_h`` reference as attributes, so the JSON is
-    parsed ONCE per row instead of once per reference site (higher-order
-    functions are CodegenFallback, so Catalyst never dedupes those
-    subtrees; see _compile_range). Each prep column is wrapped in a
-    non-foldable non-deterministic gate (``_gate``) — without it,
-    pruning + CollapseProject + PushDownPredicates substitute the parses
-    right back into the error filter and line projection and undo the
-    hoist."""
+    ``line``/``error`` read the *hoisted* ``prep`` columns: the ``.Log``
+    payload parse (ONE ``from_json`` per row into a struct of exactly the
+    top-level keys the template reads) and every hoistable ``{{range}}``
+    collection parse, so the JSON is parsed once per row instead of once
+    per reference site (higher-order functions are CodegenFallback, so
+    Catalyst never dedupes those subtrees; see _compile_range). They are
+    valid only over ``_prepped(df)`` — use ``apply``/``apply_with_errors``.
+    Each prep column is wrapped in a non-foldable non-deterministic gate
+    (``_gate``) — without it, pruning + CollapseProject +
+    PushDownPredicates substitute the parses right back into the error
+    filter and line projection and undo the hoist."""
 
     line: Column
     error: Column
     source: str
     prep: dict[str, Column] = field(default_factory=dict)
-    line_h: Column | None = None
-    error_h: Column | None = None
 
     @staticmethod
     def _gate(c: Column, streaming: bool) -> Column:
@@ -214,23 +223,19 @@ class CompiledTemplate:
         """Render against an envelope DataFrame, dropping error rows
         (reference E1 semantics: bad rows vanish from output,
         main.go:283-287)."""
-        if self.prep:
-            return (
-                self._prepped(df)
-                .filter(~self.error_h)
-                .select(*keep, self.line_h.alias(out_col))
-            )
-        return df.filter(~self.error).select(*keep, self.line.alias(out_col))
+        return (
+            self._prepped(df)
+            .filter(~self.error)
+            .select(*keep, self.line.alias(out_col))
+        )
 
-    def apply_with_errors(self, df: DataFrame, out_col: str = "line") -> DataFrame:
+    def apply_with_errors(
+        self, df: DataFrame, out_col: str = "line", keep: tuple[str, ...] = ()
+    ) -> DataFrame:
         """Keep all rows; adds a boolean ``_render_error`` column. Used by
         the sink to implement report-first-error-once (main.go:283-286)."""
-        if self.prep:
-            return self._prepped(df).select(
-                self.line_h.alias(out_col), self.error_h.alias("_render_error")
-            )
-        return df.select(
-            self.line.alias(out_col), self.error.alias("_render_error")
+        return self._prepped(df).select(
+            *keep, self.line.alias(out_col), self.error.alias("_render_error")
         )
 
 
@@ -422,21 +427,49 @@ def _parse(template: str) -> tuple[list, dict[str, list]]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
 class _Expr:
     """A compiled pipeline value: rendered text, Go truthiness, render
     error. ``log_parts`` is set when the value is a .Log path (so
     ``with`` can rebind dot under it); ``is_timestamp`` marks the
-    envelope Timestamp for strftime/Format."""
+    envelope Timestamp for strftime/Format.
 
-    col: Column  # string-rendered value
-    truth: Column
-    err: Column
-    log_parts: list[str] | None = None
-    is_timestamp: bool = False
-    # Uncoalesced JSON text of the value (no <no value> substitution) —
-    # what {{range}} parses and {{with}} rebinds dot onto.
-    raw: Column | None = None
+    ``col``/``truth``/``raw`` may be given as zero-argument builders:
+    each is built on first read, so a value nobody tests for truth (a
+    plain ``{{.Log.x}}`` action) never pays the py4j calls of its
+    truthiness tree. ``err`` is None when the value can never error."""
+
+    __slots__ = ("_col", "_truth", "err", "log_parts", "is_timestamp", "_raw")
+
+    def __init__(self, col, truth, err: Column | None = None,
+                 log_parts: list[str] | None = None, is_timestamp: bool = False,
+                 raw=None):
+        self._col = col  # string-rendered value
+        self._truth = truth
+        self.err = err
+        self.log_parts = log_parts
+        self.is_timestamp = is_timestamp
+        # Uncoalesced JSON text of the value (no <no value> substitution) —
+        # what {{range}} parses and {{with}} rebinds dot onto.
+        self._raw = raw
+
+    def _force(self, slot: str) -> Column | None:
+        v = getattr(self, slot)
+        if v is not None and not isinstance(v, Column):
+            v = v()
+            setattr(self, slot, v)
+        return v
+
+    @property
+    def col(self) -> Column:
+        return self._force("_col")
+
+    @property
+    def truth(self) -> Column:
+        return self._force("_truth")
+
+    @property
+    def raw(self) -> Column | None:
+        return self._force("_raw")
 
 
 @dataclass
@@ -467,17 +500,77 @@ class _Ctx:
         return replace(base, vars=self.vars, dollar=self.dollar)
 
 
-# Hoisting context: when not None, _compile_range registers its parsed
-# collection here (name → Column) and references it as an attribute.
-# Single-threaded per compile_template call; reset around each compile.
-_ACTIVE_PREP: dict[str, Column] | None = None
-_HOIST_SEQ = 0  # unique prefix per compile, so two templates can share a df
+# Unique prep-column prefix per compile, so two templates can share a df.
+_COMPILE_IDS = itertools.count(1)
 
-_FALSE = None  # placeholder; F.lit needs an active session at call time
+# Corrupt-record field of the payload struct. Template keys are \w+, so
+# '#' keeps this name off every key a template can read (a payload key
+# of this name is ignored: from_json excludes the field from parsing).
+_CORRUPT = "#corrupt"
+
+
+class _Compiler:
+    """Per-compile state: the {{define}} bodies being inlined, the
+    current inline depth of each (recursion guard), the hoisted prep
+    columns, and the top-level ``.Log`` keys the template reads."""
+
+    def __init__(self, defines: dict[str, list]) -> None:
+        self.defines = defines
+        self.expanding: dict[str, int] = {}  # name → inline-expansion depth
+        self.prefix = f"__tpl{next(_COMPILE_IDS)}"
+        self.prep: dict[str, Column] = {}
+        self.log_keys: list[str] = []
+        self._not_object: Column | None = None
+
+    @functools.cached_property
+    def _payload(self) -> Column:
+        return F.col(self.prefix + "_payload")
+
+    def log_field(self, key: str) -> Column:
+        """Top-level payload field ``key`` as JSON text (null if absent)."""
+        if key not in self.log_keys:
+            self.log_keys.append(key)
+        return self._payload[f"f{self.log_keys.index(key)}"]
+
+    def not_object(self) -> Column:
+        """True when the payload is not a JSON object (Log is nil or a
+        non-object; main.go:276-279) — one shared Column, so every
+        ``.Log`` access ORs the same condition."""
+        if self._not_object is None:
+            pay = self._payload
+            self._not_object = pay.isNull() | pay["bad"].isNotNull()
+        return self._not_object
+
+    def finish(self) -> dict[str, Column]:
+        """The prep columns, with the payload parse registered if any
+        ``.Log`` access read it (see ``_hoisted_payload``)."""
+        if self._not_object is not None or self.log_keys:
+            self.prep[self.prefix + "_payload"] = _hoisted_payload(self.log_keys)
+        return self.prep
 
 
 def _false() -> Column:
     return F.lit(False)
+
+
+def _or(a: Column | None, b: Column | None) -> Column | None:
+    """OR of two render-error conditions (None = can never error)."""
+    if a is None or a is b:
+        return b
+    if b is None:
+        return a
+    return a | b
+
+
+def _err_col(e: Column | None) -> Column:
+    return _false() if e is None else e
+
+
+def _when_err(cond: Column, a: Column | None, b: Column | None) -> Column | None:
+    """The error of a two-way branch: ``a`` where ``cond``, else ``b``."""
+    if a is None and b is None:
+        return None
+    return F.when(cond, _err_col(a)).otherwise(_err_col(b))
 
 
 def _truthy_json(v: Column) -> Column:
@@ -494,9 +587,13 @@ def _truthy_json(v: Column) -> Column:
     )
 
 
-def _bool_expr(truth: Column, err: Column) -> _Expr:
+def _nonempty(v: Column) -> Column:
+    return v.isNotNull() & (v != "")
+
+
+def _bool_expr(truth: Column, err: Column | None) -> _Expr:
     return _Expr(
-        col=F.when(truth, F.lit("true")).otherwise(F.lit("false")),
+        col=lambda: F.when(truth, F.lit("true")).otherwise(F.lit("false")),
         truth=truth,
         err=err,
     )
@@ -518,7 +615,7 @@ def _expr_struct(e: _Expr) -> Column:
     return F.struct(
         e.col.alias("col"),
         e.truth.alias("truth"),
-        e.err.alias("err"),
+        _err_col(e.err).alias("err"),
         (e.raw if e.raw is not None else _null_str()).alias("raw"),
     )
 
@@ -537,7 +634,7 @@ def _join_expr(cond: Column, a: _Expr, b: _Expr) -> _Expr:
     return _Expr(
         col=F.when(cond, a.col).otherwise(b.col),
         truth=F.when(cond, a.truth).otherwise(b.truth),
-        err=F.when(cond, a.err).otherwise(b.err),
+        err=_when_err(cond, a.err, b.err),
         raw=F.when(
             cond, a.raw if a.raw is not None else _null_str()
         ).otherwise(b.raw if b.raw is not None else _null_str()),
@@ -575,54 +672,46 @@ def _json_path(parts: list[str]) -> str:
     return "$." + ".".join(parts)
 
 
-def _hoisted_payload() -> Column:
-    """The shared whole-payload parse (one ``from_json`` into
-    ``map<string,string>`` per row, hoisted into a prep column). Every
-    ``.Log`` access in the hoisted compile pass reads top-level fields
-    from this map instead of re-parsing ``LogEntry`` per reference site
-    — ``get_json_object``/``json_object_keys`` each re-parse the whole
-    payload, and inside higher-order functions (CodegenFallback,
-    interpreted) Catalyst never dedupes those subtrees.
+def _hoisted_payload(keys: list[str]) -> Column:
+    """The shared whole-payload parse, hoisted into a prep column: ONE
+    ``from_json`` per row into a struct of exactly the top-level keys the
+    template reads, every field ``string``. A string field keeps the
+    leaf's JSON text (numbers normalized, nested values re-serialized
+    compactly — the bytes ``get_json_object`` gives), so every ``.Log``
+    access reads a struct field instead of re-parsing ``LogEntry`` per
+    reference site (``get_json_object``/``json_object_keys`` each
+    re-parse the whole payload, and inside higher-order functions —
+    CodegenFallback, interpreted — Catalyst never dedupes them).
 
-    Jackson backs both paths, so leaf texts are byte-identical
-    (numbers normalized the same, nested values re-serialized
-    compactly, FIRST duplicate key wins in both — measured). NB: Go's
-    ``encoding/json`` keeps the LAST duplicate key, so duplicate-key
-    payloads diverge from the reference on either engine path — a
-    documented divergence of the contrived-payload class, not a
-    hoist-specific one."""
-    name = f"__tpl{_HOIST_SEQ}_payload"
-    if name not in _ACTIVE_PREP:
-        _ACTIVE_PREP[name] = F.from_json(F.col("LogEntry"), "map<string,string>")
-    return F.col(name)
+    The object test is the corrupt-record field: a null struct (empty
+    or null input) or a set ``#corrupt`` field (invalid JSON, or valid
+    JSON that is not an object) means Log is not a JSON object.
 
+    Fields are read by position: the struct is cast to ``f0…fN, bad``
+    because Catalyst resolves struct fields case-insensitively, so
+    ``.Log.level`` and ``.Log.Level`` in one template would otherwise be
+    ambiguous (the parse itself matches keys case-sensitively, as Go's
+    map lookup does).
 
-def _compile_log_access_hoisted(parts: list[str]) -> _Expr:
-    """``{{.Log.p…}}`` via the shared payload map — same semantics as
-    ``_compile_log_access`` (null map ≡ payload not a JSON object),
-    zero additional payload parses."""
-    pay = _hoisted_payload()
-
-    def sub(upto: int) -> Column:
-        if upto == 1:
-            return pay[parts[0]]
-        return F.get_json_object(pay[parts[0]], _json_path(parts[1:upto]))
-
-    error = pay.isNull()
-    for i in range(1, len(parts)):
-        error = error | F.json_object_keys(sub(i)).isNull()
-    leaf = sub(len(parts))
-    return _Expr(
-        col=F.coalesce(leaf, F.lit(NO_VALUE)),
-        truth=_truthy_json(leaf),
-        err=error,
-        log_parts=list(parts),
-        raw=leaf,
+    Duplicate keys: the struct keeps the LAST value of a repeated
+    top-level key, as Go's ``encoding/json`` does. Access below the top
+    level (``.Log.a.b``) and ``{{range .Log…}}`` still go through
+    ``get_json_object`` / ``from_json`` maps, where the FIRST duplicate
+    wins — a documented divergence of the contrived-payload class."""
+    fields = [StructField(k, StringType()) for k in keys]
+    schema = StructType(fields + [StructField(_CORRUPT, StringType())])
+    positional = StructType(
+        [StructField(f"f{i}", StringType()) for i in range(len(keys))]
+        + [StructField("bad", StringType())]
     )
+    return F.from_json(
+        F.col("LogEntry"), schema, {"columnNameOfCorruptRecord": _CORRUPT}
+    ).cast(positional)
 
 
-def _compile_log_access(parts: list[str]) -> _Expr:
-    """Access ``{{.Log.p1.p2…}}`` into the dynamic JSON payload.
+def _compile_log_access(parts: list[str], comp: _Compiler) -> _Expr:
+    """Access ``{{.Log.p1.p2…}}`` into the dynamic JSON payload, via the
+    shared payload struct (``_hoisted_payload``).
 
     Faithful Go semantics (main.go:273-279 + text/template map rules):
     - payload not a JSON object (incl. unparseable) → render error
@@ -633,18 +722,20 @@ def _compile_log_access(parts: list[str]) -> _Expr:
     - leaf object/array → its JSON text (divergence: Go prints Go-syntax
       ``map[…]``; we print JSON — documented, not load-bearing)
     """
-    if _ACTIVE_PREP is not None:
-        return _compile_log_access_hoisted(parts)
-    entry = F.col("LogEntry")
-    # Log itself must be an object or access errors (nil / non-object).
-    error = F.json_object_keys(entry).isNull()
+    top = comp.log_field(parts[0])
+
+    def sub(upto: int) -> Column:
+        if upto == 1:
+            return top
+        return F.get_json_object(top, _json_path(parts[1:upto]))
+
+    error = comp.not_object()
     for i in range(1, len(parts)):
-        inter = F.get_json_object(entry, _json_path(parts[:i]))
-        error = error | F.json_object_keys(inter).isNull()
-    leaf = F.get_json_object(entry, _json_path(parts))
+        error = error | F.json_object_keys(sub(i)).isNull()
+    leaf = sub(len(parts))
     return _Expr(
-        col=F.coalesce(leaf, F.lit(NO_VALUE)),
-        truth=_truthy_json(leaf),
+        col=lambda: F.coalesce(leaf, F.lit(NO_VALUE)),
+        truth=lambda: _truthy_json(leaf),
         err=error,
         log_parts=list(parts),
         raw=leaf,
@@ -658,9 +749,8 @@ def _json_elem_access(base: Column, parts: list[str]) -> _Expr:
     the root object."""
     if not parts:
         return _Expr(
-            col=F.coalesce(base, F.lit(NO_VALUE)),
-            truth=_truthy_json(base),
-            err=_false(),
+            col=lambda: F.coalesce(base, F.lit(NO_VALUE)),
+            truth=lambda: _truthy_json(base),
             raw=base,
         )
     # field access requires the element to be an object (nil/scalar → error)
@@ -670,69 +760,27 @@ def _json_elem_access(base: Column, parts: list[str]) -> _Expr:
         error = error | F.json_object_keys(inter).isNull()
     leaf = F.get_json_object(base, _json_path(parts))
     return _Expr(
-        col=F.coalesce(leaf, F.lit(NO_VALUE)),
-        truth=_truthy_json(leaf),
+        col=lambda: F.coalesce(leaf, F.lit(NO_VALUE)),
+        truth=lambda: _truthy_json(leaf),
         err=error,
         raw=leaf,
     )
 
 
-def _compile_log_access_variant(parts: list[str]) -> _Expr:
-    """Variant-engine ``{{.Log.p…}}`` access (Spark 4 ``VariantType`` —
-    the closest native match to the reference's ``interface{}`` payload,
-    SURVEY.md §1.3).
-
-    Same semantics as the string path (tests assert equality on random
-    templates). The win: the payload is parsed ONCE into the binary
-    variant encoding and each access is an O(log fields) lookup, vs one
-    full JSON re-parse per ``get_json_object`` call — the fast path for
-    many-field templates. (Whole-stage codegen's subexpression
-    elimination shares the single try_parse_json across all accesses.)"""
-    v = F.try_parse_json(F.col("LogEntry"))
-
-    def not_object(col: Column) -> Column:
-        return ~F.coalesce(
-            F.schema_of_variant(col).startswith("OBJECT"), F.lit(False)
-        )
-
-    error = not_object(v)
-    for i in range(1, len(parts)):
-        inter = F.try_variant_get(v, _json_path(parts[:i]), "variant")
-        error = error | not_object(inter)
-    leaf = F.try_variant_get(v, _json_path(parts), "variant").cast("string")
-    return _Expr(
-        col=F.coalesce(leaf, F.lit(NO_VALUE)),
-        truth=_truthy_json(leaf),
-        err=error,
-        log_parts=list(parts),
-        raw=leaf,
-    )
-
-
-def _log_expr(parts: list[str], variant_log: bool) -> _Expr:
-    if variant_log:
-        return _compile_log_access_variant(parts)
-    return _compile_log_access(parts)
-
-
-def _whole_log_expr() -> _Expr:
+def _whole_log_expr(comp: _Compiler) -> _Expr:
     """``{{.Log}}``: nil payload → <no value> (Go zero value, falsey);
     otherwise the JSON text (divergence noted in the module docstring)."""
     entry = F.col("LogEntry")
-    if _ACTIVE_PREP is not None:
-        parsed_ok = _hoisted_payload().isNotNull()
-    else:
-        parsed_ok = F.json_object_keys(entry).isNotNull()
+    parsed_ok = ~comp.not_object()
     return _Expr(
-        col=F.when(parsed_ok, entry).otherwise(F.lit(NO_VALUE)),
+        col=lambda: F.when(parsed_ok, entry).otherwise(F.lit(NO_VALUE)),
         truth=parsed_ok,
-        err=_false(),
         log_parts=[],
-        raw=F.when(parsed_ok, entry),
+        raw=lambda: F.when(parsed_ok, entry),
     )
 
 
-def _field_expr(path: str, ctx: _Ctx, variant_log: bool) -> _Expr:
+def _field_expr(path: str, ctx: _Ctx, comp: _Compiler) -> _Expr:
     """Resolve ``.``, ``.x``, ``.x.y`` relative to the current dot."""
     parts = path.split(".") if path else []
 
@@ -748,8 +796,8 @@ def _field_expr(path: str, ctx: _Ctx, variant_log: bool) -> _Expr:
     if ctx.log_base is not None:
         full = ctx.log_base + parts
         if not full:
-            return _whole_log_expr()
-        return _log_expr(full, variant_log)
+            return _whole_log_expr(comp)
+        return _compile_log_access(full, comp)
 
     # root context
     if not parts:
@@ -760,44 +808,42 @@ def _field_expr(path: str, ctx: _Ctx, variant_log: bool) -> _Expr:
     head = parts[0]
     if head == "Log":
         if len(parts) == 1:
-            return _whole_log_expr()
-        return _log_expr(parts[1:], variant_log)
+            return _whole_log_expr(comp)
+        return _compile_log_access(parts[1:], comp)
     canon = _canonical(head)
     if canon is None:
         # Unknown key on the map[string]interface{} row → <no value>.
-        return _Expr(col=F.lit(NO_VALUE), truth=_false(), err=_false())
+        return _Expr(col=lambda: F.lit(NO_VALUE), truth=_false)
     if len(parts) > 1:
         raise TemplateError(f"nested access only supported under .Log, got .{path}")
     if canon == "Timestamp":
         ts = F.col("Timestamp")
         return _Expr(
-            col=go_default_render_col(ts),
-            truth=ts.isNotNull(),
-            err=_false(),
+            col=lambda: go_default_render_col(ts),
+            truth=ts.isNotNull,
             is_timestamp=True,
         )
     v = F.col(canon)
     return _Expr(
-        col=F.coalesce(v, F.lit(NO_VALUE)),
-        truth=v.isNotNull() & (v != ""),
-        err=_false(),
+        col=lambda: F.coalesce(v, F.lit(NO_VALUE)),
+        truth=lambda: v.isNotNull() & (v != ""),
     )
 
 
-def _operand(token: str, ctx: _Ctx, variant_log: bool) -> _Expr:
+def _operand(token: str, ctx: _Ctx, comp: _Compiler) -> _Expr:
     if token.startswith('"'):
         s = _unescape(token[1:-1])
-        return _Expr(col=F.lit(s), truth=F.lit(bool(s)), err=_false())
+        return _Expr(col=F.lit(s), truth=lambda: F.lit(bool(s)))
     if _NUMBER_RE.match(token):
         num = float(token)
         text = token if "." in token or "-" in token[1:] else str(int(num))
-        return _Expr(col=F.lit(text), truth=F.lit(num != 0), err=_false())
+        return _Expr(col=F.lit(text), truth=lambda: F.lit(num != 0))
     if token == "true":
-        return _Expr(col=F.lit("true"), truth=F.lit(True), err=_false())
+        return _Expr(col=F.lit("true"), truth=lambda: F.lit(True))
     if token == "false":
-        return _Expr(col=F.lit("false"), truth=F.lit(False), err=_false())
+        return _Expr(col=F.lit("false"), truth=_false)
     if token == "nil":
-        return _Expr(col=F.lit(NO_VALUE), truth=F.lit(False), err=_false())
+        return _Expr(col=lambda: F.lit(NO_VALUE), truth=_false)
     if token == "$" or token.startswith("$."):
         # $ is the execution data value: the root record at top level,
         # rebound to the invocation argument inside {{template}}/{{block}}
@@ -810,7 +856,7 @@ def _operand(token: str, ctx: _Ctx, variant_log: bool) -> _Expr:
                 "record); use $.Field / $.Log.path, or pass it to a "
                 'sub-template: {{template "name" $}}'
             )
-        return _field_expr(token[2:] if token != "$" else "", dctx, variant_log)
+        return _field_expr(token[2:] if token != "$" else "", dctx, comp)
     m = _VAR_PATH_OPERAND_RE.match(token)
     if m:
         name = "$" + m.group(1)
@@ -827,7 +873,7 @@ def _operand(token: str, ctx: _Ctx, variant_log: bool) -> _Expr:
         return _json_elem_access(e.raw, parts)
     m = _FIELD_PATH_RE.match(token)
     if m:
-        return _field_expr(m.group(1) or "", ctx, variant_log)
+        return _field_expr(m.group(1) or "", ctx, comp)
     raise TemplateError(f"unsupported operand {token!r}")
 
 
@@ -835,10 +881,10 @@ def _num(e: _Expr) -> Column:
     return e.col.try_cast("double")
 
 
-def _any_err(exprs: list[_Expr]) -> Column:
-    err = _false()
+def _any_err(exprs: list[_Expr]) -> Column | None:
+    err = None
     for e in exprs:
-        err = err | e.err
+        err = _or(err, e.err)
     return err
 
 
@@ -866,11 +912,11 @@ def _compile_printf(fmt: str, args: list[_Expr]) -> _Expr:
                 cols.append(arg.col)
         elif kind in ("d", "x", "o", "X"):
             n = arg.col.try_cast("double").try_cast("long")
-            err = err | (arg.col.isNotNull() & n.isNull())
+            err = _or(err, arg.col.isNotNull() & n.isNull())
             cols.append(n)
         elif kind in ("f", "e", "g", "E", "G"):
             n = _num(arg)
-            err = err | (arg.col.isNotNull() & n.isNull())
+            err = _or(err, arg.col.isNotNull() & n.isNull())
             cols.append(n)
         elif kind == "t":
             jfmt = jfmt.replace(verb, verb[:-1] + "s", 1)
@@ -878,13 +924,13 @@ def _compile_printf(fmt: str, args: list[_Expr]) -> _Expr:
         else:
             raise TemplateError(f"unsupported printf verb {verb!r}")
     out = F.format_string(jfmt, *cols)
-    return _Expr(col=out, truth=out.isNotNull() & (out != ""), err=err)
+    return _Expr(col=out, truth=lambda: _nonempty(out), err=err)
 
 
 def _compile_compare(op: str, a: _Expr, b: _Expr) -> _Expr:
     """eq/ne: text equality (null-safe). lt/le/gt/ge: numeric when both
     sides cast to double, else lexicographic (see divergence note)."""
-    err = a.err | b.err
+    err = _or(a.err, b.err)
     if op in ("eq", "ne"):
         t = a.col.eqNullSafe(b.col)
         return _bool_expr(t if op == "eq" else ~t, err)
@@ -895,7 +941,7 @@ def _compile_compare(op: str, a: _Expr, b: _Expr) -> _Expr:
     py = {"lt": _op.lt, "le": _op.le, "gt": _op.gt, "ge": _op.ge}[op]
     t = F.when(both_num, py(an, bn)).otherwise(py(a.col, b.col))
     # comparing a nil (null-rendered) value errors in Go
-    err = err | a.col.isNull() | b.col.isNull()
+    err = _or(err, a.col.isNull() | b.col.isNull())
     return _bool_expr(t, err)
 
 
@@ -931,15 +977,15 @@ def _compile_index(args: list[_Expr], tokens: list[str]) -> _Expr:
     leaf = F.get_json_object(target.raw, "$" + suffix)
     # indexing nil errors in Go; out-of-range/missing-key → <no value>
     return _Expr(
-        col=F.coalesce(leaf, F.lit(NO_VALUE)),
-        truth=_truthy_json(leaf),
-        err=target.err | target.raw.isNull(),
+        col=lambda: F.coalesce(leaf, F.lit(NO_VALUE)),
+        truth=lambda: _truthy_json(leaf),
+        err=_or(target.err, target.raw.isNull()),
         raw=leaf,
     )
 
 
 def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
-                     variant_log: bool) -> _Expr:
+                     comp: _Compiler) -> _Expr:
     """One pipeline command: either a bare operand or FUNC args…; a piped
     value is appended as the last argument (text/template semantics).
     A token may be a sublist — a parenthesized sub-pipeline — which
@@ -948,8 +994,8 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
 
     def arg_expr(t) -> _Expr:
         if isinstance(t, list):
-            return _compile_items(t, ctx, variant_log)
-        return _operand(t, ctx, variant_log)
+            return _compile_items(t, ctx, comp)
+        return _operand(t, ctx, comp)
 
     if isinstance(head, list) or head not in _FUNCTIONS:
         if len(tokens) != 1:
@@ -979,8 +1025,7 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
         if not target.is_timestamp:
             raise TemplateError("strftime expects .Timestamp as its time argument")
         out = strftime_or_fallback(fmt, F.col("Timestamp"))
-        return _Expr(col=out, truth=out.isNotNull() & (out != ""),
-                     err=_any_err(args))
+        return _Expr(col=out, truth=lambda: _nonempty(out), err=_any_err(args))
     if head == "printf":
         if (
             not args
@@ -1025,10 +1070,10 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
                 F.size(arr) - start, F.lit(0)))
         out = F.to_json(sliced)
         # slicing a non-array (or out-of-range start) errors in Go
-        err = _any_err(args) | arr.isNull() | (F.size(arr) < start)
+        err = _or(_any_err(args), arr.isNull() | (F.size(arr) < start))
         return _Expr(
-            col=F.coalesce(out, F.lit(NO_VALUE)),
-            truth=F.size(sliced) > 0,
+            col=lambda: F.coalesce(out, F.lit(NO_VALUE)),
+            truth=lambda: F.size(sliced) > 0,
             err=err,
             raw=out,
         )
@@ -1081,10 +1126,7 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
         # therefore exact parity, not a stub.
         if not args:
             raise TemplateError("call needs at least one argument")
-        return _Expr(
-            col=F.lit(NO_VALUE), truth=F.lit(False),
-            err=_any_err(args) | F.lit(True),
-        )
+        return _Expr(col=lambda: F.lit(NO_VALUE), truth=_false, err=F.lit(True))
     if head in ("html", "urlquery"):
         if len(args) != 1:
             raise TemplateError(f"{head} takes exactly one argument")
@@ -1128,8 +1170,7 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
                     nonstr(prev.col) & nonstr(nxt.col), F.lit(" ")
                 ).otherwise(F.lit(""))
                 out = F.concat(out, sep, nxt.col)
-        return _Expr(col=out, truth=out.isNotNull() & (out != ""),
-                     err=_any_err(args))
+        return _Expr(col=out, truth=lambda: _nonempty(out), err=_any_err(args))
     if head == "len":
         if len(args) != 1:
             raise TemplateError("len takes exactly one argument")
@@ -1144,8 +1185,11 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
             .otherwise(F.octet_length(v).cast("long"))
         )
         # len of nil errors in Go
-        err = _any_err(args) | v.isNull() | ~args[0].truth & v.eqNullSafe(F.lit(NO_VALUE))
-        return _Expr(col=n.cast("string"), truth=n > 0, err=err)
+        err = _or(
+            _any_err(args),
+            v.isNull() | ~args[0].truth & v.eqNullSafe(F.lit(NO_VALUE)),
+        )
+        return _Expr(col=n.cast("string"), truth=lambda: n > 0, err=err)
     if head == "not":
         if len(args) != 1:
             raise TemplateError("not takes exactly one argument")
@@ -1163,7 +1207,7 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
             else:
                 col = F.when(acc.truth, acc.col).otherwise(nxt.col)
                 truth = acc.truth | nxt.truth
-            acc = _Expr(col=col, truth=truth, err=acc.err | nxt.err)
+            acc = _Expr(col=col, truth=truth, err=_or(acc.err, nxt.err))
         return acc
     if head in ("eq", "ne", "lt", "le", "gt", "ge"):
         if head == "eq" and len(args) > 2:
@@ -1200,7 +1244,7 @@ def _group_parens(tokens: list[str]) -> list:
     return out
 
 
-def _compile_items(items: list, ctx: _Ctx, variant_log: bool) -> _Expr:
+def _compile_items(items: list, ctx: _Ctx, comp: _Compiler) -> _Expr:
     """Grouped item list → _Expr: split stages on top-level '|', feed
     each stage's value to the next as its last argument."""
     stages: list[list] = [[]]
@@ -1213,12 +1257,12 @@ def _compile_items(items: list, ctx: _Ctx, variant_log: bool) -> _Expr:
     for tokens in stages:
         if not tokens:
             raise TemplateError("empty pipeline stage")
-        result = _compile_command(tokens, result, ctx, variant_log)
+        result = _compile_command(tokens, result, ctx, comp)
     assert result is not None
     return result
 
 
-def _compile_pipeline(pipe: str, ctx: _Ctx, variant_log: bool) -> _Expr:
+def _compile_pipeline(pipe: str, ctx: _Ctx, comp: _Compiler) -> _Expr:
     """``cmd | cmd | …`` — each stage's value feeds the next as its last
     argument; ``(…)`` sub-pipelines compile recursively as operands."""
     # legacy method-call form: .Timestamp.Format "layout"
@@ -1228,14 +1272,14 @@ def _compile_pipeline(pipe: str, ctx: _Ctx, variant_log: bool) -> _Expr:
         if _canonical(name) != "Timestamp":
             raise TemplateError(f".Format is only supported on .Timestamp, got .{name}")
         out = go_layout_col(layout, F.col("Timestamp"))
-        return _Expr(col=out, truth=out.isNotNull() & (out != ""), err=_false())
+        return _Expr(col=out, truth=lambda: _nonempty(out))
 
     # quote-aware tokens ('|' or parens inside a string literal are data)
-    return _compile_items(_group_parens(_TOKEN_RE.findall(pipe)), ctx, variant_log)
+    return _compile_items(_group_parens(_TOKEN_RE.findall(pipe)), ctx, comp)
 
 
 def _compile_range(
-    node: _Block, ctx: _Ctx, variant_log: bool
+    node: _Block, ctx: _Ctx, comp: _Compiler
 ) -> tuple[Column, Column, dict[str, _Expr]]:
     """``{{range P}}body{{else}}alt{{end}}`` → higher-order functions.
 
@@ -1271,8 +1315,7 @@ def _compile_range(
     the loop-exit binding is read back off the result, joined with the
     else-branch/pre-loop value on emptiness. Mutation-free ranges — the
     overwhelmingly common case — keep the cheap transform shape."""
-    global _HOIST_SEQ
-    target = _compile_pipeline(node.pipe, ctx, variant_log)
+    target = _compile_pipeline(node.pipe, ctx, comp)
     raw = target.raw if target.raw is not None else target.col
 
     # Normalize both shapes to one element array. coalesce evaluates
@@ -1312,15 +1355,10 @@ def _compile_range(
     # variable may be lambda-bound), but variables merely being in
     # scope is fine — the '$' scan keeps hoisting on for the common
     # {{$x := …}}…{{range .Log.xs}} shape.
-    hoistable = (
-        _ACTIVE_PREP is not None
-        and ctx.elem is None
-        and ctx.scalar is None
-        and "$" not in node.pipe
-    )
+    hoistable = ctx.elem is None and ctx.scalar is None and "$" not in node.pipe
     if hoistable:
-        name = f"__tpl{_HOIST_SEQ}_items_{len(_ACTIVE_PREP)}"
-        _ACTIVE_PREP[name] = items_tree()
+        name = f"{comp.prefix}_items_{len(comp.prep)}"
+        comp.prep[name] = items_tree()
 
         def items() -> Column:
             return F.col(name)
@@ -1350,7 +1388,7 @@ def _compile_range(
         else_ctx = replace(ctx, vars=else_vars)
     else:
         else_ctx = ctx
-    else_col, else_err, else_up = _compile_nodes(node.else_, else_ctx, variant_log)
+    else_col, else_err, else_up = _compile_nodes(node.else_, else_ctx, comp)
     block_local = set(node.vars or ())
     empty = F.size(items()) == 0
 
@@ -1380,13 +1418,13 @@ def _compile_range(
                 for i, vn in enumerate(mutated):
                     base[vn] = _expr_from_struct(acc[f"v{i}"])
                 line, berr, up = _compile_nodes(
-                    node.body, body_ctx(el, base), variant_log
+                    node.body, body_ctx(el, base), comp
                 )
                 fields = [
                     F.concat(
                         acc["line"], F.coalesce(line, F.lit(""))
                     ).alias("line"),
-                    (acc["err"] | berr).alias("err"),
+                    _or(acc["err"], berr).alias("err"),
                 ]
                 for i, vn in enumerate(mutated):
                     fields.append(_expr_struct(up.get(vn, base[vn])).alias(f"v{i}"))
@@ -1398,16 +1436,16 @@ def _compile_range(
             return F.aggregate(items_tree(), init, merge)
 
         if hoistable:
-            fname = f"__tpl{_HOIST_SEQ}_fold_{len(_ACTIVE_PREP)}"
-            _ACTIVE_PREP[fname] = fold_tree()
+            fname = f"{comp.prefix}_fold_{len(comp.prep)}"
+            comp.prep[fname] = fold_tree()
             res = F.col(fname)
         else:
             res = fold_tree()
 
         seg = F.when(empty, else_col).otherwise(res["line"])
-        err = target.err | F.coalesce(
-            F.when(empty, else_err).otherwise(res["err"]), F.lit(True)
-        )
+        err = _or(target.err, F.coalesce(
+            F.when(empty, _err_col(else_err)).otherwise(res["err"]), F.lit(True)
+        ))
         updates: dict[str, _Expr] = {}
         for i, vn in enumerate(mutated):
             pre = ctx.vars[vn]
@@ -1421,12 +1459,12 @@ def _compile_range(
 
     # ---- mutation-free body → transform/exists (the fast shape) ------
     def body_line(el: Column) -> Column:
-        line, _, _ = _compile_nodes(node.body, body_ctx(el), variant_log)
+        line, _, _ = _compile_nodes(node.body, body_ctx(el), comp)
         return line
 
     def body_err(el: Column) -> Column:
-        _, err, _ = _compile_nodes(node.body, body_ctx(el), variant_log)
-        return err
+        _, err, _ = _compile_nodes(node.body, body_ctx(el), comp)
+        return _err_col(err)
 
     # array_join skips null elements; a null body line only happens on a
     # body render error, which the error column catches (row dropped).
@@ -1436,14 +1474,14 @@ def _compile_range(
     # null → size(null)/exists(null) are null → the inner coalesce(…,
     # True) marks the row errored (Go reflect: "range can't iterate
     # over …"). No separate null-check term: it would re-parse the JSON.
-    err = (
-        target.err
-        | F.coalesce(
-            F.when(empty, else_err).otherwise(
+    err = _or(
+        target.err,
+        F.coalesce(
+            F.when(empty, _err_col(else_err)).otherwise(
                 F.exists(items(), body_err)
             ),
             F.lit(True),
-        )
+        ),
     )
     # {{else}}-branch assignments escape joined on emptiness
     updates = {
@@ -1454,12 +1492,6 @@ def _compile_range(
     return seg, F.coalesce(err, F.lit(True)), updates
 
 
-# {{define}} bodies of the template being compiled + the names currently
-# being expanded (recursion guard). Single-threaded per compile_template
-# call, like _ACTIVE_PREP.
-_ACTIVE_DEFINES: dict[str, list] = {}
-_EXPANDING: dict[str, int] = {}  # name → current inline-expansion depth
-
 # Recursive {{template}} is inlined by bounded unrolling: each
 # self-invocation level is compiled in place, and a row whose data would
 # recurse deeper than this becomes a render error (dropped), the analogue
@@ -1469,8 +1501,8 @@ MAX_TEMPLATE_DEPTH = 8
 
 
 def _compile_template_call(
-    node: _TemplateCall, ctx: _Ctx, variant_log: bool
-) -> tuple[Column, Column]:
+    node: _TemplateCall, ctx: _Ctx, comp: _Compiler
+) -> tuple[Column, Column | None]:
     """``{{template "name" [P]}}`` → the named {{define}} body inlined at
     compile time with dot rebound to the argument (Go invocation
     semantics: dot is ALWAYS rebound — nil when no argument — and the
@@ -1479,13 +1511,13 @@ def _compile_template_call(
     depth-bounded unrolled (MAX_TEMPLATE_DEPTH); beyond the bound the
     node is a runtime render error, reached only by rows whose data
     actually recurses that deep."""
-    body = _ACTIVE_DEFINES.get(node.name)
+    body = comp.defines.get(node.name)
     if body is None:
         raise TemplateError(f"template {node.name!r} is not defined")
-    depth = _EXPANDING.get(node.name, 0)
+    depth = comp.expanding.get(node.name, 0)
     if depth >= MAX_TEMPLATE_DEPTH:
         return F.lit(""), F.lit(True)
-    arg_err = _false()
+    arg_err = None
     pipe = node.pipe.strip() if node.pipe is not None else None
     if pipe is None:
         # No argument → dot is nil inside the invoked template. Bind a
@@ -1502,7 +1534,7 @@ def _compile_template_call(
         # argument). Never rendered, so the root form is fine here.
         inner_ctx = replace(ctx.dollar_ctx(), vars=None)
     else:
-        arg = _compile_pipeline(node.pipe, ctx, variant_log)
+        arg = _compile_pipeline(node.pipe, ctx, comp)
         arg_err = arg.err
         if arg.log_parts is not None and ctx.is_root:
             inner_ctx = _Ctx(log_base=arg.log_parts)
@@ -1515,21 +1547,17 @@ def _compile_template_call(
     inner_ctx = replace(
         inner_ctx, dollar=None if inner_ctx.is_root else replace(inner_ctx, vars=None)
     )
-    _EXPANDING[node.name] = depth + 1
-    try:
-        body_col, body_err, _ = _compile_nodes(body, inner_ctx, variant_log)
-    finally:
-        if depth:
-            _EXPANDING[node.name] = depth
-        else:
-            _EXPANDING.pop(node.name, None)
-    return body_col, arg_err | body_err
+    comp.expanding[node.name] = depth + 1
+    body_col, body_err, _ = _compile_nodes(body, inner_ctx, comp)
+    comp.expanding[node.name] = depth
+    return body_col, _or(arg_err, body_err)
 
 
 def _compile_nodes(
-    nodes: list, ctx: _Ctx, variant_log: bool
-) -> tuple[Column, Column, dict[str, _Expr]]:
-    """Node list → (concatenated text Column, error Column, and the
+    nodes: list, ctx: _Ctx, comp: _Compiler
+) -> tuple[Column, Column | None, dict[str, _Expr]]:
+    """Node list → (concatenated text Column, error Column — None when
+    nothing in the list can error — and the
     bindings this list assigned to variables of an ENCLOSING scope).
 
     ``{{$x := P}}`` declarations update the context for the REST of this
@@ -1542,7 +1570,7 @@ def _compile_nodes(
     them at the branch boundary, and ``_compile_range`` folds them
     through the loop."""
     segments: list[Column] = []
-    err = _false()
+    err = None
     declared_here: set[str] = set()
     outer_updates: dict[str, _Expr] = {}
 
@@ -1558,35 +1586,35 @@ def _compile_nodes(
 
     for node in nodes:
         if isinstance(node, _VarDecl):
-            e = _compile_pipeline(node.pipe, ctx, variant_log)
+            e = _compile_pipeline(node.pipe, ctx, comp)
             if not node.declare and (
                 ctx.vars is None or node.name not in ctx.vars
             ):
                 raise TemplateError(f"undefined variable {node.name}")
             rebind(node.name, e, node.declare)
             # Go evaluates the declaration pipeline even if $x is unused.
-            err = err | e.err
+            err = _or(err, e.err)
         elif isinstance(node, _Text):
             segments.append(F.lit(node.text))
         elif isinstance(node, _Action):
-            e = _compile_pipeline(node.pipe, ctx, variant_log)
+            e = _compile_pipeline(node.pipe, ctx, comp)
             segments.append(e.col)
-            err = err | e.err
+            err = _or(err, e.err)
         elif isinstance(node, _TemplateCall):
             # caller variables are invisible inside the body (Go
             # invocation scoping), so no assignment can escape a call
-            seg, terr = _compile_template_call(node, ctx, variant_log)
+            seg, terr = _compile_template_call(node, ctx, comp)
             segments.append(seg)
-            err = err | terr
+            err = _or(err, terr)
         elif isinstance(node, _Block):
             if node.kind == "range":
-                seg, rerr, updates = _compile_range(node, ctx, variant_log)
+                seg, rerr, updates = _compile_range(node, ctx, comp)
                 segments.append(seg)
-                err = err | rerr
+                err = _or(err, rerr)
                 for name, e in updates.items():
                     rebind(name, e, False)
                 continue
-            cond = _compile_pipeline(node.pipe, ctx, variant_log)
+            cond = _compile_pipeline(node.pipe, ctx, comp)
             # {{if $x := P}} / {{with $x := P}} — $x is in scope in both
             # the body and the else branch (scope runs to the {{end}}).
             branch_vars = ctx.vars
@@ -1612,13 +1640,13 @@ def _compile_nodes(
                 inner_ctx = replace(ctx, vars=branch_vars)
             else_ctx = replace(ctx, vars=branch_vars)
             body_col, body_err, body_up = _compile_nodes(
-                node.body, inner_ctx, variant_log
+                node.body, inner_ctx, comp
             )
             else_col, else_err, else_up = _compile_nodes(
-                node.else_, else_ctx, variant_log
+                node.else_, else_ctx, comp
             )
             segments.append(F.when(cond.truth, body_col).otherwise(else_col))
-            err = err | cond.err | F.when(cond.truth, body_err).otherwise(else_err)
+            err = _or(_or(err, cond.err), _when_err(cond.truth, body_err, else_err))
             # cross-scope assignment: a binding either branch rebound
             # escapes the block as its CASE-join with the other branch's
             # (or the pre-block) value. Block-declared variables
@@ -1641,61 +1669,17 @@ def _compile_nodes(
     return line, err, outer_updates
 
 
-def compile_template(
-    template: str = DEFAULT_TEMPLATE, variant_log: bool = False
-) -> CompiledTemplate:
+def compile_template(template: str = DEFAULT_TEMPLATE) -> CompiledTemplate:
     """Compile a template string (see module docstring for the dialect).
 
-    ``variant_log=True`` routes ``{{.Log.x}}`` accesses through Spark 4's
-    VariantType (parse once, O(log n) per access) instead of per-access
-    ``get_json_object`` — identical semantics, faster for templates that
-    touch many payload fields.
-
     Compile errors raise TemplateError — the analogue of the reference's
-    exit-2-on-parse-failure (main.go:110-114).
-
-    Thread-safe: the compiler stages its output through process-global
-    state (_ACTIVE_PREP / _HOIST_SEQ / _ACTIVE_DEFINES), so concurrent
-    compiles would cross-wire one template's hoisted prep columns into
-    another's error filter. The whole compile runs under a module lock —
-    cheap (driver-side, milliseconds) and it lets harnesses plan
-    template queries from thread pools without knowing compiler
-    internals.
+    exit-2-on-parse-failure (main.go:110-114). All compile state lives in
+    one ``_Compiler`` per call, so concurrent compiles (harnesses that
+    plan template queries from thread pools) never share prep columns.
     """
-    with _COMPILE_LOCK:
-        return _compile_template_locked(template, variant_log)
-
-
-_COMPILE_LOCK = threading.Lock()
-
-
-def _compile_template_locked(
-    template: str, variant_log: bool
-) -> CompiledTemplate:
-    global _ACTIVE_PREP, _HOIST_SEQ, _ACTIVE_DEFINES
     nodes, defines = _parse(template)
-    _ACTIVE_DEFINES = defines
-    try:
-        # Self-contained columns (usable in any projection).
-        line, error, _ = _compile_nodes(nodes, _Ctx(), variant_log)
-        # Hoisted variant: range collection parses lifted to prep columns
-        # (see CompiledTemplate docstring). Compiled second so the
-        # self-contained pass can't observe the hoist context.
-        _HOIST_SEQ += 1
-        _ACTIVE_PREP = {}
-        try:
-            line_h, error_h, _ = _compile_nodes(nodes, _Ctx(), variant_log)
-            prep = _ACTIVE_PREP
-        finally:
-            _ACTIVE_PREP = None
-    finally:
-        _ACTIVE_DEFINES = {}
-        _EXPANDING.clear()
+    comp = _Compiler(defines)
+    line, error, _ = _compile_nodes(nodes, _Ctx(), comp)
     return CompiledTemplate(
-        line=line,
-        error=error,
-        source=template,
-        prep=prep,
-        line_h=line_h,
-        error_h=error_h,
+        line=line, error=_err_col(error), source=template, prep=comp.finish()
     )

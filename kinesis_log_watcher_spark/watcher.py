@@ -156,21 +156,15 @@ def build_lines(
     now: datetime | None = None,
     keep_errors: bool = False,
     render_fn=None,
-    variant_log: bool = False,
 ) -> DataFrame:
     """The full watch pipeline as a DataFrame of rendered lines.
 
     Works for batch and streaming inputs alike (same logical plan). With
     ``keep_errors`` the error flag is kept for the sink to report/count.
     ``render_fn`` switches rendering to the Python escape hatch (see
-    _render_fn_lines) instead of the compiled template. ``variant_log``
-    routes {{.Log.x}} through the VariantType engine (parse once, fast
-    multi-field access).
+    _render_fn_lines) instead of the compiled template.
     """
-    compiled = (
-        None if render_fn is not None
-        else compile_template(template, variant_log=variant_log)
-    )
+    compiled = None if render_fn is not None else compile_template(template)
     df = records
     cutoff = _start_cutoff(start, now)
     if cutoff is not None:

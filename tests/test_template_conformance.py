@@ -469,10 +469,8 @@ def test_nested_control_flow_matches_semantics_table(
     )
     tpl = to_template(nodes, prefix)
     compiled = compile_template(tpl)
-    rows = conformance_df.select(
-        "rid", compiled.line.alias("line"), compiled.error.alias("err")
-    ).collect()
-    got = {r.rid: (None if r.err else r.line) for r in rows}
+    rows = compiled.apply_with_errors(conformance_df, keep=("rid",)).collect()
+    got = {r.rid: (None if r._render_error else r.line) for r in rows}
     exp = {
         i: ref_render(p, nodes, decl) for i, p in enumerate(_CORPUS)
     }
@@ -500,10 +498,8 @@ def _render_one(spark, tpl: str, payloads: list[str]):
         [(i, p) for i, p in enumerate(payloads)],
         "rid long, LogEntry string",
     )
-    rows = df.select(
-        "rid", compiled.line.alias("line"), compiled.error.alias("err")
-    ).collect()
-    return {r.rid: (None if r.err else r.line) for r in rows}
+    rows = compiled.apply_with_errors(df, keep=("rid",)).collect()
+    return {r.rid: (None if r._render_error else r.line) for r in rows}
 
 
 def test_recursion_depth_boundary_exact(spark):

@@ -25,8 +25,8 @@ def _env(spark, payload: bytes, pk="uuid:abc", ts=datetime(2024, 5, 1, 12, 0, 0,
     return with_envelope(raw)
 
 
-def _render(spark, template, payload, variant_log=False, **kw):
-    compiled = compile_template(template, variant_log=variant_log)
+def _render(spark, template, payload, **kw):
+    compiled = compile_template(template)
     rows = compiled.apply(_env(spark, payload, **kw)).collect()
     return [r["line"] for r in rows]
 
@@ -194,16 +194,6 @@ def test_missing_key_still_no_value_inside_if_body(spark):
     assert _render(spark, t, b'{"a":1}') == [f"[{NO_VALUE}]"]
 
 
-def test_variant_engine_matches_string_engine(spark):
-    payload = json.dumps({"user": {"name": "ada"}, "k": 0, "lv": "b"}).encode()
-    t = (
-        '{{if .Log.k}}K{{else if eq .Log.lv "b"}}B{{else}}other{{end}}'
-        "-{{with .Log.user}}{{.name}}{{end}}"
-    )
-    assert _render(spark, t, payload) == _render(spark, t, payload, variant_log=True)
-    assert _render(spark, t, payload) == ["B-ada"]
-
-
 # --- range -------------------------------------------------------------
 
 
@@ -268,13 +258,6 @@ def test_range_nested_object_elements(spark):
     payload = json.dumps({"items": [{"u": {"id": 7}}, {"u": {"id": 8}}]}).encode()
     t = "{{range .Log.items}}{{.u.id}} {{end}}"
     assert _render(spark, t, payload) == ["7 8 "]
-
-
-def test_range_variant_engine_parity(spark):
-    payload = json.dumps({"xs": [3, 1], "m": {"k": "v"}}).encode()
-    t = "{{range .Log.xs}}[{{.}}]{{end}}|{{range .Log.m}}{{.}}{{end}}"
-    assert _render(spark, t, payload) == _render(spark, t, payload, variant_log=True)
-    assert _render(spark, t, payload) == ["[3][1]|v"]
 
 
 def test_range_whitespace_trim(spark):

@@ -157,33 +157,6 @@ def records_cache(spark):
 
 
 @settings(
-    max_examples=property_examples(15),
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(paths=st.lists(_LOG_PATHS, min_size=1, max_size=4))
-def test_variant_mode_equals_string_mode(spark, records_cache, paths):
-    """The VariantType .Log engine must agree with the get_json_object
-    engine on values AND error rows, for any access pattern."""
-    actions = []
-    for i, p in enumerate(paths):
-        if i:
-            actions.append(("lit", "|"))
-        actions.append(("log", p))
-    template = to_template(actions)
-    a = build_lines(records_cache, template=template, keep_errors=True).collect()
-    from kinesis_log_watcher_spark.template import compile_template
-    from kinesis_log_watcher_spark.envelope import with_envelope
-
-    b = compile_template(template, variant_log=True).apply_with_errors(
-        with_envelope(records_cache)
-    ).collect()
-    assert [(r.line, r._render_error) for r in a] == [
-        (r.line, r._render_error) for r in b
-    ], template
-
-
-@settings(
     max_examples=property_examples(25),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -324,10 +297,8 @@ def test_range_compiled_equals_reference(spark, range_corpus_df, target, body, w
         + "{{end}}"
     )
     compiled = compile_template(tpl)
-    rows = range_corpus_df.select(
-        "rid", compiled.line.alias("line"), compiled.error.alias("err")
-    ).collect()
-    got = {r.rid: (None if r.err else r.line) for r in rows}
+    rows = compiled.apply_with_errors(range_corpus_df, keep=("rid",)).collect()
+    got = {r.rid: (None if r._render_error else r.line) for r in rows}
     exp = {
         i: _ref_range_render(p, target, body, else_text)
         for i, p in enumerate(_RANGE_CORPUS)
