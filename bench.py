@@ -222,6 +222,24 @@ def archive_name(subset_run: bool, commit: bool) -> str:
     return "BENCH_FULL_LOCAL.candidate.json"
 
 
+def load_prior(path: str, sf: float, cpus: int | None) -> dict[str, float]:
+    """Per-query cold times of a prior archive, usable as the rerun
+    comparator only when it ran at the same scale factor AND on the same
+    CPU count (``host.cpus``, recorded as ``os.cpu_count()``): timings
+    from a wider host read every query as a regression here. Empty when
+    the archive is missing, unreadable or not comparable."""
+    try:
+        with open(path) as fh:
+            doc = json.load(fh)
+        if abs(float(doc.get("sf", -1)) - sf) >= 1e-9:
+            return {}
+        if doc.get("host", {}).get("cpus") != cpus:
+            return {}
+    except (OSError, ValueError):
+        return {}
+    return doc.get("queries", {})
+
+
 def main() -> None:
     args = parse_args(sys.argv[1:])
     # Point fd 1 at stderr BEFORE the JVM launches so its stdout banners
@@ -348,14 +366,7 @@ def main() -> None:
     prior_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_LOCAL.json"
     )
-    prior: dict[str, float] = {}
-    try:
-        with open(prior_path) as fh:
-            prior_doc = json.load(fh)
-        if abs(float(prior_doc.get("sf", -1)) - sf) < 1e-9:
-            prior = prior_doc.get("queries", {})
-    except (OSError, ValueError):
-        pass
+    prior = load_prior(prior_path, sf, os.cpu_count())
     for name, cold in timings.items():
         p = prior.get(name)
         if p is None or cold < 1.0 or cold <= 1.5 * p:

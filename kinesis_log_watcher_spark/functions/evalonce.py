@@ -12,11 +12,19 @@ on paper is evaluated once per *reference site* in the physical plan
 template.CompiledTemplate._gate history).
 
 ``gate(col)`` wraps an expression in a condition Catalyst treats as
-non-deterministic but cannot fold: ``monotonically_increasing_id() >= 0``
-is always true, but the id is non-deterministic, so no rule simplifies
-it, collapses through it, or substitutes it into a predicate. A
-``rand()``-based gate does NOT work — the optimizer constant-folds
-``rand()`` comparisons against out-of-range constants.
+non-deterministic but cannot fold: ``spark_partition_id() >= 0`` is
+always true, but the partition id is non-deterministic, so no rule
+simplifies it, collapses through it, or substitutes it into a
+predicate. A ``rand()``-based gate does NOT work — the optimizer
+constant-folds ``rand()`` comparisons against out-of-range constants.
+
+The same gate serves batch and streaming plans, and it has no seed on
+purpose. ``SparkPartitionID`` is allowed by the streaming analyzer
+(``monotonically_increasing_id`` is not). A seeded expression such as
+``shuffle``/``rand`` gets a fresh random seed every time a plan is
+analyzed, and every micro-batch is analyzed anew, so its generated Java
+source differs per batch, misses the codegen cache, and pays a Janino
+compile on every trigger.
 
 Use on a projection column that (a) is expensive (JSON parse, HOF
 fold), and (b) is referenced more than once downstream (filter + select,
@@ -31,16 +39,5 @@ from pyspark.sql import functions as F
 
 def gate(c: Column) -> Column:
     """Pin ``c`` to evaluate exactly once per row when aliased in a
-    projection (see module docstring). Batch plans only —
-    monotonically_increasing_id is rejected by the streaming analyzer;
-    use ``gate_streaming`` there."""
-    return F.when(F.monotonically_increasing_id() >= 0, c)
-
-
-def gate_streaming(c: Column) -> Column:
-    """Streaming-safe evaluate-once pin: ``shuffle`` of a one-element
-    array is non-deterministic to Catalyst (so nothing folds, collapses,
-    or substitutes through it) but semantically the identity, and it is
-    allowed in streaming plans. Slightly more per-row overhead than
-    ``gate`` (one single-element array allocation)."""
-    return F.shuffle(F.array(c))[0]
+    projection (see module docstring). Batch and streaming plans."""
+    return F.when(F.spark_partition_id() >= 0, c)

@@ -15,7 +15,7 @@ UDFs are built lazily (factory + cache): ``pandas_udf`` registration
 needs an active SparkSession, so module import stays session-free.
 
 Scale: a scalar pandas UDF is a narrow map over Arrow batches; a
-grouped-agg pandas UDF shuffles once on the grouping key and reduces
+grouped-agg pandas UDF costs one shuffle on the grouping key and reduces
 each group in a single vectorized call — same movement profile as a
 built-in aggregate, Python cost amortized per batch, not per row.
 Catalyst cannot mix pandas and JVM aggregates in one Aggregate node

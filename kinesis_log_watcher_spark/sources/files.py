@@ -323,25 +323,13 @@ def stage_replay_files_split(
     single file is renamed to the mtime-ordered f{i}.parquet layout the
     replay readers consume. Parts must all be non-empty (the caller's
     split contract — an empty part would silently drop a micro-batch
-    boundary, so it raises).
-
-    SPARK_GRAFT_SPLIT_STAGING=0 falls back to the one-write-job-per-part
-    path (the pre-round-12 staging shape) — the A/B hook and safety
-    valve."""
+    boundary, so it raises and removes the partially staged replay
+    directory)."""
     import glob as _glob
     import os
     import shutil
 
-    from pyspark.sql import functions as F
-
     from kinesis_log_watcher_spark.staging import scratch_dir
-
-    if os.environ.get("SPARK_GRAFT_SPLIT_STAGING", "1") != "1":
-        parts = [
-            df.filter(F.col(part_col) == i).drop(part_col)
-            for i in range(n_parts)
-        ]
-        return stage_replay_files(spark, parts, prefix=prefix)
 
     replay = scratch_dir(prefix=prefix)
     stage = os.path.join(replay, "_staged")
@@ -353,6 +341,7 @@ def stage_replay_files_split(
     for i in range(n_parts):
         files = _glob.glob(os.path.join(stage, f"{part_col}={i}", "*.parquet"))
         if not files:
+            shutil.rmtree(replay)
             raise ValueError(f"replay part {i} is empty; staging aborted")
         if len(files) == 1:
             dest = os.path.join(replay, f"f{i}.parquet")

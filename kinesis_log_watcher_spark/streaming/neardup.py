@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kinesis_log_watcher_spark.functions.evalonce import gate_streaming
+from kinesis_log_watcher_spark.functions.evalonce import gate
 from kinesis_log_watcher_spark.operators.dedup import (
     # geometry SHARED with the batch query (queries/llm.dedup_minhash_lsh)
     # — the streaming operator's oracle is that query's SQL verbatim
@@ -77,7 +77,7 @@ def banded_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     instead of a groupBy — no shuffle before the stateful operator."""
     toks = tokens_col(F.col("text"))
     prepped = docs.filter(F.size(toks) >= n).select(
-        "doc_id", gate_streaming(shingles_col(F.col("text"), n)).alias("__sh")
+        "doc_id", gate(shingles_col(F.col("text"), n)).alias("__sh")
     )
 
     def min_hash(k: int):

@@ -81,7 +81,8 @@ reference's execution semantics declaratively:
 - a *missing* key on a parsed JSON object renders Go's ``<no value>``
   placeholder (Go map semantics), not an error.
 - an unknown top-level field likewise renders ``<no value>`` (the
-  reference's row is a ``map[string]interface{}``, main.go:264).
+  reference's row is a ``map[string]interface{}``, main.go:264), and so
+  does a null envelope field, ``{{.Timestamp}}`` included.
 
 Documented divergences (all on contrived payloads, none load-bearing):
 - ``{{break}}``/``{{continue}}`` (Go 1.18 range control) are compile
@@ -183,19 +184,19 @@ class CompiledTemplate:
     prep: dict[str, Column] = field(default_factory=dict)
 
     @staticmethod
-    def _gate(c: Column, streaming: bool) -> Column:
+    def _gate(c: Column) -> Column:
         """Evaluate-once pin — see functions/evalonce. Without it the
         hoist is an illusion: ColumnPruning drops any separate barrier
         column, the then-deterministic projection collapses, and
         PushDownPredicates substitutes the parse back into BOTH the
         error filter and the line projection — every hoisted subtree
         evaluated twice (measured 5.9s → 1.7s at sf0.1 on
-        template_range_render when pinned properly). Streaming plans
-        reject monotonically_increasing_id, so they use the
-        shuffle-of-one gate instead."""
-        from kinesis_log_watcher_spark.functions.evalonce import gate, gate_streaming
+        template_range_render when pinned properly). One gate serves
+        batch and streaming; it takes no seed, so each micro-batch's
+        generated code is identical and compiles only once."""
+        from kinesis_log_watcher_spark.functions.evalonce import gate
 
-        return gate_streaming(c) if streaming else gate(c)
+        return gate(c)
 
     def _prepped(self, df: DataFrame) -> DataFrame:
         # Two stages: the shared whole-payload parse first, then the
@@ -210,10 +211,7 @@ class CompiledTemplate:
             if stage:
                 out = out.select(
                     "*",
-                    *(
-                        self._gate(c, df.isStreaming).alias(n)
-                        for n, c in stage.items()
-                    ),
+                    *(self._gate(c).alias(n) for n, c in stage.items()),
                 )
         return out
 
@@ -819,7 +817,7 @@ def _field_expr(path: str, ctx: _Ctx, comp: _Compiler) -> _Expr:
     if canon == "Timestamp":
         ts = F.col("Timestamp")
         return _Expr(
-            col=lambda: go_default_render_col(ts),
+            col=lambda: F.coalesce(go_default_render_col(ts), F.lit(NO_VALUE)),
             truth=ts.isNotNull,
             is_timestamp=True,
         )

@@ -103,3 +103,27 @@ def test_family_spread_short_list_clamps():
     # later members clamp to the tail
     assert spread[-2:] == ["neardup_graph_assortativity",
                            "community_label_propagation"]
+
+
+def test_prior_archive_needs_same_sf_and_cpu_count(tmp_path):
+    # the rerun comparator must ignore an archive from another host
+    # width: the committed one came from a 32-vCPU host
+    import json
+
+    path = tmp_path / "prior.json"
+    path.write_text(json.dumps({
+        "sf": 0.1, "queries": {"q": 1.5}, "host": {"cpus": 32},
+    }))
+    assert bench.load_prior(str(path), 0.1, 32) == {"q": 1.5}
+    assert bench.load_prior(str(path), 0.1, 4) == {}
+    assert bench.load_prior(str(path), 0.01, 32) == {}
+    assert bench.load_prior(str(tmp_path / "missing.json"), 0.1, 32) == {}
+    # an archive without a host block is not comparable either
+    path.write_text(json.dumps({"sf": 0.1, "queries": {"q": 1.5}}))
+    assert bench.load_prior(str(path), 0.1, 32) == {}
+    # the committed archive is compared against this host's os.cpu_count()
+    committed = os.path.join(REPO, "BENCH_FULL_LOCAL.json")
+    with open(committed) as fh:
+        doc = json.load(fh)
+    got = bench.load_prior(committed, doc["sf"], os.cpu_count())
+    assert bool(got) == (doc["host"]["cpus"] == os.cpu_count())

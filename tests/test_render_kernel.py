@@ -170,8 +170,8 @@ def test_null_and_pre_1970_timestamps(spark, tmp_path):
         ],
     )
     assert got == {
-        # no render error; the line is null (as before the rewrite)
-        0: None,
+        # no render error; a null field renders Go's <no value>
+        0: NO_VALUE,
         1: "1969-12-31 23:59:59.5 +0000 UTC",
         2: "1900-01-01 00:00:00.00012 +0000 UTC",
     }

@@ -1,8 +1,8 @@
 """stage_replay_files_split: the single-partitioned-write replay staging
-(round-12 optimization used by the timer-session harness) must produce
-byte-for-byte the same replay LAYOUT contract as the per-part fallback:
-one f{i}.parquet per part, mtime-ascending, carrying exactly that
-part's rows without the part column."""
+used by the timer-session harness must produce the replay LAYOUT
+contract every replay reader consumes: one f{i}.parquet per part,
+mtime-ascending, carrying exactly that part's rows without the part
+column. An empty part raises and leaves no staged directory behind."""
 
 from __future__ import annotations
 
@@ -20,9 +20,7 @@ def _rows(spark, path: str):
     )
 
 
-@pytest.mark.parametrize("fallback", ["0", "1"])
-def test_split_staging_layout(spark, monkeypatch, fallback):
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGING", fallback)
+def test_split_staging_layout(spark):
     df = spark.range(0, 100).selectExpr(
         "id", "CAST(id % 3 AS INT) AS part"
     )
@@ -40,7 +38,18 @@ def test_split_staging_layout(spark, monkeypatch, fallback):
 
 
 def test_split_staging_empty_part_raises(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGING", "1")
+    from kinesis_log_watcher_spark import staging
+
+    made: list[str] = []
+    real = staging.scratch_dir
+
+    def recording_scratch_dir(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(staging, "scratch_dir", recording_scratch_dir)
     df = spark.range(0, 10).selectExpr("id", "CAST(0 AS INT) AS part")
     with pytest.raises(ValueError, match="empty"):
         stage_replay_files_split(spark, df, "part", 2, prefix="t_split_")
+    assert len(made) == 1
+    assert not os.path.exists(made[0])

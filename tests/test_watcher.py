@@ -106,8 +106,19 @@ def test_streaming_one_shot_matches_batch(spark, tmp_path):
 
 
 def test_streaming_resume_from_checkpoint(spark, tmp_path):
-    """W4 done right: restart re-reads nothing (the reference *intends*
-    sequence-number resume but its renewal is buggy, main.go:345)."""
+    """W4 done right: a restart re-reads nothing it already emitted and
+    emits exactly the records that arrived while it was down, once each
+    (the reference *intends* sequence-number resume but its renewal is
+    buggy, main.go:345). The checkpoint goes through the file manager
+    get_spark() configures; a misspelled class would fail at start."""
+    from collections import Counter
+
+    from kinesis_log_watcher_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        CHECKPOINT_FILE_MANAGER_CONF,
+    )
+
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
     path = str(tmp_path / "records")
     ckpt = str(tmp_path / "ckpt")
     write_fixture_parquet(spark, path, n_records=100)
@@ -116,14 +127,66 @@ def test_streaming_resume_from_checkpoint(spark, tmp_path):
     q = watch(read_raw_records_stream(spark, path), one_shot=True,
               checkpoint_dir=ckpt, sink=got.append)
     q.awaitTermination(120)
+    assert q.exception() is None
     n_first = len(got)
     assert n_first == 100
 
-    # second run, same checkpoint: nothing new to read
+    # records arriving between the runs: an hour later, so every line
+    # differs from the first run's
+    new = kinesis_records_fixture(spark, n_records=40, seed=7).withColumn(
+        "approximateArrivalTimestamp",
+        F.col("approximateArrivalTimestamp") + F.expr("INTERVAL 1 HOUR"),
+    )
+    new.write.mode("append").partitionBy("shardId").parquet(path)
+    want_new = watch(new)
+    assert len(want_new) == 40
+
+    resumed: list[str] = []
     q = watch(read_raw_records_stream(spark, path), one_shot=True,
-              checkpoint_dir=ckpt, sink=got.append)
+              checkpoint_dir=ckpt, sink=resumed.append)
     q.awaitTermination(120)
-    assert len(got) == n_first
+    assert q.exception() is None
+    assert Counter(resumed) == Counter(want_new)
+
+    # third run, same checkpoint: nothing new to read
+    q = watch(read_raw_records_stream(spark, path), one_shot=True,
+              checkpoint_dir=ckpt, sink=resumed.append)
+    q.awaitTermination(120)
+    assert len(resumed) == 40
+
+
+def test_streaming_plan_compiles_once(spark, tmp_path):
+    """Every micro-batch re-plans the query, so its generated code must
+    be identical from batch to batch or Janino compiles it again on
+    every trigger. The evaluate-once gate on the hoisted ``.Log`` parse
+    is the part that must carry no per-analysis random seed."""
+    src = str(tmp_path / "records")
+    for seed in range(3):
+        part = kinesis_records_fixture(spark, n_records=24, seed=seed)
+        part.coalesce(1).write.mode("append").parquet(src)
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    seen: list[int] = []
+
+    def sink(line: str) -> None:
+        # runs on the driver after the batch's jobs have finished
+        seen.append(compiles.getCount())
+
+    q = watch(
+        read_raw_records_stream(spark, src, max_files_per_trigger=1),
+        template="{{.SequenceNumber}} {{.Log.level}} {{range .Log.nested}}<{{.}}>{{end}}",
+        one_shot=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        sink=sink,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) >= 3
+    assert seen, "no line was emitted"
+    assert compiles.getCount() == seen[0], (
+        f"{compiles.getCount() - seen[0]} compiles after the first micro-batch"
+    )
 
 
 def test_render_fn_escape_hatch(spark):
@@ -313,9 +376,10 @@ def test_streaming_max_lines_caps_each_batch(spark, tmp_path):
 
 def test_streaming_watch_with_log_template(spark, tmp_path):
     """A .Log-accessing template must run on STREAMING input: the
-    hoisted payload prep columns switch to the streaming-safe
-    evaluate-once gate (the batch gate's monotonically_increasing_id is
-    rejected by the streaming analyzer). Output must equal batch."""
+    hoisted payload prep columns are pinned by the evaluate-once gate,
+    whose ``spark_partition_id()`` the streaming analyzer accepts
+    (``monotonically_increasing_id`` it rejects). Output must equal
+    batch."""
     src = tmp_path / "records"
     write_fixture_parquet(spark, str(src), n_records=30)
     tpl = "{{.ShortHostId}} {{.Log.level}} {{range .Log.nested}}<{{.}}>{{end}}"
