@@ -103,17 +103,6 @@ _SPREAD_MIN_BYTES = 512 * 1024
 # §1.2 "configuration only after the algorithm").
 
 
-def _env_int(name: str, default: int) -> int:
-    """Defensive env parse: a malformed or non-positive value falls back
-    to the default instead of raising at query-build time (a typo like
-    ``-1`` must not disable a floor), as ``sources.files._env_count``."""
-    try:
-        n = int(os.environ.get(name, "") or default)
-    except ValueError:
-        return default
-    return n if n >= 1 else default
-
-
 def _spread_scan(
     spark: SparkSession, df: DataFrame, path: str, spread: bool = False
 ) -> DataFrame:
@@ -137,13 +126,10 @@ def _spread_scan(
     Multi-row-group inputs (any production layout at scale)
     parallelize natively and are returned untouched, so nothing here
     tunes for local mode — it only repairs the degenerate single-group
-    case. Env hooks: SPARK_GRAFT_SPREAD_SCANS=0 disables all spreads;
-    SPARK_GRAFT_SPREAD_GLOBAL=1 applies the trigger to every load (the
-    A/B hook that measured the opt-in table); floors overridable via
-    SPARK_GRAFT_SPREAD_MIN_ROWS / _MIN_BYTES."""
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCANS", "1") != "1":
-        return df
-    if not spread and os.environ.get("SPARK_GRAFT_SPREAD_GLOBAL") != "1":
+    case. The floors are fixed constants. SPARK_GRAFT_SPREAD_SCANS=0
+    disables every spread: it is the ``tools/ab_env.py`` arm that
+    re-verifies the opted-in queries against their unspread plans."""
+    if not spread or os.environ.get("SPARK_GRAFT_SPREAD_SCANS", "1") != "1":
         return df
     if path not in _SPREAD_META:
         meta: tuple[int, int] | None = None
@@ -160,9 +146,7 @@ def _spread_scan(
     if meta is None:
         return df
     rows, nbytes = meta
-    min_rows = _env_int("SPARK_GRAFT_SPREAD_MIN_ROWS", _SPREAD_MIN_ROWS)
-    min_bytes = _env_int("SPARK_GRAFT_SPREAD_MIN_BYTES", _SPREAD_MIN_BYTES)
-    if rows >= min_rows or nbytes >= min_bytes:
+    if rows >= _SPREAD_MIN_ROWS or nbytes >= _SPREAD_MIN_BYTES:
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

@@ -51,6 +51,7 @@ from pyspark.sql.window import Window
 
 from kinesis_log_watcher_spark.queries.base import load, register
 from kinesis_log_watcher_spark.queries.round9 import _h15
+from kinesis_log_watcher_spark.sources.files import run_replay
 
 # ===========================================================================
 # The synthetic retrieval panel
@@ -1747,28 +1748,6 @@ def retrieval_eval_embeddings(
 # twin discipline: a green row certifies live == batch bit-for-bit)
 # ===========================================================================
 
-import itertools as _it
-
-_stream_r10_counter = _it.count()
-
-
-def _finalize_stream_table(spark, df_writer, name):
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        replay_partitions,
-    )
-
-    with replay_partitions(spark):
-        q = (
-            df_writer.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    return spark.table(name)
-
 
 @register(
     "stream_retrieval_coverage",
@@ -1814,8 +1793,7 @@ def stream_retrieval_coverage(
         .cast("long")
         .alias("rel_b"),
     )
-    name = f"stream_rcov_{next(_stream_r10_counter)}"
-    tbl = _finalize_stream_table(spark, cov.writeStream, name)
+    tbl = run_replay(cov, "complete", "stream_rcov")
     micro = (
         "CASE WHEN n_rel = 0 THEN CAST(0 AS BIGINT) "
         "ELSE CAST({} * 1000000 div n_rel AS BIGINT) END"
@@ -2382,8 +2360,7 @@ def stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("arm_a").cast("long").alias("o_a"),
     )
-    name = f"stream_srm_{next(_stream_r10_counter)}"
-    tbl = _finalize_stream_table(spark, agg.writeStream, name)
+    tbl = run_replay(agg, "complete", "stream_srm")
     return tbl.select(
         "event_type",
         "n",

@@ -58,7 +58,6 @@ tail-and-render CLI; this wave is gate-mandated engine surface.)
 
 from __future__ import annotations
 
-import itertools as _it
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,7 +73,6 @@ from kinesis_log_watcher_spark.queries.round10 import (
     _SQL_RMPANEL,
     _SQL_SCORED,
     _draw,
-    _finalize_stream_table,
     _hs,
     _nrel,
     _panel,
@@ -82,8 +80,7 @@ from kinesis_log_watcher_spark.queries.round10 import (
     _rm_panel_from,
     _scored_from,
 )
-
-_stream_r11_counter = _it.count()
+from kinesis_log_watcher_spark.sources.files import run_replay
 
 # ===========================================================================
 # Wave 1: DPO / KTO / rejection-sampling preference eval
@@ -1269,8 +1266,7 @@ def stream_rejection_sampling(
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     state = _rs_state(stream)
-    name = f"stream_rs_{next(_stream_r11_counter)}"
-    tbl = _finalize_stream_table(spark, state.writeStream, name)
+    tbl = run_replay(state, "complete", "stream_rs")
     return _rs_finalize(tbl)
 
 
@@ -1296,8 +1292,7 @@ def stream_rebuild_cadence(
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     state = _cadence_state(stream)
-    name = f"stream_cad_{next(_stream_r11_counter)}"
-    tbl = _finalize_stream_table(spark, state.writeStream, name)
+    tbl = run_replay(state, "complete", "stream_cad")
     return _cadence_finalize(tbl)
 
 

@@ -34,8 +34,6 @@ queries/round6.py and queries/mining.py.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2349,7 +2347,6 @@ def stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reader (per-shard offset map, bounded per-trigger batches) — the
 # bounded stream must reduce to the batch answer.
 
-_SIM_COUNTER = itertools.count()
 _SIM_SHARDS = 4
 _SIM_PER_SHARD = 250
 
@@ -2443,10 +2440,7 @@ def kinesis_sim_batch_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kinesis_sim_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.queries.base import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        replay_partitions,
-    )
+    from kinesis_log_watcher_spark.sources.files import run_replay
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
@@ -2461,17 +2455,7 @@ def kinesis_sim_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     agg = _sim_rollup(raw)
-    name = f"sim_stream_{next(_SIM_COUNTER)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    return spark.table(name)
+    return run_replay(agg, "complete", "sim_stream")
 
 
 # ---------------------------------------------------------------------------
@@ -2928,9 +2912,8 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.queries.warehouse import _scd2_dim
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
     from kinesis_log_watcher_spark.functions.tscompat import (
         normalize_ts_cols,
@@ -2955,17 +2938,7 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_events"),
         F.sum("bal_cents").cast("long").alias("asof_bal_cents"),
     )
-    name = f"scd2_enrich_{next(_SIM_COUNTER)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    return spark.table(name)
+    return run_replay(agg, "complete", "scd2_enrich")
 
 
 # ---------------------------------------------------------------------------

@@ -691,7 +691,7 @@ def stream_kinesis_sim_split_resume(
             .trigger(availableNow=True)
             .start()
         )
-        await_or_raise(q, 300)
+        await_or_raise(q)
 
     # Phase 1: the stream has only produced up to parent seq 60 —
     # strictly pre-split, so the checkpoint knows nothing of shards 4/5.
@@ -1549,7 +1549,7 @@ def stream_kinesis_sim_merge_resume(
             .trigger(availableNow=True)
             .start()
         )
-        await_or_raise(q, 300)
+        await_or_raise(q)
 
     consume(maxVisibleSeq="60")  # strictly pre-merge snapshot
     consume()  # post-merge world: resume across the double closure

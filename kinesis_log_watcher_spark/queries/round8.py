@@ -1107,10 +1107,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (<= 512 buckets for any int64), the histogram-family pattern.
 # ---------------------------------------------------------------------------
 
-import itertools as _itertools
-
 _DD_QS = (50, 90, 95, 99)
-_dd_counter = _itertools.count()
 
 
 _DD_BUCKET_EXPR = (
@@ -1572,9 +1569,8 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
     from kinesis_log_watcher_spark.session import ensure_session_confs
 
@@ -1591,17 +1587,7 @@ def stream_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("idx")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    name = f"stream_ddsketch_{next(_dd_counter)}"
-    with replay_partitions(spark):
-        q = (
-            b.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    return _dd_finalize(spark.table(name))
+    return _dd_finalize(run_replay(b, "complete", "stream_ddsketch"))
 
 
 # ---------------------------------------------------------------------------

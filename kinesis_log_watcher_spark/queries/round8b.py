@@ -1293,9 +1293,6 @@ def graph_anf_reach_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming AMS F2 twin: the sketch as streaming aggregation state
 # ===========================================================================
 
-_ams_counter_src = __import__("itertools").count()
-
-
 @register(
     "stream_ams_f2_sketch",
     # oracle = the batch ams_f2_sketch_estimate SQL verbatim: green ==
@@ -1342,9 +1339,8 @@ _ams_counter_src = __import__("itertools").count()
 def stream_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.session import ensure_session_confs
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
 
     ensure_session_confs(spark)
@@ -1375,16 +1371,7 @@ def stream_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     zb = signed.groupBy("estimator").agg(
         F.sum("sgn").cast("long").alias("z")
     )
-    name = f"stream_ams_{next(_ams_counter_src)}"
-    with replay_partitions(spark):
-        q = (
-            zb.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
+    sink = run_replay(zb, "complete", "stream_ams")
     # exact F2 is a batch-side scalar (sum of squared user frequencies)
     events = load(spark, sf_dir, "events")
     f2 = (
@@ -1398,8 +1385,7 @@ def stream_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # same true-`div` + DECIMAL(38,0) discipline as the batch twin
     return (
-        spark.table(name)
-        .withColumn(
+        sink.withColumn(
             "sumzz", F.sum(F.col("z") * F.col("z")).over(wall).cast("long")
         )
         .select(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.queries.base import load, register
+from kinesis_log_watcher_spark.sources.files import run_replay
 
 
 def _h15(col):
@@ -2560,28 +2561,6 @@ def elo_sequential_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming and batch paths agree bit-for-bit on the same corpus, the
 # DDSketch/AMS-twin discipline.
 
-import itertools as _it
-
-_stream_eval_counter = _it.count()
-
-
-def _finalize_stream_table(spark, df_writer, name):
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        replay_partitions,
-    )
-
-    with replay_partitions(spark):
-        q = (
-            df_writer.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-    return spark.table(name)
-
 
 def _stream_pc(spark, sf_dir):
     from kinesis_log_watcher_spark.session import ensure_session_confs
@@ -2624,8 +2603,7 @@ def stream_winrate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ties"),
     )
-    name = f"stream_wr_{next(_stream_eval_counter)}"
-    tbl = _finalize_stream_table(spark, counts.writeStream, name)
+    tbl = run_replay(counts, "complete", "stream_wr")
     return tbl.select(
         "model_a",
         "model_b",
@@ -2671,8 +2649,7 @@ def stream_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("conf_micro").cast("long").alias("sum_conf"),
         F.sum("correct").cast("long").alias("sum_correct"),
     )
-    name = f"stream_ece_{next(_stream_eval_counter)}"
-    tbl = _finalize_stream_table(spark, bins.writeStream, name)
+    tbl = run_replay(bins, "complete", "stream_ece")
     gaps = tbl.select(
         "bin",
         "n",
@@ -2732,8 +2709,7 @@ def stream_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_only_b"),
     )
-    name = f"stream_mcn_{next(_stream_eval_counter)}"
-    tbl = _finalize_stream_table(spark, cells.writeStream, name)
+    tbl = run_replay(cells, "complete", "stream_mcn")
     chi2 = (
         "CAST(GREATEST(abs(n_only_a - n_only_b) - 1, 0) AS DECIMAL(38,0)) "
         "* GREATEST(abs(n_only_a - n_only_b) - 1, 0) * 1000000 "

@@ -4,11 +4,20 @@ The reference reads only from Kinesis (main.go:148-243); for offline
 correctness the same logical stream is a parquet/json directory with the
 RAW_KINESIS_SCHEMA. Structured Streaming's file source gives the same
 micro-batch semantics the connector would (SURVEY.md §1.1).
+
+:func:`run_replay` is the one bounded-replay entry point: every
+memory-sink streaming operator is a declarative query handed to it,
+and it owns the trigger (AvailableNow), the sink, the query naming,
+the replay partition scope and the timeout. The timeout is one constant,
+``REPLAY_TIMEOUT_S``, shared with the replays that keep their own sink:
+a bounded replay that runs out of it is hung, so there is nothing for a
+caller to tune.
 """
 
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import re
 import threading
@@ -168,12 +177,16 @@ def replay_partitions(spark, n: int | None = None):
     start, so restoring after the replay cannot affect the running
     query.)
 
-    ``n`` defaults to $SPARK_GRAFT_REPLAY_PARTITIONS (else 4 — a
-    2-vs-4-vs-8 sweep over twelve JVM-stateful replays at sf0.1 put 4
-    first or tied-first on ten of them, e.g. two-level agg 4.0s -> 3.1s,
-    watermark dedup 1.8s -> 1.3s; stream-stream JOINS still pin n=2:
-    their per-partition cost is four join state stores, and the sweep
-    read 5.6s/6.3s/10.2s at 2/4/8 on the full-outer replay). Callers
+    :func:`run_replay`, the one bounded-replay entry point, opens this
+    scope for every memory-sink replay; the two foreachBatch replays
+    (streaming/cdc.py, streaming/annindex.py) open it themselves.
+
+    ``n`` defaults to 4 (a 2-vs-4-vs-8 sweep over twelve JVM-stateful
+    replays at sf0.1 put 4 first or tied-first on ten of them, e.g.
+    two-level agg 4.0s -> 3.1s, watermark dedup 1.8s -> 1.3s;
+    stream-stream JOINS still pin n=2: their per-partition cost is four
+    join state stores, and the sweep read 5.6s/6.3s/10.2s at 2/4/8 on
+    the full-outer replay). Callers
     whose per-group work crosses the Python boundary
     (applyInPandasWithState / transformWithState processors) pass a
     larger explicit ``n``: their micro-batch cost is ~|groups| Python
@@ -191,7 +204,7 @@ def replay_partitions(spark, n: int | None = None):
     sees the reduced count — that is the documented, perf-only trade
     the partitioning-independence contract allows."""
     if n is None:
-        n = _env_count("SPARK_GRAFT_REPLAY_PARTITIONS", 4)
+        n = 4
     key = "spark.sql.shuffle.partitions"
     sid = id(spark)
     with _REPLAY_LOCK:
@@ -217,16 +230,51 @@ def replay_partitions(spark, n: int | None = None):
                 spark.conf.set(key, scope[1])
 
 
-def await_or_raise(query, timeout_s: int) -> None:
+# Hang detector for every bounded replay, not a tuning knob (see the
+# module docstring).
+REPLAY_TIMEOUT_S = 300
+
+_REPLAY_IDS = itertools.count()
+
+
+def await_or_raise(query) -> None:
     """awaitTermination that REFUSES to return a partial answer: a
-    bounded replay that hasn't terminated within the timeout raises
-    instead of letting the caller read a half-populated memory sink."""
-    if not query.awaitTermination(timeout_s):
+    bounded replay that hasn't terminated within ``REPLAY_TIMEOUT_S``
+    raises instead of letting the caller read a half-populated sink."""
+    if not query.awaitTermination(REPLAY_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
-            f"streaming replay did not finish within {timeout_s}s; "
+            f"streaming replay did not finish within {REPLAY_TIMEOUT_S}s; "
             "partial sink contents would be silently wrong"
         )
+
+
+def run_replay(
+    df: DataFrame, mode: str, name: str, partitions: int | None = None
+) -> DataFrame:
+    """Drain the bounded streaming query ``df`` once (Trigger.AvailableNow,
+    the reference's -O one-shot, main.go:89-92) into a memory sink in
+    ``mode`` ("append"/"complete") and return the sink as a static table.
+
+    The sink is named ``{name}_{n}`` with ``n`` from one process-wide
+    counter, so concurrent replays of the same operator never share a
+    table and the query name keeps the operator's prefix for progress
+    listeners. ``partitions`` is handed to :func:`replay_partitions`.
+    Raises ``TimeoutError`` (after stopping the query) if the replay
+    does not finish within ``REPLAY_TIMEOUT_S``. Test-scale plumbing:
+    production streams are unbounded and never land in a memory sink."""
+    spark = df.sparkSession
+    table = f"{name}_{next(_REPLAY_IDS)}"
+    with replay_partitions(spark, partitions):
+        q = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(table)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q)
+    return spark.table(table)
 
 
 def morton_code(a, b, bits: int = 16):
@@ -343,21 +391,10 @@ def stage_replay_files_split(
         if not files:
             shutil.rmtree(replay)
             raise ValueError(f"replay part {i} is empty; staging aborted")
-        if len(files) == 1:
-            dest = os.path.join(replay, f"f{i}.parquet")
-            shutil.copy(files[0], dest)
-        else:
-            # >1 file only if a repartition put one part in two tasks —
-            # fold them through a local re-read to keep ONE file per
-            # micro-batch (never happens with repartition(n, col), kept
-            # for safety).
-            sub = spark.read.parquet(*files)
-            tmp = os.path.join(replay, f"_m{i}")
-            sub.coalesce(1).write.parquet(tmp)
-            (one,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-            dest = os.path.join(replay, f"f{i}.parquet")
-            shutil.copy(one, dest)
-            shutil.rmtree(tmp)
+        # repartition(n, col) puts each part in exactly one task
+        (src,) = files
+        dest = os.path.join(replay, f"f{i}.parquet")
+        shutil.copy(src, dest)
         os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
     shutil.rmtree(stage)
     return replay

@@ -31,8 +31,11 @@ rebuild by design, as in every production IVF serving stack.
 from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
+    await_or_raise,
     python_state_partitions,
+    read_parquet_stream,
     replay_partitions,
+    stage_replay_files,
 )
 
 import itertools
@@ -73,7 +76,6 @@ def run_stream_ivf_index_update(
     emb_path: str,
     base_max_id: int = 250,
     n_replay_parts: int = 3,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Build the base index, stream the post-``base_max_id`` vectors in
     as ``n_replay_parts`` micro-batches of incremental cell deltas, and
@@ -82,11 +84,6 @@ def run_stream_ivf_index_update(
     from kinesis_log_watcher_spark.operators.similarity import (
         exact_dot,
         exploded_components,
-    )
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-        stage_replay_files,
     )
     from kinesis_log_watcher_spark.staging import scratch_dir
 
@@ -135,7 +132,7 @@ def run_stream_ivf_index_update(
             .trigger(availableNow=True)
             .start()
         )
-        await_or_raise(q, timeout_s)
+        await_or_raise(q)
 
     # ---- merge-on-read probe over the maintained index ----
     base_cells = spark.read.schema(_CELL_SCHEMA).parquet(base_dir)

@@ -20,7 +20,9 @@ format, which is this exact layout plus a transaction log.
 from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
+    await_or_raise,
     python_state_partitions,
+    read_parquet_stream,
     replay_partitions,
 )
 
@@ -59,16 +61,10 @@ def run_cdc_upsert(
     key_cols: tuple[str, ...],
     version_col: str,
     max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay ``changes_path`` as a stream, land each micro-batch as an
     idempotent delta directory under ``target_dir``, and return the
     merge-on-read resolved state."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(
         spark, changes_path, max_files_per_trigger=max_files_per_trigger
@@ -97,7 +93,7 @@ def run_cdc_upsert(
             .trigger(availableNow=True)
             .start()
         )
-        await_or_raise(q, timeout_s)
+        await_or_raise(q)
 
     deltas = spark.read.option("basePath", target_dir).parquet(
         os.path.join(target_dir, "batch=*")

@@ -26,7 +26,6 @@ micro-batch; emission volume is |keys| rows per batch.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -39,9 +38,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
 from kinesis_log_watcher_spark.session import ensure_session_confs
 from kinesis_log_watcher_spark.sources.files import (
-    await_or_raise,
     read_parquet_stream,
-    replay_partitions,
+    run_replay,
     stage_replay_files,
 )
 
@@ -53,8 +51,6 @@ UPDATE_SCHEMA = (
     "n_breaches bigint"
 )
 STATE_SCHEMA = "p bigint, pmin bigint, pmax bigint, breaches bigint, n bigint"
-
-_counter = itertools.count()
 
 
 def _cusum_fn(target_milli: int, threshold_milli: int):
@@ -111,7 +107,6 @@ def cusum_update_stream(
 def run_stream_cusum(
     spark: SparkSession,
     events_path: str,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay the bounded events table through the CUSUM monitor in two
     TIME-SPLIT batches (cross-batch state continuation under the exact
@@ -135,19 +130,9 @@ def run_stream_cusum(
     stream = normalize_ts_cols(
         read_parquet_stream(spark, replay, max_files_per_trigger=1)
     )
-    name = f"stream_cusum_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            cusum_update_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
     # snapshots are monotone in n: the final state is the max-n row
-    snap = spark.table(name).groupBy("event_type").agg(
+    updates = run_replay(cusum_update_stream(stream), "update", "stream_cusum")
+    snap = updates.groupBy("event_type").agg(
         F.max(
             F.struct("n", "cusum_pos", "cusum_neg", "n_breaches")
         ).alias("m")

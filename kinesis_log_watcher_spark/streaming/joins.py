@@ -15,9 +15,11 @@ state), which is what the SQL oracle computes.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import replay_partitions
-
-import itertools
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+    stage_replay_files,
+)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,8 +27,6 @@ from pyspark.sql import functions as F
 from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
 
 from kinesis_log_watcher_spark.session import ensure_session_confs
-
-_counter = itertools.count()
 
 
 def clicks_to_purchases(
@@ -61,13 +61,10 @@ def run_stream_stream_join(
     spark: SparkSession,
     events_path: str,
     within: str = "1 hour",
-    timeout_s: int = 300,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Replay the events table as TWO streams (clicks / purchases) and
     stream-stream join them."""
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
     ensure_session_confs(spark)
 
     def stream():
@@ -79,28 +76,15 @@ def run_stream_stream_join(
     purchases = stream().filter(F.col("event_type") == "purchase")
     joined = clicks_to_purchases(clicks, purchases, within)
 
-    name = f"stream_stream_join_{next(_counter)}"
     # n=2 pinned: a stream-stream join keeps FOUR state stores per
     # partition; the 2/4/8 sweep read 5.6/6.3/10.2s on the outer twin
-    with replay_partitions(spark, 2):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        from kinesis_log_watcher_spark.sources.files import await_or_raise
-
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(joined, "append", "stream_stream_join", 2)
 
 
 def run_stream_static_enrich(
     spark: SparkSession,
     events_path: str,
     customer_path: str,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Stream-STATIC join: enrich a replayed event stream with a static
     dimension table, then aggregate per (segment, event_type).
@@ -112,8 +96,6 @@ def run_stream_static_enrich(
     fact stream never shuffles for the join; only the post-join
     aggregate keeps (tiny, per-group) state."""
     from kinesis_log_watcher_spark.functions.exact import dec
-
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
 
     ensure_session_confs(spark)
     stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
@@ -129,19 +111,7 @@ def run_stream_static_enrich(
         F.sum(dec(F.col("value"), 28, 4)).cast("double").alias("sum_value"),
     )
 
-    name = f"stream_static_enrich_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        from kinesis_log_watcher_spark.sources.files import await_or_raise
-
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "stream_static_enrich")
 
 
 def _sentinel_replay_dir(spark: SparkSession, events_path: str) -> str:
@@ -199,8 +169,6 @@ def _sentinel_replay_dir(spark: SparkSession, events_path: str) -> str:
             row("purchase", -1001 - 2 * i)
         )
 
-    from kinesis_log_watcher_spark.sources.files import stage_replay_files
-
     return stage_replay_files(
         spark, [base, sentinel(1), sentinel(2)], prefix="ss_left_join_"
     )
@@ -210,7 +178,6 @@ def run_stream_stream_left_join(
     spark: SparkSession,
     events_path: str,
     within: str = "1 hour",
-    timeout_s: int = 300,
 ) -> DataFrame:
     """LEFT OUTER stream-stream join: every click, with its purchases
     within the hour OR an explicit no-purchase row.
@@ -228,11 +195,6 @@ def run_stream_stream_left_join(
     the watermark bound, not corpus size — exactly as the inner join;
     the outer form adds no state, only eviction-time emission.
     """
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     replay = _sentinel_replay_dir(spark, events_path)
 
@@ -268,28 +230,18 @@ def run_stream_stream_left_join(
         ).alias("purchase_ts"),
     )
 
-    name = f"stream_stream_left_join_{next(_counter)}"
     # n=2 pinned: see run_stream_stream_join
-    with replay_partitions(spark, 2):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    sink = run_replay(joined, "append", "stream_stream_left_join", 2)
     # Drop the sentinel rows POST-SINK (a batch filter): inside the
     # streaming plan this predicate would be pushed below the watermark
     # node and stop the sentinels from advancing it.
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return sink.filter(F.col("user_id") >= 0)
 
 
 def run_stream_index_admission(
     spark: SparkSession,
     docs_path: str,
     snapshot_max_id: int = 300,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Streaming admission against a STATIC dedup index — the
     stream-static LEFT ANTI join surface: the historical corpus's
@@ -305,10 +257,6 @@ def run_stream_index_admission(
     batch-compactor shape)."""
     from kinesis_log_watcher_spark.staging import scratch_dir
 
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
     from pyspark.sql.window import Window
 
     ensure_session_confs(spark)
@@ -325,18 +273,7 @@ def run_stream_index_admission(
     ).filter(F.col("doc_id") >= snapshot_max_id)
     fresh = stream.join(stored, "fp", "left_anti")
 
-    name = f"index_admission_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            fresh.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-
-    sink = spark.table(name)
+    sink = run_replay(fresh, "append", "index_admission")
     rn = F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
     resolved = sink.withColumn("rn", rn)
     return resolved.groupBy("source").agg(
@@ -354,7 +291,6 @@ def run_stream_stream_full_outer(
     spark: SparkSession,
     events_path: str,
     within: str = "1 hour",
-    timeout_s: int = 300,
 ) -> DataFrame:
     """FULL OUTER stream-stream join: every click emits its purchases or
     an explicit no-purchase row, AND every purchase not attributable to
@@ -365,11 +301,6 @@ def run_stream_stream_full_outer(
     symmetric and append-mode exact. Same sentinel-replay finalization
     and no-NULL-output conventions as run_stream_stream_left_join.
     """
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     replay = _sentinel_replay_dir(spark, events_path)
 
@@ -406,16 +337,7 @@ def run_stream_stream_full_outer(
         F.coalesce("purchase_ts", epoch).alias("purchase_ts"),
     )
 
-    name = f"stream_stream_full_outer_{next(_counter)}"
     # n=2 pinned: see run_stream_stream_join
-    with replay_partitions(spark, 2):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    sink = run_replay(joined, "append", "stream_stream_full_outer", 2)
     # sentinel rows dropped POST-SINK (see run_stream_stream_left_join)
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return sink.filter(F.col("user_id") >= 0)

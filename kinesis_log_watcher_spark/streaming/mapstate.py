@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
-    replay_partitions,
+    read_parquet_stream,
+    run_replay,
 )
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -48,7 +48,6 @@ from pyspark.sql.streaming.stateful_processor import (
 
 COUNT_SCHEMA = "user_id bigint, event_type string, n bigint"
 _STATE_SCHEMA = "types array<string>, counts array<bigint>"
-_counter = itertools.count()
 
 
 def _batch_increments(batch: pd.DataFrame) -> "list[tuple[str, int]]":
@@ -147,31 +146,15 @@ def run_type_counts(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay a bounded events table through the counter and resolve
     the update sink to final counts (counts are monotone per key, so
     latest = MAX — order-free)."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
-    name = f"type_counts_{next(_counter)}"
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            count_stream(stream.select("user_id", "event_type"))
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    updates = count_stream(stream.select("user_id", "event_type"))
     return (
-        spark.table(name)
+        run_replay(updates, "update", "type_counts", python_state_partitions())
         .groupBy("user_id", "event_type")
         .agg(F.max("n").cast("long").alias("n"))
     )

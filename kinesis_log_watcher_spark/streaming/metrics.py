@@ -1,6 +1,7 @@
 """Streaming observability: a StreamingQueryListener that records the
 operational metrics a production watcher needs — per-batch input rows,
-processing rates, state-store row counts, and event-time watermark lag.
+processing rates, state-store row counts, rows dropped as too late by
+the watermark, and event-time watermark lag.
 
 The reference has no metrics surface at all (its only observability is
 the rendered stdout stream); a 1000-executor deployment lives or dies
@@ -49,12 +50,17 @@ class MetricsRecorder(StreamingQueryListener):
         state_updated = sum(
             (op.numRowsUpdated or 0) for op in (p.stateOperators or [])
         )
+        dropped = sum(
+            (op.numRowsDroppedByWatermark or 0)
+            for op in (p.stateOperators or [])
+        )
         row = {
             "name": p.name,
             "batch_id": p.batchId,
             "input_rows": p.numInputRows or 0,
             "state_rows": state_rows,
             "state_rows_updated": state_updated,
+            "rows_dropped_by_watermark": dropped,
             "watermark": (p.eventTime or {}).get("watermark"),
             "duration_ms": (p.durationMs or {}).get("triggerExecution"),
         }
@@ -98,6 +104,9 @@ class MetricsRecorder(StreamingQueryListener):
             "total_input_rows": sum(r["input_rows"] for r in rows),
             "max_state_rows": max(
                 (r["state_rows"] for r in rows), default=0
+            ),
+            "total_dropped_by_watermark": sum(
+                r["rows_dropped_by_watermark"] for r in rows
             ),
             "last_watermark": rows[-1]["watermark"] if rows else None,
         }

@@ -38,9 +38,11 @@ Plan shape:
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import replay_partitions
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+)
 
-import itertools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -60,7 +62,6 @@ from kinesis_log_watcher_spark.operators.dedup import (
 )
 from kinesis_log_watcher_spark.session import ensure_session_confs
 
-_counter = itertools.count()
 
 _ROWS = NUM_HASHES // BANDS
 
@@ -198,7 +199,6 @@ def run_stream_neardup(
     spark: SparkSession,
     docs_path: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
     state_ttl_ms: int | None = None,
     max_bucket_members: int | None = DEFAULT_MAX_BUCKET_MEMBERS,
 ) -> DataFrame:
@@ -211,23 +211,8 @@ def run_stream_neardup(
     live TTL never terminates — and a bounded replay has no idle-state
     problem to solve. The member cap stays on. Long-running deployments
     use ``neardup_pair_stream`` directly, where the TTL defaults ON."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
 
-    name = f"neardup_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            neardup_pair_stream(stream, state_ttl_ms, max_bucket_members)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return candidate_pairs(spark.table(name))
+    pairs = neardup_pair_stream(stream, state_ttl_ms, max_bucket_members)
+    return candidate_pairs(run_replay(pairs, "update", "neardup"))

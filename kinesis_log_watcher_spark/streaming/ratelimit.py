@@ -37,10 +37,10 @@ from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
-    replay_partitions,
+    read_parquet_stream,
+    run_replay,
 )
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -62,7 +62,6 @@ RATE_LIMIT_K = 5
 RATE_WINDOW_S = 3600
 
 _US = 1_000_000
-_counter = itertools.count()
 
 ADMIT_SCHEMA = "user_id bigint, event_id bigint, admitted int"
 STATE_SCHEMA = "ts_log array<bigint>, eid_log array<bigint>"
@@ -202,33 +201,17 @@ def run_rate_limit(
     k: int = RATE_LIMIT_K,
     window_s: int = RATE_WINDOW_S,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay a bounded events table through the rate limiter and roll
     the per-event admissions up per user. Each event is emitted exactly
     once (in the batch that carries it), so the update sink is already
     the full decision relation."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     stream = normalize_ts_cols(stream)
-    name = f"rate_limit_{next(_counter)}"
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            admit_stream(stream, k, window_s)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    decisions = admit_stream(stream, k, window_s)
     return (
-        spark.table(name)
+        run_replay(decisions, "update", "rate_limit", python_state_partitions())
         .groupBy("user_id")
         .agg(
             F.count("*").cast("long").alias("n_events"),

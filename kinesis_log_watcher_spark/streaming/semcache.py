@@ -30,7 +30,6 @@ otherwise — same fold, same emissions.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -49,7 +48,6 @@ from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 
 PARTIAL_SCHEMA = "cluster bigint, bucket bigint, n_requests bigint, n_hits bigint"
 _STATE_SCHEMA = "last_event bigint"
-_counter = itertools.count()
 
 
 def _fold_batch(
@@ -148,7 +146,6 @@ def run_semcache_eval(
     clusters: int,
     ttl: int,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
     use_tws: bool | None = None,
 ) -> DataFrame:
     """Replay a bounded events table through the online cache gate and
@@ -156,10 +153,9 @@ def run_semcache_eval(
     are disjoint per (cluster, batch), so the rollup is an order-free
     SUM)."""
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         python_state_partitions,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
 
     ensure_session_confs(spark)
@@ -179,19 +175,9 @@ def run_semcache_eval(
             % clusters
         ).alias("cluster"),
     )
-    name = f"semcache_{next(_counter)}"
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            cache_partials_stream(requests, ttl, use_tws=use_tws)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    partials = cache_partials_stream(requests, ttl, use_tws=use_tws)
     return (
-        spark.table(name)
+        run_replay(partials, "update", "semcache", python_state_partitions())
         .groupBy("bucket")
         .agg(
             F.sum("n_requests").cast("long").alias("n_requests"),

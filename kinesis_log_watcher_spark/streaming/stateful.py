@@ -27,9 +27,11 @@ holds only active sessions.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import replay_partitions
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+)
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -54,7 +56,6 @@ UPDATE_SCHEMA = (
 STATE_SCHEMA = "start_us bigint, last_us bigint, n_events bigint"
 
 _US = 1_000_000
-_counter = itertools.count()
 
 
 def _session_updates(gap_s: int):
@@ -139,28 +140,12 @@ def run_stateful_sessions(
     events_path: str,
     gap_s: int = SESSION_GAP_S,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay a bounded events table through the stateful operator and
     reduce the update stream to final sessions."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     stream = normalize_ts_cols(stream)
 
-    name = f"stateful_sessions_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            session_update_stream(stream, gap_s)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return final_sessions(spark.table(name))
+    updates = session_update_stream(stream, gap_s)
+    return final_sessions(run_replay(updates, "update", "stateful_sessions"))

@@ -43,10 +43,11 @@ from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
-    replay_partitions,
+    read_parquet_stream,
+    run_replay,
+    stage_replay_files_split,
 )
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -67,7 +68,6 @@ OUTPUT_SCHEMA = (
 _STATE_SCHEMA = "start_us bigint, last_us bigint, n_events bigint"
 _US = 1_000_000
 _SENTINEL_USER = -1
-_counter = itertools.count()
 
 
 def _timer_session_fn(gap_s: int):
@@ -187,17 +187,11 @@ def run_timer_sessions(
     spark: SparkSession,
     events_path: str,
     gap_s: int = 1800,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay the bounded events table through the timer-finalized
     sessionizer; return ONLY the finalized sessions (each exactly once).
     """
     from kinesis_log_watcher_spark.queries.base import load
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-        stage_replay_files_split,
-    )
 
     ensure_session_confs(spark)
     sf_dir = events_path.rsplit("/", 1)[0]
@@ -231,19 +225,9 @@ def run_timer_sessions(
     stream = normalize_ts_cols(
         read_parquet_stream(spark, replay, max_files_per_trigger=1)
     )
-    name = f"timer_sessions_{next(_counter)}"
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            timer_session_stream(stream, gap_s)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    updates = timer_session_stream(stream, gap_s)
     return (
-        spark.table(name)
+        run_replay(updates, "update", "timer_sessions", python_state_partitions())
         .filter(F.col("finalized") & (F.col("user_id") != _SENTINEL_USER))
         .select("user_id", "session_start", "session_end", "n_events")
     )

@@ -30,7 +30,6 @@ otherwise — same fold, same emissions.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -57,7 +56,6 @@ ADMIT_SCHEMA = (
 _STATE_SCHEMA = (
     "cum_tokens bigint, cum_adm_tokens bigint, n_docs bigint, n_adm bigint"
 )
-_counter = itertools.count()
 
 _RANKS = merge_ranks()
 _WORD_CACHE: dict[str, int] = {}
@@ -182,33 +180,21 @@ def run_token_budget_admission(
     spark: SparkSession,
     docs_path: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
     use_tws: bool | None = None,
 ) -> DataFrame:
     """Replay a bounded documents table through the admission gate and
     resolve the update sink to the final per-source counters (all four
     counters are monotone per key, so latest = MAX — order-free)."""
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
 
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
-    name = f"token_budget_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            admission_stream(stream, use_tws=use_tws)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
+    updates = admission_stream(stream, use_tws=use_tws)
     return (
-        spark.table(name)
+        run_replay(updates, "update", "token_budget")
         .groupBy("source")
         .agg(
             F.max("n_docs").cast("long").alias("n_docs"),

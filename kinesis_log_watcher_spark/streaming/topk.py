@@ -33,9 +33,11 @@ this belongs to the SURVEY.md §2.2 streaming-stateful family.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import replay_partitions
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+)
 
-import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -60,7 +62,6 @@ TOPK_SCHEMA = (
 _STATE_SCHEMA = (
     "vals array<bigint>, event_ids array<bigint>, user_ids array<bigint>"
 )
-_counter = itertools.count()
 
 
 def _fold_board(
@@ -171,17 +172,11 @@ def run_stream_topk(
     events_path: str,
     k: int = TOPK_K,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay a bounded events table through the leaderboard and
     resolve the update sink: every emission is a running top-k, so the
     DISTINCT union of emissions contains the global top-k and one
     re-rank recovers it — order-free in the replay split."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     feed = stream.select(
@@ -192,22 +187,11 @@ def run_stream_topk(
             "CAST(floor(CAST(value AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
         ).alias("value_milli"),
     )
-    name = f"stream_topk_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            topk_stream(feed, k)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
     w = Window.partitionBy("event_type").orderBy(
         F.col("value_milli").desc(), F.col("event_id")
     )
     return (
-        spark.table(name)
+        run_replay(topk_stream(feed, k), "update", "stream_topk")
         .distinct()
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)

@@ -40,10 +40,10 @@ from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
-    replay_partitions,
+    read_parquet_stream,
+    run_replay,
 )
 
-import itertools
 from collections.abc import Iterator
 
 import numpy as np
@@ -79,7 +79,6 @@ def tws_runtime_available() -> bool:
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, value_sum_q bigint"
 _STATE_SCHEMA = "n_events bigint, value_sum_q bigint"
-_counter = itertools.count()
 
 
 class RunningTotalsProcessor(StatefulProcessor):
@@ -174,28 +173,14 @@ def run_running_totals(
     spark: SparkSession,
     events_dir: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay a directory of parquet event files through the operator
     and reduce the update stream to final totals."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_dir, max_files_per_trigger)
     stream = normalize_ts_cols(stream)
 
-    name = f"tws_totals_{next(_counter)}"
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            running_totals_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return final_totals(spark.table(name))
+    updates = running_totals_stream(stream)
+    return final_totals(
+        run_replay(updates, "update", "tws_totals", python_state_partitions())
+    )

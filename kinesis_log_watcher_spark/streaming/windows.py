@@ -12,8 +12,6 @@ state; complete-mode memory sink here is test-scale plumbing only.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,19 +21,16 @@ from kinesis_log_watcher_spark.session import ensure_session_confs
 
 from kinesis_log_watcher_spark.functions.exact import dec
 from kinesis_log_watcher_spark.sources.files import (
-    replay_partitions,
-    await_or_raise,
     read_parquet_stream,
+    run_replay,
+    stage_replay_files,
 )
-
-_counter = itertools.count()
 
 
 def run_windowed_counts(
     spark: SparkSession,
     events_path: str,
     window: str = "1 hour",
-    timeout_s: int = 300,
 ) -> DataFrame:
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path)
@@ -50,24 +45,13 @@ def run_windowed_counts(
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )
-    name = f"windowed_counts_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "windowed_counts")
 
 
 def run_session_windows(
     spark: SparkSession,
     events_path: str,
     gap: str = "30 minutes",
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Native session windows (``F.session_window``): Spark's built-in
     gap-merge stateful aggregation — the engine-supplied version of what
@@ -94,24 +78,13 @@ def run_session_windows(
             "n_events",
         )
     )
-    name = f"session_windows_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "session_windows")
 
 
 def run_streaming_dedup(
     spark: SparkSession,
     events_path: str,
     keys: list[str] | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Streaming exact dedup: ``dropDuplicates`` over a bounded replay —
     first arrival per key wins, later duplicates are suppressed by the
@@ -127,24 +100,13 @@ def run_streaming_dedup(
     keys = keys or ["user_id", "event_type"]
     stream = read_parquet_stream(spark, events_path)
     deduped = stream.select(*keys).dropDuplicates(keys)
-    name = f"stream_dedup_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(deduped, "append", "stream_dedup")
 
 
 def run_watermark_dedup(
     spark: SparkSession,
     events_path: str,
     delay: str = "400 days",
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Watermark-bounded streaming dedup: ``dropDuplicatesWithinWatermark``
     on (user_id, event_type, minute(ts)). Unlike ``dropDuplicates``, the
@@ -171,17 +133,7 @@ def run_watermark_dedup(
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute_ts"])
         .select("user_id", "event_type", "minute_ts")
     )
-    name = f"stream_wm_dedup_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(deduped, "append", "stream_wm_dedup")
 
 
 def run_sliding_counts(
@@ -189,7 +141,6 @@ def run_sliding_counts(
     events_path: str,
     window: str = "2 hours",
     slide: str = "1 hour",
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Sliding event-time windows over a bounded replay: each event lands
     in window/slide overlapping windows (2 here). Same AvailableNow →
@@ -207,17 +158,7 @@ def run_sliding_counts(
             "n",
         )
     )
-    name = f"sliding_counts_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "sliding_counts")
 
 
 # Streaming corpus admission (the curation gate applied at ingest time).
@@ -230,7 +171,6 @@ def run_streaming_admission(
     spark: SparkSession,
     docs_path: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Corpus admission at INGEST time: the same per-document gates a
     batch curation pass applies (source allowlist, length floor,
@@ -244,11 +184,6 @@ def run_streaming_admission(
     exactly the docs a later batch re-run would pick (no RNG drift
     between the streaming and batch paths — the md5 convention from
     operators/sampling.py)."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-    )
-
     ensure_session_confs(spark)
     stream = read_parquet_stream(
         spark, docs_path, max_files_per_trigger=max_files_per_trigger
@@ -272,24 +207,13 @@ def run_streaming_admission(
         .cast("long")
         .alias("n_sampled"),
     )
-    name = f"stream_admission_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "stream_admission")
 
 
 def run_streaming_hll(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """STREAMING HyperLogLog: maintain the per-group register table of
     operators/sketch.hll_build as streaming aggregation state, then
@@ -315,25 +239,14 @@ def run_streaming_hll(
         spark, events_path, max_files_per_trigger=max_files_per_trigger
     )
     regs = hll_build(stream, "user_id", group_cols=("event_type",), p=4)
-
-    name = f"stream_hll_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return hll_estimate(spark.table(name), group_cols=("event_type",), p=4)
+    sink = run_replay(regs, "complete", "stream_hll")
+    return hll_estimate(sink, group_cols=("event_type",), p=4)
 
 
 def run_late_data_accounting(
     spark: SparkSession,
     events_path: str,
     late_day: int = 5,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Watermark LATE-DATA DROP semantics, replayed deterministically.
 
@@ -360,12 +273,6 @@ def run_late_data_accounting(
 
     Final append-mode counts therefore exclude exactly the late slice,
     which the SQL oracle states directly."""
-    from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
-        read_parquet_stream,
-        stage_replay_files,
-    )
-
     ensure_session_confs(spark)
     base = normalize_ts_cols(spark.read.parquet(events_path))
     is_late = (F.dayofmonth("ts") == late_day) & (F.col("event_id") % 2 == 0)
@@ -403,23 +310,13 @@ def run_late_data_accounting(
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    name = f"late_accounting_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+    sink = run_replay(agg, "append", "late_accounting")
+    return sink.filter(F.col("event_type") != "sentinel")
 
 
 def run_dynamic_session_windows(
     spark: SparkSession,
     events_path: str,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Session windows with a PER-EVENT gap expression — the dynamic
     form of ``F.session_window`` (each event holds its session open for
@@ -446,17 +343,7 @@ def run_dynamic_session_windows(
             "n_events",
         )
     )
-    name = f"dyn_session_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name)
+    return run_replay(agg, "complete", "dyn_session")
 
 
 def run_streaming_minhash_overlap(
@@ -464,7 +351,6 @@ def run_streaming_minhash_overlap(
     events_path: str,
     m: int = 64,
     max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """STREAMING cross-stream Jaccard via one-permutation hashing (Li,
     Owen & Zhang 2012): per (split, register) keep MIN(60-bit md5 hash)
@@ -497,21 +383,11 @@ def run_streaming_minhash_overlap(
         .groupBy("split", "r")
         .agg(F.min("h").alias("vmin"))
     )
-    name = f"stream_oph_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
     # (split, r) is unique in the register table, so the a-vs-b
     # comparison is a conditional pivot per register — no self-join of
     # the sink view (which trips conflicting-attribute resolution).
     per_reg = (
-        spark.table(name)
+        run_replay(regs, "complete", "stream_oph")
         .groupBy("r")
         .agg(
             F.min(F.when(F.col("split") == "click", F.col("vmin"))).alias("va"),
@@ -534,7 +410,6 @@ def run_streaming_minhash_overlap(
 def run_two_level_agg(
     spark: SparkSession,
     events_path: str,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """CHAINED stateful aggregation in one streaming query (Spark 3.4+
     multiple-stateful-operator support): 10-minute tumbling counts per
@@ -558,8 +433,6 @@ def run_two_level_agg(
     shuffle is negligible by construction. Same append-mode memory-sink
     caveat as every replay harness: test-scale plumbing only.
     """
-    from kinesis_log_watcher_spark.sources.files import stage_replay_files
-
     ensure_session_confs(spark)
     base = normalize_ts_cols(spark.read.parquet(events_path))
     mx = base.groupBy().agg(F.max("ts").alias("mxts"))
@@ -611,14 +484,5 @@ def run_two_level_agg(
             "max_bucket_n",
         )
     )
-    name = f"two_level_{next(_counter)}"
-    with replay_partitions(spark):
-        q = (
-            lvl2.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout_s)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+    sink = run_replay(lvl2, "append", "two_level")
+    return sink.filter(F.col("event_type") != "sentinel")

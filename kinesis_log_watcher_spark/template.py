@@ -1023,7 +1023,9 @@ def _compile_command(tokens: list, piped: _Expr | None, ctx: _Ctx,
         if not target.is_timestamp:
             raise TemplateError("strftime expects .Timestamp as its time argument")
         out = strftime_or_fallback(fmt, F.col("Timestamp"))
-        return _Expr(col=out, truth=lambda: _nonempty(out), err=_any_err(args))
+        # Go: nil passed as the time.Time argument is an exec error
+        err = _or(_any_err(args), F.col("Timestamp").isNull())
+        return _Expr(col=out, truth=lambda: _nonempty(out), err=err)
     if head == "printf":
         if (
             not args
@@ -1270,7 +1272,12 @@ def _compile_pipeline(pipe: str, ctx: _Ctx, comp: _Compiler) -> _Expr:
         if _canonical(name) != "Timestamp":
             raise TemplateError(f".Format is only supported on .Timestamp, got .{name}")
         out = go_layout_col(layout, F.col("Timestamp"))
-        return _Expr(col=out, truth=lambda: _nonempty(out))
+        # Go: a method call on a nil .Timestamp is an exec error
+        return _Expr(
+            col=out,
+            truth=lambda: _nonempty(out),
+            err=F.col("Timestamp").isNull(),
+        )
 
     # quote-aware tokens ('|' or parens inside a string literal are data)
     return _compile_items(_group_parens(_TOKEN_RE.findall(pipe)), ctx, comp)

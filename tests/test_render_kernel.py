@@ -175,6 +175,16 @@ def test_null_and_pre_1970_timestamps(spark, tmp_path):
         1: "1969-12-31 23:59:59.5 +0000 UTC",
         2: "1900-01-01 00:00:00.00012 +0000 UTC",
     }
+    # Formatting a null timestamp is a render error, as in Go: a method
+    # call on a nil interface, or nil passed as a time.Time argument, so
+    # the row is dropped and counted instead of printing a null line.
+    rows = [(None, b"x"), (TS, b"x")]
+    assert _render_three_ways(
+        spark, tmp_path / "format", '{{.Timestamp.Format "2006-01-02"}}', rows
+    ) == {0: ERR, 1: "2024-05-01"}
+    assert _render_three_ways(
+        spark, tmp_path / "strftime", '{{strftime "%Y-%m-%d" .Timestamp}}', rows
+    ) == {0: ERR, 1: "2024-05-01"}
 
 
 @pytest.mark.parametrize(

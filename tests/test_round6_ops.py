@@ -379,6 +379,7 @@ def test_sessionizers_fold_across_arrow_chunks(spark, tmp_path):
     session fold (r6 review finding)."""
     from datetime import datetime, timezone
 
+    from kinesis_log_watcher_spark.sources.files import run_replay
     from kinesis_log_watcher_spark.streaming.stateful import (
         final_sessions,
         session_update_stream,
@@ -410,17 +411,12 @@ def test_sessionizers_fold_across_arrow_chunks(spark, tmp_path):
             spark.readStream.schema("user_id long, event_id long, ts timestamp")
             .parquet(src)
         )
-        name = "chunk_fold_sessions"
-        q = (
-            session_update_stream(stream, gap_s=1800)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        updates = run_replay(
+            session_update_stream(stream, gap_s=1800),
+            "update",
+            "chunk_fold_sessions",
         )
-        q.awaitTermination(120)
-        got = final_sessions(spark.table(name)).collect()
+        got = final_sessions(updates).collect()
     finally:
         if old is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

@@ -636,9 +636,8 @@ def test_stream_ddsketch_any_split_equals_batch(spark, tmp_path):
         _DD_BUCKET_EXPR,
     )
     from kinesis_log_watcher_spark.sources.files import (
-        await_or_raise,
         read_parquet_stream,
-        replay_partitions,
+        run_replay,
     )
 
     d = tmp_path / "li"
@@ -675,19 +674,8 @@ def test_stream_ddsketch_any_split_equals_batch(spark, tmp_path):
             .groupBy("idx")
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        name = f"t_dd_{split}"
-        with replay_partitions(spark):
-            q = (
-                b.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_or_raise(q, 300)
-        return sorted(
-            tuple(r) for r in _dd_finalize(spark.table(name)).collect()
-        )
+        sink = run_replay(b, "complete", f"t_dd_{split}")
+        return sorted(tuple(r) for r in _dd_finalize(sink).collect())
 
     r1, rall = replay_parallel(lambda: run(1), lambda: run(None))
     assert r1 == rall and len(r1) == 4

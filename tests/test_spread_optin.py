@@ -52,17 +52,3 @@ def test_optin_rows_identical(spark):
     )
     assert a == b
 
-
-def test_env_int_rejects_malformed_and_non_positive(monkeypatch):
-    # A non-positive floor override is a typo like a malformed one: it
-    # falls back to the default instead of disabling the floor.
-    from kinesis_log_watcher_spark.queries.base import _env_int
-
-    name = "SPARK_GRAFT_SPREAD_MIN_ROWS"
-    for bad in ("-1", "0", "ten", ""):
-        monkeypatch.setenv(name, bad)
-        assert _env_int(name, 10_000) == 10_000, bad
-    monkeypatch.setenv(name, "25")
-    assert _env_int(name, 10_000) == 25
-    monkeypatch.delenv(name)
-    assert _env_int(name, 10_000) == 10_000

@@ -61,7 +61,7 @@ def dedup_results(spark, tmp_path_factory):
     with ThreadPoolExecutor(max_workers=6) as pool:
         list(pool.map(lambda a: _write_file(spark, tmp_path, *a), stages))
 
-    from kinesis_log_watcher_spark.sources.files import replay_partitions
+    from kinesis_log_watcher_spark.sources.files import run_replay
 
     def run_exact():
         stream = (
@@ -69,16 +69,8 @@ def dedup_results(spark, tmp_path_factory):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(tmp_path / "exact"))
         )
-        q = (
-            stream.dropDuplicates(["content_hash"])
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_dedup")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.table("stream_dedup").collect()
+        deduped = stream.dropDuplicates(["content_hash"])
+        return run_replay(deduped, "append", "stream_dedup").collect()
 
     def run_wm():
         stream = (
@@ -86,20 +78,13 @@ def dedup_results(spark, tmp_path_factory):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(tmp_path / "wm"))
         )
-        q = (
+        deduped = (
             stream.withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["content_hash"])
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_dedup_wm")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        return spark.table("stream_dedup_wm").collect()
+        return run_replay(deduped, "append", "stream_dedup_wm").collect()
 
-    with replay_partitions(spark):
-        exact, wm = replay_parallel(run_exact, run_wm)
+    exact, wm = replay_parallel(run_exact, run_wm)
     return {"exact": exact, "wm": wm}
 
 

@@ -16,9 +16,13 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
+
+from kinesis_log_watcher_spark.sources.files import run_replay
+from kinesis_log_watcher_spark.streaming.metrics import MetricsRecorder
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 M = timedelta(minutes=1)
@@ -58,27 +62,32 @@ def test_finalized_window_immune_to_late_rows(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "n")
     )
-    from kinesis_log_watcher_spark.sources.files import replay_partitions
+    rec = MetricsRecorder.attach(spark)
+    try:
+        sink = run_replay(agg, "append", "wm_append")
+        # listener callbacks are asynchronous: wait until the progress of
+        # the batch carrying the late row (the 4th input row) has arrived
+        qname, deadline = None, time.time() + 30
+        while time.time() < deadline:
+            qname = next(
+                (
+                    r["name"]
+                    for r in rec.progress()
+                    if (r["name"] or "").startswith("wm_append_")
+                ),
+                None,
+            )
+            if qname and rec.summary(qname)["total_input_rows"] == 4:
+                break
+            time.sleep(0.2)
+    finally:
+        rec.detach()
 
-    with replay_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("wm_append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    emitted = [
-        (r.w_start, r.n) for r in spark.table("wm_append").collect()
-    ]
+    emitted = [(r.w_start, r.n) for r in sink.collect()]
     # w00:00 finalized exactly once, with only the on-time event
     assert emitted.count((T0, 1)) == 1
     assert all(w != T0 or n == 1 for w, n in emitted)
     # the late row was counted as dropped by the watermark
-    dropped = sum(
-        (p["stateOperators"][0]["numRowsDroppedByWatermark"] if p["stateOperators"] else 0)
-        for p in q.recentProgress
-    )
-    assert dropped == 1
+    s = rec.summary(qname)
+    assert s["total_input_rows"] == 4
+    assert s["total_dropped_by_watermark"] == 1
