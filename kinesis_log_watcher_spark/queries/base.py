@@ -67,6 +67,23 @@ def load(
     return _spread_scan(spark, df, path, spread=spread)
 
 
+def load_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Streaming read of one ``sf_dir`` table, normalized exactly as
+    :func:`load` normalizes the batch scan — so a stream twin hands its
+    batch twin's state builder the same column dtypes."""
+    ensure_session_confs(spark)
+    from kinesis_log_watcher_spark.functions.tscompat import (
+        NANOS_BIGINT_COLS,
+        normalize_ts_cols,
+    )
+    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
+
+    path = f"{sf_dir}/{table}.parquet"
+    return normalize_ts_cols(
+        read_parquet_stream(spark, path), NANOS_BIGINT_COLS.get(table, ())
+    )
+
+
 # Scan-spread decision cache: parquet footer metadata per path (local
 # files only; the testdata never changes mid-process). Value is
 # (num_rows, uncompressed_bytes) for single-row-group files, else None.
@@ -187,7 +204,11 @@ def register(name: str, oracle: str | None, doc: str = ""):
     SHADOW the first (last import wins), so the shadowed query's oracle
     rows would keep passing while its implementation stopped being the
     one exercised. Re-registering the exact same function object is
-    allowed (module re-import)."""
+    allowed (module re-import).
+
+    A ``stream_*`` twin of a batch query reuses its batch twin's state
+    builder and the module constant holding the batch oracle SQL, so
+    both paths run one plan and are checked against one oracle."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         prev = _REGISTRY.get(name)

@@ -161,9 +161,7 @@ _BAND_UNION = "\n      UNION ALL\n".join(
 )
 
 
-@register(
-    "dedup_minhash_lsh",
-    f"""
+_MINHASH_LSH_SQL = f"""
     WITH {_SH_SQL},
     mh AS (
       SELECT doc_id,
@@ -181,7 +179,12 @@ _BAND_UNION = "\n      UNION ALL\n".join(
       WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2)
     SELECT doc_a, doc_b, n_bands FROM pairs
-    """,
+    """
+
+
+@register(
+    "dedup_minhash_lsh",
+    _MINHASH_LSH_SQL,
     doc=f"MinHash({_NUM_HASHES} hashes) + LSH({_BANDS} bands): banded "
     "signature bucket-join candidates — never all-pairs. md5-based hashes "
     "make signatures engine-reproducible.",
@@ -520,9 +523,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ann_ivf_topk",
-    f"""
+_IVF_TOPK_SQL = f"""
     WITH comp AS (
       SELECT vec_id, unnest(embedding) AS x,
              unnest(range(1, len(embedding) + 1)) AS dim
@@ -555,7 +556,12 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ORDER BY dot DESC, vec_id) AS BIGINT) AS rank
       FROM cand)
     WHERE rank <= 3
-    """,
+    """
+
+
+@register(
+    "ann_ivf_topk",
+    _IVF_TOPK_SQL,
     doc="IVF-style ANN: vectors assigned to best anchor cell (inner "
     "product, anchors = vec_id<8 as deterministic centroid stand-ins); "
     "each query probes only its own cell → candidates scanned shrink by "
@@ -1375,9 +1381,7 @@ def bloom_prefilter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HLL_P4_ALPHA = 0.673 * 16 * 16 * float(1 << 57)  # alpha_16 * m^2 * 2^K
 
 
-@register(
-    "hll_user_distinct",
-    f"""
+_HLL_SQL = f"""
     WITH hashed AS (
       SELECT event_type,
              CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
@@ -1406,7 +1410,12 @@ _HLL_P4_ALPHA = 0.673 * 16 * 16 * float(1 << 57)  # alpha_16 * m^2 * 2^K
     JOIN (SELECT event_type,
                  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users
           FROM events GROUP BY 1) x USING (event_type)
-    """,
+    """
+
+
+@register(
+    "hll_user_distinct",
+    _HLL_SQL,
     doc="HyperLogLog (operators/sketch.py): per-event-type distinct-user "
     "estimate from a 16-register sketch — ONE aggregation pass builds "
     "≤16 rows per group at any input size, shards merge by register-MAX, "
@@ -1418,12 +1427,25 @@ _HLL_P4_ALPHA = 0.673 * 16 * 16 * float(1 << 57)  # alpha_16 * m^2 * 2^K
     "→ monthly distinct without re-reading raw keys).",
 )
 def hll_user_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.operators.sketch import hll_build, hll_estimate
-
     ev = load(spark, sf_dir, "events")
-    regs = hll_build(ev, "user_id", group_cols=("event_type",), p=4)
+    return _hll_finalize(_hll_state(ev), ev)
+
+
+def _hll_state(events: DataFrame) -> DataFrame:
+    """Per-event-type p=4 register table — groupBy-MAX, order-free, so
+    the streaming twin holds it as complete-mode state."""
+    from kinesis_log_watcher_spark.operators.sketch import hll_build
+
+    return hll_build(events, "user_id", group_cols=("event_type",), p=4)
+
+
+def _hll_finalize(regs: DataFrame, events: DataFrame) -> DataFrame:
+    """Estimate from the registers, joined to the exact distinct-user
+    counts of the batch ``events`` scan (the error profile)."""
+    from kinesis_log_watcher_spark.operators.sketch import hll_estimate
+
     est = hll_estimate(regs, group_cols=("event_type",), p=4)
-    exact = ev.groupBy("event_type").agg(
+    exact = events.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_users")
     )
     return (
@@ -1588,11 +1610,9 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from kinesis_log_watcher_spark.queries.base import _REGISTRY as _REG  # noqa: E402
-
 @register(
     "ann_ivf_persisted",
-    _REG["ann_ivf_topk"].oracle,  # persistence must not change results
+    _IVF_TOPK_SQL,  # persistence must not change results
     doc="IVF index LIFECYCLE: the cell-assignment index is BUILT once, "
     "written to parquet (the stored index a serving layer reloads), "
     "read back with an explicit schema, and probed — results must be "

@@ -5,8 +5,8 @@ item 3): offline evaluation of retrieval systems and the serving-side
 decisions built on them — recall@k / MRR / nDCG@k over a planted
 relevance panel, reciprocal-rank fusion, two-stage reranking,
 interleaving A/B evaluation, cascade fallback, RAG context packing and
-citation audits, plus streaming twins that share the batch oracle SQL
-verbatim (the round-9 twin discipline).
+citation audits, plus streaming twins that run their batch twin's
+state builder and register its oracle constant.
 
 The synthetic retrieval panel (mirrors round9's model panel design):
 16 queries with topics q_id % 8; each document's topic and its graded
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_log_watcher_spark.queries.base import load, register
+from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.queries.round9 import _h15
 from kinesis_log_watcher_spark.sources.files import run_replay
 
@@ -593,13 +593,11 @@ def retrieval_failure_taxonomy(
 
 # ===========================================================================
 # candidate coverage (the streamable counting view; its streaming twin
-# shares this oracle verbatim — wave 4)
+# runs the same _cov_state/_cov_finalize against _SQL_COVERAGE)
 # ===========================================================================
 
 
-@register(
-    "retrieval_candidate_coverage",
-    f"""
+_SQL_COVERAGE = f"""
     WITH {_SQL_PANEL},
     {_SQL_SCORED},
     cov AS (
@@ -623,7 +621,12 @@ def retrieval_failure_taxonomy(
                 ELSE CAST(rel_b * 1000000 // n_rel AS BIGINT)
            END AS coverage_b_micro
     FROM cov
-    """,
+    """
+
+
+@register(
+    "retrieval_candidate_coverage",
+    _SQL_COVERAGE,
     doc="Candidate-set coverage per query: how many docs each "
     "retriever's cutoff admits and what fraction of the relevant set "
     "survives it — the RECALL CEILING any downstream ranker inherits "
@@ -636,8 +639,13 @@ def retrieval_failure_taxonomy(
 def retrieval_candidate_coverage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    sc = _scored(spark, sf_dir)
-    cov = sc.groupBy("q_id").agg(
+    return _cov_finalize(_cov_state(_panel(spark, sf_dir)))
+
+
+def _cov_state(panel: DataFrame) -> DataFrame:
+    """Per-query candidate/relevant counters — order-free sums, so the
+    streaming twin holds this relation as complete-mode state."""
+    return _scored_from(panel).groupBy("q_id").agg(
         F.sum(F.when(F.col("sa") >= _CUT_A, 1).otherwise(0))
         .cast("long")
         .alias("cand_a"),
@@ -658,6 +666,9 @@ def retrieval_candidate_coverage(
         .cast("long")
         .alias("rel_b"),
     )
+
+
+def _cov_finalize(cov: DataFrame) -> DataFrame:
     micro = "CASE WHEN n_rel = 0 THEN CAST(0 AS BIGINT) ELSE CAST({} * 1000000 div n_rel AS BIGINT) END"
     return cov.select(
         "q_id",
@@ -1553,9 +1564,7 @@ _CACHE_CLUSTERS = 1024
 _CACHE_TTL = 500  # in request sequence numbers
 
 
-@register(
-    "semantic_cache_ttl_eval",
-    f"""
+_SQL_SEMCACHE = f"""
     WITH req AS (
       SELECT event_id,
              {_hs("'scq|' || CAST(event_id AS VARCHAR)")}
@@ -1576,7 +1585,12 @@ _CACHE_TTL = 500  # in request sequence numbers
                          THEN 1 ELSE 0 END) * 1000000 // COUNT(*)
                 AS BIGINT) AS hit_rate_micro
     FROM lagd GROUP BY bucket
-    """,
+    """
+
+
+@register(
+    "semantic_cache_ttl_eval",
+    _SQL_SEMCACHE,
     doc="Semantic-cache hit-rate audit for a serving stack: each "
     f"request maps to one of {_CACHE_CLUSTERS} paraphrase clusters "
     "(md5 draw — the stand-in for an embedding-bucket cache key; the "
@@ -1744,14 +1758,14 @@ def retrieval_eval_embeddings(
 
 
 # ===========================================================================
-# Streaming twins (share the batch oracle SQL verbatim — the round-9
-# twin discipline: a green row certifies live == batch bit-for-bit)
+# Streaming twins (the batch twin's state builder and oracle constant:
+# a green row certifies live == batch bit-for-bit)
 # ===========================================================================
 
 
 @register(
     "stream_retrieval_coverage",
-    None,  # patched to the batch oracle SQL below (_share_batch_oracles)
+    _SQL_COVERAGE,
     doc="STREAMING twin of retrieval_candidate_coverage: the per-query "
     "candidate/relevant counters are streaming aggregation state in "
     "complete mode (order-free counting — any replay split converges "
@@ -1766,53 +1780,13 @@ def retrieval_eval_embeddings(
 def stream_retrieval_coverage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    sc = _scored_from(_panel_from(stream))
-    cov = sc.groupBy("q_id").agg(
-        F.sum(F.when(F.col("sa") >= _CUT_A, 1).otherwise(0))
-        .cast("long")
-        .alias("cand_a"),
-        F.sum(F.when(F.col("sb") >= _CUT_B, 1).otherwise(0))
-        .cast("long")
-        .alias("cand_b"),
-        F.sum(F.when(F.col("rel") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_rel"),
-        F.sum(
-            F.when((F.col("sa") >= _CUT_A) & (F.col("rel") > 0), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("rel_a"),
-        F.sum(
-            F.when((F.col("sb") >= _CUT_B) & (F.col("rel") > 0), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("rel_b"),
-    )
-    tbl = run_replay(cov, "complete", "stream_rcov")
-    micro = (
-        "CASE WHEN n_rel = 0 THEN CAST(0 AS BIGINT) "
-        "ELSE CAST({} * 1000000 div n_rel AS BIGINT) END"
-    )
-    return tbl.select(
-        "q_id",
-        "cand_a",
-        "cand_b",
-        "n_rel",
-        "rel_a",
-        "rel_b",
-        F.expr(micro.format("rel_a")).alias("coverage_a_micro"),
-        F.expr(micro.format("rel_b")).alias("coverage_b_micro"),
-    )
+    state = _cov_state(_panel_from(load_stream(spark, sf_dir, "documents")))
+    return _cov_finalize(run_replay(state, "complete", "stream_rcov"))
 
 
 @register(
     "stream_semantic_cache_ttl",
-    None,  # patched to the batch oracle SQL below (_share_batch_oracles)
+    _SQL_SEMCACHE,
     doc="STREAMING twin of semantic_cache_ttl_eval, STATEFUL: the "
     "online form of the cache audit — per-cluster last-served "
     "sequence number as typed state (ONE bigint per cluster, bounded "
@@ -1835,23 +1809,6 @@ def stream_semantic_cache_ttl(
         clusters=_CACHE_CLUSTERS,
         ttl=_CACHE_TTL,
     )
-
-
-def _share_batch_oracles_r10() -> None:
-    from dataclasses import replace
-
-    from kinesis_log_watcher_spark.queries.base import _REGISTRY
-
-    for twin, batch in (
-        ("stream_retrieval_coverage", "retrieval_candidate_coverage"),
-        ("stream_semantic_cache_ttl", "semantic_cache_ttl_eval"),
-    ):
-        _REGISTRY[twin] = replace(
-            _REGISTRY[twin], oracle=_REGISTRY[batch].oracle
-        )
-
-
-_share_batch_oracles_r10()
 
 
 # ===========================================================================
@@ -1957,9 +1914,7 @@ _SRM_SKEW = 503
 _CHI2_95 = 3841459  # chi-square(1) 95% critical value in micros (build-time)
 
 
-@register(
-    "ab_sample_ratio_mismatch",
-    f"""
+_SQL_SRM = f"""
     WITH assign AS (
       SELECT event_type,
              CASE WHEN {_hs("'srm|' || CAST(event_id AS VARCHAR)")}
@@ -1977,7 +1932,12 @@ _CHI2_95 = 3841459  # chi-square(1) 95% critical value in micros (build-time)
            ((2 * o_a - n) * (2 * o_a - n) * 1000000 // n) >= {_CHI2_95}
              AS srm_flag
     FROM agg
-    """,
+    """
+
+
+@register(
+    "ab_sample_ratio_mismatch",
+    _SQL_SRM,
     doc="Sample-ratio mismatch check per experiment (event_type): each "
     "event hashes into arm A with a PLANTED 50.3% skew (the biased-"
     "bucketing bug class SRM exists to catch), and the chi-square(1) "
@@ -1994,8 +1954,13 @@ _CHI2_95 = 3841459  # chi-square(1) 95% critical value in micros (build-time)
 def ab_sample_ratio_mismatch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    assign = ev.select(
+    return _srm_finalize(_srm_state(load(spark, sf_dir, "events")))
+
+
+def _srm_state(events: DataFrame) -> DataFrame:
+    """Per-experiment (n, o_a) counters — the streaming twin's
+    complete-mode state."""
+    assign = events.select(
         "event_type",
         F.when(
             _draw("srm", F.col("event_id")) % 1000 < _SRM_SKEW, 1
@@ -2003,10 +1968,13 @@ def ab_sample_ratio_mismatch(
         .otherwise(0)
         .alias("arm_a"),
     )
-    agg = assign.groupBy("event_type").agg(
+    return assign.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("arm_a").cast("long").alias("o_a"),
     )
+
+
+def _srm_finalize(agg: DataFrame) -> DataFrame:
     return agg.select(
         "event_type",
         "n",
@@ -2331,7 +2299,7 @@ def paraphrase_consistency_eval(
 
 @register(
     "stream_srm_check",
-    None,  # patched to the batch oracle SQL below
+    _SQL_SRM,
     doc="STREAMING twin of ab_sample_ratio_mismatch: the per-experiment "
     "(n, o_a) counters are complete-mode streaming aggregation state "
     "(order-free counting), the chi-square statistic and SRM flag "
@@ -2343,51 +2311,8 @@ def paraphrase_consistency_eval(
     "(No counterpart in reference main.go.)",
 )
 def stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/events.parquet")
-    assign = stream.select(
-        "event_type",
-        F.when(
-            _draw("srm", F.col("event_id")) % 1000 < _SRM_SKEW, 1
-        )
-        .otherwise(0)
-        .alias("arm_a"),
-    )
-    agg = assign.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("arm_a").cast("long").alias("o_a"),
-    )
-    tbl = run_replay(agg, "complete", "stream_srm")
-    return tbl.select(
-        "event_type",
-        "n",
-        "o_a",
-        (F.col("n") - F.col("o_a")).cast("long").alias("o_b"),
-        F.expr(
-            "CAST((2 * o_a - n) * (2 * o_a - n) * 1000000 div n AS BIGINT)"
-        ).alias("chi2_micro"),
-        (
-            F.expr("(2 * o_a - n) * (2 * o_a - n) * 1000000 div n")
-            >= _CHI2_95
-        ).alias("srm_flag"),
-    )
-
-
-def _share_batch_oracles_r10b() -> None:
-    from dataclasses import replace
-
-    from kinesis_log_watcher_spark.queries.base import _REGISTRY
-
-    _REGISTRY["stream_srm_check"] = replace(
-        _REGISTRY["stream_srm_check"],
-        oracle=_REGISTRY["ab_sample_ratio_mismatch"].oracle,
-    )
-
-
-_share_batch_oracles_r10b()
+    state = _srm_state(load_stream(spark, sf_dir, "events"))
+    return _srm_finalize(run_replay(state, "complete", "stream_srm"))
 
 
 # ===========================================================================

@@ -36,8 +36,8 @@ Three families the round-10 verdict queued:
    ground truth, and a rebuild-cadence cost model (staleness cost vs
    rebuild cost over a period ladder, closed-form per-doc integer
    arithmetic). Streaming twins for the two order-free members
-   (rejection-sampling counters, cadence sums) share the batch oracle
-   SQL verbatim — the round-9/10 twin discipline.
+   (rejection-sampling counters, cadence sums) run the batch twin's
+   state builder and finalize and register its oracle constant.
 
 Panel constants were tuned empirically in DuckDB before registration
 (the round-10 lesson): margin buckets -4..4 all populated with
@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_log_watcher_spark.queries.base import load, register
+from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.queries.round10 import (
     _CUT_A,
     _NQ,
@@ -1238,13 +1238,13 @@ def index_rebuild_cadence_cost(
 
 
 # ===========================================================================
-# Streaming twins (share the batch oracle SQL verbatim)
+# Streaming twins (batch state builder + finalize, batch oracle constant)
 # ===========================================================================
 
 
 @register(
     "stream_rejection_sampling",
-    None,  # patched to the batch oracle SQL below
+    _SQL_REJECTION,
     doc="STREAMING twin of rejection_sampling_efficiency: the per-tau "
     "acceptance counters (count, sum-RM, sum-quality) are complete-"
     "mode streaming aggregation state — order-free sums, so any "
@@ -1260,19 +1260,13 @@ def index_rebuild_cadence_cost(
 def stream_rejection_sampling(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    state = _rs_state(stream)
-    tbl = run_replay(state, "complete", "stream_rs")
-    return _rs_finalize(tbl)
+    state = _rs_state(load_stream(spark, sf_dir, "documents"))
+    return _rs_finalize(run_replay(state, "complete", "stream_rs"))
 
 
 @register(
     "stream_rebuild_cadence",
-    None,  # patched to the batch oracle SQL below
+    _SQL_CADENCE,
     doc="STREAMING twin of index_rebuild_cadence_cost: the per-period "
     "staleness/reindex sums are complete-mode streaming aggregation "
     "state (order-free — any replay split converges), the cost "
@@ -1286,32 +1280,8 @@ def stream_rejection_sampling(
 def stream_rebuild_cadence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    state = _cadence_state(stream)
-    tbl = run_replay(state, "complete", "stream_cad")
-    return _cadence_finalize(tbl)
-
-
-def _share_batch_oracles_r11() -> None:
-    from dataclasses import replace
-
-    from kinesis_log_watcher_spark.queries.base import _REGISTRY
-
-    _REGISTRY["stream_rejection_sampling"] = replace(
-        _REGISTRY["stream_rejection_sampling"],
-        oracle=_REGISTRY["rejection_sampling_efficiency"].oracle,
-    )
-    _REGISTRY["stream_rebuild_cadence"] = replace(
-        _REGISTRY["stream_rebuild_cadence"],
-        oracle=_REGISTRY["index_rebuild_cadence_cost"].oracle,
-    )
-
-
-_share_batch_oracles_r11()
+    state = _cadence_state(load_stream(spark, sf_dir, "documents"))
+    return _cadence_finalize(run_replay(state, "complete", "stream_cad"))
 
 
 # ===========================================================================

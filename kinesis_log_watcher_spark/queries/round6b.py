@@ -2909,21 +2909,12 @@ _SCD2E_SQL = """
     "join the oracle states.",
 )
 def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
+    from kinesis_log_watcher_spark.queries.base import load_stream
     from kinesis_log_watcher_spark.queries.warehouse import _scd2_dim
-    from kinesis_log_watcher_spark.sources.files import (
-        read_parquet_stream,
-        run_replay,
-    )
-    from kinesis_log_watcher_spark.functions.tscompat import (
-        normalize_ts_cols,
-    )
+    from kinesis_log_watcher_spark.sources.files import run_replay
 
-    ensure_session_confs(spark)
     scd = _scd2_dim(spark, sf_dir)
-    stream = normalize_ts_cols(
-        read_parquet_stream(spark, f"{sf_dir}/events.parquet")
-    ).select(
+    stream = load_stream(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         (F.col("event_id") % 21).alias("event_day"),

@@ -28,6 +28,7 @@ from kinesis_log_watcher_spark.operators.bpe import (
 from kinesis_log_watcher_spark.queries.base import (
     finalize_unpersist,
     load,
+    load_stream,
     register,
 )
 
@@ -1117,6 +1118,17 @@ _DD_BUCKET_EXPR = (
 )
 
 
+def _dd_state(lineitem: DataFrame) -> DataFrame:
+    """The (idx, cnt) bucket relation over lineitem price cents — the
+    sketch itself, held by the streaming twin as complete-mode state."""
+    v = lineitem.filter(F.col("l_extendedprice") > 0).select(
+        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").alias("c")
+    )
+    return v.select(F.expr(_DD_BUCKET_EXPR).alias("idx")).groupBy("idx").agg(
+        F.count("*").cast("long").alias("cnt")
+    )
+
+
 def _dd_finalize(b: DataFrame) -> DataFrame:
     """Quantile walk + certified bounds over a (idx, cnt) bucket
     relation — shared by the batch sketch and the streaming twin (the
@@ -1235,14 +1247,7 @@ _DD_ORACLE_SQL = f"""
     "buckets for any int64) — never a global sort of the fact table.",
 )
 def ddsketch_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    v = li.filter(F.col("l_extendedprice") > 0).select(
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").alias("c")
-    )
-    b = v.select(F.expr(_DD_BUCKET_EXPR).alias("idx")).groupBy("idx").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    return _dd_finalize(b)
+    return _dd_finalize(_dd_state(load(spark, sf_dir, "lineitem")))
 
 
 
@@ -1568,26 +1573,10 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streamed sketch is bit-identical to the batch one.",
 )
 def stream_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.sources.files import (
-        read_parquet_stream,
-        run_replay,
-    )
-    from kinesis_log_watcher_spark.session import ensure_session_confs
+    from kinesis_log_watcher_spark.sources.files import run_replay
 
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/lineitem.parquet")
-    b = (
-        stream.filter(F.col("l_extendedprice") > 0)
-        .select(
-            F.expr(
-                "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-            ).alias("c")
-        )
-        .select(F.expr(_DD_BUCKET_EXPR).alias("idx"))
-        .groupBy("idx")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    return _dd_finalize(run_replay(b, "complete", "stream_ddsketch"))
+    state = _dd_state(load_stream(spark, sf_dir, "lineitem"))
+    return _dd_finalize(run_replay(state, "complete", "stream_ddsketch"))
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_log_watcher_spark.queries.base import load, register
+from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 
 
 def _h15(col):
@@ -53,9 +53,7 @@ def _h15(col):
 _AMS_S = 16  # independent estimators
 
 
-@register(
-    "ams_f2_sketch_estimate",
-    f"""
+_AMS_SQL = f"""
     WITH freq AS (
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
       FROM events GROUP BY user_id),
@@ -77,74 +75,113 @@ _AMS_S = 16  # independent estimators
                      AS HUGEINT) * 1000000
                 // f2_exact AS BIGINT) AS rel_err_micro
     FROM sk
-    """,
+    """
+
+
+@register(
+    "ams_f2_sketch_estimate",
+    _AMS_SQL,
     doc="AMS tug-of-war F2 sketch (Alon-Matias-Szegedy '96): 16 "
     "independent +/-1-signed running sums over the user-frequency "
     "vector of events; each Z_j^2 is an unbiased estimate of the "
     "second moment F2 = sum(n_u^2) (the self-join size of events on "
     "user_id, the number a join planner wants before it picks a "
     "strategy). Signs are the deterministic md5 draw computed "
-    "identically in both dialects; the exact F2 rides the SAME "
-    "aggregation pass (each estimator group sees every user once), so "
-    "a green row certifies estimator and ground truth together, and "
-    "the mean-estimate/relative-error columns ride a window over the "
-    "bounded 16-row sketch relation — no 1-row broadcast join "
-    "anywhere. Scale shape: one shuffle to the frequency vector, then "
-    "a 16x explode of the (bounded-by-distinct-users) vector into a "
-    "16-row sketch; at petabyte row counts the signed sums exceed "
+    "identically in both dialects; the exact F2 is a one-row "
+    "aggregate of the same scan, so a green row certifies estimator "
+    "and ground truth together, and the F2 and mean-estimate/"
+    "relative-error columns ride a window over the bounded 17-row "
+    "union of sketch and F2 rows — no 1-row broadcast join anywhere. "
+    "Scale shape: one shuffle to the user-frequency vector, then a 16x "
+    "explode of that (bounded-by-distinct-users) vector into the "
+    "16-row sketch (the same state builder stream_ams_f2_sketch runs "
+    "over one (user, 1) row per event), and F2 is a one-row aggregate "
+    "of the same vector; at petabyte row counts the signed sums exceed "
     "int64 when total events approach 3e9 per estimator-sign — the "
     "documented swap is DECIMAL(38,0) for z*z, counters stay exact. "
     "(No counterpart in reference main.go.)",
 )
 def ams_f2_sketch_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    freq = events.groupBy("user_id").agg(F.count("*").cast("long").alias("n"))
-    sk = (
-        freq.select(
-            "user_id",
-            "n",
-            F.explode(F.sequence(F.lit(0), F.lit(_AMS_S - 1))).alias(
-                "estimator"
-            ),
-        )
-        .select(
-            "estimator",
+    freq = _ams_freq(load(spark, sf_dir, "events"))
+    return _ams_finalize(_ams_state(freq), freq)
+
+
+def _ams_freq(events: DataFrame) -> DataFrame:
+    """The user-frequency vector ``(user_id, n)`` of ``events``."""
+    return events.groupBy("user_id").agg(F.count("*").cast("long").alias("n"))
+
+
+def _ams_state(freq: DataFrame) -> DataFrame:
+    """The 16 signed sums Z_j = sum over ``(user_id, n)`` rows of
+    sgn_j(user) * n. The batch twin passes the user-frequency vector
+    (one sign per user); the stream twin passes one ``(user_id, 1)`` row
+    per event. Both equal sum_u sgn_j(u) * n_u, and it is a plain
+    order-free SUM, so the stream holds these 16 rows as its
+    complete-mode state (never the events)."""
+    signed = freq.select(
+        F.explode(F.sequence(F.lit(0), F.lit(_AMS_S - 1))).alias(
+            "estimator"
+        ),
+        "user_id",
+        "n",
+    ).select(
+        F.col("estimator").cast("long").alias("estimator"),
+        (
             (
-                (
-                    1
-                    - 2
-                    * (
-                        _h15(
-                            F.concat(
-                                F.lit("ams"),
-                                F.col("estimator").cast("string"),
-                                F.lit("|"),
-                                F.col("user_id").cast("string"),
-                            )
+                1
+                - 2
+                * (
+                    _h15(
+                        F.concat(
+                            F.lit("ams"),
+                            F.col("estimator").cast("string"),
+                            F.lit("|"),
+                            F.col("user_id").cast("string"),
                         )
-                        % 2
                     )
+                    % 2
                 )
-                * F.col("n")
-            ).alias("zn"),
-            (F.col("n") * F.col("n")).alias("nn"),
-        )
-        .groupBy("estimator")
-        .agg(
-            F.sum("zn").cast("long").alias("z"),
-            F.sum("nn").cast("long").alias("f2_exact"),
+            )
+            * F.col("n")
+        ).alias("zn"),
+    )
+    return signed.groupBy("estimator").agg(
+        F.sum("zn").cast("long").alias("z")
+    )
+
+
+def _ams_finalize(sk: DataFrame, freq: DataFrame) -> DataFrame:
+    """Attach the exact F2 = sum_u n_u^2 (a one-row aggregate over the
+    batch user-frequency vector ``freq``) and the mean/error columns.
+    The F2 row rides a UNION with the 16 sketch rows and reaches them
+    through a window over that bounded relation — no 1-row broadcast
+    join."""
+    f2 = freq.agg(
+        F.sum(F.col("n") * F.col("n")).cast("long").alias("f2_exact")
+    )
+    rows = sk.select(
+        "estimator", "z", F.lit(None).cast("long").alias("f2_exact")
+    ).unionByName(
+        f2.select(
+            F.lit(None).cast("long").alias("estimator"),
+            F.lit(None).cast("long").alias("z"),
+            "f2_exact",
         )
     )
     wall = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
+    tot = rows.select(
+        "estimator",
+        "z",
+        F.max("f2_exact").over(wall).alias("f2_exact"),
+        F.sum(F.col("z") * F.col("z")).over(wall).cast("long").alias("sumzz"),
+    ).filter(F.col("estimator").isNotNull())
     # true integer `div` (never float /+floor: the quotient-boundary
     # parity trap) and the documented DECIMAL(38,0) swap on the rel_err
     # numerator — abs(est-f2)*1e6 outgrows int64 once F2 passes ~9e12
-    return sk.withColumn(
-        "sumzz", F.sum(F.col("z") * F.col("z")).over(wall).cast("long")
-    ).select(
-        F.col("estimator").cast("long").alias("estimator"),
+    return tot.select(
+        "estimator",
         "z",
         (F.col("z") * F.col("z")).cast("long").alias("x"),
         "f2_exact",
@@ -1295,31 +1332,7 @@ def graph_anf_reach_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_ams_f2_sketch",
-    # oracle = the batch ams_f2_sketch_estimate SQL verbatim: green ==
-    # the streamed sketch is bit-identical to the batch one.
-    f"""
-    WITH freq AS (
-      SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY user_id),
-    sk AS (
-      SELECT e.estimator,
-             CAST(SUM((1 - 2 * (CAST('0x' || substr(md5(
-                      'ams' || CAST(e.estimator AS VARCHAR) || '|'
-                      || CAST(f.user_id AS VARCHAR)), 1, 15) AS BIGINT)
-                      % 2)) * f.n) AS BIGINT) AS z,
-             CAST(SUM(f.n * f.n) AS BIGINT) AS f2_exact
-      FROM freq f
-      CROSS JOIN (SELECT unnest(range(0, {_AMS_S})) AS estimator) e
-      GROUP BY e.estimator)
-    SELECT CAST(estimator AS BIGINT) AS estimator, z,
-           CAST(z * z AS BIGINT) AS x,
-           f2_exact,
-           CAST(SUM(z * z) OVER () // {_AMS_S} AS BIGINT) AS est_mean,
-           CAST(CAST(abs(SUM(z * z) OVER () // {_AMS_S} - f2_exact)
-                     AS HUGEINT) * 1000000
-                // f2_exact AS BIGINT) AS rel_err_micro
-    FROM sk
-    """,
+    _AMS_SQL,
     doc="STREAMING AMS sketch: the defining property of the tug-of-war "
     "estimator is that each Z_j is a plain SUM of per-event signed "
     "contributions (sign depends only on the event's user hash), so "
@@ -1327,8 +1340,9 @@ def graph_anf_reach_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregation state — ANY micro-batch replay split converges to "
     "the batch sketch. The stream folds sum(sign) per estimator in "
     "complete mode (state = 16 integer rows, never the events); "
-    "finalization attaches the exact F2 (computed batch-side, a "
-    "1-row scalar) and the mean/error columns. Oracle = the batch "
+    "finalization (the batch twin's _ams_finalize) attaches the exact "
+    "F2 (a one-row aggregate of a batch events scan, in the same "
+    "plan) and the mean/error columns. Oracle = the batch "
     "ams_f2_sketch_estimate SQL verbatim, so a green row proves "
     "streamed sketch == batch sketch bit-for-bit — the mergeability "
     "claim the batch query documents, proven live. Scale shape: "
@@ -1337,68 +1351,13 @@ def graph_anf_reach_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "main.go.)",
 )
 def stream_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import (
-        read_parquet_stream,
-        run_replay,
-    )
+    from kinesis_log_watcher_spark.sources.files import run_replay
 
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/events.parquet")
-    signed = stream.select(
-        F.explode(F.sequence(F.lit(0), F.lit(_AMS_S - 1))).alias(
-            "estimator"
-        ),
-        F.col("user_id"),
-    ).select(
-        "estimator",
-        (
-            1
-            - 2
-            * (
-                _h15(
-                    F.concat(
-                        F.lit("ams"),
-                        F.col("estimator").cast("string"),
-                        F.lit("|"),
-                        F.col("user_id").cast("string"),
-                    )
-                )
-                % 2
-            )
-        ).alias("sgn"),
-    )
-    zb = signed.groupBy("estimator").agg(
-        F.sum("sgn").cast("long").alias("z")
-    )
-    sink = run_replay(zb, "complete", "stream_ams")
-    # exact F2 is a batch-side scalar (sum of squared user frequencies)
-    events = load(spark, sf_dir, "events")
-    f2 = (
-        events.groupBy("user_id")
-        .agg(F.count("*").cast("long").alias("n"))
-        .agg(F.sum(F.col("n") * F.col("n")).cast("long").alias("f2"))
-        .collect()[0]["f2"]
-    )
-    wall = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    # same true-`div` + DECIMAL(38,0) discipline as the batch twin
-    return (
-        sink.withColumn(
-            "sumzz", F.sum(F.col("z") * F.col("z")).over(wall).cast("long")
-        )
-        .select(
-            F.col("estimator").cast("long").alias("estimator"),
-            "z",
-            (F.col("z") * F.col("z")).cast("long").alias("x"),
-            F.lit(f2).cast("long").alias("f2_exact"),
-            F.expr(f"sumzz div {_AMS_S}").cast("long").alias("est_mean"),
-            F.expr(
-                f"cast(cast(abs(sumzz div {_AMS_S} - {f2}) "
-                f"as decimal(38,0)) * 1000000 div {f2} as long)"
-            ).alias("rel_err_micro"),
-        )
+    events = load_stream(spark, sf_dir, "events")
+    state = _ams_state(events.select("user_id", F.lit(1).cast("long").alias("n")))
+    return _ams_finalize(
+        run_replay(state, "complete", "stream_ams"),
+        _ams_freq(load(spark, sf_dir, "events")),
     )
 
 

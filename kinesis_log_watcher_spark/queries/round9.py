@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_log_watcher_spark.queries.base import load, register
+from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.sources.files import run_replay
 
 
@@ -93,7 +93,12 @@ _SQL_PC_CTE = "pc AS (\n      SELECT doc_id, source, lang, n_chars,\n" + ",\n".j
 
 
 def _pc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
+    return _pc_from(load(spark, sf_dir, "documents"))
+
+
+def _pc_from(docs: DataFrame) -> DataFrame:
+    """Per-doc model-panel correctness bits from any documents relation
+    (batch scan or stream) — pure per-row expressions."""
     return docs.select(
         "doc_id",
         "source",
@@ -156,9 +161,7 @@ _SQL_PR_CTE = f"""pr AS (
 # ===========================================================================
 
 
-@register(
-    "winrate_matrix_models",
-    f"""
+_SQL_WINRATE = f"""
     WITH {_SQL_PC_CTE},
     {_SQL_PR_CTE}
     SELECT model_a, model_b,
@@ -173,7 +176,12 @@ _SQL_PR_CTE = f"""pr AS (
                          WHEN ca = cb THEN 500000 ELSE 0 END)
                 // COUNT(*) AS BIGINT) AS winrate_a_micro
     FROM pr GROUP BY model_a, model_b
-    """,
+    """
+
+
+@register(
+    "winrate_matrix_models",
+    _SQL_WINRATE,
     doc="Pairwise model win-rate matrix over the shared eval set: for "
     "each of the 6 unordered model pairs, wins/ties/losses on per-doc "
     "correctness and the tie-split win rate (ties count half — the "
@@ -185,8 +193,13 @@ _SQL_PR_CTE = f"""pr AS (
     "(No counterpart in reference main.go.)",
 )
 def winrate_matrix_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pr = _pair_rows(_pc(spark, sf_dir))
-    return pr.groupBy("model_a", "model_b").agg(
+    return _wr_finalize(_wr_state(_pc(spark, sf_dir)))
+
+
+def _wr_state(pc: DataFrame) -> DataFrame:
+    """Per-pair win/tie/loss counters — order-free sums, so the
+    streaming twin holds this relation as complete-mode state."""
+    return _pair_rows(pc).groupBy("model_a", "model_b").agg(
         F.count("*").cast("long").alias("n_items"),
         F.sum(F.when(F.col("ca") > F.col("cb"), 1).otherwise(0))
         .cast("long")
@@ -197,13 +210,21 @@ def winrate_matrix_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("ca") == F.col("cb"), 1).otherwise(0))
         .cast("long")
         .alias("ties"),
+    )
+
+
+def _wr_finalize(state: DataFrame) -> DataFrame:
+    return state.select(
+        "model_a",
+        "model_b",
+        "n_items",
+        "wins_a",
+        "wins_b",
+        "ties",
         F.expr(
-            "CAST(SUM(CASE WHEN ca > cb THEN 1000000 "
-            "WHEN ca = cb THEN 500000 ELSE 0 END) AS DECIMAL(38,0)) "
-            "div COUNT(*)"
-        )
-        .cast("long")
-        .alias("winrate_a_micro"),
+            "CAST(CAST(wins_a * 1000000 + ties * 500000 AS DECIMAL(38,0)) "
+            "div n_items AS BIGINT)"
+        ).alias("winrate_a_micro"),
     )
 
 
@@ -304,9 +325,7 @@ def model_agreement_kappa_matrix(
 _CHI2_1_95_MICRO = 3841459
 
 
-@register(
-    "mcnemar_paired_models",
-    f"""
+_SQL_MCNEMAR = f"""
     WITH {_SQL_PC_CTE},
     cells AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
@@ -330,7 +349,12 @@ _CHI2_1_95_MICRO = 3841459
                      >= {_CHI2_1_95_MICRO}
            END AS significant
     FROM cells
-    """,
+    """
+
+
+@register(
+    "mcnemar_paired_models",
+    _SQL_MCNEMAR,
     doc="McNemar's paired test of model m1 vs m2 on the shared eval "
     "set: only the discordant pairs carry signal — chi2 = "
     "(|b-c|-1)^2/(b+c) with the continuity correction (clamped at 0), "
@@ -344,8 +368,13 @@ _CHI2_1_95_MICRO = 3841459
     "(No counterpart in reference main.go.)",
 )
 def mcnemar_paired_models(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = _pc(spark, sf_dir)
-    cells = pc.agg(
+    return _mcn_finalize(_mcn_state(_pc(spark, sf_dir)))
+
+
+def _mcn_state(pc: DataFrame) -> DataFrame:
+    """The four m1-vs-m2 concordance counters as one global aggregate
+    row (the streaming twin's complete-mode state)."""
+    return pc.groupBy().agg(
         F.count("*").cast("long").alias("n_items"),
         F.sum(F.col("c_m1") * F.col("c_m2")).cast("long").alias("n_both"),
         F.sum((1 - F.col("c_m1")) * (1 - F.col("c_m2")))
@@ -358,6 +387,9 @@ def mcnemar_paired_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_only_b"),
     )
+
+
+def _mcn_finalize(cells: DataFrame) -> DataFrame:
     chi2 = (
         "CAST(GREATEST(abs(n_only_a - n_only_b) - 1, 0) AS DECIMAL(38,0)) "
         "* GREATEST(abs(n_only_a - n_only_b) - 1, 0) * 1000000 "
@@ -972,9 +1004,7 @@ def mantel_haenszel_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "ece_calibration_bins",
-    f"""
+_SQL_ECE = f"""
     WITH conf AS (
       SELECT doc_id,
              LEAST(999999, {_sql_p_micro(_MODELS[0][1])} + 150000)
@@ -999,7 +1029,12 @@ def mantel_haenszel_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // SUM(CAST(n AS HUGEINT)) OVER () AS BIGINT)
              AS ece_micro
     FROM gaps
-    """,
+    """
+
+
+@register(
+    "ece_calibration_bins",
+    _SQL_ECE,
     doc="Expected calibration error of model m1's reported confidence: "
     "the model reports conf = true success probability + 150000 micro "
     "overconfidence (clamped; the construction plants a known ~15% "
@@ -1015,31 +1050,38 @@ def mantel_haenszel_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs). (No counterpart in reference main.go.)",
 )
 def ece_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
+    return _ece_finalize(_ece_state(load(spark, sf_dir, "documents")))
+
+
+def _ece_state(docs: DataFrame) -> DataFrame:
+    """Per-confidence-bin (n, sum_conf, sum_correct) counters — the
+    order-free sums the streaming twin holds as complete-mode state."""
     m, skill = _MODELS[0]
     conf = docs.select(
-        "doc_id",
         F.least(F.lit(999999), _p_micro_col(skill) + 150000).alias(
             "conf_micro"
         ),
         _correct_col(m, skill).alias("correct"),
     )
-    bins = conf.groupBy(
+    return conf.groupBy(
         F.expr("conf_micro div 100000").alias("bin")
     ).agg(
         F.count("*").cast("long").alias("n"),
-        F.expr("CAST(SUM(conf_micro) div COUNT(*) AS BIGINT)").alias(
-            "mean_conf_micro"
-        ),
-        F.expr("CAST(SUM(correct) * 1000000 div COUNT(*) AS BIGINT)").alias(
-            "acc_micro"
-        ),
+        F.sum("conf_micro").cast("long").alias("sum_conf"),
+        F.sum("correct").cast("long").alias("sum_correct"),
     )
-    gaps = bins.select(
+
+
+def _ece_finalize(state: DataFrame) -> DataFrame:
+    gaps = state.select(
         "bin",
         "n",
-        "mean_conf_micro",
-        "acc_micro",
+        F.expr("CAST(sum_conf div n AS BIGINT)").alias("mean_conf_micro"),
+        F.expr("CAST(sum_correct * 1000000 div n AS BIGINT)").alias(
+            "acc_micro"
+        ),
+    ).select(
+        "*",
         F.abs(F.col("acc_micro") - F.col("mean_conf_micro")).alias(
             "gap_micro"
         ),
@@ -2553,31 +2595,17 @@ def elo_sequential_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming twins: live mergeability of the eval aggregation layer
 # ===========================================================================
 #
-# Each twin maintains the eval statistic's SUFFICIENT COUNTS as
-# streaming aggregation state (counting is associative/commutative and
-# order-free, so any micro-batch split converges to the batch result),
-# finalizes the derived ratios on read from the bounded state relation,
-# and shares the BATCH oracle SQL verbatim — a green row certifies the
-# streaming and batch paths agree bit-for-bit on the same corpus, the
-# DDSketch/AMS-twin discipline.
-
-
-def _stream_pc(spark, sf_dir):
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    return stream.select(
-        "doc_id",
-        "n_chars",
-        *[_correct_col(m, s).alias(f"c_{m}") for m, s in _MODELS],
-    )
+# Each twin runs its batch twin's own state builder over the streamed
+# corpus (counting is associative/commutative and order-free, so any
+# micro-batch split converges to the batch result), finalizes through
+# the batch twin's finalize on the bounded state relation, and
+# registers the batch oracle constant — a green row certifies the
+# streaming and batch paths agree bit-for-bit on the same corpus.
 
 
 @register(
     "stream_winrate_matrix",
-    None,  # patched to the batch oracle SQL below (_share_batch_oracles)
+    _SQL_WINRATE,
     doc="STREAMING twin of winrate_matrix_models: the per-pair "
     "win/tie/loss counts are streaming aggregation state in complete "
     "mode (order-free counting — any replay split converges to the "
@@ -2589,38 +2617,13 @@ def _stream_pc(spark, sf_dir):
     "batch plan does. (No counterpart in reference main.go.)",
 )
 def stream_winrate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = _stream_pc(spark, sf_dir)
-    pr = _pair_rows(pc)
-    counts = pr.groupBy("model_a", "model_b").agg(
-        F.count("*").cast("long").alias("n_items"),
-        F.sum(F.when(F.col("ca") > F.col("cb"), 1).otherwise(0))
-        .cast("long")
-        .alias("wins_a"),
-        F.sum(F.when(F.col("cb") > F.col("ca"), 1).otherwise(0))
-        .cast("long")
-        .alias("wins_b"),
-        F.sum(F.when(F.col("ca") == F.col("cb"), 1).otherwise(0))
-        .cast("long")
-        .alias("ties"),
-    )
-    tbl = run_replay(counts, "complete", "stream_wr")
-    return tbl.select(
-        "model_a",
-        "model_b",
-        "n_items",
-        "wins_a",
-        "wins_b",
-        "ties",
-        F.expr(
-            "CAST(CAST(wins_a * 1000000 + ties * 500000 AS DECIMAL(38,0)) "
-            "div n_items AS BIGINT)"
-        ).alias("winrate_a_micro"),
-    )
+    state = _wr_state(_pc_from(load_stream(spark, sf_dir, "documents")))
+    return _wr_finalize(run_replay(state, "complete", "stream_wr"))
 
 
 @register(
     "stream_ece_calibration",
-    None,
+    _SQL_ECE,
     doc="STREAMING twin of ece_calibration_bins: per-confidence-bin "
     "(n, sum_conf, sum_correct) counters as complete-mode streaming "
     "state; mean confidence, accuracy, gap and the pooled ECE "
@@ -2630,62 +2633,13 @@ def stream_winrate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(No counterpart in reference main.go.)",
 )
 def stream_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.session import ensure_session_confs
-    from kinesis_log_watcher_spark.sources.files import read_parquet_stream
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(spark, f"{sf_dir}/documents.parquet")
-    m, skill = _MODELS[0]
-    conf = stream.select(
-        F.least(F.lit(999999), _p_micro_col(skill) + 150000).alias(
-            "conf_micro"
-        ),
-        _correct_col(m, skill).alias("correct"),
-    )
-    bins = conf.groupBy(
-        F.expr("conf_micro div 100000").alias("bin")
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("conf_micro").cast("long").alias("sum_conf"),
-        F.sum("correct").cast("long").alias("sum_correct"),
-    )
-    tbl = run_replay(bins, "complete", "stream_ece")
-    gaps = tbl.select(
-        "bin",
-        "n",
-        F.expr("CAST(sum_conf div n AS BIGINT)").alias("mean_conf_micro"),
-        F.expr("CAST(sum_correct * 1000000 div n AS BIGINT)").alias(
-            "acc_micro"
-        ),
-    ).select(
-        "*",
-        F.abs(F.col("acc_micro") - F.col("mean_conf_micro")).alias(
-            "gap_micro"
-        ),
-    )
-    wall = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    tot = gaps.select(
-        "*",
-        F.sum(F.col("n").cast("decimal(38,0)") * F.col("gap_micro"))
-        .over(wall)
-        .alias("wgap_sum"),
-        F.sum(F.col("n").cast("decimal(38,0)")).over(wall).alias("n_sum"),
-    )
-    return tot.select(
-        F.col("bin").cast("long").alias("bin"),
-        "n",
-        "mean_conf_micro",
-        "acc_micro",
-        F.col("gap_micro").cast("long").alias("gap_micro"),
-        F.expr("CAST(wgap_sum div n_sum AS BIGINT)").alias("ece_micro"),
-    )
+    state = _ece_state(load_stream(spark, sf_dir, "documents"))
+    return _ece_finalize(run_replay(state, "complete", "stream_ece"))
 
 
 @register(
     "stream_mcnemar_paired",
-    None,
+    _SQL_MCNEMAR,
     doc="STREAMING twin of mcnemar_paired_models: the four concordance/"
     "discordance counters are a single complete-mode streaming global "
     "aggregate (one state row); the continuity-corrected chi-square "
@@ -2695,61 +2649,8 @@ def stream_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(No counterpart in reference main.go.)",
 )
 def stream_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = _stream_pc(spark, sf_dir)
-    cells = pc.groupBy().agg(
-        F.count("*").cast("long").alias("n_items"),
-        F.sum(F.col("c_m1") * F.col("c_m2")).cast("long").alias("n_both"),
-        F.sum((1 - F.col("c_m1")) * (1 - F.col("c_m2")))
-        .cast("long")
-        .alias("n_neither"),
-        F.sum(F.col("c_m1") * (1 - F.col("c_m2")))
-        .cast("long")
-        .alias("n_only_a"),
-        F.sum((1 - F.col("c_m1")) * F.col("c_m2"))
-        .cast("long")
-        .alias("n_only_b"),
-    )
-    tbl = run_replay(cells, "complete", "stream_mcn")
-    chi2 = (
-        "CAST(GREATEST(abs(n_only_a - n_only_b) - 1, 0) AS DECIMAL(38,0)) "
-        "* GREATEST(abs(n_only_a - n_only_b) - 1, 0) * 1000000 "
-        "div (n_only_a + n_only_b)"
-    )
-    return tbl.select(
-        "n_items",
-        "n_both",
-        "n_neither",
-        "n_only_a",
-        "n_only_b",
-        F.expr(
-            f"CASE WHEN n_only_a + n_only_b = 0 THEN CAST(0 AS BIGINT) "
-            f"ELSE CAST({chi2} AS BIGINT) END"
-        ).alias("chi2_cc_micro"),
-        F.expr(
-            f"CASE WHEN n_only_a + n_only_b = 0 THEN FALSE "
-            f"ELSE {chi2} >= {_CHI2_1_95_MICRO} END"
-        ).alias("significant"),
-    )
-
-
-# The twins share the batch oracle SQL verbatim (the DDSketch/AMS-twin
-# discipline): patch their registry entries once the batch entries
-# exist (module bottom, after all registrations).
-def _share_batch_oracles() -> None:
-    from kinesis_log_watcher_spark.queries.base import _REGISTRY
-    from dataclasses import replace
-
-    for twin, batch in (
-        ("stream_winrate_matrix", "winrate_matrix_models"),
-        ("stream_ece_calibration", "ece_calibration_bins"),
-        ("stream_mcnemar_paired", "mcnemar_paired_models"),
-    ):
-        _REGISTRY[twin] = replace(
-            _REGISTRY[twin], oracle=_REGISTRY[batch].oracle
-        )
-
-
-_share_batch_oracles()
+    state = _mcn_state(_pc_from(load_stream(spark, sf_dir, "documents")))
+    return _mcn_finalize(run_replay(state, "complete", "stream_mcn"))
 
 
 # ===========================================================================

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kinesis_log_watcher_spark.queries.base import register
+from kinesis_log_watcher_spark.queries import llm as _llm
+from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.streaming.stateful import run_stateful_sessions
 from kinesis_log_watcher_spark.streaming.windows import run_session_windows, run_windowed_counts
 
@@ -214,7 +215,7 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_neardup_lsh",
-    None,  # oracle assigned below — the batch dedup_minhash_lsh SQL verbatim
+    _llm._MINHASH_LSH_SQL,  # the batch dedup_minhash_lsh SQL verbatim
     doc="STREAMING MinHash+LSH near-dup detection: banded signatures "
     "computed as a narrow map (array_min fold per hash — no shuffle "
     "before the stateful op), per-(band, band_sig) bucket membership in "
@@ -227,15 +228,6 @@ def stream_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.streaming.neardup import run_stream_neardup
 
     return run_stream_neardup(spark, f"{sf_dir}/documents.parquet")
-
-
-# The streaming replay reduces to the batch candidate relation, so its
-# oracle IS the batch query's SQL. Assigned (not duplicated) at import
-# time; llm registers before this module under queries.base.registry().
-from kinesis_log_watcher_spark.queries import llm as _llm  # noqa: E402,F401
-from kinesis_log_watcher_spark.queries.base import _REGISTRY as _R  # noqa: E402
-
-_R["stream_neardup_lsh"].oracle = _R["dedup_minhash_lsh"].oracle
 
 
 def _admission_oracle() -> str:
@@ -363,68 +355,25 @@ def stream_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFra
     return run_stream_stream_left_join(spark, f"{sf_dir}/events.parquet")
 
 
-def _hll_oracle() -> str:
-    from kinesis_log_watcher_spark.queries.llm import _HLL_P4_ALPHA
-
-    return f"""
-    WITH hashed AS (
-      SELECT event_type,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                  AS BIGINT) AS h
-      FROM events),
-    regs AS (
-      SELECT event_type, h % 16 AS r,
-             MAX(CASE WHEN (h >> 4) = 0 THEN 57
-                      ELSE 57 - length(bin(h >> 4)) END) AS m_rho
-      FROM hashed GROUP BY 1, 2),
-    stats AS (
-      SELECT event_type, COUNT(*) AS present,
-             SUM(1::BIGINT << (57 - m_rho)) AS s_present
-      FROM regs GROUP BY 1),
-    est AS (
-      SELECT event_type, 16 - present AS v,
-             {_HLL_P4_ALPHA!r}
-               / (s_present + (16 - present) * (1::BIGINT << 57)) AS e_raw
-      FROM stats)
-    SELECT e.event_type,
-           CAST(floor(CASE WHEN e_raw <= 40.0 AND v > 0
-                           THEN 16.0 * ln(16.0 / v) ELSE e_raw END + 0.5)
-                AS BIGINT) AS est_users,
-           x.exact_users
-    FROM est e
-    JOIN (SELECT event_type,
-                 CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users
-          FROM events GROUP BY 1) x USING (event_type)
-    """
-
-
 @register(
     "stream_hll_user_distinct",
-    _hll_oracle(),
+    _llm._HLL_SQL,
     doc="STREAMING HyperLogLog: the per-event-type register table is "
     "maintained as streaming aggregation state (groupBy-MAX is "
     "order-free, so any micro-batch split converges to the batch "
     "sketch); estimates are finalized on read over the sink registers, "
     "exactly as a production register store would. Oracle = the batch "
-    "hll_user_distinct SQL, bit-matched est + exact "
-    "(streaming/windows.py run_streaming_hll).",
+    "hll_user_distinct SQL, bit-matched est + exact; both twins run "
+    "the same register builder and finalize (llm._hll_state/"
+    "_hll_finalize).",
 )
 def stream_hll_user_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from kinesis_log_watcher_spark.sources.files import run_replay
 
-    from kinesis_log_watcher_spark.queries.base import load
-    from kinesis_log_watcher_spark.streaming.windows import run_streaming_hll
-
-    est = run_streaming_hll(spark, f"{sf_dir}/events.parquet")
-    exact = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").cast("long").alias("exact_users"))
-    )
-    return est.join(F.broadcast(exact), "event_type").select(
-        "event_type",
-        F.floor(F.col("est_distinct") + 0.5).cast("long").alias("est_users"),
-        "exact_users",
+    state = _llm._hll_state(load_stream(spark, sf_dir, "events"))
+    return _llm._hll_finalize(
+        run_replay(state, "complete", "stream_hll"),
+        load(spark, sf_dir, "events"),
     )
 
 
@@ -437,7 +386,6 @@ def _cdc_change_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     from pyspark.sql import functions as F
 
     from kinesis_log_watcher_spark.functions.exact import dec
-    from kinesis_log_watcher_spark.queries.base import load
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -461,7 +409,7 @@ def _cdc_change_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from kinesis_log_watcher_spark.sources.files import stage_replay_files
 
-    changes = stage_replay_files(spark, [v0, v1], prefix="cdc_changes_")
+    changes = stage_replay_files([v0, v1], prefix="cdc_changes_")
     root = scratch_dir(prefix="cdc_target_")
     return changes, root
 
@@ -793,13 +741,11 @@ def stream_index_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the maintained index must answer EXACTLY like a full rebuild, so the
 # query shares ann_ivf_topk's batch-rebuild oracle verbatim
-from kinesis_log_watcher_spark.queries import llm as _llm  # noqa: E402,F401
-from kinesis_log_watcher_spark.queries.base import _REGISTRY as _REG  # noqa: E402
 
 
 @register(
     "stream_ivf_index_update",
-    _REG["ann_ivf_topk"].oracle,
+    _llm._IVF_TOPK_SQL,
     doc="STREAMING IVF INDEX MAINTENANCE: the persisted cell index "
     "(ann_ivf_persisted's stored layout) is kept current as new "
     "vectors stream in — each micro-batch assigns arrivals to their "
@@ -882,7 +828,6 @@ def stream_ivf_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from kinesis_log_watcher_spark.queries.base import load
     from kinesis_log_watcher_spark.streaming.windows import (
         run_streaming_minhash_overlap,
     )

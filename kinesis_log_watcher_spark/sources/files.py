@@ -323,7 +323,7 @@ def zorder_write(
     return spark.read.parquet(dest_dir)
 
 
-def stage_replay_files(spark, parts, prefix: str = "replay_") -> str:
+def stage_replay_files(parts, prefix: str = "replay_") -> str:
     """Write each DataFrame in ``parts`` as ONE parquet file in a fresh
     replay directory, named and mtime-ordered by position — the shared
     harness for every bounded-replay runner that needs deterministic
@@ -361,7 +361,7 @@ def stage_replay_files(spark, parts, prefix: str = "replay_") -> str:
 
 
 def stage_replay_files_split(
-    spark, df: DataFrame, part_col: str, n_parts: int, prefix: str = "replay_"
+    df: DataFrame, part_col: str, n_parts: int, prefix: str = "replay_"
 ) -> str:
     """Like :func:`stage_replay_files`, but the parts are expressed as a
     PART COLUMN (integer 0..n_parts-1) on one DataFrame and staged with

@@ -110,7 +110,7 @@ def run_stream_ivf_index_update(
         fresh.filter(F.col("vec_id") % n_replay_parts == i)
         for i in range(n_replay_parts)
     ]
-    replay = stage_replay_files(spark, parts, prefix="ivf_replay_")
+    replay = stage_replay_files(parts, prefix="ivf_replay_")
     stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
 
     def land(batch_df: DataFrame, batch_id: int) -> None:

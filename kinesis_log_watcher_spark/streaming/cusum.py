@@ -126,7 +126,7 @@ def run_stream_cusum(
     ].mid
     p1 = ev.filter(F.col("ts") <= mid)
     p2 = ev.filter(F.col("ts") > mid)
-    replay = stage_replay_files(spark, [p1, p2], prefix="cusum_replay_")
+    replay = stage_replay_files([p1, p2], prefix="cusum_replay_")
     stream = normalize_ts_cols(
         read_parquet_stream(spark, replay, max_files_per_trigger=1)
     )

@@ -170,7 +170,7 @@ def _sentinel_replay_dir(spark: SparkSession, events_path: str) -> str:
         )
 
     return stage_replay_files(
-        spark, [base, sentinel(1), sentinel(2)], prefix="ss_left_join_"
+        [base, sentinel(1), sentinel(2)], prefix="ss_left_join_"
     )
 
 

@@ -221,7 +221,7 @@ def run_timer_sessions(
         .withColumn("part", F.when(F.col("ts") <= bounds.mid, 0).otherwise(1))
         .unionAll(sentinel.withColumn("part", F.lit(1)))
     )
-    replay = stage_replay_files_split(spark, staged, "part", 2, prefix="timer_sess_")
+    replay = stage_replay_files_split(staged, "part", 2, prefix="timer_sess_")
     stream = normalize_ts_cols(
         read_parquet_stream(spark, replay, max_files_per_trigger=1)
     )

@@ -210,37 +210,27 @@ def run_streaming_admission(
     return run_replay(agg, "complete", "stream_admission")
 
 
-def run_streaming_hll(
-    spark: SparkSession,
-    events_path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """STREAMING HyperLogLog: maintain the per-group register table of
-    operators/sketch.hll_build as streaming aggregation state, then
-    finalize the cardinality estimate batch-side on the sink contents.
-
-    The register update is groupBy-MAX — associative, commutative, and
-    order-free — so incremental micro-batch folding provably converges
-    to the batch sketch whatever the replay split: state is the
-    ≤ groups x 2^p register rows themselves (the sketch IS the state,
-    never the keys). The estimate step is a second aggregation over the
-    registers; streaming doesn't chain two stateful aggs, and real
-    deployments don't want it to — registers live in the store/sink and
-    estimates are computed on read (here: hll_estimate over the memory
-    sink). At 100 TB/day this is the live-NDV dashboard shape: tiny
-    bounded state, mergeable across streams and days."""
-    from kinesis_log_watcher_spark.operators.sketch import (
-        hll_build,
-        hll_estimate,
-    )
-
-    ensure_session_confs(spark)
-    stream = read_parquet_stream(
-        spark, events_path, max_files_per_trigger=max_files_per_trigger
-    )
-    regs = hll_build(stream, "user_id", group_cols=("event_type",), p=4)
-    sink = run_replay(regs, "complete", "stream_hll")
-    return hll_estimate(sink, group_cols=("event_type",), p=4)
+def _sentinel(base: DataFrame, i: int, id_base: int) -> DataFrame:
+    """One "sentinel" event row, ``2*i`` hours past the latest ``ts`` in
+    ``base``, with event_id ``id_base - i`` and every other column null:
+    staged as its own micro-batch it advances the watermark past every
+    real window. Callers filter sentinel rows out after the sink."""
+    mx = base.groupBy().agg(F.max("ts").alias("mxts"))
+    cols = []
+    for f in base.schema.fields:
+        if f.name == "ts":
+            cols.append(
+                (F.col("mxts") + F.expr(f"INTERVAL {2 * i} HOURS"))
+                .cast(f.dataType)
+                .alias("ts")
+            )
+        elif f.name == "event_type":
+            cols.append(F.lit("sentinel").cast(f.dataType).alias(f.name))
+        elif f.name == "event_id":
+            cols.append(F.lit(id_base - i).cast(f.dataType).alias(f.name))
+        else:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    return mx.select(*cols)
 
 
 def run_late_data_accounting(
@@ -276,28 +266,14 @@ def run_late_data_accounting(
     ensure_session_confs(spark)
     base = normalize_ts_cols(spark.read.parquet(events_path))
     is_late = (F.dayofmonth("ts") == late_day) & (F.col("event_id") % 2 == 0)
-    mx = base.groupBy().agg(F.max("ts").alias("mxts"))
-
-    def sentinel(i: int) -> DataFrame:
-        cols = []
-        for f in base.schema.fields:
-            if f.name == "ts":
-                cols.append(
-                    (F.col("mxts") + F.expr(f"INTERVAL {2 * i} HOURS"))
-                    .cast(f.dataType)
-                    .alias("ts")
-                )
-            elif f.name == "event_type":
-                cols.append(F.lit("sentinel").cast(f.dataType).alias(f.name))
-            elif f.name == "event_id":
-                cols.append(F.lit(-1000 - i).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return mx.select(*cols)
 
     replay = stage_replay_files(
-        spark,
-        [base.filter(~is_late), sentinel(1), base.filter(is_late), sentinel(2)],
+        [
+            base.filter(~is_late),
+            _sentinel(base, 1, -1000),
+            base.filter(is_late),
+            _sentinel(base, 2, -1000),
+        ],
         prefix="late_replay_",
     )
 
@@ -435,28 +411,9 @@ def run_two_level_agg(
     """
     ensure_session_confs(spark)
     base = normalize_ts_cols(spark.read.parquet(events_path))
-    mx = base.groupBy().agg(F.max("ts").alias("mxts"))
-
-    def sentinel(i: int) -> DataFrame:
-        cols = []
-        for f in base.schema.fields:
-            if f.name == "ts":
-                cols.append(
-                    (F.col("mxts") + F.expr(f"INTERVAL {2 * i} HOURS"))
-                    .cast(f.dataType)
-                    .alias("ts")
-                )
-            elif f.name == "event_type":
-                cols.append(F.lit("sentinel").cast(f.dataType).alias(f.name))
-            elif f.name == "event_id":
-                cols.append(F.lit(-2000 - i).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return mx.select(*cols)
 
     replay = stage_replay_files(
-        spark,
-        [base, sentinel(1), sentinel(2)],
+        [base, _sentinel(base, 1, -2000), _sentinel(base, 2, -2000)],
         prefix="two_level_",
     )
     stream = normalize_ts_cols(

@@ -338,40 +338,34 @@ def test_event_transition_matrix_handcheck(spark, tmp_path, reg):
     assert len(got) == 2
 
 
-def _write_events_files(spark, tmp_path, batches):
+def _write_events_files(spark, batches):
     """Write each batch as one time-ordered parquet file (mirrors the
     stateful-session test fixtures: file order == event-time order)."""
-    import glob
-    import os
-    import shutil
     from datetime import datetime, timedelta
 
-    d = tmp_path / "ev"
-    d.mkdir(exist_ok=True)
+    from kinesis_log_watcher_spark.sources.files import stage_replay_files
+
     t0 = datetime(2024, 3, 1, 12, 0, 0)
     eid = 0
-    for i, batch in enumerate(batches):
+    parts = []
+    for batch in batches:
         rows = []
         for user, offset_s in batch:
             eid += 1
             rows.append(
                 (eid, t0 + timedelta(seconds=offset_s), user, "e", 1.0, "{}")
             )
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
+        parts.append(
+            spark.createDataFrame(
+                rows,
+                "event_id long, ts timestamp, user_id long, event_type string, "
+                "value double, props string",
+            )
         )
-        stage = tmp_path / f"stage{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"f{i}.parquet"
-        shutil.move(part, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-    return str(d)
+    return stage_replay_files(parts, prefix="t_ratelimit_")
 
 
-def test_rate_limit_boundary_and_multibatch(spark, tmp_path):
+def test_rate_limit_boundary_and_multibatch(spark):
     from kinesis_log_watcher_spark.streaming.ratelimit import run_rate_limit
 
     # user 1: 8 events inside one hour -> first 5 admitted, 3 throttled;
@@ -380,7 +374,7 @@ def test_rate_limit_boundary_and_multibatch(spark, tmp_path):
     # files so the limiter's state must carry across micro-batches.
     b1 = [(1, 0), (1, 60), (1, 120), (1, 180), (2, 0)]
     b2 = [(1, 240), (1, 300), (1, 360), (1, 420), (1, 420 + 3601 + 3600), (2, 7200)]
-    path = _write_events_files(spark, tmp_path, [b1, b2])
+    path = _write_events_files(spark, [b1, b2])
     from conftest import replay_parallel
 
     rows_single, rows_multi = replay_parallel(

@@ -72,3 +72,34 @@ def test_front_order_names_all_registered():
     missing = [n for n in _FRONT if n not in reg]
     assert not missing, f"_FRONT names not in registry: {missing}"
     assert len(set(_FRONT)) == len(_FRONT), "duplicate names in _FRONT"
+
+
+# Every stream twin whose oracle is its batch twin's SQL. Each pair runs
+# one plan (the batch twin's state builder) and registers one oracle
+# constant; this table pins that the two registry entries still carry
+# the same SQL.
+_STREAM_TWIN_OF = {
+    "stream_winrate_matrix": "winrate_matrix_models",
+    "stream_ece_calibration": "ece_calibration_bins",
+    "stream_mcnemar_paired": "mcnemar_paired_models",
+    "stream_retrieval_coverage": "retrieval_candidate_coverage",
+    "stream_semantic_cache_ttl": "semantic_cache_ttl_eval",
+    "stream_srm_check": "ab_sample_ratio_mismatch",
+    "stream_rejection_sampling": "rejection_sampling_efficiency",
+    "stream_rebuild_cadence": "index_rebuild_cadence_cost",
+    "stream_ddsketch_quantiles": "ddsketch_quantile_bounds",
+    "stream_ams_f2_sketch": "ams_f2_sketch_estimate",
+    "stream_hll_user_distinct": "hll_user_distinct",
+    "stream_neardup_lsh": "dedup_minhash_lsh",
+    "stream_ivf_index_update": "ann_ivf_topk",
+    "stream_cdc_upsert": "orders_upsert_totals",
+    "stream_kinesis_sim_scan": "kinesis_sim_batch_scan",
+    "stream_kinesis_sim_split_resume": "kinesis_sim_shard_split_scan",
+    "stream_kinesis_sim_merge_resume": "kinesis_sim_shard_merge_scan",
+}
+
+
+def test_stream_twins_share_batch_oracle():
+    oracles = entrymod.oracle_sql()
+    for twin, batch in _STREAM_TWIN_OF.items():
+        assert oracles[twin] == oracles[batch], (twin, batch)

@@ -3,10 +3,6 @@ cross-batch accumulation equals the batch GROUP BY."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 import pandas as pd
 
 
@@ -81,30 +77,26 @@ def test_mapstate_processor_matches_fallback_twin():
     ]
 
 
-def test_mapstate_replay_equals_batch_any_split(spark, tmp_path):
+def test_mapstate_replay_equals_batch_any_split(spark):
+    from kinesis_log_watcher_spark.sources.files import stage_replay_files
     from kinesis_log_watcher_spark.streaming.mapstate import run_type_counts
 
-    d = tmp_path / "ev"
-    d.mkdir()
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "user_id long, event_type string"
-    )
     batches = [
         [(1, "click"), (1, "view"), (2, "click")],
         [(1, "click"), (2, "purchase"), (3, "view")],
         [(2, "click"), (1, "view")],
     ]
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"_s{i}"
-        mk(rows).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"e{i}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
+    d = stage_replay_files(
+        [
+            spark.createDataFrame(rows, "user_id long, event_type string")
+            for rows in batches
+        ],
+        prefix="t_mapstate_",
+    )
 
     want = {
         (r.user_id, r.event_type, r["count"])
-        for r in spark.read.parquet(str(d))
+        for r in spark.read.parquet(d)
         .groupBy("user_id", "event_type")
         .count()
         .collect()
@@ -114,7 +106,7 @@ def test_mapstate_replay_equals_batch_any_split(spark, tmp_path):
     res = replay_parallel(
         *(
             (lambda s=split: run_type_counts(
-                spark, str(d), max_files_per_trigger=s
+                spark, d, max_files_per_trigger=s
             ).collect())
             for split in (1, None)
         )

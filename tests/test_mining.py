@@ -268,7 +268,7 @@ def test_stream_minhash_overlap_split_invariant(spark, sf_dir):
     second = ev.filter(
         (F.col("event_id") % 2 == 1) | (F.col("event_id") % 10 == 0)
     )
-    replay = stage_replay_files(spark, [first, second], prefix="oph_replay_")
+    replay = stage_replay_files([first, second], prefix="oph_replay_")
     one = run_streaming_minhash_overlap(
         spark, f"{sf_dir}/events.parquet"
     ).collect()[0]

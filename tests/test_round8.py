@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from kinesis_log_watcher_spark.operators.bpe import (
     DEFAULT_MERGES,
     bpe_encode,
@@ -283,33 +281,27 @@ def test_token_budget_prefix_recompute(r8_results, spark, sf_dir):
     assert any(s["adm"] < s["docs"] for s in per_source.values())
 
 
-def test_token_budget_split_and_twin_equal(spark, sf_dir, tmp_path):
+def test_token_budget_split_and_twin_equal(spark, sf_dir):
     """Any micro-batch split converges to the same admission (state
     carries the running totals), and the applyInPandasWithState twin
     equals whichever path the runtime picked."""
-    import glob
-    import os
-    import shutil
-
     from conftest import replay_parallel
     from kinesis_log_watcher_spark.queries.base import load
+    from kinesis_log_watcher_spark.sources.files import stage_replay_files
     from kinesis_log_watcher_spark.streaming.tokenbudget import (
         run_token_budget_admission,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    d = tmp_path / "docs_stream"
-    d.mkdir()
     # three mtime-ordered files split by doc_id range (the determinism
     # contract: file order == doc_id order)
-    for i, (lo, hi) in enumerate([(0, 150), (150, 300), (300, 10**9)]):
-        stage = tmp_path / f"_s{i}"
-        docs.filter(f"doc_id >= {lo} AND doc_id < {hi}").coalesce(1) \
-            .write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"f{i}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
+    d = stage_replay_files(
+        [
+            docs.filter(f"doc_id >= {lo} AND doc_id < {hi}")
+            for lo, hi in [(0, 150), (150, 300), (300, 10**9)]
+        ],
+        prefix="t_tokbudget_",
+    )
 
     def rows(df):
         return {
@@ -320,11 +312,11 @@ def test_token_budget_split_and_twin_equal(spark, sf_dir, tmp_path):
 
     split, single, fallback = replay_parallel(
         lambda: rows(
-            run_token_budget_admission(spark, str(d), max_files_per_trigger=1)
+            run_token_budget_admission(spark, d, max_files_per_trigger=1)
         ),
-        lambda: rows(run_token_budget_admission(spark, str(d))),
+        lambda: rows(run_token_budget_admission(spark, d)),
         lambda: rows(
-            run_token_budget_admission(spark, str(d), use_tws=False)
+            run_token_budget_admission(spark, d, use_tws=False)
         ),
     )
     assert split == single == fallback
@@ -623,58 +615,37 @@ def test_bradley_terry_mm_recompute(spark, sf_dir):
     assert max(w.values()) > 10**6 > min(w.values())
 
 
-def test_stream_ddsketch_any_split_equals_batch(spark, tmp_path):
+def test_stream_ddsketch_any_split_equals_batch(spark):
     """Mergeability proven live: replaying the SAME rows one file per
     micro-batch vs all-at-once yields the identical sketch and
     quantiles (counting state is order-free)."""
-    import glob as _glob
-    import shutil
-
     from conftest import replay_parallel
     from kinesis_log_watcher_spark.queries.round8 import (
         _dd_finalize,
-        _DD_BUCKET_EXPR,
+        _dd_state,
     )
     from kinesis_log_watcher_spark.sources.files import (
         read_parquet_stream,
         run_replay,
+        stage_replay_files,
     )
 
-    d = tmp_path / "li"
-    d.mkdir()
     batches = [
         [(1, 901.82), (2, 5302.0), (3, 104997.88)],
         [(4, 12.5), (5, 5302.0), (6, 77000.25)],
         [(7, 901.82), (8, 250000.0), (9, 33.0)],
     ]
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"_s{i}"
-        spark.createDataFrame(
-            rows, "l_orderkey long, l_extendedprice double"
-        ).coalesce(1).write.parquet(str(stage))
-        (part,) = _glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"f{i}.parquet"
-        shutil.copy(part, dest)
-        import os as _os
-
-        _os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
+    d = stage_replay_files(
+        [
+            spark.createDataFrame(rows, "l_orderkey long, l_extendedprice double")
+            for rows in batches
+        ],
+        prefix="t_dd_",
+    )
 
     def run(split):
-        from pyspark.sql import functions as F
-
-        stream = read_parquet_stream(spark, str(d), max_files_per_trigger=split)
-        b = (
-            stream.filter(F.col("l_extendedprice") > 0)
-            .select(
-                F.expr(
-                    "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-                ).alias("c")
-            )
-            .select(F.expr(_DD_BUCKET_EXPR).alias("idx"))
-            .groupBy("idx")
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-        sink = run_replay(b, "complete", f"t_dd_{split}")
+        stream = read_parquet_stream(spark, d, max_files_per_trigger=split)
+        sink = run_replay(_dd_state(stream), "complete", f"t_dd_{split}")
         return sorted(tuple(r) for r in _dd_finalize(sink).collect())
 
     r1, rall = replay_parallel(lambda: run(1), lambda: run(None))

@@ -24,7 +24,7 @@ def test_split_staging_layout(spark):
     df = spark.range(0, 100).selectExpr(
         "id", "CAST(id % 3 AS INT) AS part"
     )
-    replay = stage_replay_files_split(spark, df, "part", 3, prefix="t_split_")
+    replay = stage_replay_files_split(df, "part", 3, prefix="t_split_")
     files = sorted(glob.glob(os.path.join(replay, "f*.parquet")))
     assert [os.path.basename(f) for f in files] == [
         "f0.parquet", "f1.parquet", "f2.parquet"
@@ -50,6 +50,6 @@ def test_split_staging_empty_part_raises(spark, monkeypatch):
     monkeypatch.setattr(staging, "scratch_dir", recording_scratch_dir)
     df = spark.range(0, 10).selectExpr("id", "CAST(0 AS INT) AS part")
     with pytest.raises(ValueError, match="empty"):
-        stage_replay_files_split(spark, df, "part", 2, prefix="t_split_")
+        stage_replay_files_split(df, "part", 2, prefix="t_split_")
     assert len(made) == 1
     assert not os.path.exists(made[0])

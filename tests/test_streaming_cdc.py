@@ -33,7 +33,12 @@ def cdc_results(spark, tmp_path_factory):
     from concurrent.futures import ThreadPoolExecutor
 
     from conftest import replay_parallel
-    from kinesis_log_watcher_spark.streaming.windows import run_streaming_hll
+    from kinesis_log_watcher_spark.operators.sketch import hll_estimate
+    from kinesis_log_watcher_spark.queries.llm import _hll_state
+    from kinesis_log_watcher_spark.sources.files import (
+        read_parquet_stream,
+        run_replay,
+    )
 
     tmp_path = tmp_path_factory.mktemp("cdc")
     changes = tmp_path / "changes"
@@ -59,15 +64,21 @@ def cdc_results(spark, tmp_path_factory):
     with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(lambda a: _stage_file(spark, tmp_path, *a), stages))
 
+    def streaming_hll(max_files_per_trigger=None):
+        # the registry twin's register builder (stream_hll_user_distinct)
+        stream = read_parquet_stream(
+            spark, str(ev), max_files_per_trigger=max_files_per_trigger
+        )
+        sink = run_replay(_hll_state(stream), "complete", "stream_hll")
+        return hll_estimate(sink, group_cols=("event_type",), p=4)
+
     upsert, est, est_single = replay_parallel(
         lambda: run_cdc_upsert(
             spark, str(changes), str(tmp_path / "target"),
             key_cols=("k",), version_col="version",
         ).collect(),
-        lambda: run_streaming_hll(
-            spark, str(ev), max_files_per_trigger=1
-        ).collect(),
-        lambda: run_streaming_hll(spark, str(ev)).collect(),
+        lambda: streaming_hll(max_files_per_trigger=1).collect(),
+        lambda: streaming_hll().collect(),
     )
     return {
         "upsert": upsert,

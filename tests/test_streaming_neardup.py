@@ -6,10 +6,6 @@ set independent of arrival order."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 import pytest
 
 from kinesis_log_watcher_spark.operators.dedup import (
@@ -18,6 +14,7 @@ from kinesis_log_watcher_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signature,
 )
+from kinesis_log_watcher_spark.sources.files import stage_replay_files
 from kinesis_log_watcher_spark.streaming.neardup import (
     NUM_HASHES,
     BANDS,
@@ -32,18 +29,11 @@ def _mk_docs(spark, rows):
     )
 
 
-def _stage_stream(spark, tmp_path, dirname, batches):
-    """mtime-ordered single-file batches under tmp_path/dirname."""
-    d = tmp_path / dirname
-    d.mkdir()
-    for i, batch in enumerate(batches, start=1):
-        stage = tmp_path / f"stage_{dirname}{i}"
-        _mk_docs(spark, batch).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"f{i}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-    return str(d)
+def _stage_stream(spark, batches):
+    """mtime-ordered single-file batches in a fresh replay directory."""
+    return stage_replay_files(
+        [_mk_docs(spark, batch) for batch in batches], prefix="t_neardup_"
+    )
 
 
 def _as_rows(df):
@@ -51,7 +41,7 @@ def _as_rows(df):
 
 
 @pytest.fixture(scope="module")
-def neardup_replays(spark, tmp_path_factory):
+def neardup_replays(spark):
     """Both scenarios staged once; the module's four bounded replays
     (split + single over the 3-file stream; capped + uncapped over the
     cap stream) launch in ONE replay_parallel burst (the r8 suite-speed
@@ -61,19 +51,18 @@ def neardup_replays(spark, tmp_path_factory):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    tmp_path = tmp_path_factory.mktemp("neardup")
     base = " ".join(f"t{i:02d}" for i in range(20))
     variant = base.replace("t07", "x07")  # high-Jaccard neighbor of base
     fresh = " ".join(f"u{i:02d}" for i in range(20))
     cap_text = " ".join(f"w{i:02d}" for i in range(20))
     # the two streams stage concurrently (independent write jobs)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_docs = pool.submit(_stage_stream, spark, tmp_path, "docs_stream", [
+        f_docs = pool.submit(_stage_stream, spark, [
             [(0, base), (1, fresh)],
             [(2, base), (3, variant)],          # 2 dups 0 across batches
             [(4, base), (5, " ".join(f"v{i:02d}" for i in range(20)))],
         ])
-        f_cap = pool.submit(_stage_stream, spark, tmp_path, "cap_stream", [
+        f_cap = pool.submit(_stage_stream, spark, [
             [(10, cap_text)], [(20, cap_text)], [(30, cap_text)],
         ])
         doc_files, cap_files = f_docs.result(), f_cap.result()

@@ -3,10 +3,6 @@ twin, fold purity, and replay-split invariance of the resolved board."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 import pandas as pd
 
 
@@ -95,32 +91,32 @@ def test_topk_fold_keeps_exact_order_and_k():
     assert board == [(9, 0, 4), (9, 1, 2)]
 
 
-def test_topk_replay_equals_batch_any_split(spark, tmp_path):
+def test_topk_replay_equals_batch_any_split(spark):
+    from kinesis_log_watcher_spark.sources.files import stage_replay_files
     from kinesis_log_watcher_spark.streaming.topk import run_stream_topk
 
-    d = tmp_path / "ev"
-    d.mkdir()
     rows_by_batch = [
         [(0, "click", 1, 5.0), (1, "view", 2, 9.25), (2, "click", 3, 7.5)],
         [(3, "click", 4, 8.0), (4, "view", 5, 9.25), (5, "click", 6, 1.0)],
         [(6, "click", 7, 9.9), (7, "view", 8, 0.5), (8, "click", 9, 8.0)],
     ]
-    for i, rows in enumerate(rows_by_batch):
-        stage = tmp_path / f"_s{i}"
-        spark.createDataFrame(
-            rows, "event_id long, event_type string, user_id long, value double"
-        ).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"e{i}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
+    d = stage_replay_files(
+        [
+            spark.createDataFrame(
+                rows,
+                "event_id long, event_type string, user_id long, value double",
+            )
+            for rows in rows_by_batch
+        ],
+        prefix="t_topk_",
+    )
 
     from conftest import replay_parallel
 
     res = replay_parallel(
         *(
             (lambda s=split: run_stream_topk(
-                spark, str(d), max_files_per_trigger=s
+                spark, d, max_files_per_trigger=s
             ).collect())
             for split in (1, None)
         )

@@ -7,13 +7,11 @@ replay≡batch pin executes."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 from datetime import datetime, timedelta
 
 import pytest
 
+from kinesis_log_watcher_spark.sources.files import stage_replay_files
 from kinesis_log_watcher_spark.streaming.tws import (
     batch_totals,
     run_running_totals,
@@ -35,26 +33,18 @@ def _mk_events(spark, rows):
 
 
 @pytest.fixture(scope="module")
-def event_files(spark, tmp_path_factory):
+def event_files(spark):
     """Three files; users 1 and 2 span file boundaries. Module-scoped:
     the staged dir is read-only input for every test here, and staging
     it once saves a multi-second Spark write chain per test."""
-    tmp_path = tmp_path_factory.mktemp("tws_events")
     batches = [
         [(1, 1.5), (1, 2.25), (2, 10.0)],
         [(1, 0.125), (2, -3.5), (3, 7.0)],
         [(2, 1.0), (1, 4.0)],
     ]
-    d = tmp_path / "events_stream"
-    d.mkdir()
-    for i, batch in enumerate(batches, start=1):
-        stage = tmp_path / f"stage{i}"
-        _mk_events(spark, batch).coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "part-*.parquet"))
-        dest = d / f"f{i}.parquet"
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-    return str(d)
+    return stage_replay_files(
+        [_mk_events(spark, batch) for batch in batches], prefix="t_tws_"
+    )
 
 
 def _as_set(df):
