@@ -158,8 +158,11 @@ _BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 15
 _BAND_MASK = (1 << _BAND_BITS) - 1
 
 
-def _token_hash(tok: Column) -> Column:
-    return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
+def md5_h15(col: Column) -> Column:
+    """First 15 md5 hex chars as a nonnegative int64 (house hash-draw
+    convention, identical to DuckDB CAST('0x'||substr(md5(x),1,15) AS
+    BIGINT))."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
@@ -170,7 +173,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     toks = (
         docs.select(id_col, F.explode(F.array_distinct(
             F.split(F.col(text_col), " "))).alias("tok"))
-        .select(id_col, _token_hash(F.col("tok")).alias("h"))
+        .select(id_col, md5_h15(F.col("tok")).alias("h"))
     )
     sums = [
         F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(f"s{j}")

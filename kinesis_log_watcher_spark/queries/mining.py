@@ -2531,9 +2531,7 @@ def ann_label_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "source_quantile_normalize",
-    """
+_QNORM_SQL = """
     WITH src AS (
       SELECT doc_id, source, n_chars,
              ROW_NUMBER() OVER (PARTITION BY source
@@ -2557,7 +2555,12 @@ def ann_label_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT m.doc_id, m.source, m.n_chars, m.src_rank, m.src_n,
            CAST(g.ref_chars AS BIGINT) AS norm_chars
     FROM mapped m JOIN gref g ON g.gidx = m.gidx
-    """,
+    """
+
+
+@register(
+    "source_quantile_normalize",
+    _QNORM_SQL,
     doc="Cross-source quantile normalization (the microarray/genomics "
     "classic, applied to curation scores): each document's "
     "within-source rank maps onto the GLOBAL reference distribution - "

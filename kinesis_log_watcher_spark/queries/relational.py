@@ -1802,9 +1802,7 @@ def orders_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "orders_upsert_totals",
-    """
+_UPSERT_TOTALS_SQL = """
     WITH applied AS (
       SELECT o_orderkey, o_orderpriority,
              CASE WHEN o_orderkey % 10 = 0
@@ -1819,7 +1817,12 @@ def orders_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(price) AS DOUBLE) AS revenue
     FROM applied
     GROUP BY o_orderpriority
-    """,
+    """
+
+
+@register(
+    "orders_upsert_totals",
+    _UPSERT_TOTALS_SQL,
     doc="CDC-style upsert on plain parquet (no MERGE INTO in OSS Spark): "
     "a change batch (10% of orders re-priced +10%, in exact decimal) "
     "applies as changes ∪ (base ANTI-JOIN changes) — the standard "

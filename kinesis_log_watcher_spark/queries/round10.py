@@ -49,8 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, load_stream, register
-from kinesis_log_watcher_spark.queries.round9 import _h15
 from kinesis_log_watcher_spark.sources.files import run_replay
 
 # ===========================================================================
@@ -67,7 +67,7 @@ _W_B, _N_B, _CUT_B = 90000, 750000, 400000
 
 
 def _hs(expr: str) -> str:
-    """DuckDB twin of _h15 (first 15 md5 hex chars as int64)."""
+    """DuckDB twin of md5_h15 (first 15 md5 hex chars as int64)."""
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
@@ -120,7 +120,7 @@ def _draw(prefix: str, *cols) -> "F.Column":
     parts = [F.lit(prefix)]
     for c in cols:
         parts.extend([F.lit("|"), c.cast("string")])
-    return _h15(F.concat(*parts))
+    return md5_h15(F.concat(*parts))
 
 
 def _panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1789,14 +1789,14 @@ def stream_retrieval_coverage(
     _SQL_SEMCACHE,
     doc="STREAMING twin of semantic_cache_ttl_eval, STATEFUL: the "
     "online form of the cache audit — per-cluster last-served "
-    "sequence number as typed state (ONE bigint per cluster, bounded "
+    "sequence number as group state (ONE bigint per cluster, bounded "
     "by the cluster alphabet), hit/miss decided as each request "
     "arrives, per-(cluster, bucket) count partials emitted per "
     "micro-batch and SUM-rolled to the bucket domain on read. Oracle "
     "= the batch LAG-window SQL verbatim — a green row certifies the "
     "online cache decisions equal the declarative batch window "
-    "bit-for-bit. Dual-path TWS/applyInPandasWithState "
-    "(streaming/semcache.py). (No counterpart in reference main.go.)",
+    "bit-for-bit. applyInPandasWithState fold in "
+    "streaming/semcache.py. (No counterpart in reference main.go.)",
 )
 def stream_semantic_cache_ttl(
     spark: SparkSession, sf_dir: str

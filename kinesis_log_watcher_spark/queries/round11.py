@@ -1288,7 +1288,7 @@ def stream_rebuild_cadence(
 # Wave 4: serving control + pipeline capacity (post-close sub-wave)
 # ===========================================================================
 
-from kinesis_log_watcher_spark.queries.round9 import _h15  # noqa: E402
+from kinesis_log_watcher_spark.operators.dedup import md5_h15  # noqa: E402
 
 _BP_TICK = 500                  # events per scheduling tick
 _BP_BS = (1, 4, 8, 16, 32)      # batch-size ladder
@@ -1510,7 +1510,7 @@ def retry_backoff_economics(
     base = ev.select(
         "event_id",
         "event_type",
-        (F.lit(_RT_PBASE) + _h15(F.col("event_type")) % _RT_PMOD)
+        (F.lit(_RT_PBASE) + md5_h15(F.col("event_type")) % _RT_PMOD)
         .cast("long")
         .alias("p_pct"),
     )
@@ -1613,10 +1613,10 @@ def shard_skew_salting_audit(
         "strategy",
         F.when(
             F.col("strategy") == "hash",
-            _h15(F.col("tenant")) % _SK_SHARDS,
+            md5_h15(F.col("tenant")) % _SK_SHARDS,
         )
         .otherwise(
-            _h15(
+            md5_h15(
                 F.concat(
                     F.col("tenant"),
                     F.lit("|"),

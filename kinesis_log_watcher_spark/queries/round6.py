@@ -1052,9 +1052,7 @@ def ols_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (1000*|x-med| > 3500*mad) so no division happens at all.
 
 
-@register(
-    "robust_zscore_outliers",
-    """
+_ROBUST_ZSCORE_SQL = """
     WITH cents AS (
       SELECT o_orderpriority AS prio, o_orderkey,
              CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS c
@@ -1086,7 +1084,12 @@ def ols_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
     FROM dev d JOIN mad md ON md.prio = d.prio
     GROUP BY d.prio
-    """,
+    """
+
+
+@register(
+    "robust_zscore_outliers",
+    _ROBUST_ZSCORE_SQL,
     doc="Robust outlier profile: per order priority, exact lower median "
     "(rank (n+1)/2, doc-key tie-break) and median absolute deviation "
     "by two ordered windows, then the 3.5-MAD fence evaluated by "

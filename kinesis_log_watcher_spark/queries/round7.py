@@ -56,9 +56,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.functions.exact import dec
-from kinesis_log_watcher_spark.queries import round6, round6b  # noqa: F401
+from kinesis_log_watcher_spark.queries import mining, round6, round6b
 from kinesis_log_watcher_spark.queries.base import (
-    _REGISTRY,
     finalize_unpersist,
     load,
     register,
@@ -297,7 +296,7 @@ def customer_rfm_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "robust_zscore_outliers_hist",
-    _REGISTRY["robust_zscore_outliers"].oracle,
+    round6._ROBUST_ZSCORE_SQL,
     doc="The executed 100 TB swap for robust_zscore_outliers: lower "
     "median, MAD and the 3.5-MAD fence computed entirely on the "
     "mergeable (prio, cents)->count histogram. Integer cents make the "
@@ -374,7 +373,7 @@ def robust_zscore_outliers_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_quantile_normalize_hist",
-    _REGISTRY["source_quantile_normalize"].oracle,
+    mining._QNORM_SQL,
     doc="The executed 100 TB swap for source_quantile_normalize: the "
     "global reference ranking (a single-partition sort of the corpus) "
     "replaced by the stored value-histogram inverse CDF. Cumulative "

@@ -501,8 +501,7 @@ def bpe_token_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Online token-budget admission (streaming/tokenbudget.py): a "
     "document stream folds per-source running BPE token totals in "
-    "typed state (ValueState via transformWithStateInPandas, "
-    "applyInPandasWithState twin) and admits each source's doc_id "
+    "applyInPandasWithState group state and admits each source's doc_id "
     "prefix while the running total fits a 1000-token budget — the "
     "gate an online collector runs while a crawl is still arriving. "
     "The oracle states the same rule declaratively (recursive-CTE BPE "

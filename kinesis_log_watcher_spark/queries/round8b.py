@@ -36,14 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, load_stream, register
-
-
-def _h15(col):
-    """First 15 md5 hex chars as a nonnegative int64 (house hash-draw
-    convention, identical to DuckDB CAST('0x'||substr(md5(x),1,15) AS
-    BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # ===========================================================================
@@ -131,7 +125,7 @@ def _ams_state(freq: DataFrame) -> DataFrame:
                 1
                 - 2
                 * (
-                    _h15(
+                    md5_h15(
                         F.concat(
                             F.lit("ams"),
                             F.col("estimator").cast("string"),
@@ -241,7 +235,7 @@ def randomized_response_debias(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     truth = F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
     keep = (
-        _h15(F.concat(F.lit("rr|"), F.col("o_orderkey").cast("string"))) % 4
+        md5_h15(F.concat(F.lit("rr|"), F.col("o_orderkey").cast("string"))) % 4
         < 3
     )
     flips = orders.select(
@@ -421,10 +415,10 @@ def geohash_cell_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def with_coords(df: DataFrame, key: str, tag: str) -> DataFrame:
         k = F.col(key).cast("string")
         lat = (
-            _h15(F.concat(F.lit("glat|" + tag), k)) % 180000000 - 90000000
+            md5_h15(F.concat(F.lit("glat|" + tag), k)) % 180000000 - 90000000
         )
         lon = (
-            _h15(F.concat(F.lit("glon|" + tag), k)) % 360000000 - 180000000
+            md5_h15(F.concat(F.lit("glon|" + tag), k)) % 360000000 - 180000000
         )
         return df.select(
             lat.alias("lat"),
@@ -928,7 +922,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     ).select(
         (
-            _h15(
+            md5_h15(
                 F.concat(F.lit("cuped|"), F.col("o_custkey").cast("string"))
             )
             % 2
@@ -1288,7 +1282,7 @@ def graph_anf_reach_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.select(
         "c",
         "t",
-        _h15(F.concat(F.lit("anf|"), F.col("t").cast("string"))).alias("hv"),
+        md5_h15(F.concat(F.lit("anf|"), F.col("t").cast("string"))).alias("hv"),
     )
     wc = Window.partitionBy("c").orderBy("hv")
     sketch_c = (
@@ -1405,8 +1399,8 @@ def stream_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ipw_biased_sample_debias(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    k = 1 + _h15(F.concat(F.lit("ipwp|"), F.col("source"))) % 4
-    coin = _h15(F.concat(F.lit("ipwc|"), F.col("doc_id").cast("string"))) % 4
+    k = 1 + md5_h15(F.concat(F.lit("ipwp|"), F.col("source"))) % 4
+    coin = md5_h15(F.concat(F.lit("ipwc|"), F.col("doc_id").cast("string"))) % 4
     base = docs.select(
         "lang",
         "n_chars",
@@ -1596,10 +1590,10 @@ def capture_recapture_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     okey = F.col("o_orderkey").cast("string")
     in_a = F.when(
-        _h15(F.concat(F.lit("crA|"), okey)) % 5 == 0, 1
+        md5_h15(F.concat(F.lit("crA|"), okey)) % 5 == 0, 1
     ).otherwise(0)
     in_b = F.when(
-        _h15(F.concat(F.lit("crB|"), okey)) % 4 == 0, 1
+        md5_h15(F.concat(F.lit("crB|"), okey)) % 4 == 0, 1
     ).otherwise(0)
     marks = orders.select(
         F.col("o_orderpriority").alias("prio"),
@@ -2114,8 +2108,8 @@ def bandit_replay_egreedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     wide = base.groupBy("d").agg(*aggs)
     explore = F.when(
-        _h15(F.concat(F.lit("bd|"), F.col("d").cast("string"))) % 10 == 0,
-        1 + _h15(F.concat(F.lit("ba|"), F.col("d").cast("string"))) % 5,
+        md5_h15(F.concat(F.lit("bd|"), F.col("d").cast("string"))) % 10 == 0,
+        1 + md5_h15(F.concat(F.lit("ba|"), F.col("d").cast("string"))) % 5,
     ).otherwise(F.lit(0))
     days = wide.select(
         "d",
@@ -3535,10 +3529,10 @@ def iv_wald_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load(spark, sf_dir, "orders")
     okey = F.col("o_orderkey").cast("string")
-    z = _h15(F.concat(F.lit("iv|"), okey)) % 2
+    z = md5_h15(F.concat(F.lit("iv|"), okey)) % 2
     x = F.when(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        | (_h15(F.concat(F.lit("ivc|"), okey)) % 3 == 0),
+        | (md5_h15(F.concat(F.lit("ivc|"), okey)) % 3 == 0),
         1,
     ).otherwise(0)
     y = (dec(F.col("o_totalprice"), 12, 2) * 100).cast("long")
@@ -3640,7 +3634,7 @@ def ab_test_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(yr == 1997, cents).otherwise(0)).cast("long").alias("y")
     ).select(
         (
-            _h15(
+            md5_h15(
                 F.concat(F.lit("cuped|"), F.col("o_custkey").cast("string"))
             )
             % 2
@@ -5333,7 +5327,7 @@ def experiment_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(yr == 1997, cents).otherwise(0)).cast("long").alias("y"),
     ).select(
         (
-            _h15(
+            md5_h15(
                 F.concat(F.lit("cuped|"), F.col("o_custkey").cast("string"))
             )
             % 2
@@ -5653,7 +5647,7 @@ def stratified_ate_coarsened(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(yr == 1997, cents).otherwise(0)).cast("long").alias("y"),
     ).select(
         (
-            _h15(
+            md5_h15(
                 F.concat(F.lit("cuped|"), F.col("o_custkey").cast("string"))
             )
             % 2

@@ -31,15 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.sources.files import run_replay
-
-
-def _h15(col):
-    """First 15 md5 hex chars as a nonnegative int64 (house hash-draw
-    convention, identical to DuckDB CAST('0x'||substr(md5(x),1,15) AS
-    BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # ===========================================================================
@@ -68,7 +62,7 @@ def _p_micro_col(skill: int):
 
 def _correct_col(model: str, skill: int):
     u = (
-        _h15(F.concat(F.lit(f"evc|{model}|"), F.col("doc_id").cast("string")))
+        md5_h15(F.concat(F.lit(f"evc|{model}|"), F.col("doc_id").cast("string")))
         % 1000000
     )
     return F.when(u < _p_micro_col(skill), 1).otherwise(0).cast("long")
@@ -498,7 +492,7 @@ def paired_bootstrap_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r",
         "dd",
         (
-            _h15(
+            md5_h15(
                 F.concat(
                     F.lit("boot|"),
                     F.col("r").cast("string"),
@@ -761,9 +755,9 @@ def _sql_rating(a: int, err: int) -> str:
 
 
 def _rating_col(a: int, err: int):
-    truth = _h15(F.concat(F.lit("truth|"), F.col("doc_id").cast("string"))) % 2
+    truth = md5_h15(F.concat(F.lit("truth|"), F.col("doc_id").cast("string"))) % 2
     flip = F.when(
-        _h15(F.concat(F.lit(f"ann|{a}|"), F.col("doc_id").cast("string")))
+        md5_h15(F.concat(F.lit(f"ann|{a}|"), F.col("doc_id").cast("string")))
         % 1000000
         < err,
         1,
@@ -1169,15 +1163,15 @@ def judge_position_bias_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    t = _h15(F.concat(F.lit("pref|"), F.col("doc_id").cast("string"))) % 2
-    o = _h15(F.concat(F.lit("ord|"), F.col("doc_id").cast("string"))) % 2
+    t = md5_h15(F.concat(F.lit("pref|"), F.col("doc_id").cast("string"))) % 2
+    o = md5_h15(F.concat(F.lit("ord|"), F.col("doc_id").cast("string"))) % 2
     b1 = (
-        _h15(F.concat(F.lit("jb1|"), F.col("doc_id").cast("string")))
+        md5_h15(F.concat(F.lit("jb1|"), F.col("doc_id").cast("string")))
         % 1000000
         < _JUDGE_BIAS_MICRO
     )
     b2 = (
-        _h15(F.concat(F.lit("jb2|"), F.col("doc_id").cast("string")))
+        md5_h15(F.concat(F.lit("jb2|"), F.col("doc_id").cast("string")))
         % 1000000
         < _JUDGE_BIAS_MICRO
     )
@@ -1378,7 +1372,7 @@ def _sql_score(model: str, skill: int) -> str:
 
 
 def _score_col(model: str, skill: int):
-    u = _h15(F.concat(F.lit(f"evs|{model}|"), F.col("doc_id").cast("string")))
+    u = md5_h15(F.concat(F.lit(f"evs|{model}|"), F.col("doc_id").cast("string")))
     return (_p_micro_col(skill) + u % 200001 - 100000).cast("long")
 
 
@@ -1688,10 +1682,10 @@ def krippendorff_alpha_binary(
     docs = load(spark, sf_dir, "documents")
     m_expr = None
     n1_expr = None
-    truth = _h15(F.concat(F.lit("truth|"), F.col("doc_id").cast("string"))) % 2
+    truth = md5_h15(F.concat(F.lit("truth|"), F.col("doc_id").cast("string"))) % 2
     for a, e in enumerate(_ANNOT_ERR):
         resp = F.when(
-            _h15(
+            md5_h15(
                 F.concat(F.lit(f"kresp|{a + 1}|"), F.col("doc_id").cast("string"))
             )
             % 1000000
@@ -1699,7 +1693,7 @@ def krippendorff_alpha_binary(
             1,
         ).otherwise(0)
         flip = F.when(
-            _h15(
+            md5_h15(
                 F.concat(F.lit(f"kann|{a + 1}|"), F.col("doc_id").cast("string"))
             )
             % 1000000
@@ -1903,7 +1897,7 @@ def balanced_grader_assignment(
         "n_chars",
         "lang",
         F.least(F.lit(4), F.expr("n_chars div 120")).alias("lb"),
-        _h15(
+        md5_h15(
             F.concat(F.lit("grader|"), F.col("doc_id").cast("string"))
         ).alias("draw"),
     )
@@ -2073,7 +2067,7 @@ def corpus_bleu2_decode_audit(
         (F.col("pos0") + 1).alias("pos"),
         "tok",
         (
-            _h15(
+            md5_h15(
                 F.concat(
                     F.lit("dec|"),
                     F.col("doc_id").cast("string"),
@@ -2503,10 +2497,10 @@ _ELO_MODEL_NAMES_SQL = " ".join(
 def elo_sequential_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc = _pc(spark, sf_dir)
     k = (
-        _h15(F.concat(F.lit("pair|"), F.col("doc_id").cast("string"))) % 6
+        md5_h15(F.concat(F.lit("pair|"), F.col("doc_id").cast("string"))) % 6
     ).alias("k")
     d = (
-        _h15(F.concat(F.lit("day|"), F.col("doc_id").cast("string")))
+        md5_h15(F.concat(F.lit("day|"), F.col("doc_id").cast("string")))
         % _ELO_DAYS
     ).alias("d")
     games = (
@@ -2765,14 +2759,16 @@ def judge_verbosity_bias_audit(
 ) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     la = (
-        50 + _h15(F.concat(F.lit("la|"), F.col("doc_id").cast("string"))) % 200
+        50 + md5_h15(F.concat(F.lit("la|"), F.col("doc_id").cast("string"))) % 200
     ).alias("len_a")
     lb = (
-        50 + _h15(F.concat(F.lit("lb|"), F.col("doc_id").cast("string"))) % 200
+        50 + md5_h15(F.concat(F.lit("lb|"), F.col("doc_id").cast("string"))) % 200
     ).alias("len_b")
-    t = (_h15(F.concat(F.lit("pref|"), F.col("doc_id").cast("string"))) % 2).alias("t")
+    t = (
+        md5_h15(F.concat(F.lit("pref|"), F.col("doc_id").cast("string"))) % 2
+    ).alias("t")
     u = (
-        _h15(F.concat(F.lit("jv|"), F.col("doc_id").cast("string"))) % 1000000
+        md5_h15(F.concat(F.lit("jv|"), F.col("doc_id").cast("string"))) % 1000000
     ).alias("u")
     items = docs.select(la, lb, t, u)
     judged = items.select(

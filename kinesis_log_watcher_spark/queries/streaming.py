@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_log_watcher_spark.queries import llm as _llm
+from kinesis_log_watcher_spark.queries import relational as _relational
 from kinesis_log_watcher_spark.queries.base import load, load_stream, register
 from kinesis_log_watcher_spark.streaming.stateful import run_stateful_sessions
 from kinesis_log_watcher_spark.streaming.windows import run_session_windows, run_windowed_counts
@@ -199,11 +200,10 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    doc="Custom stateful streaming operator on the transformWithState "
-    "StatefulProcessor API (applyInPandasWithState twin when protobuf "
-    "is absent — identical semantics, streaming/tws.py): per-user "
-    "running (count, int64-micro-quantized value sum) held in a "
-    "ValueState; the bounded replay's update stream reduces to the "
+    doc="Custom stateful streaming operator on applyInPandasWithState "
+    "(streaming/tws.py): per-user running (count, "
+    "int64-micro-quantized value sum) held in the group state; the "
+    "bounded replay's update stream reduces to the "
     "batch aggregate the oracle computes directly. Quantization makes "
     "the sum associative, so the result is partitioning-independent.",
 )
@@ -416,22 +416,7 @@ def _cdc_change_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 @register(
     "stream_cdc_upsert",
-    """
-    WITH applied AS (
-      SELECT o_orderkey, o_orderpriority,
-             CASE WHEN o_orderkey % 10 = 0
-                  THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 1.1
-                            AS DECIMAL(14,3))
-                  ELSE CAST(CAST(o_totalprice AS DECIMAL(12,2))
-                            AS DECIMAL(14,3))
-             END AS price
-      FROM orders)
-    SELECT o_orderpriority,
-           COUNT(*) AS n,
-           CAST(SUM(price) AS DOUBLE) AS revenue
-    FROM applied
-    GROUP BY o_orderpriority
-    """,
+    _relational._UPSERT_TOTALS_SQL,
     doc="STREAMING CDC upsert via an idempotent foreachBatch delta sink "
     "+ merge-on-read resolution (streaming/cdc.py): a change stream "
     "(base snapshot, then a re-price delta for 10% of keys) lands one "
@@ -468,14 +453,11 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
     FROM events GROUP BY 1, 2
     """,
-    doc="Per-user event-type counters through the Spark-4 "
-    "transformWithState MAPSTATE API (streaming/mapstate.py — "
-    "completing the typed-state triad: ValueState running totals, "
-    "ListState rate-limit log, MapState categorical profile): the "
-    "per-key map event_type -> count updates each micro-batch; "
-    "addition is order-free so any replay split converges to the "
-    "batch GROUP BY the oracle states. applyInPandasWithState twin "
-    "executes where the TWS protobuf worker is absent.",
+    doc="Per-user event-type counters on applyInPandasWithState "
+    "(streaming/mapstate.py): the per-key map event_type -> count, "
+    "held in the group state as two parallel arrays, updates each "
+    "micro-batch; addition is order-free so any replay split "
+    "converges to the batch GROUP BY the oracle states.",
 )
 def stream_type_counts_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.streaming.mapstate import run_type_counts
@@ -887,15 +869,14 @@ def stream_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank <= 3
     """,
     doc="Bounded-state streaming top-k leaderboard "
-    "(streaming/topk.py): per event_type, transformWithState ListState "
-    "holds ONLY the current top-3 (value_milli, event_id, user_id) "
-    "rows — k rows of state per key, never the events — and each "
+    "(streaming/topk.py): per event_type, the applyInPandasWithState "
+    "group state holds ONLY the current top-3 (value_milli, event_id, "
+    "user_id) rows — k rows of state per key, never the events — and each "
     "micro-batch folds its candidates into the board with exact "
     "integer ordering. Every emission is a running top-k, so the "
     "distinct union of emissions contains the global board and one "
     "re-rank resolves the update sink order-free in the replay split. "
-    "Oracle: the batch per-type top-3 by (value DESC, event_id). "
-    "applyInPandasWithState twin runs where TWS is unavailable.",
+    "Oracle: the batch per-type top-3 by (value DESC, event_id).",
 )
 def stream_topk_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.streaming.topk import run_stream_topk

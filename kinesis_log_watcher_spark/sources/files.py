@@ -188,7 +188,7 @@ def replay_partitions(spark, n: int | None = None):
     join state stores, and the sweep read 5.6s/6.3s/10.2s at 2/4/8 on
     the full-outer replay). Callers
     whose per-group work crosses the Python boundary
-    (applyInPandasWithState / transformWithState processors) pass a
+    (applyInPandasWithState operators) pass a
     larger explicit ``n``: their micro-batch cost is ~|groups| Python
     invocations, and the state-store partition count is also the
     Python-worker parallelism — measured at sf0.1 on the timer

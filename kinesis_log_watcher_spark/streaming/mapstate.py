@@ -1,7 +1,6 @@
-"""Per-key categorical counters via transformWithState MapState —
-completing the Spark-4 typed-state API triad this engine exercises:
-ValueState (streaming/tws.py running totals), ListState
-(streaming/ratelimit.py arrival log), MapState (here).
+"""Per-key categorical counters on applyInPandasWithState: the group
+state holds a per-user ``event_type -> running count`` map as two
+parallel arrays (types, counts).
 
 The operator maintains, per stream key (user), a map
 ``event_type -> running count`` and emits the UPDATED entries each
@@ -14,12 +13,9 @@ the batch answer the SQL oracle states directly.
 State size: |event types per user| entries per key — the map is the
 per-key histogram itself, never the events. At 100 TB this is the
 canonical per-entity categorical profile (feature-store counters,
-per-user action mixes) with bounded state; a TTL on the map
-(``ttlDurationMs``, supported by the same API) ages out idle entities.
-
-The applyInPandasWithState twin (two parallel arrays in the group
-state) runs wherever the TWS protobuf worker is unavailable — same
-fold, same emissions, pinned against the processor in tests.
+per-user action mixes) with bounded state; at 100 TB the same plan
+adds GroupStateTimeout eviction for entities gone idle, as
+streaming/neardup.py does.
 """
 
 from __future__ import annotations
@@ -39,12 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.session import ensure_session_confs
-from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 COUNT_SCHEMA = "user_id bigint, event_type string, n bigint"
 _STATE_SCHEMA = "types array<string>, counts array<bigint>"
@@ -55,40 +46,6 @@ def _batch_increments(batch: pd.DataFrame) -> "list[tuple[str, int]]":
     deterministic emission order within the batch)."""
     upd = batch.groupby("event_type").size()
     return [(str(et), int(n)) for et, n in sorted(upd.items())]
-
-
-class TypeCountsProcessor(StatefulProcessor):
-    """MapState-backed per-user event-type counters."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState("counts", "et string", "n bigint")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows), ignore_index=True)
-        out_et: list[str] = []
-        out_n: list[int] = []
-        for et, add in _batch_increments(batch):
-            cur = (
-                self._counts.getValue((et,))
-                if self._counts.containsKey((et,))
-                else None
-            )
-            n = (int(cur[0]) if cur is not None else 0) + add
-            self._counts.updateValue((et,), (n,))
-            out_et.append(et)
-            out_n.append(n)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_et),
-                "event_type": out_et,
-                "n": out_n,
-            }
-        )
-
-    def close(self) -> None:  # pragma: no cover - no resources held
-        pass
 
 
 def _count_updates():
@@ -122,17 +79,8 @@ def _count_updates():
     return fn
 
 
-def count_stream(events: DataFrame, use_tws: bool | None = None) -> DataFrame:
+def count_stream(events: DataFrame) -> DataFrame:
     """Stream in → updated (user_id, event_type, n) rows per batch."""
-    if use_tws is None:
-        use_tws = tws_runtime_available()
-    if use_tws:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TypeCountsProcessor(),
-            outputStructType=COUNT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return events.groupBy("user_id").applyInPandasWithState(
         _count_updates(),
         outputStructType=COUNT_SCHEMA,

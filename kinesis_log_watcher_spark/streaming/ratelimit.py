@@ -13,7 +13,7 @@ Determinism / oracle: an event is admitted iff the count of STRICTLY
 PRIOR arrivals — total order (ts, event_id) — with ts in
 (event.ts - window, event.ts] is < K. That definition is order-free, so
 a batch SQL oracle computes it directly (a correlated time-bounded
-count), and the streaming processor reproduces it exactly by sorting
+count), and the streaming fold reproduces it exactly by sorting
 each micro-batch by (ts, event_id) — tie pairs decide by event_id, not
 arrival accident.
 
@@ -51,12 +51,7 @@ from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
 from kinesis_log_watcher_spark.session import ensure_session_confs
-from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 RATE_LIMIT_K = 5
 RATE_WINDOW_S = 3600
@@ -74,7 +69,7 @@ def _decide(
     k: int,
     window_us: int,
 ) -> tuple[list[int], list[int], list[tuple[int, int]]]:
-    """Shared admission fold: ``log`` holds (t_us, event_id) arrivals.
+    """Admission fold: ``log`` holds (t_us, event_id) arrivals.
     An event counts only STRICTLY PRIOR arrivals in the (ts, event_id)
     total order — so a late-delivered tie or out-of-order entry is
     never miscounted as prior — and eviction drops only entries older
@@ -126,66 +121,12 @@ def _admit_updates(k: int, window_s: int):
     return fn
 
 
-class RateLimitProcessor(StatefulProcessor):
-    """transformWithState twin of the limiter: the arrival log lives in
-    a ListState (one int64 row per in-window arrival) — the Spark-4
-    typed-state API's natural fit for a log-shaped value, alongside
-    tws.py's ValueState running totals. Same total order, same
-    admission rule, same bounded state as the applyInPandasWithState
-    path (which remains the no-protobuf fallback)."""
-
-    def __init__(self, k: int = RATE_LIMIT_K, window_s: int = RATE_WINDOW_S):
-        self._k = k
-        self._window_us = window_s * _US
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._log = handle.getListState("ts_log", "t bigint, eid bigint")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        log = [(int(r[0]), int(r[1])) for r in self._log.get()]
-        batch = pd.concat(list(rows), ignore_index=True)
-        batch = batch.sort_values(["ts", "event_id"])
-        ts_us = batch["ts"].astype("datetime64[us]").astype("int64")
-        out_eid, out_adm, log = _decide(
-            log, ts_us, batch["event_id"], self._k, self._window_us
-        )
-        self._log.clear()
-        if log:
-            self._log.appendList(log)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_eid),
-                "event_id": out_eid,
-                "admitted": out_adm,
-            }
-        )
-
-    def close(self) -> None:  # pragma: no cover - no resources held
-        pass
-
-
 def admit_stream(
     events: DataFrame,
     k: int = RATE_LIMIT_K,
     window_s: int = RATE_WINDOW_S,
-    use_tws: bool | None = None,
 ) -> DataFrame:
-    """Stream in → one (user_id, event_id, admitted) row per event.
-
-    ``use_tws=None`` auto-detects (same gate as tws.py): the
-    transformWithState ListState processor when its protobuf-backed
-    worker can run, else the applyInPandasWithState twin."""
-    if use_tws is None:
-        use_tws = tws_runtime_available()
-    if use_tws:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RateLimitProcessor(k, window_s),
-            outputStructType=ADMIT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+    """Stream in → one (user_id, event_id, admitted) row per event."""
     return events.groupBy("user_id").applyInPandasWithState(
         _admit_updates(k, window_s),
         outputStructType=ADMIT_SCHEMA,

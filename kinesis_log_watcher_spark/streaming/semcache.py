@@ -22,10 +22,6 @@ Emissions are per-(cluster, bucket) COUNT PARTIALS for the micro-batch
 (not running totals): the memory sink accumulates partials and the
 read-side rollup SUMs them per bucket — at scale the same emissions
 feed a downstream windowed aggregation instead of a memory table.
-
-Dual-path like streaming/tokenbudget.py: transformWithStateInPandas
-(ValueState) where the TWS runtime is available, applyInPandasWithState
-otherwise — same fold, same emissions.
 """
 
 from __future__ import annotations
@@ -38,13 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.session import ensure_session_confs
-from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 
 PARTIAL_SCHEMA = "cluster bigint, bucket bigint, n_requests bigint, n_hits bigint"
 _STATE_SCHEMA = "last_event bigint"
@@ -76,29 +68,6 @@ def _fold_batch(
     return last_event, part
 
 
-class SemCacheProcessor(StatefulProcessor):
-    """ValueState-backed per-cluster TTL fold (TWS path)."""
-
-    def __init__(self, ttl: int):
-        self._ttl = ttl
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("last", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        last = int(self._state.get()[0]) if self._state.exists() else None
-        batch = pd.concat(list(rows), ignore_index=True)
-        last, part = _fold_batch(last, batch, self._ttl)
-        self._state.update((int(last),))
-        part.insert(0, "cluster", int(key[0]))
-        yield part
-
-    def close(self) -> None:  # pragma: no cover - no resources held
-        pass
-
-
 def _cache_updates(ttl: int):
     def fn(
         key: tuple[Any, ...],
@@ -116,21 +85,10 @@ def _cache_updates(ttl: int):
     return fn
 
 
-def cache_partials_stream(
-    requests: DataFrame, ttl: int, use_tws: bool | None = None
-) -> DataFrame:
+def cache_partials_stream(requests: DataFrame, ttl: int) -> DataFrame:
     """(event_id, cluster) stream in → per-(cluster, bucket) hit/req
     partials per micro-batch."""
-    if use_tws is None:
-        use_tws = tws_runtime_available()
     keyed = requests.select("cluster", "event_id").groupBy("cluster")
-    if use_tws:
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=SemCacheProcessor(ttl),
-            outputStructType=PARTIAL_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return keyed.applyInPandasWithState(
         _cache_updates(ttl),
         outputStructType=PARTIAL_SCHEMA,
@@ -146,7 +104,6 @@ def run_semcache_eval(
     clusters: int,
     ttl: int,
     max_files_per_trigger: int | None = None,
-    use_tws: bool | None = None,
 ) -> DataFrame:
     """Replay a bounded events table through the online cache gate and
     roll the emitted partials up to the per-bucket hit rates (partials
@@ -163,19 +120,11 @@ def run_semcache_eval(
     requests = stream.select(
         "event_id",
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("scq|"), F.col("event_id").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_h15(F.concat(F.lit("scq|"), F.col("event_id").cast("string")))
             % clusters
         ).alias("cluster"),
     )
-    partials = cache_partials_stream(requests, ttl, use_tws=use_tws)
+    partials = cache_partials_stream(requests, ttl)
     return (
         run_replay(partials, "update", "semcache", python_state_partitions())
         .groupBy("bucket")

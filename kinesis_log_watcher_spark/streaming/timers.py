@@ -3,7 +3,7 @@ EVENT-TIME TIMEOUT — the watermark-driven timer pattern.
 
 The third custom stateful operator in the suite (alongside
 streaming/stateful.py's NoTimeout update-stream sessionizer and
-streaming/tws.py's transformWithState processors): sessions are emitted
+streaming/tws.py's running totals): sessions are emitted
 as FINALIZED exactly once, when their completion is *proven* —
 
 - inline, when a later event of the same user arrives more than ``gap``

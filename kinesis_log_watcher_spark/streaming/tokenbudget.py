@@ -1,5 +1,6 @@
 """Streaming token-budget admission: per-source running BPE token
-totals with a hard budget cutoff, maintained in typed state.
+totals with a hard budget cutoff, maintained in applyInPandasWithState
+group state.
 
 The ingest-time form of sequence_packing_stats/bpe_tokenize_budget
 (queries/round8.py): documents stream in, each source admits documents
@@ -22,10 +23,6 @@ word → n_tokens cache, so the per-row cost is a dict hit once the
 vocabulary is warm — the same vocabulary-sized-work posture as
 operators/bpe.py, without a circular stream-static join on a vocab
 derived from the stream itself.
-
-Dual-path like streaming/mapstate.py: transformWithStateInPandas
-(ValueState) where the TWS runtime is available, applyInPandasWithState
-otherwise — same fold, same emissions.
 """
 
 from __future__ import annotations
@@ -38,14 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from kinesis_log_watcher_spark.operators.bpe import bpe_encode, merge_ranks
 from kinesis_log_watcher_spark.session import ensure_session_confs
-from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 
 TOKEN_BUDGET = 1000  # tokens admitted per source before the gate closes
 
@@ -97,39 +89,6 @@ def _fold_batch(
     return (cum, cum_adm, n_docs, n_adm), None
 
 
-class TokenBudgetProcessor(StatefulProcessor):
-    """ValueState-backed per-source budget fold (TWS path)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("budget", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        cur = (
-            (self._state.get() or (0, 0, 0, 0))
-            if self._state.exists()
-            else (0, 0, 0, 0)
-        )
-        state = tuple(int(x) for x in cur)
-        batch = pd.concat(list(rows), ignore_index=True)
-        state, _ = _fold_batch(state, batch)
-        self._state.update(state)
-        cum, cum_adm, n_docs, n_adm = state
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_docs": [n_docs],
-                "n_admitted": [n_adm],
-                "tokens_total": [cum],
-                "tokens_admitted": [cum_adm],
-            }
-        )
-
-    def close(self) -> None:  # pragma: no cover - no resources held
-        pass
-
-
 def _budget_updates():
     def fn(
         key: tuple[Any, ...],
@@ -155,18 +114,9 @@ def _budget_updates():
     return fn
 
 
-def admission_stream(docs: DataFrame, use_tws: bool | None = None) -> DataFrame:
+def admission_stream(docs: DataFrame) -> DataFrame:
     """Stream in → updated per-source admission counters per batch."""
-    if use_tws is None:
-        use_tws = tws_runtime_available()
     keyed = docs.select("source", "doc_id", "text").groupBy("source")
-    if use_tws:
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=TokenBudgetProcessor(),
-            outputStructType=ADMIT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return keyed.applyInPandasWithState(
         _budget_updates(),
         outputStructType=ADMIT_SCHEMA,
@@ -180,7 +130,6 @@ def run_token_budget_admission(
     spark: SparkSession,
     docs_path: str,
     max_files_per_trigger: int | None = None,
-    use_tws: bool | None = None,
 ) -> DataFrame:
     """Replay a bounded documents table through the admission gate and
     resolve the update sink to the final per-source counters (all four
@@ -192,7 +141,7 @@ def run_token_budget_admission(
 
     ensure_session_confs(spark)
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
-    updates = admission_stream(stream, use_tws=use_tws)
+    updates = admission_stream(stream)
     return (
         run_replay(updates, "update", "token_budget")
         .groupBy("source")

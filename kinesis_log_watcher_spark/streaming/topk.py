@@ -1,5 +1,4 @@
-"""Bounded-state streaming top-k leaderboard via transformWithState
-ListState.
+"""Bounded-state streaming top-k leaderboard on applyInPandasWithState.
 
 The operator keeps, per stream key (event_type), ONLY the current top-k
 records ``(value_milli, event_id, user_id)`` — k rows of state per key,
@@ -23,9 +22,8 @@ milli-quantized int64 (the house events.value convention, e.g.
 queries/mining.py ab_welch_ttest) so comparisons are exact integer
 comparisons, bit-identical to the DuckDB oracle's ranking.
 
-The applyInPandasWithState twin (three parallel arrays in group state)
-runs wherever the TWS protobuf worker is unavailable — same fold, same
-emissions.
+The board lives in the group state as three parallel arrays
+(values, event ids, user ids).
 
 Reference scope note: the reference (main.go) has no analytics surface;
 this belongs to the SURVEY.md §2.2 streaming-stateful family.
@@ -47,13 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from kinesis_log_watcher_spark.session import ensure_session_confs
-from kinesis_log_watcher_spark.streaming.tws import tws_runtime_available
 
 TOPK_K = 3
 TOPK_SCHEMA = (
@@ -68,8 +61,7 @@ def _fold_board(
     board: "list[tuple[int, int, int]]", batch: pd.DataFrame, k: int
 ) -> "list[tuple[int, int, int]]":
     """Merge a batch's rows into the (value_milli, event_id, user_id)
-    board: best k by (value DESC, event_id ASC). Pure and deterministic
-    — the single ordering both the processor and its twin share."""
+    board: best k by (value DESC, event_id ASC). Pure and deterministic."""
     cand = board + list(
         zip(
             (int(v) for v in batch["value_milli"]),
@@ -90,30 +82,6 @@ def _board_frame(key_val: str, board: "list[tuple[int, int, int]]"):
             "value_milli": [v for v, _, _ in board],
         }
     )
-
-
-class TopKProcessor(StatefulProcessor):
-    """ListState-backed per-key top-k leaderboard."""
-
-    def __init__(self, k: int = TOPK_K) -> None:
-        self._k = k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._top = handle.getListState(
-            "top", "value_milli bigint, event_id bigint, user_id bigint"
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        board = [(int(v), int(e), int(u)) for v, e, u in self._top.get()]
-        batch = pd.concat(list(rows), ignore_index=True)
-        board = _fold_board(board, batch, self._k)
-        self._top.put([(v, e, u) for v, e, u in board])
-        yield _board_frame(key[0], board)
-
-    def close(self) -> None:  # pragma: no cover - no resources held
-        pass
 
 
 def _topk_updates(k: int):
@@ -144,20 +112,9 @@ def _topk_updates(k: int):
     return fn
 
 
-def topk_stream(
-    events: DataFrame, k: int = TOPK_K, use_tws: bool | None = None
-) -> DataFrame:
+def topk_stream(events: DataFrame, k: int = TOPK_K) -> DataFrame:
     """Stream of (event_type, event_id, user_id, value_milli) in →
     updated per-key leaderboards out, one board emission per batch."""
-    if use_tws is None:
-        use_tws = tws_runtime_available()
-    if use_tws:
-        return events.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=TopKProcessor(k),
-            outputStructType=TOPK_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return events.groupBy("event_type").applyInPandasWithState(
         _topk_updates(k),
         outputStructType=TOPK_SCHEMA,

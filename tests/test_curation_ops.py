@@ -498,82 +498,28 @@ def test_targeted_deletion_removes_all_tombstoned(spark, tmp_path, reg):
     assert all(r["n_tombstoned_remaining"] == 0 for r in rows)
 
 
-def test_rate_limit_tws_twin_matches_fallback_logic():
-    """Drive the transformWithState processor through a fake handle so
-    its ListState logic executes even where the TWS protobuf worker is
-    unavailable, and pin it against the applyInPandasWithState twin."""
+def test_rate_limit_fold_admits_across_batches():
+    """The limiter's arrival log carries across micro-batches."""
     import pandas as pd
 
-    from kinesis_log_watcher_spark.streaming.ratelimit import (
-        RateLimitProcessor,
-        _admit_updates,
+    from conftest import fold_batches
+    from kinesis_log_watcher_spark.streaming.ratelimit import _admit_updates
+
+    t0 = pd.Timestamp("2024-03-01 12:00:00")
+    b1 = pd.DataFrame(
+        {"ts": [t0 + pd.Timedelta(seconds=s) for s in (0, 60, 120)],
+         "event_id": [1, 2, 3]}
     )
+    b2 = pd.DataFrame(
+        {"ts": [t0 + pd.Timedelta(seconds=s) for s in (180, 240, 7200)],
+         "event_id": [4, 5, 6]}
+    )
+    out = []
+    for pdf in fold_batches(_admit_updates(2, 3600), (7,), [b1, b2]):
+        out.extend(zip(pdf["event_id"], pdf["admitted"]))
 
-    class _FakeListState:
-        def __init__(self):
-            self._rows = []
-
-        def get(self):
-            return iter(self._rows)
-
-        def clear(self):
-            self._rows = []
-
-        def appendList(self, rows):
-            self._rows.extend(rows)
-
-    class _FakeHandle:
-        def __init__(self):
-            self.state = _FakeListState()
-
-        def getListState(self, name, schema):
-            return self.state
-
-    class _FakeGroupState:
-        def __init__(self):
-            self._val = None
-
-        @property
-        def exists(self):
-            return self._val is not None
-
-        @property
-        def get(self):
-            return self._val
-
-        def update(self, v):
-            self._val = v
-
-    def batches():
-        t0 = pd.Timestamp("2024-03-01 12:00:00")
-        b1 = pd.DataFrame(
-            {"ts": [t0 + pd.Timedelta(seconds=s) for s in (0, 60, 120)],
-             "event_id": [1, 2, 3]}
-        )
-        b2 = pd.DataFrame(
-            {"ts": [t0 + pd.Timedelta(seconds=s) for s in (180, 240, 7200)],
-             "event_id": [4, 5, 6]}
-        )
-        return b1, b2
-
-    k, win = 2, 3600
-    proc = RateLimitProcessor(k, win)
-    proc.init(_FakeHandle())
-    tws_out = []
-    for b in batches():
-        (pdf,) = list(proc.handleInputRows((7,), iter([b]), None))
-        tws_out.extend(zip(pdf["event_id"], pdf["admitted"]))
-
-    fb = _admit_updates(k, win)
-    st = _FakeGroupState()
-    fb_out = []
-    for b in batches():
-        (pdf,) = list(fb((7,), iter([b]), st))
-        fb_out.extend(zip(pdf["event_id"], pdf["admitted"]))
-
-    assert tws_out == fb_out
     # K=2: events 1,2 admitted; 3,4,5 throttled; 6 is past the window
-    assert [a for _, a in tws_out] == [1, 1, 0, 0, 0, 1]
+    assert [a for _, a in out] == [1, 1, 0, 0, 0, 1]
 
 
 def test_pagerank_star_graph_skew(spark, tmp_path, reg):

@@ -74,11 +74,12 @@ def test_front_order_names_all_registered():
     assert len(set(_FRONT)) == len(_FRONT), "duplicate names in _FRONT"
 
 
-# Every stream twin whose oracle is its batch twin's SQL. Each pair runs
-# one plan (the batch twin's state builder) and registers one oracle
-# constant; this table pins that the two registry entries still carry
-# the same SQL.
-_STREAM_TWIN_OF = {
+# Every twin whose oracle is its batch twin's SQL: the stream twins,
+# which run the batch twin's state builder, and the histogram swaps,
+# which compute the same answer by another plan. Each pair registers one
+# oracle constant; this table pins that the two registry entries still
+# carry the same SQL.
+_BATCH_TWIN_OF = {
     "stream_winrate_matrix": "winrate_matrix_models",
     "stream_ece_calibration": "ece_calibration_bins",
     "stream_mcnemar_paired": "mcnemar_paired_models",
@@ -96,10 +97,28 @@ _STREAM_TWIN_OF = {
     "stream_kinesis_sim_scan": "kinesis_sim_batch_scan",
     "stream_kinesis_sim_split_resume": "kinesis_sim_shard_split_scan",
     "stream_kinesis_sim_merge_resume": "kinesis_sim_shard_merge_scan",
+    "robust_zscore_outliers_hist": "robust_zscore_outliers",
+    "source_quantile_normalize_hist": "source_quantile_normalize",
 }
 
 
 def test_stream_twins_share_batch_oracle():
     oracles = entrymod.oracle_sql()
-    for twin, batch in _STREAM_TWIN_OF.items():
+    for twin, batch in _BATCH_TWIN_OF.items():
         assert oracles[twin] == oracles[batch], (twin, batch)
+
+
+def test_query_modules_do_not_read_the_registry():
+    # A query module that reads _REGISTRY at import time depends on
+    # which other query modules were imported before it; shared oracle
+    # SQL goes through module constants instead.
+    from pathlib import Path
+
+    import kinesis_log_watcher_spark.queries as queries
+
+    readers = [
+        p.name
+        for p in sorted(Path(queries.__file__).parent.glob("*.py"))
+        if p.name != "base.py" and "_REGISTRY" in p.read_text()
+    ]
+    assert not readers, readers

@@ -1,77 +1,23 @@
-"""MapState categorical counters: TWS processor ≡ fallback twin, and
-cross-batch accumulation equals the batch GROUP BY."""
+"""Per-user event-type counters: the fold accumulates across batches,
+and cross-batch accumulation equals the batch GROUP BY."""
 
 from __future__ import annotations
 
 import pandas as pd
 
 
-def test_mapstate_processor_matches_fallback_twin():
-    """Drive the MapState processor through a fake handle so its logic
-    executes even without the TWS protobuf worker, and pin it against
-    the applyInPandasWithState twin batch-for-batch."""
-    from kinesis_log_watcher_spark.streaming.mapstate import (
-        TypeCountsProcessor,
-        _count_updates,
-    )
+def test_mapstate_fold_accumulates_across_batches():
+    from conftest import fold_batches
+    from kinesis_log_watcher_spark.streaming.mapstate import _count_updates
 
-    class _FakeMapState:
-        def __init__(self):
-            self._m = {}
+    b1 = pd.DataFrame({"event_type": ["click", "view", "click"]})
+    b2 = pd.DataFrame({"event_type": ["view", "click", "purchase"]})
+    out = []
+    for pdf in fold_batches(_count_updates(), (3,), [b1, b2]):
+        out.extend(zip(pdf["event_type"], pdf["n"]))
 
-        def containsKey(self, key):
-            return key in self._m
-
-        def getValue(self, key):
-            return self._m.get(key)
-
-        def updateValue(self, key, value):
-            self._m[key] = value
-
-    class _FakeHandle:
-        def __init__(self):
-            self.state = _FakeMapState()
-
-        def getMapState(self, name, kschema, vschema, ttlDurationMs=None):
-            return self.state
-
-    class _FakeGroupState:
-        def __init__(self):
-            self._val = None
-
-        @property
-        def exists(self):
-            return self._val is not None
-
-        @property
-        def get(self):
-            return self._val
-
-        def update(self, v):
-            self._val = v
-
-    def batches():
-        b1 = pd.DataFrame({"event_type": ["click", "view", "click"]})
-        b2 = pd.DataFrame({"event_type": ["view", "click", "purchase"]})
-        return b1, b2
-
-    proc = TypeCountsProcessor()
-    proc.init(_FakeHandle())
-    tws_out = []
-    for b in batches():
-        (pdf,) = list(proc.handleInputRows((3,), iter([b]), None))
-        tws_out.extend(zip(pdf["event_type"], pdf["n"]))
-
-    fb = _count_updates()
-    st = _FakeGroupState()
-    fb_out = []
-    for b in batches():
-        (pdf,) = list(fb((3,), iter([b]), st))
-        fb_out.extend(zip(pdf["event_type"], pdf["n"]))
-
-    assert tws_out == fb_out
     # batch 1 emits click=2, view=1; batch 2 accumulates on top
-    assert tws_out == [
+    assert out == [
         ("click", 2), ("view", 1),
         ("click", 3), ("purchase", 1), ("view", 2),
     ]

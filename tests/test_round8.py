@@ -283,8 +283,7 @@ def test_token_budget_prefix_recompute(r8_results, spark, sf_dir):
 
 def test_token_budget_split_and_twin_equal(spark, sf_dir):
     """Any micro-batch split converges to the same admission (state
-    carries the running totals), and the applyInPandasWithState twin
-    equals whichever path the runtime picked."""
+    carries the running totals)."""
     from conftest import replay_parallel
     from kinesis_log_watcher_spark.queries.base import load
     from kinesis_log_watcher_spark.sources.files import stage_replay_files
@@ -310,16 +309,13 @@ def test_token_budget_split_and_twin_equal(spark, sf_dir):
             for r in df.collect()
         }
 
-    split, single, fallback = replay_parallel(
+    split, single = replay_parallel(
         lambda: rows(
             run_token_budget_admission(spark, d, max_files_per_trigger=1)
         ),
         lambda: rows(run_token_budget_admission(spark, d)),
-        lambda: rows(
-            run_token_budget_admission(spark, d, use_tws=False)
-        ),
     )
-    assert split == single == fallback
+    assert split == single
 
 
 def test_holt_forecast_recompute(spark, sf_dir):

@@ -1,5 +1,6 @@
-"""Bounded-state streaming top-k leaderboard: TWS processor ≡ fallback
-twin, fold purity, and replay-split invariance of the resolved board."""
+"""Bounded-state streaming top-k leaderboard: the board fold across
+batches, fold purity, and replay-split invariance of the resolved
+board."""
 
 from __future__ import annotations
 
@@ -16,68 +17,21 @@ def _mk(values, eid0=0):
     )
 
 
-def test_topk_processor_matches_fallback_twin():
-    from kinesis_log_watcher_spark.streaming.topk import (
-        TopKProcessor,
-        _topk_updates,
-    )
+def test_topk_fold_updates_board_across_batches():
+    from conftest import fold_batches
+    from kinesis_log_watcher_spark.streaming.topk import _topk_updates
 
-    class _FakeListState:
-        def __init__(self):
-            self._rows = []
+    b1 = _mk([(500, 7), (900, 8), (100, 9)], eid0=0)
+    b2 = _mk([(700, 7), (900, 5), (50, 6)], eid0=3)
+    out = [
+        list(zip(pdf["value_milli"], pdf["event_id"]))
+        for pdf in fold_batches(_topk_updates(3), ("click",), [b1, b2])
+    ]
 
-        def get(self):
-            return list(self._rows)
-
-        def put(self, rows):
-            self._rows = list(rows)
-
-    class _FakeHandle:
-        def __init__(self):
-            self.state = _FakeListState()
-
-        def getListState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    class _FakeGroupState:
-        def __init__(self):
-            self._val = None
-
-        @property
-        def exists(self):
-            return self._val is not None
-
-        @property
-        def get(self):
-            return self._val
-
-        def update(self, v):
-            self._val = v
-
-    def batches():
-        b1 = _mk([(500, 7), (900, 8), (100, 9)], eid0=0)
-        b2 = _mk([(700, 7), (900, 5), (50, 6)], eid0=3)
-        return b1, b2
-
-    proc = TopKProcessor(3)
-    proc.init(_FakeHandle())
-    tws_out = []
-    for b in batches():
-        (pdf,) = list(proc.handleInputRows(("click",), iter([b]), None))
-        tws_out.append(list(zip(pdf["value_milli"], pdf["event_id"])))
-
-    fb = _topk_updates(3)
-    st = _FakeGroupState()
-    fb_out = []
-    for b in batches():
-        (pdf,) = list(fb(("click",), iter([b]), st))
-        fb_out.append(list(zip(pdf["value_milli"], pdf["event_id"])))
-
-    assert tws_out == fb_out
     # batch 1: board is all three rows ranked; batch 2: the 900-tie
     # breaks by event_id (1 before 4), 700 displaces 500
-    assert tws_out[0] == [(900, 1), (500, 0), (100, 2)]
-    assert tws_out[1] == [(900, 1), (900, 4), (700, 3)]
+    assert out[0] == [(900, 1), (500, 0), (100, 2)]
+    assert out[1] == [(900, 1), (900, 4), (700, 3)]
 
 
 def test_topk_fold_keeps_exact_order_and_k():

@@ -1,9 +1,6 @@
 """Per-user running totals must reproduce the batch aggregate for any
 micro-batch split of a bounded replay — state carries across batch
-boundaries. Runs on the transformWithState StatefulProcessor path when
-protobuf is available, else on its applyInPandasWithState twin (same
-semantics — see streaming/tws.py ENVIRONMENT GATE); either way the
-replay≡batch pin executes."""
+boundaries."""
 
 from __future__ import annotations
 
@@ -15,7 +12,6 @@ from kinesis_log_watcher_spark.sources.files import stage_replay_files
 from kinesis_log_watcher_spark.streaming.tws import (
     batch_totals,
     run_running_totals,
-    tws_runtime_available,
 )
 
 T0 = datetime(2024, 1, 1)
