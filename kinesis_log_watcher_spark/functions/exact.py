@@ -44,7 +44,3 @@ def davg(c: Column, prec: int = 12, scale: int = 2) -> Column:
 
 def sql_dsum(expr: str, prec: int = 12, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
-
-
-def sql_davg(expr: str, prec: int = 12, scale: int = 2) -> str:
-    return f"({sql_dsum(expr, prec, scale)} / COUNT({expr}))"

@@ -8,12 +8,13 @@ parquet layouts across rounds:
   ``bigint`` nanoseconds;
 - current: naive ``timestamp[us]`` — scans as ``TIMESTAMP_NTZ``.
 
-Every reader (batch ``queries/base.load`` and the streaming sources)
-normalizes to session-zone ``TimestampType`` so queries, tests, and the
-DuckDB oracle see one stable dtype regardless of which layout is on disk.
-``ensure_session_confs`` pins the session to UTC first, so the NTZ cast
-preserves wall-clock values exactly; the nanos data is µs-aligned, so the
-integer division is exact.
+Every parquet reader (``sources/files.read_parquet`` and
+``read_parquet_stream``, which ``queries/base.load`` and ``load_stream``
+call) normalizes to session-zone ``TimestampType`` so queries, tests, and
+the DuckDB oracle see one stable dtype regardless of which layout is on
+disk. The readers apply ``ensure_session_confs`` first, which pins the
+session to UTC, so the NTZ cast preserves wall-clock values exactly; the
+nanos data is µs-aligned, so the integer division is exact.
 """
 
 from __future__ import annotations
@@ -39,10 +40,10 @@ def normalize_ts_cols(
     """Cast timestamp columns of either testdata layout to TimestampType.
 
     - columns named in ``nanos_bigint_cols`` that scan as ``bigint`` are
-      treated as nanosecond epochs (legacy nanosAsLong layout); batch
-      ``load`` scopes this per-table via ``NANOS_BIGINT_COLS``, the
-      streaming event readers keep the ``("ts",)`` default (they only
-      ever read events-shaped data);
+      treated as nanosecond epochs (legacy nanosAsLong layout);
+      ``queries/base.load`` and ``load_stream`` scope this per-table via
+      ``NANOS_BIGINT_COLS``, the replay runners keep the ``("ts",)``
+      default (they only ever read events-shaped data);
     - any ``timestamp_ntz`` column is cast to session-zone timestamp
       (exact under the UTC session conf).
 

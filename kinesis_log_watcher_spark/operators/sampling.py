@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
+
 
 def hash_draw(key: Column, n_hex: int = 8) -> Column:
     """Uniform draw in hex-string space: first ``n_hex`` chars of
@@ -133,11 +135,7 @@ def weighted_bernoulli_sample(
     second scan per row. Products stay far under 2^63 for any sane
     u_bits/weight combination (u < 2^u_bits, so u·max_w·scale_down <
     2^(u_bits + log2(max_w) + 3))."""
-    u = (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % (2 ** u_bits)
-    )
+    u = md5_h15(key.cast("string")) % (2 ** u_bits)
     return (
         df.withColumn("_w", weight)
         .join(F.broadcast(max_weight))

@@ -139,14 +139,6 @@ def exact_dot(
     )
 
 
-def exact_norm2(df: DataFrame, id_col: str, emb: str = "embedding") -> DataFrame:
-    comp = exploded_components(df, id_col, emb)
-    q = quantize(F.col("x"))
-    return comp.groupBy(id_col).agg(
-        (F.sum(q * q).cast("double") / F.lit(QSCALE2)).alias("norm2")
-    )
-
-
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup (sign-LSH blocked)
 # ---------------------------------------------------------------------------

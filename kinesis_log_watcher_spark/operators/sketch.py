@@ -23,17 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
+
 
 def _bucket(i_col, key_col, width: int):
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(i_col.cast("string"), F.lit(":"), key_col.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_h15(F.concat(i_col.cast("string"), F.lit(":"), key_col.cast("string")))
     return h % width
 
 
@@ -202,9 +196,7 @@ def hll_build(
     days, or tables combine without re-reading the raw keys."""
     m = 1 << p
     k = _HLL_HASH_BITS - p + 1
-    h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_h15(F.col(key_col).cast("string"))
     w = F.shiftright(h, p)
     rho = F.when(w == 0, F.lit(k)).otherwise(F.lit(k) - F.length(F.bin(w)))
     return (
@@ -370,9 +362,7 @@ def kmv_build(
     union of its per-salt bottom-ks, so phase 2 ranks ≤ salts*k rows."""
     from pyspark.sql.window import Window
 
-    h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_h15(F.col(key_col).cast("string"))
     hashes = df.select(*group_cols, h.alias("h")).distinct()
     gl = list(group_cols)
     w1 = Window.partitionBy(*gl, F.col("h") % salts).orderBy("h")

@@ -2409,12 +2409,10 @@ def _sim_rollup(raw: DataFrame) -> DataFrame:
     "source implementation, not just the query.",
 )
 def kinesis_sim_batch_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -2439,13 +2437,11 @@ def kinesis_sim_batch_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "equal the generate_series oracle.",
 )
 def kinesis_sim_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.files import run_replay
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     raw = (
         spark.readStream.format("kinesis_sim")
@@ -2825,13 +2821,11 @@ _E2E_SQL = f"""
     "render throughput is the watcher.py number (~7M rows/s).",
 )
 def kinesis_sim_render_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
     from kinesis_log_watcher_spark.watcher import build_lines
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     raw = (
         spark.read.format("kinesis_sim")

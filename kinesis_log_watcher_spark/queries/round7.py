@@ -622,12 +622,10 @@ def _split_rollup(raw: DataFrame) -> DataFrame:
 
 
 def _split_reader(spark: SparkSession, streaming: bool, **extra: str):
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     rd = spark.readStream if streaming else spark.read
     rd = (
@@ -758,12 +756,10 @@ _MERGE_ORACLE = f"""
     "surface the reference absorbs via re-listing (main.go:148-178).",
 )
 def kinesis_sim_shard_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -1517,13 +1513,11 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kinesis_sim_merge_resume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.queries.base import ensure_session_confs
     from kinesis_log_watcher_spark.sources.files import await_or_raise
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
 
-    ensure_session_confs(spark)
     register_sim_source(spark)
     run = next(_SPLIT_COUNTER)
     base = tempfile.mkdtemp(prefix=f"klw_merge_resume_{run}_")

@@ -5,6 +5,19 @@ correctness the same logical stream is a parquet/json directory with the
 RAW_KINESIS_SCHEMA. Structured Streaming's file source gives the same
 micro-batch semantics the connector would (SURVEY.md §1.1).
 
+:func:`read_parquet` and :func:`read_parquet_stream` are the one input
+path for the registry's table reads (``queries/base.load`` and
+``load_stream``) and for every replay runner in ``streaming/``. They own
+the two things each such read needs: they apply the session confs first
+(``session.ensure_session_confs``: nanosAsLong, UTC), so a bare session
+reads the testdata correctly, and they normalize the ``ts`` layouts
+(``functions/tscompat.normalize_ts_cols``), so every caller sees
+session-zone ``TimestampType``. Callers neither set confs nor normalize.
+
+:func:`stage_replay_files` is the one stager: each part becomes one
+mtime-ordered file, so a ``maxFilesPerTrigger=1`` replay runs one
+micro-batch per part, in order.
+
 :func:`run_replay` is the one bounded-replay entry point: every
 memory-sink streaming operator is a declarative query handed to it,
 and it owns the trigger (AvailableNow), the sink, the query naming,
@@ -25,6 +38,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_log_watcher_spark.envelope import RAW_KINESIS_SCHEMA
+from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
+from kinesis_log_watcher_spark.session import ensure_session_confs
 
 
 # JSON/CSV are text formats: without an explicit pattern, timestamps
@@ -90,18 +105,28 @@ def compact_dataset(
     return spark.read.parquet(dest_dir)
 
 
+def read_parquet(
+    spark: SparkSession, path: str, nanos_bigint_cols: tuple[str, ...] = ("ts",)
+) -> DataFrame:
+    """Batch read of a parquet dataset, confs applied and ``ts``
+    normalized (see the module docstring). ``nanos_bigint_cols`` is
+    handed to ``normalize_ts_cols``: the bigint columns that hold
+    legacy nanosecond epochs."""
+    ensure_session_confs(spark)
+    return normalize_ts_cols(spark.read.parquet(path), nanos_bigint_cols)
+
+
 def read_parquet_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int | None = None,
+    nanos_bigint_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
-    """Streaming read of an arbitrary parquet dataset (schema inferred
-    from a batch read). Accepts a single FILE as well as a directory —
-    the file stream source wants a directory, so a file path is turned
-    into (parent dir + pathGlobFilter) here, ONCE, for every replay
-    harness (streaming/tws.py, streaming/neardup.py, …)."""
-    import os
-
+    """Streaming twin of :func:`read_parquet` (schema inferred from a
+    batch read). Accepts a single FILE as well as a directory — the
+    file stream source wants a directory, so a file path is turned
+    into (parent dir + pathGlobFilter) here, ONCE, for every replay."""
+    ensure_session_confs(spark)
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -113,7 +138,7 @@ def read_parquet_stream(
         base = re.sub(r"([\\*?\[\]{}])", r"\\\1", os.path.basename(path))
         reader = reader.option("pathGlobFilter", base)
         path = os.path.dirname(path)
-    return reader.parquet(path)
+    return normalize_ts_cols(reader.parquet(path), nanos_bigint_cols)
 
 
 # replay_partitions state: one depth counter + saved conf per session,
@@ -325,13 +350,13 @@ def zorder_write(
 
 def stage_replay_files(parts, prefix: str = "replay_") -> str:
     """Write each DataFrame in ``parts`` as ONE parquet file in a fresh
-    replay directory, named and mtime-ordered by position — the shared
-    harness for every bounded-replay runner that needs deterministic
-    micro-batch boundaries (maxFilesPerTrigger=1 then consumes them in
-    exactly this order). Test-scale plumbing: production streams are
+    replay directory, named ``f{i}.parquet`` and mtime-ordered by
+    position, so a ``maxFilesPerTrigger=1`` replay consumes them as one
+    micro-batch each, in exactly this order. An empty part becomes a
+    0-row file (an empty micro-batch), so a part never disappears from
+    the batch sequence. Test-scale plumbing: production streams are
     unbounded and never staged."""
     import glob as _glob
-    import os
     import shutil
     from concurrent.futures import ThreadPoolExecutor
 
@@ -357,44 +382,4 @@ def stage_replay_files(parts, prefix: str = "replay_") -> str:
         shutil.copy(part, dest)
         os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
         shutil.rmtree(stage)
-    return replay
-
-
-def stage_replay_files_split(
-    df: DataFrame, part_col: str, n_parts: int, prefix: str = "replay_"
-) -> str:
-    """Like :func:`stage_replay_files`, but the parts are expressed as a
-    PART COLUMN (integer 0..n_parts-1) on one DataFrame and staged with
-    a single partitioned write instead of one write job per part — the
-    input is scanned ONCE instead of ``n_parts`` times. The part column
-    is written as a directory key (never a data column), each part dir's
-    single file is renamed to the mtime-ordered f{i}.parquet layout the
-    replay readers consume. Parts must all be non-empty (the caller's
-    split contract — an empty part would silently drop a micro-batch
-    boundary, so it raises and removes the partially staged replay
-    directory)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from kinesis_log_watcher_spark.staging import scratch_dir
-
-    replay = scratch_dir(prefix=prefix)
-    stage = os.path.join(replay, "_staged")
-    (
-        df.repartition(n_parts, part_col)
-        .write.partitionBy(part_col)
-        .parquet(stage)
-    )
-    for i in range(n_parts):
-        files = _glob.glob(os.path.join(stage, f"{part_col}={i}", "*.parquet"))
-        if not files:
-            shutil.rmtree(replay)
-            raise ValueError(f"replay part {i} is empty; staging aborted")
-        # repartition(n, col) puts each part in exactly one task
-        (src,) = files
-        dest = os.path.join(replay, f"f{i}.parquet")
-        shutil.copy(src, dest)
-        os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
-    shutil.rmtree(stage)
     return replay

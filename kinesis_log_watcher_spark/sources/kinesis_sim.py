@@ -35,6 +35,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from kinesis_log_watcher_spark.session import ensure_session_confs
+
 SIM_SCHEMA = (
     "streamName string, shardId string, sequenceNumber string, "
     "approximateArrivalTimestamp timestamp, partitionKey string, "
@@ -225,11 +227,6 @@ def _read_slice(partition: _ShardSlice):
             yield sim_record(partition.stream_name, partition.shard, seq)
 
 
-def _opts(options) -> tuple[int, int, int, str]:
-    plan = _SimPlan(options)
-    return plan.shards, plan.per_shard, plan.batch, plan.stream_name
-
-
 class KinesisSimBatchReader(DataSourceReader):
     def __init__(self, options):
         self.plan = _SimPlan(options)
@@ -311,5 +308,9 @@ class KinesisSimDataSource(DataSource):
 
 
 def register_sim_source(spark) -> None:
-    """Idempotently register the simulator with this session."""
+    """Idempotently register the simulator with this session, after
+    applying the session confs its reads depend on (the UTC zone the
+    naive ``approximateArrivalTimestamp`` values are read in), so the
+    callers never set them."""
+    ensure_session_confs(spark)
     spark.dataSource.register(KinesisSimDataSource)

@@ -33,6 +33,7 @@ from __future__ import annotations
 from kinesis_log_watcher_spark.sources.files import (
     await_or_raise,
     python_state_partitions,
+    read_parquet,
     read_parquet_stream,
     replay_partitions,
     stage_replay_files,
@@ -45,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 _counter = itertools.count()
 
@@ -87,8 +87,7 @@ def run_stream_ivf_index_update(
     )
     from kinesis_log_watcher_spark.staging import scratch_dir
 
-    ensure_session_confs(spark)
-    emb = spark.read.parquet(emb_path)
+    emb = read_parquet(spark, emb_path)
     comp = exploded_components(emb, "vec_id")
     anchor_comp = comp.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("a_id"), F.col("x").alias("qx"), "dim"

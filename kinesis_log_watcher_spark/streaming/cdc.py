@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 _counter = itertools.count()
 
@@ -65,7 +64,6 @@ def run_cdc_upsert(
     """Replay ``changes_path`` as a stream, land each micro-batch as an
     idempotent delta directory under ``target_dir``, and return the
     merge-on-read resolved state."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(
         spark, changes_path, max_files_per_trigger=max_files_per_trigger
     )

@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-from kinesis_log_watcher_spark.session import ensure_session_confs
 from kinesis_log_watcher_spark.sources.files import (
+    read_parquet,
     read_parquet_stream,
     run_replay,
     stage_replay_files,
@@ -112,8 +111,7 @@ def run_stream_cusum(
     TIME-SPLIT batches (cross-batch state continuation under the exact
     event-time order) and reduce the update stream to the final per-key
     snapshot."""
-    ensure_session_confs(spark)
-    ev = normalize_ts_cols(spark.read.parquet(events_path)).select(
+    ev = read_parquet(spark, events_path).select(
         "event_id",
         "event_type",
         "ts",
@@ -127,9 +125,7 @@ def run_stream_cusum(
     p1 = ev.filter(F.col("ts") <= mid)
     p2 = ev.filter(F.col("ts") > mid)
     replay = stage_replay_files([p1, p2], prefix="cusum_replay_")
-    stream = normalize_ts_cols(
-        read_parquet_stream(spark, replay, max_files_per_trigger=1)
-    )
+    stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
     # snapshots are monotone in n: the final state is the max-n row
     updates = run_replay(cusum_update_stream(stream), "update", "stream_cusum")
     snap = updates.groupBy("event_type").agg(

@@ -16,6 +16,7 @@ state), which is what the SQL oracle computes.
 from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
+    read_parquet,
     read_parquet_stream,
     run_replay,
     stage_replay_files,
@@ -24,9 +25,7 @@ from kinesis_log_watcher_spark.sources.files import (
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-
-from kinesis_log_watcher_spark.session import ensure_session_confs
+from kinesis_log_watcher_spark.streaming.windows import watermark_sentinels
 
 
 def clicks_to_purchases(
@@ -65,11 +64,8 @@ def run_stream_stream_join(
 ) -> DataFrame:
     """Replay the events table as TWO streams (clicks / purchases) and
     stream-stream join them."""
-    ensure_session_confs(spark)
-
     def stream():
         s = read_parquet_stream(spark, events_path, max_files_per_trigger)
-        s = normalize_ts_cols(s)
         return s.withWatermark("ts", "1 minute")
 
     clicks = stream().filter(F.col("event_type") == "click")
@@ -97,10 +93,9 @@ def run_stream_static_enrich(
     aggregate keeps (tiny, per-group) state."""
     from kinesis_log_watcher_spark.functions.exact import dec
 
-    ensure_session_confs(spark)
-    stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
+    stream = read_parquet_stream(spark, events_path)
 
-    dim = spark.read.parquet(customer_path).select(
+    dim = read_parquet(spark, customer_path).select(
         "c_custkey", "c_mktsegment"
     )
     enriched = stream.join(
@@ -115,62 +110,17 @@ def run_stream_static_enrich(
 
 
 def _sentinel_replay_dir(spark: SparkSession, events_path: str) -> str:
-    """Rewrite ``events_path`` as a replay directory of [real data,
-    sentinel batch 1, sentinel batch 2] with ascending mtimes.
-
-    Each sentinel batch carries one 'click' AND one 'purchase' row
-    (``user_id=-1``, so they can never match a real row) with event
-    times 2h/4h past the real maximum. They must pass BOTH sides'
-    event_type filters: Catalyst pushes a deterministic filter BELOW
-    the EventTimeWatermark node, so a row the filter rejects never
-    reaches the watermark operator and cannot advance it — and under
-    the default multiple-watermark policy the query watermark is the
-    MIN across both (filtered) sides. Callers filter ``user_id >= 0``
-    on the SINK output, post-hoc, never inside the streaming plan
-    (where the pushdown would defeat the sentinels again).
-    Two batches are needed, in SEPARATE micro-batches:
-    the watermark applied while processing batch N is computed from
-    batches < N, so sentinel 1's timestamp becomes the operative
-    watermark exactly when sentinel 2's batch runs — past every real
-    row's emission horizon, which is what lets append-mode outer-join
-    NULL rows (and any other eviction-driven emission) finalize before
-    an availableNow replay terminates. The full rewrite of the real
-    dataset is test-scale harness plumbing only — a production stream
-    just keeps running and needs no finalization.
-    """
-    from pyspark.sql.types import LongType
-
-    base = spark.read.parquet(events_path)
-    ts_is_raw_nanos = isinstance(base.schema["ts"].dataType, LongType)
-    mx = base.groupBy().agg(F.max("ts").alias("ts"))
-
-    def sentinel(i: int) -> DataFrame:
-        if ts_is_raw_nanos:
-            ts = F.col("ts") + F.lit(i * 7_200_000_000_000)  # +i*2h in ns
-        else:
-            ts = F.col("ts") + F.expr(f"INTERVAL {2 * i} HOURS")
-
-        def row(etype: str, eid: int) -> DataFrame:
-            cols = []
-            for f in base.schema.fields:
-                if f.name == "ts":
-                    cols.append(ts.cast(f.dataType).alias("ts"))
-                elif f.name == "event_id":
-                    cols.append(F.lit(eid).cast(f.dataType).alias(f.name))
-                elif f.name == "user_id":
-                    cols.append(F.lit(-1).cast(f.dataType).alias(f.name))
-                elif f.name == "event_type":
-                    cols.append(F.lit(etype).cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            return mx.select(*cols)
-
-        return row("click", -1000 - 2 * i).unionByName(
-            row("purchase", -1001 - 2 * i)
-        )
-
+    """Stage ``events_path`` as a replay directory of [real data,
+    sentinel batch 1, sentinel batch 2] with ascending mtimes. Each
+    sentinel batch carries one 'click' AND one 'purchase' row, so it
+    passes both sides' event_type filters (see
+    ``streaming/windows.watermark_sentinels``); their ``user_id = -1``
+    never matches a real row, and callers drop them with
+    ``user_id >= 0`` on the SINK output."""
+    base = read_parquet(spark, events_path)
     return stage_replay_files(
-        [base, sentinel(1), sentinel(2)], prefix="ss_left_join_"
+        [base, *watermark_sentinels(base, ("click", "purchase"))],
+        prefix="ss_left_join_",
     )
 
 
@@ -195,12 +145,10 @@ def run_stream_stream_left_join(
     the watermark bound, not corpus size — exactly as the inner join;
     the outer form adds no state, only eviction-time emission.
     """
-    ensure_session_confs(spark)
     replay = _sentinel_replay_dir(spark, events_path)
 
     def stream():
         s = read_parquet_stream(spark, replay, max_files_per_trigger=1)
-        s = normalize_ts_cols(s)
         return s.withWatermark("ts", "1 minute")
 
     clicks = stream().filter(F.col("event_type") == "click").select(
@@ -259,8 +207,7 @@ def run_stream_index_admission(
 
     from pyspark.sql.window import Window
 
-    ensure_session_confs(spark)
-    docs = spark.read.parquet(docs_path).select(
+    docs = read_parquet(spark, docs_path).select(
         "doc_id", "source", F.md5("text").alias("fp")
     )
     snap = docs.filter(F.col("doc_id") < snapshot_max_id).select("fp").distinct()
@@ -301,12 +248,10 @@ def run_stream_stream_full_outer(
     symmetric and append-mode exact. Same sentinel-replay finalization
     and no-NULL-output conventions as run_stream_stream_left_join.
     """
-    ensure_session_confs(spark)
     replay = _sentinel_replay_dir(spark, events_path)
 
     def stream():
         s = read_parquet_stream(spark, replay, max_files_per_trigger=1)
-        s = normalize_ts_cols(s)
         return s.withWatermark("ts", "1 minute")
 
     clicks = stream().filter(F.col("event_type") == "click").select(

@@ -33,8 +33,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kinesis_log_watcher_spark.session import ensure_session_confs
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 COUNT_SCHEMA = "user_id bigint, event_type string, n bigint"
@@ -98,7 +96,6 @@ def run_type_counts(
     """Replay a bounded events table through the counter and resolve
     the update sink to final counts (counts are monotone per key, so
     latest = MAX — order-free)."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     updates = count_stream(stream.select("user_id", "event_type"))
     return (

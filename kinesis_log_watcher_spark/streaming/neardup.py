@@ -60,7 +60,6 @@ from kinesis_log_watcher_spark.operators.dedup import (
     shingles_col,
     tokens_col,
 )
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 
 _ROWS = NUM_HASHES // BANDS
@@ -211,7 +210,6 @@ def run_stream_neardup(
     live TTL never terminates — and a bounded replay has no idle-state
     problem to solve. The member cap stays on. Long-running deployments
     use ``neardup_pair_stream`` directly, where the TTL defaults ON."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
 
     pairs = neardup_pair_stream(stream, state_ttl_ms, max_bucket_members)

@@ -48,9 +48,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-from kinesis_log_watcher_spark.session import ensure_session_confs
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RATE_LIMIT_K = 5
@@ -147,9 +144,7 @@ def run_rate_limit(
     the per-event admissions up per user. Each event is emitted exactly
     once (in the batch that carries it), so the update sink is already
     the full decision relation."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
-    stream = normalize_ts_cols(stream)
     decisions = admit_stream(stream, k, window_s)
     return (
         run_replay(decisions, "update", "rate_limit", python_state_partitions())

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kinesis_log_watcher_spark.operators.dedup import md5_h15
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 PARTIAL_SCHEMA = "cluster bigint, bucket bigint, n_requests bigint, n_hits bigint"
 _STATE_SCHEMA = "last_event bigint"
@@ -115,7 +114,6 @@ def run_semcache_eval(
         run_replay,
     )
 
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     requests = stream.select(
         "event_id",

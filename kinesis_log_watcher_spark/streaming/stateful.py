@@ -39,10 +39,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-
-from kinesis_log_watcher_spark.session import ensure_session_confs
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 SESSION_GAP_S = 1800
@@ -143,9 +139,7 @@ def run_stateful_sessions(
 ) -> DataFrame:
     """Replay a bounded events table through the stateful operator and
     reduce the update stream to final sessions."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
-    stream = normalize_ts_cols(stream)
 
     updates = session_update_stream(stream, gap_s)
     return final_sessions(run_replay(updates, "update", "stateful_sessions"))

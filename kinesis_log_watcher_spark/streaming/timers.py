@@ -43,9 +43,10 @@ from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
+    read_parquet,
     read_parquet_stream,
     run_replay,
-    stage_replay_files_split,
+    stage_replay_files,
 )
 
 from collections.abc import Iterator
@@ -57,9 +58,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "
@@ -191,11 +189,7 @@ def run_timer_sessions(
     """Replay the bounded events table through the timer-finalized
     sessionizer; return ONLY the finalized sessions (each exactly once).
     """
-    from kinesis_log_watcher_spark.queries.base import load
-
-    ensure_session_confs(spark)
-    sf_dir = events_path.rsplit("/", 1)[0]
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = read_parquet(spark, events_path).select("event_id", "user_id", "ts")
     bounds = ev.agg(
         F.expr("percentile_approx(ts, 0.5)").alias("mid"),
         F.max("ts").alias("mx"),
@@ -211,20 +205,16 @@ def run_timer_sessions(
     # the batch, so it still pushes the trailing no-data batch past every
     # real session's end+gap — one fewer micro-batch than a separate
     # sentinel file, with the cross-batch state continuation preserved
-    # by the time split. Both halves are staged by ONE partitioned write
-    # (part = which side of the median ts) instead of two filter+
-    # coalesce(1) write jobs — events is scanned once, not twice. Null-ts
-    # rows are dropped first, as the two ts filters did (the CASE below
-    # would route them to part 1).
-    staged = (
-        ev.filter(F.col("ts").isNotNull())
-        .withColumn("part", F.when(F.col("ts") <= bounds.mid, 0).otherwise(1))
-        .unionAll(sentinel.withColumn("part", F.lit(1)))
+    # by the time split. Null-ts rows match neither half and are
+    # dropped.
+    replay = stage_replay_files(
+        [
+            ev.filter(F.col("ts") <= bounds.mid),
+            ev.filter(F.col("ts") > bounds.mid).unionByName(sentinel),
+        ],
+        prefix="timer_sess_",
     )
-    replay = stage_replay_files_split(staged, "part", 2, prefix="timer_sess_")
-    stream = normalize_ts_cols(
-        read_parquet_stream(spark, replay, max_files_per_trigger=1)
-    )
+    stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
     updates = timer_session_stream(stream, gap_s)
     return (
         run_replay(updates, "update", "timer_sessions", python_state_partitions())

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kinesis_log_watcher_spark.operators.bpe import bpe_encode, merge_ranks
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 TOKEN_BUDGET = 1000  # tokens admitted per source before the gate closes
 
@@ -67,7 +66,7 @@ def doc_tokens(text: str) -> int:
 
 def _fold_batch(
     state: "tuple[int, int, int, int]", batch: pd.DataFrame
-) -> "tuple[tuple[int, int, int, int], None]":
+) -> "tuple[int, int, int, int]":
     """Fold one micro-batch's rows (doc_id order) into the running
     (cum_tokens, cum_admitted_tokens, n_docs, n_admitted) state.
 
@@ -86,7 +85,7 @@ def _fold_batch(
         if cum <= TOKEN_BUDGET:
             cum_adm = cum
             n_adm += 1
-    return (cum, cum_adm, n_docs, n_adm), None
+    return cum, cum_adm, n_docs, n_adm
 
 
 def _budget_updates():
@@ -98,7 +97,7 @@ def _budget_updates():
         (source,) = key
         cur = tuple(int(x) for x in state.get) if state.exists else (0, 0, 0, 0)
         batch = pd.concat(list(pdfs), ignore_index=True)
-        cur, _ = _fold_batch(cur, batch)
+        cur = _fold_batch(cur, batch)
         state.update(cur)
         cum, cum_adm, n_docs, n_adm = cur
         yield pd.DataFrame(
@@ -139,7 +138,6 @@ def run_token_budget_admission(
         run_replay,
     )
 
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
     updates = admission_stream(stream)
     return (

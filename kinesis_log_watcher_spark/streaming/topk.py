@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kinesis_log_watcher_spark.session import ensure_session_confs
 
 TOPK_K = 3
 TOPK_SCHEMA = (
@@ -134,7 +133,6 @@ def run_stream_topk(
     resolve the update sink: every emission is a running top-k, so the
     DISTINCT union of emissions contains the global top-k and one
     re-rank recovers it — order-free in the replay split."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     feed = stream.select(
         "event_type",

@@ -40,10 +40,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-
-from kinesis_log_watcher_spark.session import ensure_session_confs
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -111,9 +107,7 @@ def run_running_totals(
 ) -> DataFrame:
     """Replay a directory of parquet event files through the operator
     and reduce the update stream to final totals."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_dir, max_files_per_trigger)
-    stream = normalize_ts_cols(stream)
 
     updates = running_totals_stream(stream)
     return final_totals(

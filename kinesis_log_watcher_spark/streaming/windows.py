@@ -15,12 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_log_watcher_spark.functions.tscompat import normalize_ts_cols
-
-from kinesis_log_watcher_spark.session import ensure_session_confs
-
 from kinesis_log_watcher_spark.functions.exact import dec
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.sources.files import (
+    read_parquet,
     read_parquet_stream,
     run_replay,
     stage_replay_files,
@@ -32,11 +30,7 @@ def run_windowed_counts(
     events_path: str,
     window: str = "1 hour",
 ) -> DataFrame:
-    ensure_session_confs(spark)
     stream = read_parquet_stream(spark, events_path)
-    # events.ts layout varies by testdata round (nanos-as-long or NTZ);
-    # windowing needs a session-zone timestamp — see functions/tscompat.
-    stream = normalize_ts_cols(stream)
     agg = (
         stream.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
@@ -66,8 +60,7 @@ def run_session_windows(
     the store evicts closed sessions (complete-mode memory sink here is
     bounded-replay test plumbing).
     """
-    ensure_session_confs(spark)
-    stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
+    stream = read_parquet_stream(spark, events_path)
     agg = (
         stream.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
@@ -96,7 +89,6 @@ def run_streaming_dedup(
     ``dropDuplicatesWithinWatermark`` variant bounds the store for
     unbounded keyspaces (pinned in tests/test_streaming_dedup.py).
     """
-    ensure_session_confs(spark)
     keys = keys or ["user_id", "event_type"]
     stream = read_parquet_stream(spark, events_path)
     deduped = stream.select(*keys).dropDuplicates(keys)
@@ -120,8 +112,7 @@ def run_watermark_dedup(
     bound (minutes) with the identical plan; correctness then holds for
     duplicates within the bound — the documented semantics.
     """
-    ensure_session_confs(spark)
-    stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
+    stream = read_parquet_stream(spark, events_path)
     deduped = (
         stream.withWatermark("ts", delay)
         .select(
@@ -146,8 +137,7 @@ def run_sliding_counts(
     in window/slide overlapping windows (2 here). Same AvailableNow →
     memory-sink plumbing as run_windowed_counts; at scale the identical
     plan runs with a watermark bounding state to window+lateness."""
-    ensure_session_confs(spark)
-    stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
+    stream = read_parquet_stream(spark, events_path)
     agg = (
         stream.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
@@ -184,7 +174,6 @@ def run_streaming_admission(
     exactly the docs a later batch re-run would pick (no RNG drift
     between the streaming and batch paths — the md5 convention from
     operators/sampling.py)."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(
         spark, docs_path, max_files_per_trigger=max_files_per_trigger
     )
@@ -210,27 +199,56 @@ def run_streaming_admission(
     return run_replay(agg, "complete", "stream_admission")
 
 
-def _sentinel(base: DataFrame, i: int, id_base: int) -> DataFrame:
-    """One "sentinel" event row, ``2*i`` hours past the latest ``ts`` in
-    ``base``, with event_id ``id_base - i`` and every other column null:
-    staged as its own micro-batch it advances the watermark past every
-    real window. Callers filter sentinel rows out after the sink."""
-    mx = base.groupBy().agg(F.max("ts").alias("mxts"))
-    cols = []
-    for f in base.schema.fields:
-        if f.name == "ts":
-            cols.append(
-                (F.col("mxts") + F.expr(f"INTERVAL {2 * i} HOURS"))
-                .cast(f.dataType)
-                .alias("ts")
-            )
-        elif f.name == "event_type":
-            cols.append(F.lit("sentinel").cast(f.dataType).alias(f.name))
-        elif f.name == "event_id":
-            cols.append(F.lit(id_base - i).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return mx.select(*cols)
+def watermark_sentinels(
+    base: DataFrame, event_types: tuple[str, ...]
+) -> list[DataFrame]:
+    """The two watermark-flush batches of a bounded event-time replay.
+
+    Batch ``i`` (1, 2) holds one row per entry of ``event_types``, at
+    ``2*i`` hours past the latest ``ts`` in ``base``, with
+    ``user_id = -1``, a negative ``event_id`` and every other column
+    null. Staged as their own micro-batches after the real data, they
+    finalize every real window: the watermark applied while a batch
+    runs is computed from the batches before it, so batch 1's
+    timestamp is the operative watermark exactly when batch 2 runs,
+    past every real row's emission horizon. That is what lets
+    append-mode windows and outer-join NULL rows finalize before an
+    availableNow replay stops. A production stream keeps running and
+    needs no such flush.
+
+    The rows must pass every filter a side applies before its
+    watermark: Catalyst pushes a deterministic filter BELOW the
+    EventTimeWatermark node, so a rejected row never reaches the
+    watermark operator, and under the default multiple-watermark
+    policy the query watermark is the MIN across the sides. So a
+    stream-stream join carries both sides' event types, and callers
+    drop the sentinel rows on the SINK output (``user_id >= 0`` or
+    their event type), never inside the streaming plan."""
+    mx = base.groupBy().agg(F.max("ts").alias("_mx"))
+    rows = mx.select(
+        "_mx",
+        F.posexplode(F.array(*(F.lit(t) for t in event_types))).alias(
+            "_k", "_type"
+        ),
+    )
+
+    def batch(i: int) -> DataFrame:
+        cols = []
+        for f in base.schema.fields:
+            if f.name == "ts":
+                c = F.col("_mx") + F.expr(f"INTERVAL {2 * i} HOURS")
+            elif f.name == "event_type":
+                c = F.col("_type")
+            elif f.name == "event_id":
+                c = F.lit(-1000 - len(event_types) * i) - F.col("_k")
+            elif f.name == "user_id":
+                c = F.lit(-1)
+            else:
+                c = F.lit(None)
+            cols.append(c.cast(f.dataType).alias(f.name))
+        return rows.select(*cols)
+
+    return [batch(1), batch(2)]
 
 
 def run_late_data_accounting(
@@ -263,23 +281,14 @@ def run_late_data_accounting(
 
     Final append-mode counts therefore exclude exactly the late slice,
     which the SQL oracle states directly."""
-    ensure_session_confs(spark)
-    base = normalize_ts_cols(spark.read.parquet(events_path))
+    base = read_parquet(spark, events_path)
     is_late = (F.dayofmonth("ts") == late_day) & (F.col("event_id") % 2 == 0)
-
+    flush1, flush2 = watermark_sentinels(base, ("sentinel",))
     replay = stage_replay_files(
-        [
-            base.filter(~is_late),
-            _sentinel(base, 1, -1000),
-            base.filter(is_late),
-            _sentinel(base, 2, -1000),
-        ],
+        [base.filter(~is_late), flush1, base.filter(is_late), flush2],
         prefix="late_replay_",
     )
-
-    stream = normalize_ts_cols(
-        read_parquet_stream(spark, replay, max_files_per_trigger=1)
-    )
+    stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
     agg = (
         stream.withWatermark("ts", "1 minute")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -302,8 +311,7 @@ def run_dynamic_session_windows(
     them as interval-union islands (a running prefix-max of interval
     ends). Same state story as the fixed-gap form — one store entry per
     open session."""
-    ensure_session_confs(spark)
-    stream = normalize_ts_cols(read_parquet_stream(spark, events_path))
+    stream = read_parquet_stream(spark, events_path)
     gap = (
         F.when(F.col("event_type") == "click", F.lit("30 minutes"))
         .when(F.col("event_type") == "purchase", F.lit("2 hours"))
@@ -342,17 +350,15 @@ def run_streaming_minhash_overlap(
     that would otherwise need both raw key sets. Registers where only
     one split is present are excluded (the densification refinement of
     OPH; at m << NDV every register is occupied and this is moot)."""
-    ensure_session_confs(spark)
     stream = read_parquet_stream(
         spark, events_path, max_files_per_trigger=max_files_per_trigger
     )
-    stream = normalize_ts_cols(stream)
     from kinesis_log_watcher_spark.operators.sketch import user_day_key
 
     sub = stream.filter(F.col("event_type").isin("click", "purchase")).select(
         F.col("event_type").alias("split"), user_day_key().alias("k")
     )
-    h = F.conv(F.substring(F.md5(F.col("k")), 1, 15), 16, 10).cast("long")
+    h = md5_h15(F.col("k"))
     regs = (
         sub.select("split", h.alias("h"))
         .withColumn("r", F.col("h") % m)
@@ -409,16 +415,11 @@ def run_two_level_agg(
     shuffle is negligible by construction. Same append-mode memory-sink
     caveat as every replay harness: test-scale plumbing only.
     """
-    ensure_session_confs(spark)
-    base = normalize_ts_cols(spark.read.parquet(events_path))
-
+    base = read_parquet(spark, events_path)
     replay = stage_replay_files(
-        [base, _sentinel(base, 1, -2000), _sentinel(base, 2, -2000)],
-        prefix="two_level_",
+        [base, *watermark_sentinels(base, ("sentinel",))], prefix="two_level_"
     )
-    stream = normalize_ts_cols(
-        read_parquet_stream(spark, replay, max_files_per_trigger=1)
-    )
+    stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
     lvl1 = (
         stream.withWatermark("ts", "1 minute")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")

@@ -122,3 +122,25 @@ def test_query_modules_do_not_read_the_registry():
         if p.name != "base.py" and "_REGISTRY" in p.read_text()
     ]
     assert not readers, readers
+
+
+def test_readers_own_session_confs_and_ts_normalization():
+    # The parquet readers in sources/files.py (and the kinesis_sim
+    # registration) apply the session confs and normalize `ts`; a query
+    # module (queries/base.load included) or replay runner that repeats
+    # either is a second input path.
+    from pathlib import Path
+
+    import kinesis_log_watcher_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    callers = [
+        f"{p.parent.name}/{p.name}"
+        for d in ("streaming", "queries")
+        for p in sorted((root / d).glob("*.py"))
+        if any(
+            call in p.read_text()
+            for call in ("ensure_session_confs(", "normalize_ts_cols(")
+        )
+    ]
+    assert not callers, callers

@@ -13,7 +13,8 @@ Usage: python tools/check_correctness.py [--bare] [sf_dir] [query ...]
 
 --bare simulates the driver's bare SparkSession (which has none of
 session.py's confs) by mis-setting the runtime confs before every query;
-queries must heal the session themselves (queries/base.ensure_session_confs).
+queries must heal the session themselves (the readers in sources/files.py
+and sources/kinesis_sim.register_sim_source apply session.ensure_session_confs).
 """
 
 from __future__ import annotations
