@@ -240,6 +240,21 @@ def load_prior(path: str, sf: float, cpus: int | None) -> dict[str, float]:
     return doc.get("queries", {})
 
 
+def timed_names(reg, only: str) -> list[str]:
+    """The queries to time, in registry order: every registered query
+    outside ``SKIP``, or, for a non-empty ``only`` (``a,b,c``), exactly
+    the named ones, ``SKIP`` members included, so a replay can be timed
+    on purpose. Exits non-zero naming any name that is not registered."""
+    if not only.strip():
+        return [n for n in reg if n not in SKIP]
+    keep = {s.strip() for s in only.split(",") if s.strip()}
+    unknown = sorted(keep - set(reg))
+    if unknown or not keep:
+        sys.exit(f"bench.py: no registered queries match --only/"
+                 f"SPARK_GRAFT_BENCH_ONLY names {unknown}")
+    return [n for n in reg if n in keep]
+
+
 def main() -> None:
     args = parse_args(sys.argv[1:])
     # Point fd 1 at stderr BEFORE the JVM launches so its stdout banners
@@ -256,22 +271,15 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     reg = registry()
-    names = [n for n in reg if n not in SKIP]
-
     # Subset hook: --only a,b,c (or SPARK_GRAFT_BENCH_ONLY for contract
     # tests) restricts the timed set; the stdout/budget logic runs
     # unchanged. The driver passes neither, so per-round benches are
-    # unaffected. Resolved BEFORE the JVM launches so a no-match typo
-    # fails in seconds, not after a full Spark bring-up.
+    # unaffected. Resolved BEFORE the JVM launches so a typo fails in
+    # seconds, not after a full Spark bring-up.
     only = args.only or os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
     subset_run = bool(only.strip())
-    if subset_run:
-        keep = {s.strip() for s in only.split(",") if s.strip()}
-        names = [n for n in names if n in keep]
-        if not names:
-            sys.exit(f"bench.py: no registered queries match --only/"
-                     f"SPARK_GRAFT_BENCH_ONLY={only!r}")
-    else:
+    names = timed_names(reg, only)
+    if not subset_run:
         names = spread_families(names)
     # A ~270-query marathon submits thousands of jobs through one JVM;
     # the Spark UI's live state store retains them all by default and

@@ -26,10 +26,14 @@ template.py for the access semantics.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
+    DataType,
     StringType,
     StructField,
     StructType,
@@ -113,6 +117,49 @@ def with_envelope(raw: DataFrame, keep: list[str] | None = None) -> DataFrame:
     return raw.select(*cols)
 
 
+# JSON's four insignificant whitespace characters (RFC 8259 section 2).
+_JSON_WS = "[ \t\n\r]*"
+
+
+def json_opens(s: Column, opener: str) -> Column:
+    """True iff the first character of ``s`` after JSON whitespace is
+    ``opener`` (``{`` or ``[``); NULL for a NULL ``s``.
+
+    A necessary condition for ``s`` to parse as an object or array, and
+    a cheap one: every guarded parse below returns NULL when it is
+    false, which is what the bare parse returns on such input (or, for a
+    struct, its corrupt record), without entering the parser. Spark's
+    JSON functions report a bad record by throwing and catching an
+    exception per row, and log streams carry many non-object lines (see
+    ``template._hoisted_payload`` for the measured cost).
+    """
+    return F.regexp_like(s, F.lit("^" + _JSON_WS + re.escape(opener)))
+
+
+def guarded_from_json(
+    s: Column, schema: DataType | str, options: dict[str, str] | None = None
+) -> Column:
+    """``from_json(s, schema, options)``, NULL unless ``s`` opens with
+    ``[`` (array schema) or ``{`` (struct or map schema)."""
+    is_array = isinstance(schema, ArrayType) or (
+        isinstance(schema, str) and schema.startswith("array")
+    )
+    return F.when(
+        json_opens(s, "[" if is_array else "{"),
+        F.from_json(s, schema, options),
+    )
+
+
+def guarded_object_keys(s: Column) -> Column:
+    """``json_object_keys(s)``: NULL unless ``s`` is a JSON object."""
+    return F.when(json_opens(s, "{"), F.json_object_keys(s))
+
+
+def guarded_array_length(s: Column) -> Column:
+    """``json_array_length(s)``: NULL unless ``s`` is a JSON array."""
+    return F.when(json_opens(s, "["), F.json_array_length(s))
+
+
 def is_json_object(log_entry: Column) -> Column:
     """True iff the payload parses as a JSON *object*.
 
@@ -121,4 +168,4 @@ def is_json_object(log_entry: Column) -> Column:
     (unparseable payload, main.go:276-277) or not an object.
     ``json_object_keys`` returns NULL for invalid JSON and non-objects.
     """
-    return F.json_object_keys(log_entry).isNotNull()
+    return guarded_object_keys(log_entry).isNotNull()

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.operators import text as T
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, register
 
 # --------------------------------------------------------------------------
@@ -287,8 +288,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def training_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
+        md5_h15(F.col("doc_id").cast("string"))
         % 16
     )
     return (

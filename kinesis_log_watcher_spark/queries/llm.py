@@ -27,6 +27,7 @@ from kinesis_log_watcher_spark.operators.dedup import (
     jaccard_pairs,
     lsh_bands,
     lsh_candidate_pairs,
+    md5_h15,
     minhash_signature,
     simhash_near_pairs,
     simhash_signatures,
@@ -1159,7 +1160,7 @@ def top_ngrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = bg.groupBy("lang", "bigram").agg(F.count("*").alias("n"))
     salt = (
-        F.conv(F.substring(F.md5(F.col("bigram")), 1, 15), 16, 10).cast("long") % 8
+        md5_h15(F.col("bigram")) % 8
     )
     w1 = Window.partitionBy("lang", "salt").orderBy(
         F.col("n").desc(), F.col("bigram")
@@ -2694,8 +2695,7 @@ _TOPK_K = 10       # global answer size
 def topk_words_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
+        md5_h15(F.col("doc_id").cast("string"))
         % _TOPK_SHARDS
     )
     w = docs.select(

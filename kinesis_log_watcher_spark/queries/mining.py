@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from kinesis_log_watcher_spark.functions.exact import dec
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, register
 
 # ---------------------------------------------------------------------------
@@ -527,9 +528,7 @@ def sorted_neighborhood_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread=True: interleaved A/B r12, 0.89 (2.1 -> 1.9s) at sf0.1.
     docs = load(spark, sf_dir, "documents", spread=True)
     sh = exploded_shingles(docs, n=3)
-    h60 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast(
-        "long"
-    )
+    h60 = md5_h15(F.col("shingle"))
     key = sh.groupBy("doc_id").agg(
         F.min(h60).alias("minh"), F.count("*").cast("long").alias("sz")
     )
@@ -831,9 +830,7 @@ _WRS_HF = repr(float(1 << 60))
 )
 def weighted_reservoir_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_h15(F.col("doc_id").cast("string"))
     u = (h.cast("double") + F.lit(1.0)) / F.lit(float(_WRS_HF))
     keyed = docs.select(
         "source",

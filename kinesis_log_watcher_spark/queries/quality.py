@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.operators.text import STOPWORDS
 from kinesis_log_watcher_spark.queries.base import load, register
 
@@ -728,7 +729,7 @@ _DSIR_TARGET_LANG = "en"
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bkt = (
-        F.conv(F.substring(F.md5(F.col("word")), 1, 15), 16, 10).cast("long")
+        md5_h15(F.col("word"))
         % _DSIR_BUCKETS
     )
     w = docs.select(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kinesis_log_watcher_spark.functions.exact import davg, dec, dsum
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.operators.relational import (
     asof_join,
     broadcast_join,
@@ -2569,9 +2570,7 @@ def topk_orders_per_segment_twophase(spark: SparkSession, sf_dir: str) -> DataFr
         F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
     ).select("c_mktsegment", "o_orderkey", "price")
     salt = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        md5_h15(F.col("o_orderkey").cast("string"))
         % _TPG_SALTS
     )
     w1 = Window.partitionBy("c_mktsegment", "salt").orderBy(

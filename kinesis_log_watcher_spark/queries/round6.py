@@ -172,6 +172,7 @@ from kinesis_log_watcher_spark.operators.dedup import (  # noqa: E402
     exploded_shingles,
     lsh_bands,
     lsh_candidate_pairs,
+    md5_h15,
     minhash_signature,
 )
 
@@ -1961,7 +1962,7 @@ def event_trigram_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(">", "event_type", "t2", "t3").alias("episode"),
     ).groupBy("segment", "episode").agg(F.count("*").cast("long").alias("n"))
     salt = (
-        F.conv(F.substring(F.md5(F.col("episode")), 1, 15), 16, 10).cast("long") % 8
+        md5_h15(F.col("episode")) % 8
     )
     w1 = Window.partitionBy("segment", "salt").orderBy(
         F.col("n").desc(), F.col("episode")
@@ -2203,8 +2204,7 @@ _KFOLDS = 5
 def kfold_assignment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fold = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
+        md5_h15(F.col("doc_id").cast("string"))
         % _KFOLDS
     )
     cells = (

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.operators.sampling import (
     pack_bins,
     split_assign,
@@ -477,21 +478,13 @@ def rendezvous_shard_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.crossJoin(F.broadcast(shards)).select(
         "doc_id",
         "shard",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("doc_id").cast("string"),
-                        F.col("shard").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long").alias("wt"),
+        md5_h15(
+            F.concat_ws(
+                ":",
+                F.col("doc_id").cast("string"),
+                F.col("shard").cast("string"),
+            )
+        ).alias("wt"),
     ).persist()
 
     def argmax(rel, out):

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_log_watcher_spark.functions.exact import dec
+from kinesis_log_watcher_spark.operators.dedup import md5_h15
 from kinesis_log_watcher_spark.queries.base import load, register
 
 # --------------------------------------------------------------------------
@@ -646,7 +647,7 @@ def orders_daily_content_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sent(cents),
         sent(F.col("o_orderpriority")),
     )
-    fp = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    fp = md5_h15(canon)
     return (
         orders.select("o_orderdate", fp.alias("row_fp"))
         .groupBy("o_orderdate")

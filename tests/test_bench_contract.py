@@ -53,6 +53,26 @@ def test_no_match_only_exits_before_jvm():
     assert "no registered queries match" in (out.stderr + out.stdout)
 
 
+def test_only_times_named_skipped_queries_and_refuses_unknown_names():
+    from kinesis_log_watcher_spark.queries import registry
+
+    reg = registry()
+    skipped = sorted(bench.SKIP)[:2]
+    assert set(skipped) <= set(reg)
+    # a SKIP member named in --only is timed, not silently dropped
+    got = bench.timed_names(reg, ",".join(["pricing_summary", *skipped]))
+    assert sorted(got) == sorted(["pricing_summary", *skipped])
+    assert not set(bench.SKIP) & set(bench.timed_names(reg, ""))
+    # an unregistered name next to registered ones still fails the run,
+    # before the JVM starts, and the message names it
+    out = subprocess.run(
+        [sys.executable, "bench.py", "--only", f"pricing_summary,{skipped[0]}x"],
+        capture_output=True, text=True, timeout=120, cwd=REPO,
+    )
+    assert out.returncode != 0
+    assert f"{skipped[0]}x" in (out.stderr + out.stdout)
+
+
 def test_archive_routing():
     # only an explicit --commit full run may touch the committed file
     assert bench.archive_name(False, True) == "BENCH_FULL_LOCAL.json"

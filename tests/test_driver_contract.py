@@ -144,3 +144,38 @@ def test_readers_own_session_confs_and_ts_normalization():
         )
     ]
     assert not callers, callers
+
+
+def test_render_kernel_json_parses_are_guarded():
+    # Spark's JSON functions fail a non-object payload by throwing per
+    # row; the render kernel reaches them only through the guarded
+    # helpers in envelope.py, which skip the parse when the first
+    # non-whitespace character cannot open the value. A bare call is a
+    # parse site that brings the exception path back.
+    import ast
+    from pathlib import Path
+
+    import kinesis_log_watcher_spark as pkg
+
+    parses = {"from_json", "json_object_keys", "json_array_length"}
+    helpers = {"guarded_from_json", "guarded_object_keys", "guarded_array_length"}
+    root = Path(pkg.__file__).parent
+    bare = []
+    for name in ("template.py", "envelope.py"):
+        tree = ast.parse((root / name).read_text())
+        allowed = set()
+        if name == "envelope.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name in helpers:
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        bare += [
+            f"{name}:{node.lineno} F.{node.func.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in parses
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+            and id(node) not in allowed
+        ]
+    assert not bare, bare

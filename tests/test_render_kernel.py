@@ -17,7 +17,13 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis_log_watcher_spark.envelope import RAW_KINESIS_SCHEMA, with_envelope
+from kinesis_log_watcher_spark.envelope import (
+    RAW_KINESIS_SCHEMA,
+    guarded_array_length,
+    guarded_from_json,
+    guarded_object_keys,
+    with_envelope,
+)
 from kinesis_log_watcher_spark.functions.strftime import (
     go_default_render_col,
     go_layout_col,
@@ -145,6 +151,98 @@ def test_non_object_and_malformed_payloads(spark, tmp_path):
         8: f"[{NO_VALUE}]",
         9: '[{"b":[1,2]}]',
     }
+
+
+# Payloads at the edge of the first-character guard (envelope.json_opens)
+# with what Go renders for "[{{.Log.level}}]": its decoder skips JSON's
+# four whitespace characters before a value and rejects anything else.
+_GUARD_EDGES = [
+    (b' {"level":1}', "[1]"),
+    (b'\n\t\r {"level":1}', "[1]"),
+    (b'{"level":1}\n', "[1]"),
+    (b'\x0b{"level":1}', ERR),          # vertical tab: not JSON whitespace
+    (b'\xef\xbb\xbf{"level":1}', ERR),  # UTF-8 byte-order mark
+    (b'\x00{"level":1}', ERR),
+    (b'\xc2\xa0{"level":1}', ERR),      # no-break space
+    (b'\xff{"level":1}', ERR),          # invalid UTF-8
+    (b'/*c*/{"level":1}', ERR),         # comments are not JSON
+    (b'[{"level":1}]', ERR),
+    (b" [1, 2]", ERR),
+    (b'"  "', ERR),
+    (b"{", ERR),
+    (b" \t", ERR),
+    (b"", ERR),
+]
+
+
+def test_guard_edge_payloads_parse_as_unguarded(spark, tmp_path):
+    rows = [(TS, p) for p, _ in _GUARD_EDGES]
+    got = _render_three_ways(spark, tmp_path, "[{{.Log.level}}]", rows)
+    assert got == {i: want for i, (_, want) in enumerate(_GUARD_EDGES)}
+
+    # Row by row, every guarded parse equals the bare Spark function.
+    # The struct parse is compared where it is an object: elsewhere the
+    # unguarded parse sets the corrupt-record field, the guarded one is
+    # NULL, and both mean "Log is not an object".
+    s = F.col("LogEntry")
+    schema = "level string, `#bad` string"
+    opts = {"columnNameOfCorruptRecord": "#bad"}
+
+    def as_object(parsed):
+        return F.when(parsed.isNotNull() & parsed["#bad"].isNull(), parsed)
+
+    pairs = {
+        "struct": (as_object(guarded_from_json(s, schema, opts)),
+                   as_object(F.from_json(s, schema, opts))),
+        "array": (guarded_from_json(s, "array<string>"),
+                  F.from_json(s, "array<string>")),
+        "map": (guarded_from_json(s, "map<string,string>"),
+                F.from_json(s, "map<string,string>")),
+        "keys": (guarded_object_keys(s), F.json_object_keys(s)),
+        "length": (guarded_array_length(s), F.json_array_length(s)),
+    }
+    env = with_envelope(_raw(spark, rows))
+    out = env.select(
+        *[F.to_json(F.struct(g.alias("v"))).alias(f"{k}_g") for k, (g, _) in pairs.items()],
+        *[F.to_json(F.struct(u.alias("v"))).alias(f"{k}_u") for k, (_, u) in pairs.items()],
+    ).collect()
+    for r in out:
+        for k in pairs:
+            assert r[f"{k}_g"] == r[f"{k}_u"], (k, r)
+
+
+def test_guarded_range_slice_and_len(spark, tmp_path):
+    # Each target as an object, an array and a scalar, with and without
+    # whitespace before the payload and before the value itself.
+    rows = [
+        (TS, b'{"xs": {"b": 2, "a": 1, "c": 3}}'),
+        (TS, b' {"xs":\n {"b": 2, "a": 1, "c": 3}}'),
+        (TS, b'{"xs": [3, 1, 2]}'),
+        (TS, b'\r\n{"xs": \t[3, 1, 2]}'),
+        (TS, b'{"xs": 5}'),
+        (TS, b'\t{"xs":  5}'),
+    ]
+    ranged = _render_three_ways(
+        spark, tmp_path / "range", "{{range .Log.xs}}<{{.}}>{{end}}", rows
+    )
+    assert ranged == {0: "<1><2><3>", 1: "<1><2><3>", 2: "<3><1><2>",
+                      3: "<3><1><2>", 4: ERR, 5: ERR}
+    # {{range .Log}} ranges over the payload text itself, leading
+    # whitespace included
+    whole = _render_three_ways(
+        spark, tmp_path / "whole", "{{range .Log}}<{{.}}>{{end}}",
+        [(TS, b'\n {"b": 2, "a": 1}'), (TS, b'{"b": 2, "a": 1}'), (TS, b" [1]")],
+    )
+    assert whole == {0: "<1><2>", 1: "<1><2>", 2: ERR}
+    sliced = _render_three_ways(
+        spark, tmp_path / "slice", "{{range slice .Log.xs 1}}[{{.}}]{{end}}", rows
+    )
+    assert sliced == {0: ERR, 1: ERR, 2: "[1][2]", 3: "[1][2]", 4: ERR, 5: ERR}
+    lens = _render_three_ways(
+        spark, tmp_path / "len", "{{len .Log.xs}}",
+        rows[:4] + [(TS, b' {"xs": "abcd"}')],
+    )
+    assert lens == {0: "3", 1: "3", 2: "3", 3: "3", 4: "4"}
 
 
 def test_whole_log_and_nested_access_keep_semantics(spark, tmp_path):
