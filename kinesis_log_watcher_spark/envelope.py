@@ -26,8 +26,6 @@ template.py for the access semantics.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -79,11 +77,18 @@ def short_host_id(partition_key: Column) -> Column:
     """Derive ShortHostId (reference main.go:252-262).
 
     Last ':'-segment of the partition key, then strip a leading ``task/``
-    (ECS task ARN) or ``instance/`` (EC2 instance ARN) path prefix.
-    Pure built-ins: substring_index + regexp_replace (no per-row array).
+    (ECS task ARN) or ``instance/`` (EC2 instance ARN) path prefix, once.
+    Every step works on the UTF-8 bytes (``substring_index``,
+    ``startswith``, and a ``substring`` past an ASCII prefix), with no
+    regex and no decode to a Java String per row; like Go's string
+    functions, it keeps invalid UTF-8 bytes as they are.
     """
     last_segment = F.substring_index(partition_key, ":", -1)
-    return F.regexp_replace(last_segment, r"^(task/|instance/)", "")
+    return (
+        F.when(last_segment.startswith("task/"), F.substr(last_segment, F.lit(6)))
+        .when(last_segment.startswith("instance/"), F.substr(last_segment, F.lit(10)))
+        .otherwise(last_segment)
+    )
 
 
 def envelope_columns(
@@ -118,7 +123,7 @@ def with_envelope(raw: DataFrame, keep: list[str] | None = None) -> DataFrame:
 
 
 # JSON's four insignificant whitespace characters (RFC 8259 section 2).
-_JSON_WS = "[ \t\n\r]*"
+_JSON_WS = " \t\n\r"
 
 
 def json_opens(s: Column, opener: str) -> Column:
@@ -132,8 +137,12 @@ def json_opens(s: Column, opener: str) -> Column:
     JSON functions report a bad record by throwing and catching an
     exception per row, and log streams carry many non-object lines (see
     ``template._hoisted_payload`` for the measured cost).
+
+    ``ltrim`` + ``startswith`` compare UTF-8 bytes, with no regex and no
+    decode to a Java String per row. The opener and the whitespace are
+    ASCII, so no invalid or multibyte sequence can pass for either.
     """
-    return F.regexp_like(s, F.lit("^" + _JSON_WS + re.escape(opener)))
+    return F.ltrim(s, F.lit(_JSON_WS)).startswith(opener)
 
 
 def guarded_from_json(

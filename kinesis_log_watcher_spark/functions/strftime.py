@@ -130,8 +130,8 @@ def strftime_col(fmt: str, ts: Column) -> Column:
 def trimmed_fraction_col(ts: Column, digits: int = 6) -> Column:
     """``.SSSSSS`` with trailing zeros removed; empty string if zero.
 
-    Matches Go's ``.999…`` layout / default time.Time rendering, which
-    trims trailing fractional zeros (and the dot when the fraction is 0).
+    Matches Go's ``.999…`` layouts, which trim trailing fractional zeros
+    (and the dot when the fraction is 0).
     Built from the integer micros of the instant (``pmod`` keeps
     pre-1970 fractions positive, as the seconds ``date_format`` renders
     are floored) — no extra ``date_format`` or regex per row, and the
@@ -166,14 +166,25 @@ def go_default_render_col(ts: Column) -> Column:
     """Go's default ``%v`` rendering of time.Time:
     ``2006-01-02 15:04:05.999999999 +0000 UTC`` in the session time zone
     — used when a template says ``{{.Timestamp}}`` with no format (the
-    reference's default template does exactly this, main.go:65). Two
-    ``date_format`` calls: the seconds, then offset and zone name.
+    reference's default template does exactly this, main.go:65).
+
+    Spark's timestamp-to-string cast already prints
+    ``yyyy-MM-dd HH:mm:ss`` with trailing fractional zeros (and the dot)
+    trimmed, which is Go's ``.999999999``. The zone test formats a
+    constant instant's zone ID, which the optimizer folds, and the CASE
+    with it: under UTC (``session.get_spark`` / ``ensure_session_confs``)
+    the zone is a literal and the row pays one formatter call; any other
+    zone keeps the ``date_format`` of offset and zone name. Like the
+    cast, a ``date_format`` takes the session zone when the DataFrame is
+    analyzed; ``current_timezone()`` would read it when the plan is
+    optimized, and label a plan built in another zone and run after a
+    switch to UTC as UTC.
     """
-    return F.concat(
-        F.date_format(ts, "yyyy-MM-dd HH:mm:ss"),
-        trimmed_fraction_col(ts),
-        F.date_format(ts, " Z zzz"),
+    session_zone = F.date_format(F.timestamp_micros(F.lit(0)), "VV")
+    zone = F.when(session_zone == "UTC", F.lit(" +0000 UTC")).otherwise(
+        F.date_format(ts, " Z zzz")
     )
+    return F.concat(ts.cast("string"), zone)
 
 
 def go_default_render(dt) -> str:

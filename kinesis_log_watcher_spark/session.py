@@ -32,6 +32,10 @@ CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+# PySpark's DataFrame-debugging call-site capture; get_spark's docstring
+# says why it is off.
+DATAFRAME_DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
 
 def ensure_session_confs(spark: SparkSession) -> None:
     """Defensively apply the runtime-settable confs the engine's semantics
@@ -88,6 +92,12 @@ def get_spark(
     (``chmod`` only) with this manager. Its writes are a temp file plus
     ``rename``, which is atomic on the local filesystem and on HDFS for
     the non-overwriting writes the metadata logs make.
+
+    PySpark's DataFrame-debugging call-site capture is off. On, every
+    Column method and ``F.col`` runs ``inspect.stack()`` and ~8 extra
+    py4j round trips to record where it was called from, which only
+    error messages read; template compilation and query building pay it
+    once per expression node.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -137,6 +147,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
+        .config(DATAFRAME_DEBUGGING_CONF, "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

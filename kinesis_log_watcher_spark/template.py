@@ -99,6 +99,16 @@ Documented divergences (all on contrived payloads, none load-bearing):
   ``string`` / ``get_json_object``), so a JSON string ``"false"``/``"0"``
   is indistinguishable from boolean false / number 0 for truthiness and
   ``eq``.
+- for the same reason, a JSON *string* leaf whose text spells JSON acts
+  as the value it spells: on ``{"s": "[1,2,3]", "o": "{\\"a\\":1}"}``,
+  ``{{len .Log.s}}`` is 3 (Go: 7, the string's bytes),
+  ``{{range .Log.s}}`` ranges over 1, 2, 3 and ``{{.Log.o.a}}`` is 1
+  (Go: both exec errors).
+- a JSON number renders as Jackson spells the parsed value, not as Go's
+  float64 ``%v``: ``1.0``, ``1e-7``, ``1e20``, ``1e3``, ``-0.0`` and
+  ``100000000000000000000`` render ``1.0``, ``1.0E-7``, ``1.0E20``,
+  ``1000.0``, ``-0.0`` and ``100000000000000000000`` (Go: ``1``,
+  ``1e-07``, ``1e+20``, ``1000``, ``-0``, ``1e+20``).
 - duplicate keys BELOW the top level (``.Log.a.b``), and under
   ``{{range .Log…}}``, resolve to the FIRST value (``get_json_object`` /
   map parse); Go keeps the last.
@@ -110,10 +120,13 @@ Documented divergences (all on contrived payloads, none load-bearing):
   render error (Go renders a ``%!d(...)`` marker instead).
 
 Everything is built-ins (``concat``, ``from_json``, ``get_json_object``,
-``json_object_keys``, ``regexp_like``, ``date_format``,
-``format_string``): the whole render — control flow included, compiled
-to ``CASE WHEN`` — is a codegen'd narrow projection. No Python in the
-per-row path, no shuffle, linear scale-out with input partitions.
+``json_object_keys``, ``startswith``, a timestamp-to-string cast,
+``date_format``, ``format_string``): the whole render — control flow
+included, compiled to ``CASE WHEN`` — is a codegen'd narrow projection.
+No Python in the per-row path, no shuffle, linear scale-out with input
+partitions. The envelope and ``{{.Timestamp}}`` cost no regex and, in a
+UTC session, no ``date_format`` per row (``envelope.short_host_id``,
+``envelope.json_opens``, ``functions.strftime.go_default_render_col``).
 """
 
 from __future__ import annotations

@@ -3,10 +3,12 @@
 agree on every line and on which rows are render errors.
 
 The kernel parses ``.Log`` once per row into a struct of the top-level
-keys the template reads, renders ``.Timestamp`` from two
-``date_format`` calls plus the integer-micros fraction, and derives
-ShortHostId with ``substring_index``; these cases pin its behaviour on
-the inputs where those choices could diverge from the reference.
+keys the template reads, behind a byte-level first-character guard,
+renders ``.Timestamp`` as a timestamp-to-string cast plus a zone that
+is a literal in a UTC session, and derives ShortHostId with
+``substring_index`` and ``startswith``; these cases pin its behaviour
+on the inputs where those choices could diverge from the reference or
+from the regex and ``date_format`` forms they replaced.
 """
 
 from __future__ import annotations
@@ -22,12 +24,15 @@ from kinesis_log_watcher_spark.envelope import (
     guarded_array_length,
     guarded_from_json,
     guarded_object_keys,
+    json_opens,
+    short_host_id,
     with_envelope,
 )
 from kinesis_log_watcher_spark.functions.strftime import (
     go_default_render_col,
     go_layout_col,
     rfc3339nano_col,
+    trimmed_fraction_col,
 )
 from kinesis_log_watcher_spark.sources.files import read_raw_records_stream
 from kinesis_log_watcher_spark.template import NO_VALUE, compile_template
@@ -258,6 +263,28 @@ def test_whole_log_and_nested_access_keep_semantics(spark, tmp_path):
     assert got == {0: "7|obj", 1: ERR, 2: ERR, 3: ERR}
 
 
+def test_string_leaf_and_number_divergences_pinned(spark, tmp_path):
+    """Two documented divergences from Go (template.py's list), pinned as
+    they render today. A JSON string that spells JSON acts as the value
+    it spells (Go: ``len`` is the string's bytes, 7; range and field
+    access on a string are exec errors). A JSON number renders as
+    Jackson spells it (Go's float64 ``%v``: 1|1e-07|1e+20|1000|-0|1e+20)."""
+    leaf = [(TS, b'{"s": "[1,2,3]", "o": "{\\"a\\":1}"}')]
+    assert _render_three_ways(
+        spark, tmp_path / "leaf",
+        "{{len .Log.s}}|{{range .Log.s}}<{{.}}>{{end}}|{{.Log.o.a}}", leaf,
+    ) == {0: "3|<1><2><3>|1"}
+    numbers = [
+        (TS, b'{"a":1.0,"c":1e-7,"d":1e20,"e":1e3,"f":-0.0,'
+             b'"g":100000000000000000000}'),
+    ]
+    assert _render_three_ways(
+        spark, tmp_path / "numbers",
+        "{{.Log.a}}|{{.Log.c}}|{{.Log.d}}|{{.Log.e}}|{{.Log.f}}|{{.Log.g}}",
+        numbers,
+    ) == {0: "1.0|1.0E-7|1.0E20|1000.0|-0.0|100000000000000000000"}
+
+
 def test_null_and_pre_1970_timestamps(spark, tmp_path):
     got = _render_three_ways(
         spark, tmp_path, "{{.Timestamp}}",
@@ -320,6 +347,16 @@ def _old_go_default_render(ts):
     )
 
 
+def _two_format_go_default_render(ts):
+    """``{{.Timestamp}}`` as rendered before the string cast: two
+    ``date_format`` calls around the integer-micros fraction."""
+    return F.concat(
+        F.date_format(ts, "yyyy-MM-dd HH:mm:ss"),
+        trimmed_fraction_col(ts),
+        F.date_format(ts, " Z zzz"),
+    )
+
+
 _ZONE_CASES = [
     datetime(2024, 3, 10, 9, 59, 59, 999999, tzinfo=timezone.utc),  # before DST
     datetime(2024, 3, 10, 10, 0, 0, 1, tzinfo=timezone.utc),        # after DST
@@ -335,7 +372,8 @@ _ZONE_CASES = [
 )
 def test_timestamp_render_in_non_utc_session(spark, tmp_path, zone):
     """The zone part follows the session time zone, and every render
-    equals the pre-kernel formula (4 date_formats + regex + CASE)."""
+    equals the pre-kernel formula (4 date_formats + regex + CASE) and
+    the two-``date_format`` formula."""
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", zone)
     try:
@@ -346,6 +384,7 @@ def test_timestamp_render_in_non_utc_session(spark, tmp_path, zone):
             "SequenceNumber",
             go_default_render_col(ts).alias("new"),
             _old_go_default_render(ts).alias("old"),
+            _two_format_go_default_render(ts).alias("two_format"),
             rfc3339nano_col(ts).alias("rfc_new"),
             F.concat(
                 F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"),
@@ -360,12 +399,184 @@ def test_timestamp_render_in_non_utc_session(spark, tmp_path, zone):
         ).collect()
         for r in pairs:
             assert (r.new, r.rfc_new, r.layout_new) == (r.old, r.rfc_old, r.layout_old)
+            assert r.new == r.two_format
         got = _render_three_ways(spark, tmp_path, "{{.Timestamp}}", rows)
         assert got == {int(r.SequenceNumber): r.old for r in pairs}
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
     if zone == "America/Los_Angeles":
         assert got[0].endswith(" -0800 PST") and got[1].endswith(" -0700 PDT")
+
+
+# Instants at the edges of the cast's and date_format's year range,
+# as epoch micros: Python datetimes stop at years 1 and 9999.
+_EDGE_MICROS = [
+    -62135596799500000,  # 0001-01-01 00:00:00.5 UTC
+    -30610224000999999,  # 0999-12-31 23:59:59.000001
+    -12219724800000000,  # 1582-10-10, inside the Julian-Gregorian gap
+    253402300799999999,  # 9999-12-31 23:59:59.999999
+    253402300800000000,  # +10000-01-01
+    -62198755200000000,  # -0001-01-01
+    -750000,             # 1969-12-31 23:59:59.25
+    None,
+]
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+def test_timestamp_render_edges_match_old_formulas(spark, zone):
+    """The cast-based render equals both earlier formulas at the year
+    edges, in UTC (the zone a literal) and in a zone with an LMT offset
+    (the zone a date_format)."""
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        ts = F.timestamp_micros("us")
+        rows = (
+            spark.createDataFrame([(us,) for us in _EDGE_MICROS], "us long")
+            .select(
+                "us",
+                go_default_render_col(ts).alias("new"),
+                _two_format_go_default_render(ts).alias("two_format"),
+                _old_go_default_render(ts).alias("old"),
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    got = {r.us: r.new for r in rows}
+    for r in rows:
+        assert r.new == r.two_format == r.old, r
+    assert got[None] is None
+    if zone == "UTC":
+        assert got[253402300800000000] == "+10000-01-01 00:00:00 +0000 UTC"
+        assert got[-62198755200000000] == "-0001-01-01 00:00:00 +0000 UTC"
+        assert got[-62135596799500000] == "0001-01-01 00:00:00.5 +0000 UTC"
+    else:
+        assert got[-62135596799500000] == "0000-12-31 16:07:02.5 -0752 PST"
+
+
+def test_timestamp_zone_is_fixed_when_the_plan_is_built(spark):
+    """The zone label and the wall-clock text take the session zone at
+    the same moment, so a render built in one zone and run after a
+    switch to the other stays self-consistent in the zone it was built
+    in (as ``ensure_session_confs`` switches a bare session to UTC)."""
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    ts = F.timestamp_micros(F.lit(1714564800123456))
+    try:
+        for built, run, want in [
+            ("America/Los_Angeles", "UTC", "2024-05-01 05:00:00.123456 -0700 PDT"),
+            ("UTC", "America/Los_Angeles", "2024-05-01 12:00:00.123456 +0000 UTC"),
+        ]:
+            spark.conf.set("spark.sql.session.timeZone", built)
+            df = spark.range(1).select(go_default_render_col(ts).alias("r"))
+            spark.conf.set("spark.sql.session.timeZone", run)
+            assert df.collect()[0].r == want, (built, run)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+# The render_batch benchmark's template (perfbench/reference.py).
+_KERNEL_TEMPLATE = "{{.ShortHostId}} {{.Timestamp}} {{.Log.level}} {{.Log.latency_ms}}"
+
+
+def _optimized_plan(spark, zone):
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        env = with_envelope(_raw(spark, [(TS, b'{"level": "x"}')]))
+        df = compile_template(_KERNEL_TEMPLATE).apply_with_errors(env)
+        return df._jdf.queryExecution().optimizedPlan().toString().lower()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_utc_render_plan_has_no_regex_or_date_format(spark):
+    """In a UTC session the envelope, the guarded payload parse and
+    ``{{.Timestamp}}`` reach the optimized plan with no regex and no
+    ``date_format``; another zone keeps the zone's ``date_format``."""
+    utc = _optimized_plan(spark, "UTC")
+    for name in ("date_format", "rlike", "regexp"):
+        assert name not in utc, name
+    assert "+0000 utc" in utc
+    assert "date_format" in _optimized_plan(spark, "America/Los_Angeles")
+
+
+# Partition keys and payloads for the byte-level forms: NULL, empty,
+# bare prefixes, a doubled prefix, a prefix that is not a prefix,
+# multibyte text and invalid UTF-8 (a lone 0xFF, a truncated sequence).
+_BYTE_EDGES = [
+    None, b"", b"task/", b"instance/", b"task/task/x", b"x:task",
+    b"x:instance/", b"TASK/x", b" task/x", b"a:b:task/\xc3\xa9t\xc3\xa9",
+    b"\xff:task/x", b"task/\xff\xfe", b"task/\xe2\x82", b"\xffx",
+    b"{", b" \t\n\r{", b"\t[", b"\xff{", b"\xc2\xa0{", b"\x0b{",
+    b"\x00[", b"  \xe2\x82", b"\xe2\x82{", b"\xef\xbb\xbf{",
+]
+
+
+def test_short_host_id_and_json_guard_match_regex_forms(spark):
+    """``short_host_id`` (``startswith`` + ``substr``) and ``json_opens``
+    (``ltrim`` + ``startswith``) against the regex forms they replaced,
+    row by row. The guards agree everywhere. The host paths agree on
+    valid UTF-8; on invalid UTF-8 the regex decoded the whole string to
+    a Java String and wrote each invalid sequence back as U+FFFD, while
+    the byte-level path keeps the bytes, as Go's string functions do."""
+    s = F.col("s")
+    regex_host = F.regexp_replace(
+        F.substring_index(s, ":", -1), r"^(task/|instance/)", ""
+    )
+    out = (
+        spark.createDataFrame(
+            [(None if v is None else bytearray(v),) for v in _BYTE_EDGES], "b binary"
+        )
+        .select(F.col("b"), F.col("b").cast("string").alias("s"))
+        .select(
+            "b",
+            short_host_id(s).cast("binary").alias("host"),
+            regex_host.cast("binary").alias("host_rx"),
+            json_opens(s, "{").alias("obj"),
+            F.regexp_like(s, F.lit(r"^[ \t\n\r]*\{")).alias("obj_rx"),
+            json_opens(s, "[").alias("arr"),
+            F.regexp_like(s, F.lit(r"^[ \t\n\r]*\[")).alias("arr_rx"),
+        )
+        .collect()
+    )
+    got = {None if r.b is None else bytes(r.b): r for r in out}
+    for raw, r in got.items():
+        assert (r.obj, r.arr) == (r.obj_rx, r.arr_rx), raw
+        last = None if raw is None else raw.rsplit(b":", 1)[-1]
+        if last is None or _is_utf8(last):
+            assert r.host == r.host_rx, raw
+        else:
+            # the regex form replaced the invalid bytes; the byte path
+            # keeps them and strips exactly what it strips on valid text
+            assert "\ufffd" in bytes(r.host_rx).decode(), raw
+            for prefix in (b"task/", b"instance/"):
+                if last.startswith(prefix):
+                    last = last[len(prefix):]
+                    break
+            assert bytes(r.host) == last, raw
+
+    def host(v):
+        h = got[v].host
+        return None if h is None else bytes(h)
+
+    assert host(None) is None
+    assert [host(v) for v in (b"", b"task/", b"instance/", b"x:instance/")] == [b""] * 4
+    assert host(b"task/task/x") == b"task/x"
+    assert host(b"x:task") == b"task"
+    assert host(b"a:b:task/\xc3\xa9t\xc3\xa9") == "été".encode()
+    assert host(b"task/\xff\xfe") == b"\xff\xfe"
+    assert [v for v, r in got.items() if r.obj] == [b"{", b" \t\n\r{"]
+    assert [v for v, r in got.items() if r.arr] == [b"\t["]
+    assert got[None].obj is None
+
+
+def _is_utf8(raw):
+    try:
+        raw.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    return True
 
 
 def test_short_host_id_via_substring_index(spark, tmp_path):

@@ -105,6 +105,14 @@ def test_streaming_one_shot_matches_batch(spark, tmp_path):
     assert sorted(got) == sorted(batch_lines)
 
 
+def test_get_spark_turns_off_dataframe_debugging(spark):
+    """Call-site capture costs ~8 py4j trips per Column method; get_spark
+    turns it off (it only changes error-message call sites)."""
+    from kinesis_log_watcher_spark.session import DATAFRAME_DEBUGGING_CONF
+
+    assert spark.conf.get(DATAFRAME_DEBUGGING_CONF) == "false"
+
+
 def test_streaming_resume_from_checkpoint(spark, tmp_path):
     """W4 done right: a restart re-reads nothing it already emitted and
     emits exactly the records that arrived while it was down, once each
