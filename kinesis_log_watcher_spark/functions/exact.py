@@ -40,7 +40,3 @@ def dsum(c: Column, prec: int = 12, scale: int = 2) -> Column:
 def davg(c: Column, prec: int = 12, scale: int = 2) -> Column:
     """Deterministic mean: exact sum / count, one double division."""
     return dsum(c, prec, scale) / F.count(c)
-
-
-def sql_dsum(expr: str, prec: int = 12, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"

@@ -525,8 +525,7 @@ _SN_JMILLI = 500  # report pairs at Jaccard >= 0.5
 def sorted_neighborhood_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_watcher_spark.operators.dedup import exploded_shingles
 
-    # spread=True: interleaved A/B r12, 0.89 (2.1 -> 1.9s) at sf0.1.
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     sh = exploded_shingles(docs, n=3)
     h60 = md5_h15(F.col("shingle"))
     key = sh.groupBy("doc_id").agg(

@@ -48,10 +48,6 @@ SURVEY.md §2.2 "beyond-reference" engine surface.
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -566,7 +562,6 @@ def template_render_line_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-shard LOCAL sequence extents) pins closure, rerouting, and child
 # re-sequencing all at once.
 
-_SPLIT_COUNTER = itertools.count()
 _SP_SHARDS = 4
 _SP_PER_SHARD = 250
 _SP_SHARD = 1
@@ -673,34 +668,26 @@ def kinesis_sim_shard_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kinesis_sim_split_resume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.sources.files import await_or_raise
+    from kinesis_log_watcher_spark.sources.files import drain_replay
+    from kinesis_log_watcher_spark.staging import scratch_dir
 
-    run = next(_SPLIT_COUNTER)
-    base = tempfile.mkdtemp(prefix=f"klw_split_resume_{run}_")
+    base = scratch_dir(prefix="klw_split_resume_")
     out, ck = f"{base}/out", f"{base}/ck"
 
     def consume(**extra: str) -> None:
         raw = _split_reader(spark, streaming=True, **extra)
-        q = (
+        drain_replay(
             raw.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q)
 
     # Phase 1: the stream has only produced up to parent seq 60 —
     # strictly pre-split, so the checkpoint knows nothing of shards 4/5.
     consume(maxVisibleSeq="60", maxRecordsPerPull="40")
     # Phase 2: the split has happened; resume from the same checkpoint.
     consume(maxRecordsPerPull="40")
-    # Materialize the (18-row) rollup locally and remove the scratch
-    # sink+checkpoint so repeated sweeps don't accumulate tmp dirs.
-    result = _split_rollup(spark.read.parquet(out))
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, result.schema)
+    return _split_rollup(spark.read.parquet(out))
 
 
 # ---------------------------------------------------------------------------
@@ -1513,14 +1500,14 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kinesis_sim_merge_resume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from kinesis_log_watcher_spark.sources.files import await_or_raise
+    from kinesis_log_watcher_spark.sources.files import drain_replay
     from kinesis_log_watcher_spark.sources.kinesis_sim import (
         register_sim_source,
     )
+    from kinesis_log_watcher_spark.staging import scratch_dir
 
     register_sim_source(spark)
-    run = next(_SPLIT_COUNTER)
-    base = tempfile.mkdtemp(prefix=f"klw_merge_resume_{run}_")
+    base = scratch_dir(prefix="klw_merge_resume_")
     out, ck = f"{base}/out", f"{base}/ck"
 
     def consume(**extra: str) -> None:
@@ -1534,22 +1521,16 @@ def stream_kinesis_sim_merge_resume(
         )
         for k, v in extra.items():
             rd = rd.option(k, v)
-        q = (
+        drain_replay(
             rd.load()
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q)
 
     consume(maxVisibleSeq="60")  # strictly pre-merge snapshot
     consume()  # post-merge world: resume across the double closure
-    result = _split_rollup(spark.read.parquet(out))
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, result.schema)
+    return _split_rollup(spark.read.parquet(out))
 
 
 # ---------------------------------------------------------------------------

@@ -397,6 +397,7 @@ def _cdc_change_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "o_orderpriority",
         F.col("price").cast("decimal(14,3)").alias("price"),
         F.lit(0).alias("version"),
+        F.lit(0).alias("part"),
     )
     v1 = orders.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey",
@@ -405,11 +406,14 @@ def _cdc_change_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .cast("decimal(14,3)")
         .alias("price"),
         F.lit(1).alias("version"),
+        F.lit(1).alias("part"),
     )
 
     from kinesis_log_watcher_spark.sources.files import stage_replay_files
 
-    changes = stage_replay_files([v0, v1], prefix="cdc_changes_")
+    changes = stage_replay_files(
+        v0.unionByName(v1), "part", 2, prefix="cdc_changes_"
+    )
     root = scratch_dir(prefix="cdc_target_")
     return changes, root
 

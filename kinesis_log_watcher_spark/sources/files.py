@@ -14,17 +14,18 @@ reads the testdata correctly, and they normalize the ``ts`` layouts
 (``functions/tscompat.normalize_ts_cols``), so every caller sees
 session-zone ``TimestampType``. Callers neither set confs nor normalize.
 
-:func:`stage_replay_files` is the one stager: each part becomes one
-mtime-ordered file, so a ``maxFilesPerTrigger=1`` replay runs one
-micro-batch per part, in order.
+:func:`stage_replay_files` is the one stager: one partitioned write
+turns each value of a part column into one mtime-ordered file, so a
+``maxFilesPerTrigger=1`` replay runs one micro-batch per part, in order.
 
-:func:`run_replay` is the one bounded-replay entry point: every
-memory-sink streaming operator is a declarative query handed to it,
-and it owns the trigger (AvailableNow), the sink, the query naming,
-the replay partition scope and the timeout. The timeout is one constant,
-``REPLAY_TIMEOUT_S``, shared with the replays that keep their own sink:
-a bounded replay that runs out of it is hung, so there is nothing for a
-caller to tune.
+:func:`drain_replay` is the one place a bounded replay starts: it owns
+the trigger (AvailableNow), the replay partition scope and the timeout,
+for every sink (memory, ``foreachBatch``, parquet). :func:`run_replay`
+is its memory-sink caller: every memory-sink streaming operator is a
+declarative query handed to it, and it adds the sink and the query
+naming. The timeout is one constant, ``REPLAY_TIMEOUT_S``: a bounded
+replay that runs out of it is hung, so there is nothing for a caller to
+tune.
 """
 
 from __future__ import annotations
@@ -202,9 +203,8 @@ def replay_partitions(spark, n: int | None = None):
     start, so restoring after the replay cannot affect the running
     query.)
 
-    :func:`run_replay`, the one bounded-replay entry point, opens this
-    scope for every memory-sink replay; the two foreachBatch replays
-    (streaming/cdc.py, streaming/annindex.py) open it themselves.
+    :func:`drain_replay`, where every bounded replay starts, opens this
+    scope; no caller opens it itself.
 
     ``n`` defaults to 4 (a 2-vs-4-vs-8 sweep over twelve JVM-stateful
     replays at sf0.1 put 4 first or tied-first on ten of them, e.g.
@@ -274,12 +274,23 @@ def await_or_raise(query) -> None:
         )
 
 
+def drain_replay(writer, partitions: int | None = None) -> None:
+    """Run the bounded streaming query that the ``DataStreamWriter``
+    ``writer`` describes (sink, checkpoint and name already set) to its
+    end: Trigger.AvailableNow (the reference's -O one-shot,
+    main.go:89-92), started inside :func:`replay_partitions` with
+    ``partitions``, and awaited by :func:`await_or_raise`. Every bounded
+    replay in the package starts here, whatever its sink."""
+    with replay_partitions(writer._spark, partitions):
+        await_or_raise(writer.trigger(availableNow=True).start())
+
+
 def run_replay(
     df: DataFrame, mode: str, name: str, partitions: int | None = None
 ) -> DataFrame:
-    """Drain the bounded streaming query ``df`` once (Trigger.AvailableNow,
-    the reference's -O one-shot, main.go:89-92) into a memory sink in
-    ``mode`` ("append"/"complete") and return the sink as a static table.
+    """Drain the bounded streaming query ``df`` once (:func:`drain_replay`)
+    into a memory sink in ``mode`` ("append"/"complete"/"update") and
+    return the sink as a static table.
 
     The sink is named ``{name}_{n}`` with ``n`` from one process-wide
     counter, so concurrent replays of the same operator never share a
@@ -288,18 +299,12 @@ def run_replay(
     Raises ``TimeoutError`` (after stopping the query) if the replay
     does not finish within ``REPLAY_TIMEOUT_S``. Test-scale plumbing:
     production streams are unbounded and never land in a memory sink."""
-    spark = df.sparkSession
     table = f"{name}_{next(_REPLAY_IDS)}"
-    with replay_partitions(spark, partitions):
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(table)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
-    return spark.table(table)
+    drain_replay(
+        df.writeStream.outputMode(mode).format("memory").queryName(table),
+        partitions,
+    )
+    return df.sparkSession.table(table)
 
 
 def morton_code(a, b, bits: int = 16):
@@ -348,38 +353,50 @@ def zorder_write(
     return spark.read.parquet(dest_dir)
 
 
-def stage_replay_files(parts, prefix: str = "replay_") -> str:
-    """Write each DataFrame in ``parts`` as ONE parquet file in a fresh
-    replay directory, named ``f{i}.parquet`` and mtime-ordered by
-    position, so a ``maxFilesPerTrigger=1`` replay consumes them as one
-    micro-batch each, in exactly this order. An empty part becomes a
-    0-row file (an empty micro-batch), so a part never disappears from
-    the batch sequence. Test-scale plumbing: production streams are
-    unbounded and never staged."""
+def stage_replay_files(
+    df: DataFrame, part_col: str, n_parts: int, prefix: str = "replay_"
+) -> str:
+    """Stage ``df`` as a replay directory of ``n_parts`` parts: the rows
+    whose integer ``part_col`` is ``i`` become ONE parquet file
+    ``f{i}.parquet``, mtime-ordered by ``i``, so a
+    ``maxFilesPerTrigger=1`` replay consumes them as one micro-batch
+    each, in exactly this order. The part column is a layout key, not
+    data: the files do not carry it. A row whose part is NULL or outside
+    ``0..n_parts-1`` belongs to no part and is dropped (as a ``filter``
+    would drop it). An empty part becomes a 0-row file (an empty
+    micro-batch), so a part never disappears from the batch sequence.
+
+    One write job stages every part, so ``df`` is scanned once; a batch
+    with no source table (a watermark sentinel) joins ``df`` as a
+    ``union`` with a literal part. Test-scale plumbing: production
+    streams are unbounded and never staged."""
     import glob as _glob
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
 
     from kinesis_log_watcher_spark.staging import scratch_dir
 
     replay = scratch_dir(prefix=prefix)
-
-    # The per-part writes are independent jobs into disjoint dirs —
-    # submit them concurrently (Spark job submission is thread-safe);
-    # a replay staging costs ~one write instead of len(parts) writes.
-    # The mtime stamping stays sequential-by-index, so the consumption
-    # order contract is unchanged.
-    def write_part(item) -> None:
-        i, part_df = item
-        part_df.coalesce(1).write.parquet(os.path.join(replay, f"_s{i}"))
-
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        list(pool.map(write_part, enumerate(parts)))
-    for i in range(len(parts)):
-        stage = os.path.join(replay, f"_s{i}")
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
+    stage = os.path.join(replay, "_staged")
+    # repartitionById sends part i to write task i, which writes the
+    # part's one file as part-{i:05d}-*; an empty part's task writes none
+    part = F.col(part_col)
+    (
+        df.filter(part.between(0, n_parts - 1))
+        .repartitionById(n_parts, part.cast("int"))
+        .drop(part_col)
+        .write.parquet(stage)
+    )
+    for i in range(n_parts):
         dest = os.path.join(replay, f"f{i}.parquet")
-        shutil.copy(part, dest)
+        files = _glob.glob(os.path.join(stage, f"part-{i:05d}-*.parquet"))
+        if not files:
+            empty = os.path.join(stage, f"_empty{i}")
+            df.drop(part_col).limit(0).coalesce(1).write.parquet(empty)
+            files = _glob.glob(os.path.join(empty, "part-*.parquet"))
+        (src,) = files
+        shutil.move(src, dest)
         os.utime(dest, (1_700_000_000 + 10 * i,) * 2)
-        shutil.rmtree(stage)
+    shutil.rmtree(stage)
     return replay

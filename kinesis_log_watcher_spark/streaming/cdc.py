@@ -20,10 +20,9 @@ format, which is this exact layout plus a transaction log.
 from __future__ import annotations
 
 from kinesis_log_watcher_spark.sources.files import (
-    await_or_raise,
+    drain_replay,
     python_state_partitions,
     read_parquet_stream,
-    replay_partitions,
 )
 
 import itertools
@@ -83,15 +82,12 @@ def run_cdc_upsert(
     # default (2.11s -> 1.87s at sf0.1) — the batch writes inside
     # foreachBatch parallelize with the partition count. Kept on the
     # measurement, not the rationale.
-    with replay_partitions(spark, python_state_partitions()):
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(target_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q)
+    drain_replay(
+        stream.writeStream.foreachBatch(land)
+        .queryName(name)
+        .option("checkpointLocation", os.path.join(target_dir, "_checkpoint")),
+        python_state_partitions(),
+    )
 
     deltas = spark.read.option("basePath", target_dir).parquet(
         os.path.join(target_dir, "batch=*")

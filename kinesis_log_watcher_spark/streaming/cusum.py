@@ -1,4 +1,5 @@
-"""Stateful streaming CUSUM control chart (``applyInPandasWithState``).
+"""Stateful streaming CUSUM control chart: a pure per-key fold
+(:func:`fold`) run by ``keyfold.fold_by_key``.
 
 Statistical process control over an unbounded stream: per event_type,
 maintain the cumulative sum of (value − TARGET) deviations plus its
@@ -10,8 +11,8 @@ from a control target — a data-derived mean would not be incrementally
 maintainable over an unbounded stream).
 
 Determinism: the fold is order-sensitive, so rows are folded in
-(ts, event_id) order. Within a batch the kernel concatenates ALL Arrow
-chunks before sorting (the streaming/stateful.py chunk hazard); across
+(ts, event_id) order. Within a batch the adapter joins ALL Arrow
+chunks before the fold sorts them (the chunk rule in keyfold.py); across
 batches the replay harness stages TIME-SPLIT parts (the
 streaming/timers.py discipline), so batch k's rows all precede batch
 k+1's and the cross-batch state continuation replays the exact batch
@@ -26,14 +27,10 @@ micro-batch; emission volume is |keys| rows per batch.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kinesis_log_watcher_spark.sources.files import (
     read_parquet,
@@ -41,6 +38,7 @@ from kinesis_log_watcher_spark.sources.files import (
     run_replay,
     stage_replay_files,
 )
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 TARGET_MILLI = 50_000  # control target: value = 50.0
 THRESHOLD_MILLI = 100_000  # breach when either CUSUM side exceeds 100.0
@@ -52,54 +50,32 @@ UPDATE_SCHEMA = (
 STATE_SCHEMA = "p bigint, pmin bigint, pmax bigint, breaches bigint, n bigint"
 
 
-def _cusum_fn(target_milli: int, threshold_milli: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (event_type,) = key
-        if state.exists:
-            p, pmin, pmax, breaches, n = state.get
-        else:
-            p, pmin, pmax, breaches, n = 0, 0, 0, 0, 0
-
-        chunks = [pdf[["ts", "event_id", "milli"]] for pdf in pdfs]
-        if chunks:
-            allrows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            allrows = allrows.sort_values(["ts", "event_id"])
-            for v in allrows["milli"].astype("int64"):
-                p += int(v) - target_milli
-                pmin = min(pmin, p)
-                pmax = max(pmax, p)
-                n += 1
-                if p - pmin > threshold_milli or pmax - p > threshold_milli:
-                    breaches += 1
-        state.update((p, pmin, pmax, breaches, n))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n": [n],
-                "cusum_pos": [p - pmin],
-                "cusum_neg": [pmax - p],
-                "n_breaches": [breaches],
-            }
-        )
-
-    return fn
-
-
-def cusum_update_stream(
-    events: DataFrame,
+def fold(
+    event_type,
+    state,
+    rows: pd.DataFrame,
+    *,
     target_milli: int = TARGET_MILLI,
     threshold_milli: int = THRESHOLD_MILLI,
-) -> DataFrame:
-    return events.groupBy("event_type").applyInPandasWithState(
-        _cusum_fn(target_milli, threshold_milli),
-        outputStructType=UPDATE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+):
+    """Fold a batch's values, in (ts, event_id) order, into the key's
+    CUSUM state and emit the updated snapshot."""
+    p, pmin, pmax, breaches, n = state if state is not None else (0,) * 5
+    for v in rows.sort_values(["ts", "event_id"])["milli"].astype("int64"):
+        p += int(v) - target_milli
+        pmin = min(pmin, p)
+        pmax = max(pmax, p)
+        n += 1
+        if p - pmin > threshold_milli or pmax - p > threshold_milli:
+            breaches += 1
+    return (p, pmin, pmax, breaches, n), pd.DataFrame(
+        {
+            "event_type": [event_type],
+            "n": [n],
+            "cusum_pos": [p - pmin],
+            "cusum_neg": [pmax - p],
+            "n_breaches": [breaches],
+        }
     )
 
 
@@ -122,12 +98,17 @@ def run_stream_cusum(
     mid = ev.agg(F.expr("percentile_approx(ts, 0.5)").alias("mid")).collect()[
         0
     ].mid
-    p1 = ev.filter(F.col("ts") <= mid)
-    p2 = ev.filter(F.col("ts") > mid)
-    replay = stage_replay_files([p1, p2], prefix="cusum_replay_")
+    half = F.when(F.col("ts") <= mid, 0).when(F.col("ts") > mid, 1)
+    replay = stage_replay_files(
+        ev.withColumn("part", half), "part", 2, prefix="cusum_replay_"
+    )
     stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
+    updates = run_replay(
+        fold_by_key(stream, "event_type", fold, UPDATE_SCHEMA, STATE_SCHEMA),
+        "update",
+        "stream_cusum",
+    )
     # snapshots are monotone in n: the final state is the max-n row
-    updates = run_replay(cusum_update_stream(stream), "update", "stream_cusum")
     snap = updates.groupBy("event_type").agg(
         F.max(
             F.struct("n", "cusum_pos", "cusum_neg", "n_breaches")

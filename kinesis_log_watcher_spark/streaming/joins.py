@@ -119,7 +119,11 @@ def _sentinel_replay_dir(spark: SparkSession, events_path: str) -> str:
     ``user_id >= 0`` on the SINK output."""
     base = read_parquet(spark, events_path)
     return stage_replay_files(
-        [base, *watermark_sentinels(base, ("click", "purchase"))],
+        base.withColumn("part", F.lit(0)).unionByName(
+            watermark_sentinels(base, ("click", "purchase"))
+        ),
+        "part",
+        3,
         prefix="ss_left_join_",
     )
 

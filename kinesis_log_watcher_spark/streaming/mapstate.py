@@ -1,6 +1,7 @@
-"""Per-key categorical counters on applyInPandasWithState: the group
-state holds a per-user ``event_type -> running count`` map as two
-parallel arrays (types, counts).
+"""Per-key categorical counters as a pure per-user fold (:func:`fold`)
+run by ``keyfold.fold_by_key``: the state holds a per-user
+``event_type -> running count`` map as two parallel arrays (types,
+counts).
 
 The operator maintains, per stream key (user), a map
 ``event_type -> running count`` and emits the UPDATED entries each
@@ -20,71 +21,39 @@ streaming/neardup.py does.
 
 from __future__ import annotations
 
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from kinesis_log_watcher_spark.sources.files import (
     python_state_partitions,
     read_parquet_stream,
     run_replay,
 )
-
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 COUNT_SCHEMA = "user_id bigint, event_type string, n bigint"
 _STATE_SCHEMA = "types array<string>, counts array<bigint>"
 
 
-def _batch_increments(batch: pd.DataFrame) -> "list[tuple[str, int]]":
-    """Per-type increments of one micro-batch, in sorted-type order (a
-    deterministic emission order within the batch)."""
-    upd = batch.groupby("event_type").size()
-    return [(str(et), int(n)) for et, n in sorted(upd.items())]
-
-
-def _count_updates():
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        counts: dict[str, int] = {}
-        if state.exists:
-            types, ns = state.get
-            counts = dict(zip(types, (int(n) for n in ns)))
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        out_et: list[str] = []
-        out_n: list[int] = []
-        for et, add in _batch_increments(batch):
-            counts[et] = counts.get(et, 0) + add
-            out_et.append(et)
-            out_n.append(counts[et])
-        keys_sorted = sorted(counts)
-        state.update((keys_sorted, [counts[t] for t in keys_sorted]))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out_et),
-                "event_type": out_et,
-                "n": out_n,
-            }
-        )
-
-    return fn
-
-
-def count_stream(events: DataFrame) -> DataFrame:
-    """Stream in → updated (user_id, event_type, n) rows per batch."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _count_updates(),
-        outputStructType=COUNT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def fold(user_id, state, rows: pd.DataFrame):
+    """Add a batch's per-type counts to the user's map and emit the
+    updated entries, in sorted-type order (a deterministic emission
+    order within the batch)."""
+    types, ns = state if state is not None else ([], [])
+    counts = dict(zip(types, (int(n) for n in ns)))
+    out_et: list[str] = []
+    out_n: list[int] = []
+    for et, add in sorted(rows.groupby("event_type").size().items()):
+        et = str(et)
+        counts[et] = counts.get(et, 0) + int(add)
+        out_et.append(et)
+        out_n.append(counts[et])
+    keys_sorted = sorted(counts)
+    new_state = (keys_sorted, [counts[t] for t in keys_sorted])
+    return new_state, pd.DataFrame(
+        {"user_id": [user_id] * len(out_et), "event_type": out_et, "n": out_n}
     )
 
 
@@ -97,7 +66,13 @@ def run_type_counts(
     the update sink to final counts (counts are monotone per key, so
     latest = MAX — order-free)."""
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
-    updates = count_stream(stream.select("user_id", "event_type"))
+    updates = fold_by_key(
+        stream.select("user_id", "event_type"),
+        "user_id",
+        fold,
+        COUNT_SCHEMA,
+        _STATE_SCHEMA,
+    )
     return (
         run_replay(updates, "update", "type_counts", python_state_partitions())
         .groupBy("user_id", "event_type")

@@ -1,4 +1,5 @@
-"""Stateful streaming rate limiter: sliding-window-log admission per key.
+"""Stateful streaming rate limiter: sliding-window-log admission per key,
+a pure per-user fold (:func:`fold`) run by ``keyfold.fold_by_key``.
 
 The reference throttles at the CONNECTOR level (R1, main.go retry/backoff
 on Kinesis throughput errors — SURVEY.md §2.1, delegated to the
@@ -35,20 +36,19 @@ window."""
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import (
-    python_state_partitions,
-    read_parquet_stream,
-    run_replay,
-)
-
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from kinesis_log_watcher_spark.sources.files import (
+    python_state_partitions,
+    read_parquet_stream,
+    run_replay,
+)
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 RATE_LIMIT_K = 5
 RATE_WINDOW_S = 3600
@@ -59,22 +59,30 @@ ADMIT_SCHEMA = "user_id bigint, event_id bigint, admitted int"
 STATE_SCHEMA = "ts_log array<bigint>, eid_log array<bigint>"
 
 
-def _decide(
-    log: list[tuple[int, int]],
-    ts_us,
-    eids,
-    k: int,
-    window_us: int,
-) -> tuple[list[int], list[int], list[tuple[int, int]]]:
-    """Admission fold: ``log`` holds (t_us, event_id) arrivals.
+def fold(
+    user_id,
+    state,
+    rows: pd.DataFrame,
+    *,
+    k: int = RATE_LIMIT_K,
+    window_s: int = RATE_WINDOW_S,
+):
+    """Decide a batch's events in (ts, event_id) order against the
+    key's arrival log; emit one (user_id, event_id, admitted) row per
+    event. ``state`` holds the log as (t_us, event_id) arrivals.
     An event counts only STRICTLY PRIOR arrivals in the (ts, event_id)
     total order — so a late-delivered tie or out-of-order entry is
     never miscounted as prior — and eviction drops only entries older
     than t-window (entries 'in the future' of an out-of-order event
     survive for the events they are prior to)."""
+    window_us = window_s * _US
+    ts_log, eid_log = state if state is not None else ([], [])
+    log = list(zip(ts_log, eid_log))
+    rows = rows.sort_values(["ts", "event_id"])
+    ts_us = rows["ts"].astype("datetime64[us]").astype("int64")
     out_eid: list[int] = []
     out_adm: list[int] = []
-    for t, eid in zip(ts_us, eids):
+    for t, eid in zip(ts_us, rows["event_id"]):
         t, eid = int(t), int(eid)
         log = [(p, pe) for (p, pe) in log if p > t - window_us]
         n_prior = sum(
@@ -83,53 +91,13 @@ def _decide(
         out_eid.append(eid)
         out_adm.append(1 if n_prior < k else 0)
         log.append((t, eid))
-    return out_eid, out_adm, log
-
-
-def _admit_updates(k: int, window_s: int):
-    window_us = window_s * _US
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            ts_log, eid_log = state.get
-            log = list(zip(ts_log, eid_log))
-        else:
-            log = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        ts_us = rows["ts"].astype("datetime64[us]").astype("int64")
-        out_eid, out_adm, log = _decide(
-            log, ts_us, rows["event_id"], k, window_us
-        )
-        state.update(([p for p, _ in log], [pe for _, pe in log]))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out_eid),
-                "event_id": out_eid,
-                "admitted": out_adm,
-            }
-        )
-
-    return fn
-
-
-def admit_stream(
-    events: DataFrame,
-    k: int = RATE_LIMIT_K,
-    window_s: int = RATE_WINDOW_S,
-) -> DataFrame:
-    """Stream in → one (user_id, event_id, admitted) row per event."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _admit_updates(k, window_s),
-        outputStructType=ADMIT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    new_state = ([p for p, _ in log], [pe for _, pe in log])
+    return new_state, pd.DataFrame(
+        {
+            "user_id": [user_id] * len(out_eid),
+            "event_id": out_eid,
+            "admitted": out_adm,
+        }
     )
 
 
@@ -145,7 +113,13 @@ def run_rate_limit(
     once (in the batch that carries it), so the update sink is already
     the full decision relation."""
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
-    decisions = admit_stream(stream, k, window_s)
+    decisions = fold_by_key(
+        stream.select("user_id", "ts", "event_id"),
+        "user_id",
+        partial(fold, k=k, window_s=window_s),
+        ADMIT_SCHEMA,
+        STATE_SCHEMA,
+    )
     return (
         run_replay(decisions, "update", "rate_limit", python_state_partitions())
         .groupBy("user_id")

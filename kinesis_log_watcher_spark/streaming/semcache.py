@@ -1,5 +1,6 @@
 """Streaming semantic-cache TTL evaluation: per-cluster last-served
-state, online hit/miss decisions, per-bucket hit-rate partials.
+state, online hit/miss decisions, per-bucket hit-rate partials — a pure
+per-cluster fold (:func:`fold`) run by ``keyfold.fold_by_key``.
 
 The ingest-time form of semantic_cache_ttl_eval (queries/round10.py):
 serving requests stream in, each maps to a paraphrase cluster (the
@@ -26,30 +27,32 @@ feed a downstream windowed aggregation instead of a memory table.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kinesis_log_watcher_spark.operators.dedup import md5_h15
+from kinesis_log_watcher_spark.sources.files import (
+    python_state_partitions,
+    read_parquet_stream,
+    run_replay,
+)
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 PARTIAL_SCHEMA = "cluster bigint, bucket bigint, n_requests bigint, n_hits bigint"
 _STATE_SCHEMA = "last_event bigint"
 
 
-def _fold_batch(
-    last_event: "int | None", batch: pd.DataFrame, ttl: int
-) -> "tuple[int | None, pd.DataFrame]":
-    """Fold one micro-batch's rows (event_id order) through the
-    cluster's last-served state; return (new_state, per-bucket partial
-    counts for THIS batch)."""
-    batch = batch.sort_values("event_id")
+def fold(cluster, state, rows: pd.DataFrame, *, ttl: int):
+    """Fold one micro-batch's requests (event_id order) through the
+    cluster's last-served state; emit the per-bucket partial counts for
+    THIS batch."""
+    last_event = int(state[0]) if state is not None else None
     counts: dict[int, list[int]] = {}
-    for event_id in batch["event_id"]:
+    for event_id in rows.sort_values("event_id")["event_id"]:
         event_id = int(event_id)
         bucket = event_id // 1000
         hit = 1 if (last_event is not None and event_id - last_event <= ttl) else 0
@@ -57,43 +60,13 @@ def _fold_batch(
         c[0] += 1
         c[1] += hit
         last_event = event_id
-    part = pd.DataFrame(
+    return (last_event,), pd.DataFrame(
         {
+            "cluster": int(cluster),
             "bucket": list(counts),
             "n_requests": [c[0] for c in counts.values()],
             "n_hits": [c[1] for c in counts.values()],
         }
-    )
-    return last_event, part
-
-
-def _cache_updates(ttl: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (cluster,) = key
-        last = int(state.get[0]) if state.exists else None
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        last, part = _fold_batch(last, batch, ttl)
-        state.update((int(last),))
-        part.insert(0, "cluster", int(cluster))
-        yield part
-
-    return fn
-
-
-def cache_partials_stream(requests: DataFrame, ttl: int) -> DataFrame:
-    """(event_id, cluster) stream in → per-(cluster, bucket) hit/req
-    partials per micro-batch."""
-    keyed = requests.select("cluster", "event_id").groupBy("cluster")
-    return keyed.applyInPandasWithState(
-        _cache_updates(ttl),
-        outputStructType=PARTIAL_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -108,12 +81,6 @@ def run_semcache_eval(
     roll the emitted partials up to the per-bucket hit rates (partials
     are disjoint per (cluster, batch), so the rollup is an order-free
     SUM)."""
-    from kinesis_log_watcher_spark.sources.files import (
-        python_state_partitions,
-        read_parquet_stream,
-        run_replay,
-    )
-
     stream = read_parquet_stream(spark, events_path, max_files_per_trigger)
     requests = stream.select(
         "event_id",
@@ -122,7 +89,9 @@ def run_semcache_eval(
             % clusters
         ).alias("cluster"),
     )
-    partials = cache_partials_stream(requests, ttl)
+    partials = fold_by_key(
+        requests, "cluster", partial(fold, ttl=ttl), PARTIAL_SCHEMA, _STATE_SCHEMA
+    )
     return (
         run_replay(partials, "update", "semcache", python_state_partitions())
         .groupBy("bucket")

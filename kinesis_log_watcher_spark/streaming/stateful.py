@@ -1,10 +1,9 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState``.
+"""Custom stateful streaming operator: gap-based sessionization as a
+pure per-user fold (:func:`fold`), run by ``keyfold.fold_by_key``.
 
 The reference has no stateful/event-time processing at all (SURVEY.md
 §2.2 — its only state is a per-shard resume sequence number,
-main.go:320). This is the engine-extension path the prompt's operator
-checklist calls "custom stateful operators".
+main.go:320); this is the custom-stateful-operator extension path.
 
 Design for unboundedness: per-user session state (start, last-seen,
 count) lives in the state store; each micro-batch updates it and emits
@@ -27,19 +26,18 @@ holds only active sessions.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import (
-    read_parquet_stream,
-    run_replay,
-)
-
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+)
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 SESSION_GAP_S = 1800
 
@@ -54,72 +52,47 @@ STATE_SCHEMA = "start_us bigint, last_us bigint, n_events bigint"
 _US = 1_000_000
 
 
-def _session_updates(gap_s: int):
-    """Build the per-group stateful update function (a closure over the
-    session gap)."""
-
+def fold(user_id, state, rows: pd.DataFrame, *, gap_s: int = SESSION_GAP_S):
+    """Fold one micro-batch of a user's events, in (ts, event_id) order,
+    into the open session; emit every session the batch closed plus the
+    open session's snapshot (update semantics)."""
     gap_us = gap_s * _US
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            start_us, last_us, n_events = state.get
+    start_us, last_us, n_events = state if state is not None else (None,) * 3
+    out: list[tuple[int, int, int]] = []
+    ts_us = (
+        rows.sort_values(["ts", "event_id"])["ts"]
+        .astype("datetime64[us]")
+        .astype("int64")
+    )
+    for t in ts_us:
+        t = int(t)
+        if start_us is None:
+            start_us, last_us, n_events = t, t, 1
+        elif t - last_us > gap_us:
+            out.append((start_us, last_us, n_events))
+            start_us, last_us, n_events = t, t, 1
         else:
-            start_us = last_us = n_events = None
-
-        out: list[tuple[int, int, int, int]] = []
-        # Accumulate ALL Arrow chunks before sorting: the state protocol
-        # splits a key's rows at arrow.maxRecordsPerBatch and the
-        # partition is sorted only by the grouping key, so per-chunk
-        # sorts would fold a >10k-event user in non-time order
-        # (streaming/timers.py documents the same hazard).
-        chunks = [pdf[["ts", "event_id"]] for pdf in pdfs]
-        if chunks:
-            allrows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            # micro-batch rows for this user, in event-time order
-            ts_us = (
-                allrows.sort_values(["ts", "event_id"])["ts"]
-                .astype("datetime64[us]")
-                .astype("int64")
-            )
-            for t in ts_us:
-                t = int(t)
-                if start_us is None:
-                    start_us, last_us, n_events = t, t, 1
-                elif t - last_us > gap_us:
-                    out.append((user_id, start_us, last_us, n_events))
-                    start_us, last_us, n_events = t, t, 1
-                else:
-                    last_us, n_events = t, n_events + 1
-        if start_us is not None:
-            # snapshot of the still-open session (update semantics)
-            out.append((user_id, start_us, last_us, n_events))
-            state.update((start_us, last_us, n_events))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [r[0] for r in out],
-                    "session_start": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "session_end": pd.to_datetime([r[2] for r in out], unit="us"),
-                    "n_events": [r[3] for r in out],
-                }
-            )
-
-    return fn
+            last_us, n_events = t, n_events + 1
+    out.append((start_us, last_us, n_events))
+    frame = pd.DataFrame(
+        {
+            "user_id": [user_id] * len(out),
+            "session_start": pd.to_datetime([r[0] for r in out], unit="us"),
+            "session_end": pd.to_datetime([r[1] for r in out], unit="us"),
+            "n_events": [r[2] for r in out],
+        }
+    )
+    return (start_us, last_us, n_events), frame
 
 
 def session_update_stream(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
     """The stateful transformation itself (stream in → update stream out)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _session_updates(gap_s),
-        outputStructType=UPDATE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        events.select("user_id", "ts", "event_id"),
+        "user_id",
+        partial(fold, gap_s=gap_s),
+        UPDATE_SCHEMA,
+        STATE_SCHEMA,
     )
 
 

@@ -200,6 +200,7 @@ def run_timer_sessions(
         "event_id",
         "user_id",
         (F.lit(bounds.mx) + F.expr("INTERVAL 40 DAYS")).alias("ts"),
+        F.lit(1).alias("part"),
     )
     # sentinel rides in the LAST data part: the watermark advances after
     # the batch, so it still pushes the trailing no-data batch past every
@@ -207,11 +208,11 @@ def run_timer_sessions(
     # sentinel file, with the cross-batch state continuation preserved
     # by the time split. Null-ts rows match neither half and are
     # dropped.
+    half = F.when(F.col("ts") <= bounds.mid, 0).when(F.col("ts") > bounds.mid, 1)
     replay = stage_replay_files(
-        [
-            ev.filter(F.col("ts") <= bounds.mid),
-            ev.filter(F.col("ts") > bounds.mid).unionByName(sentinel),
-        ],
+        ev.withColumn("part", half).unionByName(sentinel),
+        "part",
+        2,
         prefix="timer_sess_",
     )
     stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)

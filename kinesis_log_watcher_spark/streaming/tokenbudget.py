@@ -1,6 +1,6 @@
 """Streaming token-budget admission: per-source running BPE token
-totals with a hard budget cutoff, maintained in applyInPandasWithState
-group state.
+totals with a hard budget cutoff, a pure per-source fold (:func:`fold`)
+run by ``keyfold.fold_by_key``.
 
 The ingest-time form of sequence_packing_stats/bpe_tokenize_budget
 (queries/round8.py): documents stream in, each source admits documents
@@ -27,16 +27,14 @@ derived from the stream itself.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kinesis_log_watcher_spark.operators.bpe import bpe_encode, merge_ranks
+from kinesis_log_watcher_spark.sources.files import read_parquet_stream, run_replay
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 TOKEN_BUDGET = 1000  # tokens admitted per source before the gate closes
 
@@ -64,11 +62,10 @@ def doc_tokens(text: str) -> int:
     return total
 
 
-def _fold_batch(
-    state: "tuple[int, int, int, int]", batch: pd.DataFrame
-) -> "tuple[int, int, int, int]":
-    """Fold one micro-batch's rows (doc_id order) into the running
-    (cum_tokens, cum_admitted_tokens, n_docs, n_admitted) state.
+def fold(source, state, rows: pd.DataFrame):
+    """Fold one micro-batch of a source's rows (doc_id order) into the
+    running (cum_tokens, cum_admitted_tokens, n_docs, n_admitted) state
+    and emit the updated counters.
 
     Admission is PREFIX semantics: a doc admits iff the source's
     running token total INCLUDING it stays within budget; the first
@@ -76,52 +73,24 @@ def _fold_batch(
     a doc_id prefix). That is the declaratively-expressible rule — the
     oracle states it as `cumsum <= budget` — and the realistic one for
     an online collector ("stop taking from this source")."""
-    cum, cum_adm, n_docs, n_adm = state
-    batch = batch.sort_values("doc_id")
-    for text in batch["text"]:
+    cum, cum_adm, n_docs, n_adm = (
+        (int(x) for x in state) if state is not None else (0, 0, 0, 0)
+    )
+    for text in rows.sort_values("doc_id")["text"]:
         n = doc_tokens(str(text))
         n_docs += 1
         cum += n
         if cum <= TOKEN_BUDGET:
             cum_adm = cum
             n_adm += 1
-    return cum, cum_adm, n_docs, n_adm
-
-
-def _budget_updates():
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (source,) = key
-        cur = tuple(int(x) for x in state.get) if state.exists else (0, 0, 0, 0)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        cur = _fold_batch(cur, batch)
-        state.update(cur)
-        cum, cum_adm, n_docs, n_adm = cur
-        yield pd.DataFrame(
-            {
-                "source": [source],
-                "n_docs": [n_docs],
-                "n_admitted": [n_adm],
-                "tokens_total": [cum],
-                "tokens_admitted": [cum_adm],
-            }
-        )
-
-    return fn
-
-
-def admission_stream(docs: DataFrame) -> DataFrame:
-    """Stream in → updated per-source admission counters per batch."""
-    keyed = docs.select("source", "doc_id", "text").groupBy("source")
-    return keyed.applyInPandasWithState(
-        _budget_updates(),
-        outputStructType=ADMIT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (cum, cum_adm, n_docs, n_adm), pd.DataFrame(
+        {
+            "source": [source],
+            "n_docs": [n_docs],
+            "n_admitted": [n_adm],
+            "tokens_total": [cum],
+            "tokens_admitted": [cum_adm],
+        }
     )
 
 
@@ -133,13 +102,14 @@ def run_token_budget_admission(
     """Replay a bounded documents table through the admission gate and
     resolve the update sink to the final per-source counters (all four
     counters are monotone per key, so latest = MAX — order-free)."""
-    from kinesis_log_watcher_spark.sources.files import (
-        read_parquet_stream,
-        run_replay,
-    )
-
     stream = read_parquet_stream(spark, docs_path, max_files_per_trigger)
-    updates = admission_stream(stream)
+    updates = fold_by_key(
+        stream.select("source", "doc_id", "text"),
+        "source",
+        fold,
+        ADMIT_SCHEMA,
+        _STATE_SCHEMA,
+    )
     return (
         run_replay(updates, "update", "token_budget")
         .groupBy("source")

@@ -1,4 +1,5 @@
-"""Bounded-state streaming top-k leaderboard on applyInPandasWithState.
+"""Bounded-state streaming top-k leaderboard: a pure per-key fold
+(:func:`fold`) run by ``keyfold.fold_by_key``.
 
 The operator keeps, per stream key (event_type), ONLY the current top-k
 records ``(value_milli, event_id, user_id)`` — k rows of state per key,
@@ -31,20 +32,19 @@ this belongs to the SURVEY.md §2.2 streaming-stateful family.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import (
-    read_parquet_stream,
-    run_replay,
-)
-
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from kinesis_log_watcher_spark.sources.files import (
+    read_parquet_stream,
+    run_replay,
+)
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 
 TOPK_K = 3
@@ -72,54 +72,24 @@ def _fold_board(
     return cand[:k]
 
 
-def _board_frame(key_val: str, board: "list[tuple[int, int, int]]"):
-    return pd.DataFrame(
+def fold(event_type, state, rows: pd.DataFrame, *, k: int = TOPK_K):
+    """Fold a batch into the key's stored board and emit the updated
+    board (one board emission per key and batch)."""
+    board: list[tuple[int, int, int]] = []
+    if state is not None:
+        vals, eids, uids = state
+        board = [(int(v), int(e), int(u)) for v, e, u in zip(vals, eids, uids)]
+    board = _fold_board(board, rows, k)
+    vals = [v for v, _, _ in board]
+    eids = [e for _, e, _ in board]
+    uids = [u for _, _, u in board]
+    return (vals, eids, uids), pd.DataFrame(
         {
-            "event_type": [key_val] * len(board),
-            "event_id": [e for _, e, _ in board],
-            "user_id": [u for _, _, u in board],
-            "value_milli": [v for v, _, _ in board],
+            "event_type": [event_type] * len(board),
+            "event_id": eids,
+            "user_id": uids,
+            "value_milli": vals,
         }
-    )
-
-
-def _topk_updates(k: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (event_type,) = key
-        board: list[tuple[int, int, int]] = []
-        if state.exists:
-            vals, eids, uids = state.get
-            board = [
-                (int(v), int(e), int(u))
-                for v, e, u in zip(vals, eids, uids)
-            ]
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        board = _fold_board(board, batch, k)
-        state.update(
-            (
-                [v for v, _, _ in board],
-                [e for _, e, _ in board],
-                [u for _, _, u in board],
-            )
-        )
-        yield _board_frame(event_type, board)
-
-    return fn
-
-
-def topk_stream(events: DataFrame, k: int = TOPK_K) -> DataFrame:
-    """Stream of (event_type, event_id, user_id, value_milli) in →
-    updated per-key leaderboards out, one board emission per batch."""
-    return events.groupBy("event_type").applyInPandasWithState(
-        _topk_updates(k),
-        outputStructType=TOPK_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -146,7 +116,13 @@ def run_stream_topk(
         F.col("value_milli").desc(), F.col("event_id")
     )
     return (
-        run_replay(topk_stream(feed, k), "update", "stream_topk")
+        run_replay(
+            fold_by_key(
+                feed, "event_type", partial(fold, k=k), TOPK_SCHEMA, _STATE_SCHEMA
+            ),
+            "update",
+            "stream_topk",
+        )
         .distinct()
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)

@@ -1,8 +1,8 @@
-"""Stateful streaming: per-user running totals on applyInPandasWithState.
+"""Stateful streaming: per-user running totals as a pure fold.
 
 A second custom stateful operator alongside streaming/stateful.py's
-sessionization, on the same ``applyInPandasWithState`` arbitrary-state
-API (the group state is one ``(n_events, value_sum_q)`` row per key).
+sessionization, run by the same adapter (``keyfold.fold_by_key``); the
+state is one ``(n_events, value_sum_q)`` row per key.
 
 The operator: per-user running totals (event count + value sum). Each
 micro-batch folds its rows into the group state and emits the updated
@@ -27,54 +27,39 @@ state backend applies unchanged on a cluster.
 
 from __future__ import annotations
 
-from kinesis_log_watcher_spark.sources.files import (
-    python_state_partitions,
-    read_parquet_stream,
-    run_replay,
-)
-
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from kinesis_log_watcher_spark.sources.files import (
+    python_state_partitions,
+    read_parquet_stream,
+    run_replay,
+)
+from kinesis_log_watcher_spark.streaming.keyfold import fold_by_key
 
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, value_sum_q bigint"
 _STATE_SCHEMA = "n_events bigint, value_sum_q bigint"
 
 
-def _running_totals_updates(
-    key, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def fold(user_id, state, rows: pd.DataFrame):
     """Fold one batch of a user's rows into (count, quantized value sum)
     and emit the updated snapshot."""
-    n, sq = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        # int64 micro-units: associative, partition-order independent.
-        # floor(x*1e6+0.5) — same rounding rule as batch_totals and
-        # operators/similarity.quantize (pandas .round is half-even,
-        # F.round half-up; they disagree on .5 micro-unit ties).
-        # NULLs are skipped (SQL SUM semantics); NaN through
-        # astype('int64') would be platform-defined garbage.
-        vals = pdf["value"].dropna().to_numpy()
-        sq += int(np.floor(vals * 1_000_000 + 0.5).astype("int64").sum())
-    state.update((n, sq))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "value_sum_q": [sq]})
-
-
-def running_totals_stream(events: DataFrame) -> DataFrame:
-    """Stream in → per-user running-totals update stream out."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _running_totals_updates,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    n, sq = state if state is not None else (0, 0)
+    n += len(rows)
+    # int64 micro-units: associative, partition-order independent.
+    # floor(x*1e6+0.5) — same rounding rule as batch_totals and
+    # operators/similarity.quantize (pandas .round is half-even,
+    # F.round half-up; they disagree on .5 micro-unit ties).
+    # NULLs are skipped (SQL SUM semantics); NaN through
+    # astype('int64') would be platform-defined garbage.
+    vals = rows["value"].dropna().to_numpy()
+    sq += int(np.floor(vals * 1_000_000 + 0.5).astype("int64").sum())
+    return (n, sq), pd.DataFrame(
+        {"user_id": [user_id], "n_events": [n], "value_sum_q": [sq]}
     )
 
 
@@ -108,8 +93,13 @@ def run_running_totals(
     """Replay a directory of parquet event files through the operator
     and reduce the update stream to final totals."""
     stream = read_parquet_stream(spark, events_dir, max_files_per_trigger)
-
-    updates = running_totals_stream(stream)
+    updates = fold_by_key(
+        stream.select("user_id", "value"),
+        "user_id",
+        fold,
+        OUTPUT_SCHEMA,
+        _STATE_SCHEMA,
+    )
     return final_totals(
         run_replay(updates, "update", "tws_totals", python_state_partitions())
     )

@@ -200,11 +200,14 @@ def run_streaming_admission(
 
 
 def watermark_sentinels(
-    base: DataFrame, event_types: tuple[str, ...]
-) -> list[DataFrame]:
-    """The two watermark-flush batches of a bounded event-time replay.
+    base: DataFrame, event_types: tuple[str, ...], parts: tuple[int, int] = (1, 2)
+) -> DataFrame:
+    """The two watermark-flush batches of a bounded event-time replay,
+    as one DataFrame in ``base``'s columns plus the replay ``part``
+    column (:func:`sources.files.stage_replay_files`): batch ``i``
+    (1, 2) is part ``parts[i - 1]``.
 
-    Batch ``i`` (1, 2) holds one row per entry of ``event_types``, at
+    Batch ``i`` holds one row per entry of ``event_types``, at
     ``2*i`` hours past the latest ``ts`` in ``base``, with
     ``user_id = -1``, a negative ``event_id`` and every other column
     null. Staged as their own micro-batches after the real data, they
@@ -224,31 +227,28 @@ def watermark_sentinels(
     stream-stream join carries both sides' event types, and callers
     drop the sentinel rows on the SINK output (``user_id >= 0`` or
     their event type), never inside the streaming plan."""
-    mx = base.groupBy().agg(F.max("ts").alias("_mx"))
-    rows = mx.select(
+    rows = base.groupBy().agg(F.max("ts").alias("_mx")).select(
         "_mx",
         F.posexplode(F.array(*(F.lit(t) for t in event_types))).alias(
             "_k", "_type"
         ),
+        F.explode(F.array(F.lit(1), F.lit(2))).alias("_i"),
     )
-
-    def batch(i: int) -> DataFrame:
-        cols = []
-        for f in base.schema.fields:
-            if f.name == "ts":
-                c = F.col("_mx") + F.expr(f"INTERVAL {2 * i} HOURS")
-            elif f.name == "event_type":
-                c = F.col("_type")
-            elif f.name == "event_id":
-                c = F.lit(-1000 - len(event_types) * i) - F.col("_k")
-            elif f.name == "user_id":
-                c = F.lit(-1)
-            else:
-                c = F.lit(None)
-            cols.append(c.cast(f.dataType).alias(f.name))
-        return rows.select(*cols)
-
-    return [batch(1), batch(2)]
+    cols = []
+    for f in base.schema.fields:
+        if f.name == "ts":
+            c = F.col("_mx") + F.col("_i") * F.expr("INTERVAL 2 HOURS")
+        elif f.name == "event_type":
+            c = F.col("_type")
+        elif f.name == "event_id":
+            c = F.lit(-1000) - F.col("_i") * len(event_types) - F.col("_k")
+        elif f.name == "user_id":
+            c = F.lit(-1)
+        else:
+            c = F.lit(None)
+        cols.append(c.cast(f.dataType).alias(f.name))
+    part = F.when(F.col("_i") == 1, parts[0]).otherwise(parts[1])
+    return rows.select(*cols, part.alias("part"))
 
 
 def run_late_data_accounting(
@@ -283,9 +283,15 @@ def run_late_data_accounting(
     which the SQL oracle states directly."""
     base = read_parquet(spark, events_path)
     is_late = (F.dayofmonth("ts") == late_day) & (F.col("event_id") % 2 == 0)
-    flush1, flush2 = watermark_sentinels(base, ("sentinel",))
+    # f0 on time, f1 flush, f2 late slice, f3 flush; a row whose
+    # is_late is NULL is in neither slice
+    part = F.when(~is_late, 0).when(is_late, 2)
     replay = stage_replay_files(
-        [base.filter(~is_late), flush1, base.filter(is_late), flush2],
+        base.withColumn("part", part).unionByName(
+            watermark_sentinels(base, ("sentinel",), parts=(1, 3))
+        ),
+        "part",
+        4,
         prefix="late_replay_",
     )
     stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
@@ -417,7 +423,12 @@ def run_two_level_agg(
     """
     base = read_parquet(spark, events_path)
     replay = stage_replay_files(
-        [base, *watermark_sentinels(base, ("sentinel",))], prefix="two_level_"
+        base.withColumn("part", F.lit(0)).unionByName(
+            watermark_sentinels(base, ("sentinel",))
+        ),
+        "part",
+        3,
+        prefix="two_level_",
     )
     stream = read_parquet_stream(spark, replay, max_files_per_trigger=1)
     lvl1 = (

@@ -35,34 +35,6 @@ def replay_parallel(*thunks):
         return [f.result() for f in futures]
 
 
-class _FakeGroupState:
-    def __init__(self):
-        self._val = None
-
-    @property
-    def exists(self):
-        return self._val is not None
-
-    @property
-    def get(self):
-        return self._val
-
-    def update(self, v):
-        self._val = v
-
-
-def fold_batches(fn, key, batches):
-    """Drive an applyInPandasWithState function over ``batches`` in
-    order with one carried group state, without a streaming query;
-    return the frame each batch emitted."""
-    state = _FakeGroupState()
-    out = []
-    for b in batches:
-        (pdf,) = fn(key, iter([b]), state)
-        out.append(pdf)
-    return out
-
-
 @pytest.fixture(scope="session")
 def spark():
     # spark.default.parallelism=4: createDataFrame slices tiny LOCAL

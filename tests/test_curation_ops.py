@@ -347,22 +347,19 @@ def _write_events_files(spark, batches):
 
     t0 = datetime(2024, 3, 1, 12, 0, 0)
     eid = 0
-    parts = []
-    for batch in batches:
-        rows = []
+    rows = []
+    for part, batch in enumerate(batches):
         for user, offset_s in batch:
             eid += 1
             rows.append(
-                (eid, t0 + timedelta(seconds=offset_s), user, "e", 1.0, "{}")
+                (eid, t0 + timedelta(seconds=offset_s), user, "e", 1.0, "{}", part)
             )
-        parts.append(
-            spark.createDataFrame(
-                rows,
-                "event_id long, ts timestamp, user_id long, event_type string, "
-                "value double, props string",
-            )
-        )
-    return stage_replay_files(parts, prefix="t_ratelimit_")
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string, part int",
+    )
+    return stage_replay_files(df, "part", len(batches), prefix="t_ratelimit_")
 
 
 def test_rate_limit_boundary_and_multibatch(spark):
@@ -502,8 +499,7 @@ def test_rate_limit_fold_admits_across_batches():
     """The limiter's arrival log carries across micro-batches."""
     import pandas as pd
 
-    from conftest import fold_batches
-    from kinesis_log_watcher_spark.streaming.ratelimit import _admit_updates
+    from kinesis_log_watcher_spark.streaming.ratelimit import fold
 
     t0 = pd.Timestamp("2024-03-01 12:00:00")
     b1 = pd.DataFrame(
@@ -515,7 +511,9 @@ def test_rate_limit_fold_admits_across_batches():
          "event_id": [4, 5, 6]}
     )
     out = []
-    for pdf in fold_batches(_admit_updates(2, 3600), (7,), [b1, b2]):
+    state = None
+    for b in (b1, b2):
+        state, pdf = fold(7, state, b, k=2, window_s=3600)
         out.extend(zip(pdf["event_id"], pdf["admitted"]))
 
     # K=2: events 1,2 admitted; 3,4,5 throttled; 6 is past the window

@@ -7,13 +7,14 @@ import pandas as pd
 
 
 def test_mapstate_fold_accumulates_across_batches():
-    from conftest import fold_batches
-    from kinesis_log_watcher_spark.streaming.mapstate import _count_updates
+    from kinesis_log_watcher_spark.streaming.mapstate import fold
 
     b1 = pd.DataFrame({"event_type": ["click", "view", "click"]})
     b2 = pd.DataFrame({"event_type": ["view", "click", "purchase"]})
     out = []
-    for pdf in fold_batches(_count_updates(), (3,), [b1, b2]):
+    state = None
+    for b in (b1, b2):
+        state, pdf = fold(3, state, b)
         out.extend(zip(pdf["event_type"], pdf["n"]))
 
     # batch 1 emits click=2, view=1; batch 2 accumulates on top
@@ -33,10 +34,12 @@ def test_mapstate_replay_equals_batch_any_split(spark):
         [(2, "click"), (1, "view")],
     ]
     d = stage_replay_files(
-        [
-            spark.createDataFrame(rows, "user_id long, event_type string")
-            for rows in batches
-        ],
+        spark.createDataFrame(
+            [(*r, i) for i, rows in enumerate(batches) for r in rows],
+            "user_id long, event_type string, part int",
+        ),
+        "part",
+        len(batches),
         prefix="t_mapstate_",
     )
 

@@ -264,11 +264,13 @@ def test_stream_minhash_overlap_split_invariant(spark, sf_dir):
     )
 
     ev = load(spark, sf_dir, "events")
-    first = ev.filter(F.col("event_id") % 2 == 0)
+    first = ev.filter(F.col("event_id") % 2 == 0).withColumn("part", F.lit(0))
     second = ev.filter(
         (F.col("event_id") % 2 == 1) | (F.col("event_id") % 10 == 0)
+    ).withColumn("part", F.lit(1))
+    replay = stage_replay_files(
+        first.unionByName(second), "part", 2, prefix="oph_replay_"
     )
-    replay = stage_replay_files([first, second], prefix="oph_replay_")
     one = run_streaming_minhash_overlap(
         spark, f"{sf_dir}/events.parquet"
     ).collect()[0]

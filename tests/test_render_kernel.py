@@ -408,6 +408,33 @@ def test_timestamp_render_in_non_utc_session(spark, tmp_path, zone):
         assert got[0].endswith(" -0800 PST") and got[1].endswith(" -0700 PDT")
 
 
+def test_zone_name_is_stable_under_concurrent_first_use(spark):
+    """Eight tasks that format a zone's name for the first time at once
+    all print the name a later single task prints. JDK 17 can cache the
+    GMT-offset fallback (``GMT+03:00`` for ``EAT``) when tasks race on a
+    zone's first name lookup; the render's plan build formats the
+    session zone's names on the driver first. The Africa/ zones are ones
+    this test session has not formatted before."""
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    zones = sorted(
+        z for z in spark._jvm.java.time.ZoneId.getAvailableZoneIds()
+        if z.startswith("Africa/")
+    )
+    ts = F.timestamp_seconds(F.lit(1714564800) + F.col("id"))
+    unstable = {}
+    try:
+        for zone in zones:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            rows = spark.range(0, 8, 1, 8).select(go_default_render_col(ts).alias("r"))
+            first = {r.r.rsplit(" ", 1)[1] for r in rows.collect()}
+            later = {r.r.rsplit(" ", 1)[1] for r in rows.limit(1).collect()}
+            if len(first) != 1 or first != later:
+                unstable[zone] = (sorted(first), sorted(later))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert unstable == {}
+
+
 # Instants at the edges of the cast's and date_format's year range,
 # as epoch micros: Python datetimes stop at years 1 and 9999.
 _EDGE_MICROS = [

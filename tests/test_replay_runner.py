@@ -3,11 +3,13 @@ memory-sink streaming operator goes through. Pins its contract: a
 timed-out replay raises and leaves nothing running, concurrent replays
 of one operator get their own sink tables, the session's shuffle
 partition count survives the replay scope, and no other module grows
-its own memory sink back."""
+its own memory sink, streaming query start or GroupState protocol
+back."""
 
 from __future__ import annotations
 
 import pathlib
+import re
 
 import pytest
 
@@ -82,3 +84,31 @@ def test_memory_sink_only_in_the_runner():
         for p in pkg.rglob("*.py")
     }
     assert {k: v for k, v in sites.items() if v} == {"sources/files.py": 1}
+
+
+def _sites(pattern: str) -> set[str]:
+    """Package modules (relative paths) whose source matches ``pattern``."""
+    pkg = pathlib.Path(files.__file__).resolve().parents[1]
+    return {
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if re.search(pattern, p.read_text())
+    }
+
+
+def test_group_state_only_in_the_adapter_and_the_timer_operators():
+    # every no-timeout stateful operator is a pure fold behind
+    # streaming/keyfold.fold_by_key; only the two operators with timers
+    # speak the GroupState protocol themselves
+    allowed = {"streaming/keyfold.py", "streaming/timers.py", "streaming/neardup.py"}
+    assert _sites(r"applyInPandasWithState\(") == allowed
+    assert _sites(r"import GroupState") == allowed
+
+
+def test_streaming_queries_start_only_in_drain_replay_and_the_watcher():
+    # ``m.start()`` is a regex match offset, not a query
+    assert _sites(r"(?<!\bm)\.start\(\)") == {"sources/files.py", "watcher.py"}
+    assert _sites(r"await_or_raise\(") == {"sources/files.py"}
+    assert _sites(r"\.trigger\(availableNow=True\)") == {
+        "sources/files.py", "watcher.py"
+    }

@@ -284,6 +284,8 @@ def test_token_budget_prefix_recompute(r8_results, spark, sf_dir):
 def test_token_budget_split_and_twin_equal(spark, sf_dir):
     """Any micro-batch split converges to the same admission (state
     carries the running totals)."""
+    from pyspark.sql import functions as F
+
     from conftest import replay_parallel
     from kinesis_log_watcher_spark.queries.base import load
     from kinesis_log_watcher_spark.sources.files import stage_replay_files
@@ -294,12 +296,14 @@ def test_token_budget_split_and_twin_equal(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     # three mtime-ordered files split by doc_id range (the determinism
     # contract: file order == doc_id order)
+    doc_id = F.col("doc_id")
+    part = (
+        F.when((doc_id >= 0) & (doc_id < 150), 0)
+        .when((doc_id >= 150) & (doc_id < 300), 1)
+        .when((doc_id >= 300) & (doc_id < 10**9), 2)
+    )
     d = stage_replay_files(
-        [
-            docs.filter(f"doc_id >= {lo} AND doc_id < {hi}")
-            for lo, hi in [(0, 150), (150, 300), (300, 10**9)]
-        ],
-        prefix="t_tokbudget_",
+        docs.withColumn("part", part), "part", 3, prefix="t_tokbudget_"
     )
 
     def rows(df):
@@ -632,10 +636,12 @@ def test_stream_ddsketch_any_split_equals_batch(spark):
         [(7, 901.82), (8, 250000.0), (9, 33.0)],
     ]
     d = stage_replay_files(
-        [
-            spark.createDataFrame(rows, "l_orderkey long, l_extendedprice double")
-            for rows in batches
-        ],
+        spark.createDataFrame(
+            [(*r, i) for i, rows in enumerate(batches) for r in rows],
+            "l_orderkey long, l_extendedprice double, part int",
+        ),
+        "part",
+        len(batches),
         prefix="t_dd_",
     )
 

@@ -31,9 +31,16 @@ def _mk_docs(spark, rows):
 
 def _stage_stream(spark, batches):
     """mtime-ordered single-file batches in a fresh replay directory."""
-    return stage_replay_files(
-        [_mk_docs(spark, batch) for batch in batches], prefix="t_neardup_"
+    df = spark.createDataFrame(
+        [
+            (i, t, "en", "synth", len(t), b)
+            for b, batch in enumerate(batches)
+            for i, t in batch
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long, "
+        "part int",
     )
+    return stage_replay_files(df, "part", len(batches), prefix="t_neardup_")
 
 
 def _as_rows(df):

@@ -18,15 +18,15 @@ def _mk(values, eid0=0):
 
 
 def test_topk_fold_updates_board_across_batches():
-    from conftest import fold_batches
-    from kinesis_log_watcher_spark.streaming.topk import _topk_updates
+    from kinesis_log_watcher_spark.streaming.topk import fold
 
     b1 = _mk([(500, 7), (900, 8), (100, 9)], eid0=0)
     b2 = _mk([(700, 7), (900, 5), (50, 6)], eid0=3)
-    out = [
-        list(zip(pdf["value_milli"], pdf["event_id"]))
-        for pdf in fold_batches(_topk_updates(3), ("click",), [b1, b2])
-    ]
+    out = []
+    state = None
+    for b in (b1, b2):
+        state, pdf = fold("click", state, b, k=3)
+        out.append(list(zip(pdf["value_milli"], pdf["event_id"])))
 
     # batch 1: board is all three rows ranked; batch 2: the 900-tie
     # breaks by event_id (1 before 4), 700 displaces 500
@@ -55,13 +55,13 @@ def test_topk_replay_equals_batch_any_split(spark):
         [(6, "click", 7, 9.9), (7, "view", 8, 0.5), (8, "click", 9, 8.0)],
     ]
     d = stage_replay_files(
-        [
-            spark.createDataFrame(
-                rows,
-                "event_id long, event_type string, user_id long, value double",
-            )
-            for rows in rows_by_batch
-        ],
+        spark.createDataFrame(
+            [(*r, i) for i, rows in enumerate(rows_by_batch) for r in rows],
+            "event_id long, event_type string, user_id long, value double, "
+            "part int",
+        ),
+        "part",
+        len(rows_by_batch),
         prefix="t_topk_",
     )
 

@@ -17,14 +17,16 @@ from kinesis_log_watcher_spark.streaming.tws import (
 T0 = datetime(2024, 1, 1)
 
 
-def _mk_events(spark, rows):
+def _mk_events(spark, batches):
+    """One events frame; ``part`` is the row's batch index."""
     return spark.createDataFrame(
         [
-            (i, T0 + timedelta(minutes=i), uid, "click", val, "{}")
-            for i, (uid, val) in enumerate(rows)
+            (i, T0 + timedelta(minutes=i), uid, "click", val, "{}", b)
+            for b, batch in enumerate(batches)
+            for i, (uid, val) in enumerate(batch)
         ],
         "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
+        "value double, props string, part int",
     )
 
 
@@ -39,7 +41,7 @@ def event_files(spark):
         [(2, 1.0), (1, 4.0)],
     ]
     return stage_replay_files(
-        [_mk_events(spark, batch) for batch in batches], prefix="t_tws_"
+        _mk_events(spark, batches), "part", len(batches), prefix="t_tws_"
     )
 
 
