@@ -69,6 +69,31 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def timed_run(spark, query, sf_dir: str) -> float:
+    """Seconds to build and materialize one query. Afterwards, failed or
+    not, drops what it left behind, so every timing is cold-cache and
+    late queries pay no accumulated memory pressure: the intermediates
+    queries persist() for internal reuse, and the memory-sink tables of
+    streaming replays (full result sets pinned on the JVM heap; ~25 of
+    them over the full registry read r6's 1.7 s replays 8-22 s late)."""
+    t0 = time.perf_counter()
+    try:
+        materialize(query.fn(spark, sf_dir))
+        return round(time.perf_counter() - t0, 4)
+    finally:
+        spark.catalog.clearCache()
+        for tbl in spark.catalog.listTables():
+            if tbl.isTemporary:
+                spark.catalog.dropTempView(tbl.name)
+
+
+def failure_text(exc: BaseException) -> str:
+    """``ExcType: first line of the message``, short enough for the
+    stdout line (a py4j error's message carries a JVM stack trace)."""
+    lines = str(exc).strip().splitlines()
+    return f"{type(exc).__name__}: {lines[0] if lines else ''}"[:200]
+
+
 def _cpu_ticks() -> dict[str, int]:
     """Aggregate /proc/stat cpu counters. ``steal`` is the direct
     hypervisor-contention signal loadavg cannot see (loadavg counts our
@@ -336,30 +361,21 @@ def main() -> None:
     )
     for warm in warm_set:
         if warm in reg:
-            materialize(reg[warm].fn(spark, sf_dir))
-    spark.catalog.clearCache()
-    for tbl in spark.catalog.listTables():
-        if tbl.isTemporary:
-            spark.catalog.dropTempView(tbl.name)
+            try:
+                timed_run(spark, reg[warm], sf_dir)
+            except Exception:  # noqa: BLE001 - every warm query is also timed, which records it
+                pass
 
+    # One query that raises must not lose the run's other timings: it
+    # is recorded in ``failed``, left out of ``total``, and the run
+    # still prints its line and then exits non-zero.
     timings: dict[str, float] = {}
+    failed: dict[str, str] = {}
     for name in names:
-        t0 = time.perf_counter()
-        materialize(reg[name].fn(spark, sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 4)
-        # Queries persist() intermediates they reuse internally; drop
-        # them between queries so every timing is cold-cache and late
-        # queries don't pay accumulated executor-memory pressure.
-        spark.catalog.clearCache()
-        # Streaming replays leave their memory-sink tables (full result
-        # sets pinned on the JVM heap) registered for the session's
-        # lifetime; ~25 of them accumulate over the full registry and
-        # the resulting GC pressure lands on whichever queries run late
-        # (r6: 1.7s streaming replays read 8-22s late in a full run,
-        # normal in isolation). Drop them as soon as they're timed.
-        for tbl in spark.catalog.listTables():
-            if tbl.isTemporary:
-                spark.catalog.dropTempView(tbl.name)
+        try:
+            timings[name] = timed_run(spark, reg[name], sf_dir)
+        except Exception as exc:  # noqa: BLE001 - recorded and reported below
+            failed[name] = failure_text(exc)
 
     total = round(sum(timings.values()), 4)
 
@@ -379,13 +395,11 @@ def main() -> None:
         p = prior.get(name)
         if p is None or cold < 1.0 or cold <= 1.5 * p:
             continue
-        t0 = time.perf_counter()
-        materialize(reg[name].fn(spark, sf_dir))
-        rerun = round(time.perf_counter() - t0, 4)
-        spark.catalog.clearCache()
-        for tbl in spark.catalog.listTables():
-            if tbl.isTemporary:
-                spark.catalog.dropTempView(tbl.name)
+        try:
+            rerun = timed_run(spark, reg[name], sf_dir)
+        except Exception as exc:  # noqa: BLE001 - recorded and reported below
+            failed[name] = "rerun " + failure_text(exc)
+            continue
         reruns[name] = {"prior": p, "cold": cold, "rerun": rerun}
 
     load_after = os.getloadavg()
@@ -437,6 +451,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "n_queries": len(timings),
+                "failed": failed,
                 "reruns": reruns,
                 # run-order index per query, so a cross-round comparison
                 # can tell a rotation-induced cold-front move from a
@@ -479,6 +494,7 @@ def main() -> None:
                 "queries_omitted": len(timings) - len(shown),
                 "queries_file": os.path.basename(full_path),
                 "n_queries": len(timings),
+                "failed": failed,
                 "sf": sf,
                 "headline_set": "r12",
                 # biggest swings only — the full set is in the archive
@@ -508,6 +524,8 @@ def main() -> None:
     sys.stdout.flush()
     os.dup2(real_stdout, 1)
     print(line, flush=True)
+    if failed:
+        sys.exit(f"bench.py: {len(failed)} queries failed: {sorted(failed)}")
 
 
 if __name__ == "__main__":

@@ -19,8 +19,8 @@ narrow (shuffle-free) map over however many partitions the source has.
 
 ``Log`` is intentionally NOT materialized as a parsed column: the faithful
 translation of Go's ``interface{}`` payload is schema-on-read — the
-compiled template parses ``LogEntry`` once per row into a struct of only
-the keys it reads — which also keeps the scan schema narrow. See
+compiled template parses ``LogEntry`` once per row into the values of
+only the keys it reads — which also keeps the scan schema narrow. See
 template.py for the access semantics.
 """
 
@@ -168,13 +168,3 @@ def guarded_array_length(s: Column) -> Column:
     """``json_array_length(s)``: NULL unless ``s`` is a JSON array."""
     return F.when(json_opens(s, "["), F.json_array_length(s))
 
-
-def is_json_object(log_entry: Column) -> Column:
-    """True iff the payload parses as a JSON *object*.
-
-    Used for the reference's template-error semantics: ``{{.Log.Field}}``
-    errors (and the row is dropped, main.go:283-287) when ``Log`` is nil
-    (unparseable payload, main.go:276-277) or not an object.
-    ``json_object_keys`` returns NULL for invalid JSON and non-objects.
-    """
-    return guarded_object_keys(log_entry).isNotNull()

@@ -74,10 +74,11 @@ reference's execution semantics declaratively:
   ``CompiledTemplate.apply`` and watcher.py.
 - unparseable payload → ``Log`` is nil (main.go:276-279); any
   ``{{.Log.x}}`` then errors → row dropped.
-- the payload is parsed ONCE per row (a hoisted ``from_json`` into a
-  struct of exactly the top-level keys the template reads — see
-  ``_hoisted_payload``); a key repeated at the top level of the payload
-  renders its LAST value, as Go's ``encoding/json`` decodes it.
+- the payload is parsed ONCE per row (a hoisted ``klw_payload`` call,
+  the in-repo Java scan in ``jvm/PayloadScan.java``, which returns the
+  top-level keys the template reads exactly as ``from_json`` would —
+  see ``_hoisted_payload``); a key repeated at the top level of the
+  payload renders its LAST value, as Go's ``encoding/json`` decodes it.
 - a payload, or a ``{{range}}``/``slice``/``len``/field-access target,
   whose first character after JSON whitespace cannot open the value
   being parsed (``{`` for an object, ``[`` for an array) is never
@@ -119,13 +120,17 @@ Documented divergences (all on contrived payloads, none load-bearing):
 - a ``printf`` numeric verb (%d/%f/…) whose argument doesn't parse is a
   render error (Go renders a ``%!d(...)`` marker instead).
 
-Everything is built-ins (``concat``, ``from_json``, ``get_json_object``,
-``json_object_keys``, ``startswith``, a timestamp-to-string cast,
-``date_format``, ``format_string``): the whole render — control flow
-included, compiled to ``CASE WHEN`` — is a codegen'd narrow projection.
-No Python in the per-row path, no shuffle, linear scale-out with input
-partitions. The envelope and ``{{.Timestamp}}`` cost no regex and, in a
-UTC session, no ``date_format`` per row (``envelope.short_host_id``,
+Everything but the payload scan is built-ins (``concat``,
+``from_json``, ``get_json_object``, ``json_object_keys``,
+``startswith``, a timestamp-to-string cast, ``date_format``,
+``format_string``); the scan is one Java UDF per row, loaded into the
+session on the first plan that reads ``.Log`` (``jvm``), because
+``from_json`` builds a reader and a parser per row and was most of the
+render cost. The whole render — control flow included, compiled to
+``CASE WHEN`` — is a narrow projection: no Python in the per-row path,
+no shuffle, linear scale-out with input partitions. The envelope and
+``{{.Timestamp}}`` cost no regex and, in a UTC session, no
+``date_format`` per row (``envelope.short_host_id``,
 ``envelope.json_opens``, ``functions.strftime.go_default_render_col``).
 """
 
@@ -138,7 +143,6 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from kinesis_log_watcher_spark.envelope import (
     ENVELOPE_ALIASES,
@@ -152,6 +156,7 @@ from kinesis_log_watcher_spark.functions.strftime import (
     go_layout_col,
     strftime_or_fallback,
 )
+from kinesis_log_watcher_spark.jvm import FUNCTION, ensure_payload_function
 
 # The reference's default template (main.go:65).
 DEFAULT_TEMPLATE = "{{.ShortHostId}} {{.Timestamp}} {{.LogEntry}}"
@@ -192,7 +197,7 @@ class CompiledTemplate:
     """A template compiled to (rendered line, render-error condition).
 
     ``line``/``error`` read the *hoisted* ``prep`` columns: the ``.Log``
-    payload parse (ONE ``from_json`` per row into a struct of exactly the
+    payload parse (ONE ``klw_payload`` call per row for exactly the
     top-level keys the template reads) and every hoistable ``{{range}}``
     collection parse, so the JSON is parsed once per row instead of once
     per reference site (higher-order functions are CodegenFallback, so
@@ -231,6 +236,8 @@ class CompiledTemplate:
         # refuses to merge them.
         payload = {n: c for n, c in self.prep.items() if n.endswith("_payload")}
         rest = {n: c for n, c in self.prep.items() if not n.endswith("_payload")}
+        if payload:
+            ensure_payload_function(df.sparkSession)
         out = df
         for stage in (payload, rest):
             if stage:
@@ -526,12 +533,6 @@ class _Ctx:
 # Unique prep-column prefix per compile, so two templates can share a df.
 _COMPILE_IDS = itertools.count(1)
 
-# Corrupt-record field of the payload struct. Template keys are \w+, so
-# '#' keeps this name off every key a template can read (a payload key
-# of this name is ignored: from_json excludes the field from parsing).
-_CORRUPT = "#corrupt"
-
-
 class _Compiler:
     """Per-compile state: the {{define}} bodies being inlined, the
     current inline depth of each (recursion guard), the hoisted prep
@@ -553,15 +554,14 @@ class _Compiler:
         """Top-level payload field ``key`` as JSON text (null if absent)."""
         if key not in self.log_keys:
             self.log_keys.append(key)
-        return self._payload[f"f{self.log_keys.index(key)}"]
+        return self._payload.getItem(self.log_keys.index(key))
 
     def not_object(self) -> Column:
         """True when the payload is not a JSON object (Log is nil or a
         non-object; main.go:276-279) — one shared Column, so every
         ``.Log`` access ORs the same condition."""
         if self._not_object is None:
-            pay = self._payload
-            self._not_object = pay.isNull() | pay["bad"].isNotNull()
+            self._not_object = self._payload.isNull()
         return self._not_object
 
     def finish(self) -> dict[str, Column]:
@@ -697,56 +697,47 @@ def _json_path(parts: list[str]) -> str:
 
 def _hoisted_payload(keys: list[str]) -> Column:
     """The shared whole-payload parse, hoisted into a prep column: ONE
-    ``from_json`` per row into a struct of exactly the top-level keys the
-    template reads, every field ``string``. A string field keeps the
-    leaf's JSON text (numbers normalized, nested values re-serialized
-    compactly — the bytes ``get_json_object`` gives), so every ``.Log``
-    access reads a struct field instead of re-parsing ``LogEntry`` per
-    reference site (``get_json_object``/``json_object_keys`` each
-    re-parse the whole payload, and inside higher-order functions —
-    CodegenFallback, interpreted — Catalyst never dedupes them).
+    ``klw_payload`` call per row (``jvm/PayloadScan.java``), an
+    ``array<string>`` with the JSON text of each top-level key the
+    template reads, in ``keys`` order, or NULL when the payload is not a
+    JSON object. Every ``.Log`` access reads an element instead of
+    re-parsing ``LogEntry`` per reference site (``get_json_object`` /
+    ``json_object_keys`` each re-parse the whole payload, and inside
+    higher-order functions — CodegenFallback, interpreted — Catalyst
+    never dedupes them).
 
-    The object test is the corrupt-record field: a null struct (empty
-    or null input) or a set ``#corrupt`` field (invalid JSON, or valid
-    JSON that is not an object) means Log is not a JSON object.
+    The values are exactly those of a guarded ``from_json`` into a
+    struct of ``string`` fields: the same Jackson factory (Spark's
+    ``JSONOptions``), a string leaf as its text, other leaves
+    re-serialized by that factory's generator (numbers normalized,
+    nested values compact), the LAST value of a repeated top-level key
+    (as Go's ``encoding/json``), trailing data ignored. Keys match
+    case-sensitively, as Go's map lookup does. A payload whose first
+    character after JSON whitespace is not ``{`` is NULL without
+    entering the parser (``envelope.json_opens``): Jackson reports a
+    bad record by throwing, and log streams carry many non-object lines.
 
-    Fields are read by position: the struct is cast to ``f0…fN, bad``
-    because Catalyst resolves struct fields case-insensitively, so
-    ``.Log.level`` and ``.Log.Level`` in one template would otherwise be
-    ambiguous (the parse itself matches keys case-sensitively, as Go's
-    map lookup does).
+    Why a UDF: ``from_json`` builds a ``ByteArrayInputStream``, an
+    ``InputStreamReader`` and a fresh parser per row, then runs the
+    generic struct converter. On perfbench ``render_batch`` (1M rows,
+    half of them non-objects, invalid JSON, invalid UTF-8 or empty;
+    4 vCPUs) the scan took the median ``rows_per_s`` from 0.77M to
+    1.20M over 10 alternating pairs (+57%). Per million rows, noop
+    write, median of 6 warm runs: guarded ``from_json`` 1.36 s, this
+    scan 0.77 s, the same UDF returning constants without parsing
+    0.54 s, and a template with no ``.Log`` 0.60 s. So Jackson's
+    parse of the objects is now about 0.23 s of a 0.77 s call.
 
-    Only a payload whose first character after JSON whitespace is
-    ``{`` reaches the parse (``envelope.guarded_from_json``); every other
-    row gets a null struct, which reads as "not an object" exactly as
-    the corrupt record the parse would have produced. The parse reports
-    that corrupt record by throwing and catching one exception per row,
-    and log streams carry many non-object lines: on perfbench
-    ``render_batch`` (1M rows, half of them non-objects, invalid JSON,
-    invalid UTF-8 or empty) the unguarded parse was 0.85-0.88 s of a
-    1.2 s call; the guard halves the parse (0.80 -> 0.40 s per million
-    rows, noop write, 4 vCPUs) and the whole call reads a median 1.37M
-    rows/s instead of 0.84M (10 alternating pairs).
-
-    Duplicate keys: the struct keeps the LAST value of a repeated
-    top-level key, as Go's ``encoding/json`` does. Access below the top
-    level (``.Log.a.b``) and ``{{range .Log…}}`` still go through
-    ``get_json_object`` / ``from_json`` maps, where the FIRST duplicate
-    wins — a documented divergence of the contrived-payload class."""
-    fields = [StructField(k, StringType()) for k in keys]
-    schema = StructType(fields + [StructField(_CORRUPT, StringType())])
-    positional = StructType(
-        [StructField(f"f{i}", StringType()) for i in range(len(keys))]
-        + [StructField("bad", StringType())]
-    )
-    return guarded_from_json(
-        F.col("LogEntry"), schema, {"columnNameOfCorruptRecord": _CORRUPT}
-    ).cast(positional)
+    Access below the top level (``.Log.a.b``) and ``{{range .Log…}}``
+    still go through ``get_json_object`` / ``from_json`` maps, where
+    the FIRST duplicate wins — a documented divergence of the
+    contrived-payload class."""
+    return F.call_function(FUNCTION, F.col("LogEntry"), F.lit("\n".join(keys)))
 
 
 def _compile_log_access(parts: list[str], comp: _Compiler) -> _Expr:
     """Access ``{{.Log.p1.p2…}}`` into the dynamic JSON payload, via the
-    shared payload struct (``_hoisted_payload``).
+    shared payload scan (``_hoisted_payload``).
 
     Faithful Go semantics (main.go:273-279 + text/template map rules):
     - payload not a JSON object (incl. unparseable) → render error

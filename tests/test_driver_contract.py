@@ -63,6 +63,48 @@ def test_bench_emits_single_json_line(tmp_path):
     assert set(full["queries"]) == set(subset.split(","))
 
 
+def test_bench_prints_its_line_when_one_query_fails(tmp_path):
+    # A query that raises is recorded as "failed" (left out of the
+    # total) and the other queries keep their timings; the run still
+    # prints its one line, then exits non-zero. The failing builder is
+    # planted through a patched registry, and it is also the subset's
+    # warm-up query.
+    script = tmp_path / "run_bench.py"
+    script.write_text(
+        "import dataclasses, runpy, sys\n"
+        "import kinesis_log_watcher_spark.queries as q\n"
+        "real = q.registry\n"
+        "def boom(spark, sf_dir):\n"
+        "    raise RuntimeError('planted failure')\n"
+        "def patched():\n"
+        "    reg = dict(real())\n"
+        "    reg['pricing_summary'] = dataclasses.replace(reg['pricing_summary'], fn=boom)\n"
+        "    return reg\n"
+        "q.registry = patched\n"
+        "sys.argv = ['bench.py', '--only', 'pricing_summary,top_orders']\n"
+        "runpy.run_path('bench.py', run_name='__main__')\n"
+    )
+    full_out = tmp_path / "bench_full.json"
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_BENCH_FULL_PATH=str(full_out),
+        PYTHONPATH=root,
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True, text=True, timeout=560, env=env, cwd=root,
+    )
+    assert out.returncode != 0, out.stderr[-2000:]
+    lines = [l for l in out.stdout.splitlines() if l.strip()]
+    assert len(lines) == 1, out.stderr[-2000:]
+    for doc in (json.loads(lines[0]), json.loads(full_out.read_text())):
+        assert doc["failed"] == {"pricing_summary": "RuntimeError: planted failure"}
+        assert set(doc["queries"]) == {"top_orders"}
+        assert doc["value"] == doc["queries"]["top_orders"] > 0
+
+
 def test_front_order_names_all_registered():
     # _FRONT is the static verification-priority prefix; a typo'd or
     # stale name would silently drop a query from first-pass sampling.

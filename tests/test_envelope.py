@@ -2,10 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from kinesis_log_watcher_spark.envelope import is_json_object, with_envelope
+from kinesis_log_watcher_spark.envelope import with_envelope
 from kinesis_log_watcher_spark.sources.fixture import kinesis_records_fixture
+from kinesis_log_watcher_spark.template import compile_template
 
 
 def test_envelope_schema(spark):
@@ -44,13 +43,16 @@ def test_log_entry_is_raw_payload_text(spark):
     assert any(t == "" for t in texts)  # empty payload stays empty string
 
 
-def test_is_json_object_lenient(spark):
-    """main.go:273-279: object parses; array/scalar/invalid/empty → not object."""
+def test_log_field_errors_unless_payload_is_object(spark):
+    """main.go:273-279: an object parses; an array, scalar, invalid or
+    empty payload leaves Log nil, so ``{{.Log.level}}`` is a render error."""
     env = with_envelope(kinesis_records_fixture(spark, n_records=120))
-    rows = env.select("LogEntry", is_json_object(F.col("LogEntry")).alias("ok")).collect()
+    rows = compile_template("{{.Log.level}}").apply_with_errors(
+        env, keep=("LogEntry",)
+    ).collect()
     for r in rows:
         expect = r["LogEntry"].startswith("{")
-        assert r["ok"] == expect, r["LogEntry"][:40]
+        assert r["_render_error"] != expect, r["LogEntry"][:40]
 
 
 def test_envelope_is_narrow_no_shuffle(spark):

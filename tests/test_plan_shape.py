@@ -208,10 +208,11 @@ def test_template_hoist_pinned_evaluate_once(spark, reg):
     round-2 6.7s regression on template_range_render); the gated prep
     columns (template.CompiledTemplate._gate) pin evaluate-once."""
     plan = plan_of(spark, reg, "template_range_render")
-    # one whole-payload parse + one array-attempt + one map-attempt per
-    # range collection (two ranges) = 5 from_json nodes; a collapsed
-    # plan shows 8+ (each referenced from filter AND project)
-    assert plan.count("from_json") == 5, plan.count("from_json")
+    # one whole-payload scan (klw_payload) + one array-attempt and one
+    # map-attempt from_json per range collection (two ranges); a
+    # collapsed plan shows each twice (referenced from filter AND project)
+    assert plan.count("klw_payload") == 1, plan.count("klw_payload")
+    assert plan.count("from_json") == 4, plan.count("from_json")
     # the hoisted projections survive as named prep columns
     assert "_payload" in plan
     assert "_items_" in plan

@@ -2,8 +2,9 @@
 ``apply_with_errors`` and a one-shot streaming ``watch()`` — which must
 agree on every line and on which rows are render errors.
 
-The kernel parses ``.Log`` once per row into a struct of the top-level
-keys the template reads, behind a byte-level first-character guard,
+The kernel parses ``.Log`` once per row into the values of the
+top-level keys the template reads (one Java UDF call, which returns no
+values without parsing when the first character cannot open an object),
 renders ``.Timestamp`` as a timestamp-to-string cast plus a zone that
 is a literal in a UTC session, and derives ShortHostId with
 ``substring_index`` and ``startswith``; these cases pin its behaviour
@@ -92,7 +93,7 @@ def _render_three_ways(spark, tmp_path, template, rows):
 
 def test_duplicate_keys_last_wins(spark, tmp_path):
     # Go's encoding/json keeps the LAST value of a repeated key (so does
-    # Python's json module); the struct parse does the same.
+    # Python's json module); the payload scan does the same.
     got = _render_three_ways(
         spark, tmp_path, "{{.Log.level}}|{{.Log.n}}",
         [
@@ -667,3 +668,199 @@ def test_concurrent_compiles_do_not_cross_wire(spark):
     env = with_envelope(_raw(spark, [(TS, payload)]))
     for i, c in enumerate(compiled):
         assert [r.line for r in c.apply(env).collect()] == [f"{i}-12"]
+
+
+# ---------------------------------------------------------------------------
+# The payload scan (jvm/PayloadScan.java) against the guarded from_json
+# struct it replaced, kept here only as the oracle.
+# ---------------------------------------------------------------------------
+
+_SCAN_KEYS = ["a", "A", "b"]
+
+
+def _deep(depth):
+    # an object nesting arrays to a total depth of ``depth``
+    return b'{"a":' + b"[" * (depth - 1) + b"]" * (depth - 1) + b"}"
+
+
+_SCAN_EDGES = [
+    b'{"a":1e3,"b":"x"}',                       # number normalized: 1000.0
+    b'{"a":-0,"b":-0.0}',
+    b'{"a":NaN,"b":[Infinity,-Infinity]}',      # non-numeric numbers
+    b"{'a':'single','b':\"x\"}",                # single quotes
+    b'{"a":007}',                               # leading zeros rejected
+    b'{"a":"tab\there"}',                       # raw control character
+    b'{"a":"\\u0000\\ud83d\\ude00","b":"\\ud800"}',  # escapes, lone surrogate
+    b'{"b":["\\ud800", "\\udfff"]}',            # lone surrogates re-serialized
+    b'{"a":{"b":[1, 2, {"c": null}]} , "b" : true}',
+    b'{"a":1,"a":null,"b":{"x":1},"b":[2]}',    # the last duplicate wins
+    b'{"a":1}{',                                # trailing data ignored
+    b'{"a":1} x',
+    _deep(999),
+    _deep(1001),                                # past the nesting limit
+    b'{"a":"' + b"x" * 30_000_000 + b'"}',      # past the string limit
+    b'{"a":1,"z":[1,2,}',                       # bad value under a skipped key
+    b'{"a":1e400,"b":123456789012345678901234567890}',
+    b'{"a":"\xff","b":"\xc3\xa9"}',             # invalid UTF-8 → U+FFFD
+    b"\xff\xfe{",
+    b'{"a":"x","A":"y"}',                       # keys match case-sensitively
+    b'{"a":1,}',                                # trailing comma
+    b"{a:1}",                                   # unquoted field name
+    b'{"a":1 /*c*/}',                           # comments
+    b' \n{"b":false,"z":{"a":"deep"}}',         # key below the top is not read
+    b"{}",
+]
+
+
+def _scan_vs_from_json(spark, payloads):
+    """[(values, is_null)] of the scan and of the old parse, per payload,
+    with every value as bytes."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from kinesis_log_watcher_spark.jvm import ensure_payload_function
+    from kinesis_log_watcher_spark.template import _hoisted_payload
+
+    ensure_payload_function(spark)
+    s = F.col("LogEntry")
+    schema = StructType(
+        [StructField(k, StringType()) for k in _SCAN_KEYS]
+        + [StructField("#corrupt", StringType())]
+    )
+    positional = StructType(
+        [StructField(f"f{i}", StringType()) for i in range(len(_SCAN_KEYS))]
+        + [StructField("bad", StringType())]
+    )
+    old = F.when(
+        json_opens(s, "{"),
+        F.from_json(s, schema, {"columnNameOfCorruptRecord": "#corrupt"}),
+    ).cast(positional)
+    new = _hoisted_payload(_SCAN_KEYS)
+    n = len(_SCAN_KEYS)
+    rows = (
+        spark.createDataFrame([(i, bytearray(p)) for i, p in enumerate(payloads)], "i int, b binary")
+        .select("i", F.col("b").cast("string").alias("LogEntry"))
+        .select(
+            "i",
+            F.array(*[new.getItem(k).cast("binary") for k in range(n)]).alias("new"),
+            new.isNull().alias("new_null"),
+            F.array(*[old[f"f{k}"].cast("binary") for k in range(n)]).alias("old"),
+            (old.isNull() | old["bad"].isNotNull()).alias("old_null"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+
+    def values(arr, is_null):
+        return None if is_null else [None if v is None else bytes(v) for v in arr]
+
+    return [
+        (values(r.new, r.new_null), values(r.old, r.old_null)) for r in rows
+    ]
+
+
+def test_payload_scan_matches_from_json_on_edges(spark):
+    got = _scan_vs_from_json(spark, _SCAN_EDGES)
+    for payload, (new, old) in zip(_SCAN_EDGES, got):
+        assert new == old, payload[:80]
+    by = dict(zip(_SCAN_EDGES, (new for new, _ in got)))
+    assert by[b'{"a":1e3,"b":"x"}'] == [b"1000.0", None, b"x"]
+    assert by[b'{"a":NaN,"b":[Infinity,-Infinity]}'][0] == b'"NaN"'
+    assert by[_deep(999)] is not None and by[_deep(1001)] is None
+    assert by[b'{"a":"x","A":"y"}'] == [b"x", b"y", None]
+    assert by[b'{"a":"\xff","b":"\xc3\xa9"}'] == ["�".encode(), None, "é".encode()]
+
+
+def test_payload_scan_matches_from_json_on_fixture(spark):
+    from kinesis_log_watcher_spark.sources.fixture import kinesis_records_fixture
+
+    payloads = [
+        bytes(r.data or b"")
+        for r in kinesis_records_fixture(spark, n_records=240).select("data").collect()
+    ]
+    got = _scan_vs_from_json(spark, payloads)
+    assert all(new == old for new, old in got)
+    assert sum(new is not None for new, _ in got) == 120
+
+
+def _json_ish():
+    import json
+
+    from hypothesis import strategies as st
+
+    escapes = st.sampled_from(
+        ['"\\ud83d\\ude00"', '"\\ud800"', '"\\udc00x"', '"\\n\\t\\"\\\\"', '"\\u0000"', '"\\/"']
+    )
+    scalars = st.one_of(
+        st.none(), st.booleans(), st.integers(-(10**25), 10**25),
+        st.floats(allow_nan=True, allow_infinity=True), st.text(max_size=6),
+    ).map(json.dumps) | escapes
+    values = st.recursive(
+        scalars,
+        lambda inner: st.lists(inner, max_size=3).map(lambda xs: "[" + ",".join(xs) + "]")
+        | st.lists(st.tuples(st.sampled_from(['"a"', '"c"']), inner), max_size=3).map(
+            lambda kv: "{" + ",".join(f"{k}:{v}" for k, v in kv) + "}"),
+        max_leaves=6,
+    )
+    keys = st.sampled_from(['"a"', '"A"', '"b"', '"z"', '"\\u0061"', '"a "', '"é"'])
+    objects = st.lists(st.tuples(keys, values), max_size=5).map(
+        lambda kv: "{" + ", ".join(f"{k}: {v}" for k, v in kv) + "}")
+
+    def mutate(text, draw):
+        kind = draw(st.sampled_from(["none", "cut", "drop", "insert", "quote"]))
+        at = draw(st.integers(0, len(text)))
+        if kind == "cut":
+            return text[:at]
+        if kind == "drop":
+            return text[:at] + text[at + 1:]
+        if kind == "insert":
+            return text[:at] + draw(st.sampled_from(list("{}[],:\"' \\\x01"))) + text[at:]
+        if kind == "quote":
+            return text.replace('"', "'")
+        return text
+
+    @st.composite
+    def payload(draw):
+        text = mutate(draw(objects), draw)
+        raw = text.encode("utf-8", "surrogatepass")
+        prefix = draw(st.sampled_from([b"", b" ", b"\n\t", b"\xef\xbb\xbf"]))
+        suffix = draw(st.sampled_from([b"", b" trailing", b"\xff", b"}"]))
+        return prefix + raw + suffix
+
+    return payload()
+
+
+def test_payload_scan_matches_from_json_property(spark):
+    from hypothesis import HealthCheck, Phase, given, settings
+    from hypothesis import strategies as st
+
+    from conftest import property_examples
+
+    seen = []
+
+    # No shrink phase: the assertion names the failing payload, and each
+    # shrink step would cost a Spark job (minutes for a 100-payload list).
+    @settings(
+        max_examples=property_examples(8), deadline=None, derandomize=True,
+        phases=[Phase.generate],
+        suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+    )
+    @given(st.lists(_json_ish(), min_size=100, max_size=100))
+    def check(payloads):
+        seen.extend(payloads)
+        for payload, (new, old) in zip(payloads, _scan_vs_from_json(spark, payloads)):
+            assert new == old, payload
+
+    check()
+    assert len(seen) >= 300
+    assert sum(p.lstrip(b" \n\t").startswith(b"{") for p in seen) >= 100
+
+
+def test_payload_function_loads_at_first_log_compile_in_a_new_session(spark):
+    from kinesis_log_watcher_spark.jvm import FUNCTION
+
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists(FUNCTION)
+    env = with_envelope(_raw(fresh, [(TS, b'{"level":"warn"}'), (TS, b"x")]))
+    compiled = compile_template("[{{.Log.level}}]")
+    assert [r.line for r in compiled.apply(env).collect()] == ["[warn]"]
+    assert fresh.catalog.functionExists(FUNCTION)
