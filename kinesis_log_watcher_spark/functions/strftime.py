@@ -11,8 +11,9 @@ back to RFC3339Nano for every row (main.go:411-415) — mirrored here by
 ``strftime_or_fallback``.
 
 Everything compiles to built-in ``date_format`` / ``unix_timestamp``
-expressions — JVM-side, codegen'd, no UDFs — so formatting a trillion rows
-is a narrow map with no Python in the loop.
+expressions, except the default ``{{.Timestamp}}`` text, one call per
+row of the in-repo Java UDF ``klw_local_time`` — so formatting a
+trillion rows is a narrow map with no Python in the loop.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import warnings
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from kinesis_log_watcher_spark import jvm
 
 
 class FormatError(ValueError):
@@ -195,23 +198,29 @@ def go_default_render_col(ts: Column) -> Column:
     — used when a template says ``{{.Timestamp}}`` with no format (the
     reference's default template does exactly this, main.go:65).
 
-    Spark's timestamp-to-string cast already prints
+    The text is ``klw_local_time`` (``jvm/LocalTime.java``), which
+    prints exactly what Spark's timestamp-to-string cast prints:
     ``yyyy-MM-dd HH:mm:ss`` with trailing fractional zeros (and the dot)
-    trimmed, which is Go's ``.999999999``. The zone test formats a
+    trimmed, which is Go's ``.999999999``. The cast built a
+    ``ZonedDateTime`` and ran a ``DateTimeFormatter`` per row, about 15%
+    of a render's executor time; the UDF reads a fixed offset (UTC) once,
+    any other zone's offset per row, and writes the digits itself.
+
+    Both the UDF and the suffix take the zone from ``session_zone``, a
     constant instant's zone ID, which the optimizer folds, and the CASE
     with it: under UTC (``session.get_spark`` / ``ensure_session_confs``)
-    the zone is a literal and the row pays one formatter call; any other
-    zone keeps the ``date_format`` of offset and zone name. Like the
-    cast, a ``date_format`` takes the session zone when the DataFrame is
-    analyzed; ``current_timezone()`` would read it when the plan is
-    optimized, and label a plan built in another zone and run after a
-    switch to UTC as UTC.
+    the suffix is a literal; any other zone keeps the ``date_format`` of
+    offset and zone name. A ``date_format`` takes the session zone when
+    the DataFrame is analyzed; ``current_timezone()`` would read it when
+    the plan is optimized, and label a plan built in another zone and
+    run after a switch to UTC as UTC.
     """
     session_zone = F.date_format(F.timestamp_micros(F.lit(0)), "VV")
     zone = F.when(session_zone == "UTC", F.lit(" +0000 UTC")).otherwise(
         zoned_date_format(ts, " Z zzz")
     )
-    return F.concat(ts.cast("string"), zone)
+    text = jvm.call(jvm.LOCAL_TIME, F.unix_micros(ts), session_zone)
+    return F.concat(text.cast("string"), zone)
 
 
 def go_default_render(dt) -> str:

@@ -1,10 +1,18 @@
-"""The in-repo JVM code: ``PayloadScan.java``, built by the local JDK and
-loaded into a session as the SQL function ``klw_payload``.
+"""The in-repo JVM code: every ``*.java`` in this directory, built by the
+local JDK into one jar and loaded once per SparkContext as three
+Spark UDFs, which ``call`` puts into Columns:
+
+- ``klw_payload`` (``PayloadScan.java``): the template's one parse of
+  the ``.Log`` payload;
+- ``klw_short_host`` (``ShortHost.java``): ShortHostId from the
+  partition key's bytes;
+- ``klw_local_time`` (``LocalTime.java``): the text of a
+  timestamp-to-string cast, from epoch micros and a zone ID.
 
 No binary is committed: the jar is compiled on first use against the
 Spark jars the session runs (``$SPARK_HOME/jars``, else pyspark's), and
 cached under the user cache dir (``$XDG_CACHE_HOME`` or ``~/.cache``) by
-the sha256 of the source plus the names of those jars, which carry the
+the sha256 of the sources plus the names of those jars, which carry the
 Spark, Jackson and Scala versions, so a later process loads it without
 compiling.
 """
@@ -23,14 +31,26 @@ import zipfile
 from pathlib import Path
 
 import pyspark
-from pyspark.sql import SparkSession
-from pyspark.sql.types import ArrayType, StringType
+from py4j.java_gateway import JavaObject, get_java_class
+from pyspark import SparkContext
+from pyspark.sql import Column, SparkSession
+from pyspark.sql.classic.column import _to_java_column, _to_seq
+from pyspark.sql.types import ArrayType, BinaryType, DataType, StringType
 
-SOURCE = Path(__file__).with_name("PayloadScan.java")
-CLASS = "klw.PayloadScan"
-FUNCTION = "klw_payload"
+SOURCE_DIR = Path(__file__).parent
 
-# The jars the source compiles against: javac takes about half the time
+PAYLOAD = "klw_payload"
+SHORT_HOST = "klw_short_host"
+LOCAL_TIME = "klw_local_time"
+
+# UDF name (as plans print it) -> (class, return type).
+FUNCTIONS: dict[str, tuple[str, DataType]] = {
+    PAYLOAD: ("klw.PayloadScan", ArrayType(StringType())),
+    SHORT_HOST: ("klw.ShortHost", BinaryType()),
+    LOCAL_TIME: ("klw.LocalTime", BinaryType()),
+}
+
+# The jars the sources compile against: javac takes about half the time
 # it takes with the whole jars/ directory on its classpath.
 _CLASSPATH_GLOBS = (
     "jackson-core-*.jar",
@@ -40,9 +60,12 @@ _CLASSPATH_GLOBS = (
     "scala-library-*.jar",
 )
 
-# Sessions that have the function: registration is per session, and a
-# catalog lookup per plan would cost a py4j round trip each time.
-_loaded: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+# SparkContext -> {function name: its Java UserDefinedFunction}. The jar
+# is added once per SparkContext; every session of that context can run
+# the functions, because the plan carries them.
+_loaded: weakref.WeakKeyDictionary[SparkContext, dict[str, JavaObject]] = (
+    weakref.WeakKeyDictionary()
+)
 _lock = threading.Lock()
 
 
@@ -51,10 +74,20 @@ def cache_dir() -> Path:
     return Path(base) / "kinesis_log_watcher_spark"
 
 
-def cache_key(source: bytes) -> str:
-    """sha256 of the source and of the jar names it compiles against."""
-    jars = "\n".join(os.path.basename(p) for p in _classpath().split(os.pathsep))
-    return hashlib.sha256(source + b"\0" + jars.encode()).hexdigest()
+def sources() -> dict[str, bytes]:
+    """Every ``*.java`` in ``SOURCE_DIR``, by file name, in name order."""
+    return {p.name: p.read_bytes() for p in sorted(SOURCE_DIR.glob("*.java"))}
+
+
+def cache_key(srcs: dict[str, bytes]) -> str:
+    """sha256 of the sources (sorted names and their bytes) and of the
+    jar names they compile against."""
+    h = hashlib.sha256()
+    for name in sorted(srcs):
+        h.update(name.encode() + b"\0" + srcs[name] + b"\0")
+    for jar in _classpath().split(os.pathsep):
+        h.update(os.path.basename(jar).encode() + b"\n")
+    return h.hexdigest()
 
 
 def _javac(java_home: str | None) -> str:
@@ -64,8 +97,8 @@ def _javac(java_home: str | None) -> str:
     found = shutil.which("javac")
     if found is None:
         raise RuntimeError(
-            f"compiling {SOURCE.name} needs a JDK: no javac in the JVM's "
-            "JAVA_HOME or on PATH (a JRE has only java)"
+            f"compiling the Java sources in {SOURCE_DIR} needs a JDK: no javac "
+            "in the JVM's JAVA_HOME or on PATH (a JRE has only java)"
         )
     return found
 
@@ -76,24 +109,26 @@ def _classpath() -> str:
 
 
 def build_jar(cache: Path | None = None, java_home: str | None = None) -> Path:
-    """The cached jar for the current source, compiled on a cache miss."""
-    source = SOURCE.read_bytes()
+    """The cached jar for the current sources, compiled on a cache miss
+    by one ``javac`` call over all of them."""
+    srcs = sources()
     cache = cache or cache_dir()
-    jar = cache / f"payloadscan-{cache_key(source)}.jar"
+    jar = cache / f"klw-{cache_key(srcs)}.jar"
     if jar.exists():
         return jar
     javac = _javac(java_home)
     cache.mkdir(parents=True, exist_ok=True)
     with tempfile.TemporaryDirectory(dir=cache) as tmp:
-        src = Path(tmp, SOURCE.name)
-        src.write_bytes(source)
+        files = [Path(tmp, name) for name in srcs]
+        for f in files:
+            f.write_bytes(srcs[f.name])
         classes = Path(tmp, "classes")
         done = subprocess.run(
-            [javac, "-nowarn", "-d", str(classes), "-cp", _classpath(), str(src)],
+            [javac, "-nowarn", "-d", str(classes), "-cp", _classpath(), *map(str, files)],
             capture_output=True, text=True,
         )
         if done.returncode != 0:
-            raise RuntimeError(f"javac failed on {SOURCE.name}:\n{done.stderr}")
+            raise RuntimeError(f"javac failed on {', '.join(srcs)}:\n{done.stderr}")
         part = Path(tmp, "part.jar")
         with zipfile.ZipFile(part, "w") as zf:
             for cls in sorted(classes.rglob("*.class")):
@@ -102,21 +137,48 @@ def build_jar(cache: Path | None = None, java_home: str | None = None) -> Path:
     return jar
 
 
-def ensure_payload_function(spark: SparkSession) -> None:
-    """Register ``klw_payload`` in ``spark`` once: add the jar (which also
-    makes the class loadable from this thread), then
-    ``registerJavaFunction``. Sessions from ``newSession()`` start
-    without it; cloned sessions (streaming micro-batches) inherit it.
+def ensure_functions(spark: SparkSession) -> dict[str, JavaObject]:
+    """The three functions as Java ``UserDefinedFunction`` objects, built
+    once per SparkContext: add the jar, load each class from the shared
+    jar class loader (so any thread can, a foreachBatch callback's
+    included), and wrap an instance with ``functions.udf``.
 
     The jar goes through the session's resource loader, the call the
-    ``ADD JAR`` command makes: ``spark.sql`` would also initialize the
-    SQL parser, ~2 s on the first statement of a session that may
-    never run another."""
+    ``ADD JAR`` command makes, which ships it to the executors:
+    ``spark.sql`` would also initialize the SQL parser, ~2 s on the
+    first statement of a session that may never run another."""
+    sc = spark.sparkContext
     with _lock:
-        if spark in _loaded:
-            return
-        java_home = spark.sparkContext._jvm.System.getProperty("java.home")
-        jar = build_jar(java_home=java_home)
-        spark._jsparkSession.sessionState().resourceLoader().addJar(str(jar))
-        spark.udf.registerJavaFunction(FUNCTION, CLASS, ArrayType(StringType()))
-        _loaded.add(spark)
+        if sc in _loaded:
+            return _loaded[sc]
+        jar = build_jar(java_home=sc._jvm.System.getProperty("java.home"))
+        js = spark._jsparkSession
+        js.sessionState().resourceLoader().addJar(str(jar))
+        loader = js.sharedState().jarClassLoader()
+        gw = sc._gateway
+        functions = get_java_class(gw.jvm.org.apache.spark.sql.functions)
+        udfs = {}
+        for name, (cls, return_type) in FUNCTIONS.items():
+            fn = loader.loadClass(cls).getDeclaredConstructor(
+                gw.new_array(gw.jvm.java.lang.Class, 0)
+            ).newInstance(gw.new_array(gw.jvm.java.lang.Object, 0))
+            # ``udf(UDFn, DataType)`` by reflection: py4j would pick the
+            # untyped ``udf(Object, DataType)``, which Spark refuses.
+            params = gw.new_array(gw.jvm.java.lang.Class, 2)
+            params[0] = fn.getClass().getInterfaces()[0]
+            params[1] = get_java_class(gw.jvm.org.apache.spark.sql.types.DataType)
+            args = gw.new_array(gw.jvm.java.lang.Object, 2)
+            args[0] = fn
+            args[1] = js.parseDataType(return_type.json())
+            udfs[name] = functions.getMethod("udf", params).invoke(None, args).withName(name)
+        _loaded[sc] = udfs
+        return udfs
+
+
+def call(name: str, *cols: Column) -> Column:
+    """``name(*cols)`` as a Column that carries the function itself, so
+    it runs in whichever session analyzes the plan (a bare
+    session, a ``newSession()`` one) with no registration there."""
+    spark = SparkSession.active()
+    udf = ensure_functions(spark)[name]
+    return Column(udf.apply(_to_seq(spark.sparkContext, cols, _to_java_column)))

@@ -120,17 +120,20 @@ Documented divergences (all on contrived payloads, none load-bearing):
 - a ``printf`` numeric verb (%d/%f/…) whose argument doesn't parse is a
   render error (Go renders a ``%!d(...)`` marker instead).
 
-Everything but the payload scan is built-ins (``concat``,
-``from_json``, ``get_json_object``, ``json_object_keys``,
-``startswith``, a timestamp-to-string cast, ``date_format``,
-``format_string``); the scan is one Java UDF per row, loaded into the
-session on the first plan that reads ``.Log`` (``jvm``), because
+Everything is built-ins (``concat``, ``from_json``,
+``get_json_object``, ``json_object_keys``, ``startswith``,
+``date_format``, ``format_string``) except three Java UDFs from the
+in-repo jar (``jvm``), each one call per row: the payload scan, because
 ``from_json`` builds a reader and a parser per row and was most of the
-render cost. The whole render — control flow included, compiled to
-``CASE WHEN`` — is a narrow projection: no Python in the per-row path,
-no shuffle, linear scale-out with input partitions. The envelope and
-``{{.Timestamp}}`` cost no regex and, in a UTC session, no
-``date_format`` per row (``envelope.short_host_id``,
+render cost; ``{{.Timestamp}}``'s text, because the timestamp-to-string
+cast builds a ``ZonedDateTime`` and runs a ``DateTimeFormatter`` per
+row; and ShortHostId, because ``substring_index`` compares the
+separator at every byte position. Each Column carries its function,
+so any session runs the plan. The whole render — control flow
+included, compiled to ``CASE WHEN`` — is a narrow projection: no Python
+in the per-row path, no shuffle, linear scale-out with input
+partitions. The envelope and ``{{.Timestamp}}`` cost no regex and, in a
+UTC session, no ``date_format`` per row (``envelope.short_host_id``,
 ``envelope.json_opens``, ``functions.strftime.go_default_render_col``).
 """
 
@@ -156,7 +159,7 @@ from kinesis_log_watcher_spark.functions.strftime import (
     go_layout_col,
     strftime_or_fallback,
 )
-from kinesis_log_watcher_spark.jvm import FUNCTION, ensure_payload_function
+from kinesis_log_watcher_spark import jvm
 
 # The reference's default template (main.go:65).
 DEFAULT_TEMPLATE = "{{.ShortHostId}} {{.Timestamp}} {{.LogEntry}}"
@@ -236,8 +239,6 @@ class CompiledTemplate:
         # refuses to merge them.
         payload = {n: c for n, c in self.prep.items() if n.endswith("_payload")}
         rest = {n: c for n, c in self.prep.items() if not n.endswith("_payload")}
-        if payload:
-            ensure_payload_function(df.sparkSession)
         out = df
         for stage in (payload, rest):
             if stage:
@@ -732,7 +733,7 @@ def _hoisted_payload(keys: list[str]) -> Column:
     still go through ``get_json_object`` / ``from_json`` maps, where
     the FIRST duplicate wins — a documented divergence of the
     contrived-payload class."""
-    return F.call_function(FUNCTION, F.col("LogEntry"), F.lit("\n".join(keys)))
+    return jvm.call(jvm.PAYLOAD, F.col("LogEntry"), F.lit("\n".join(keys)))
 
 
 def _compile_log_access(parts: list[str], comp: _Compiler) -> _Expr:

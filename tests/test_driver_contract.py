@@ -8,6 +8,9 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+import pytest
 
 import __spark_entry__ as entrymod
 
@@ -221,3 +224,17 @@ def test_render_kernel_json_parses_are_guarded():
             and id(node) not in allowed
         ]
     assert not bare, bare
+
+
+def test_temp_root_is_per_process(tmp_path_factory):
+    """Without ``--basetemp``, each pytest process gets its own temp root
+    on tmpfs (``conftest.pytest_configure``), so two runs on one machine
+    never empty each other's directories."""
+    import conftest
+
+    if conftest._own_basetemp is None:
+        pytest.skip("--basetemp was given, or /dev/shm is not writable")
+    root = tmp_path_factory.getbasetemp()
+    assert root == Path(conftest._own_basetemp)
+    assert root.parent == Path("/dev/shm") and root.name.startswith("klw-pytest-")
+    assert root.name != "klw-pytest-tmp"

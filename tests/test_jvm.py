@@ -1,8 +1,10 @@
-"""The payload-scan jar: built by the local javac on a cache miss, cached
-by source hash, and loadable by the session's JVM."""
+"""The in-repo jar: every Java source built by one local javac call on a
+cache miss, cached by the hash of all sources, and loadable by the
+session's JVM."""
 
 from __future__ import annotations
 
+import shutil
 import subprocess
 
 import pytest
@@ -23,39 +25,52 @@ def javac_calls(monkeypatch):
     return calls
 
 
-def _loads(spark, jar):
-    """Load the class from ``jar`` alone (over Spark's own class loader,
-    which has no added jars) and check that it is a Spark UDF2."""
+def _udf_interfaces(spark, jar):
+    """{class: its interfaces}, each class loaded from ``jar`` alone (over
+    Spark's own class loader, which has no added jars)."""
     gw = spark.sparkContext._gateway
     jvm_ = gw.jvm
     urls = gw.new_array(jvm_.java.net.URL, 1)
     urls[0] = jvm_.java.io.File(str(jar)).toURI().toURL()
     loader = jvm_.java.net.URLClassLoader(urls, jvm_.org.apache.spark.util.Utils.getSparkClassLoader())
-    cls = jvm_.java.lang.Class.forName(jvm.CLASS, True, loader)
-    names = [i.getName() for i in cls.getInterfaces()]
-    loader.close()
-    return names == ["org.apache.spark.sql.api.java.UDF2"]
+    try:
+        return {
+            cls: [i.getName() for i in jvm_.java.lang.Class.forName(cls, True, loader).getInterfaces()]
+            for cls, _ in jvm.FUNCTIONS.values()
+        }
+    finally:
+        loader.close()
 
 
 def test_cold_build_then_cache_hit(spark, tmp_path, javac_calls):
     jar = jvm.build_jar(tmp_path)
     assert len(javac_calls) == 1 and javac_calls[0][0].endswith("javac")
-    assert jar.parent == tmp_path and jar.name == f"payloadscan-{jvm.cache_key(jvm.SOURCE.read_bytes())}.jar"
+    # one javac call compiles every source
+    assert sorted(a.rsplit("/", 1)[-1] for a in javac_calls[0] if a.endswith(".java")) == [
+        "LocalTime.java", "PayloadScan.java", "ShortHost.java",
+    ]
+    assert jar.parent == tmp_path and jar.name == f"klw-{jvm.cache_key(jvm.sources())}.jar"
     assert [p.name for p in tmp_path.iterdir()] == [jar.name]  # no build leftovers
-    assert _loads(spark, jar)
+    udf = "org.apache.spark.sql.api.java.UDF"
+    assert _udf_interfaces(spark, jar) == {
+        "klw.PayloadScan": [udf + "2"],
+        "klw.ShortHost": [udf + "1"],
+        "klw.LocalTime": [udf + "2"],
+    }
 
     assert jvm.build_jar(tmp_path) == jar
     assert len(javac_calls) == 1
 
 
 def test_edited_source_changes_the_cache_key(tmp_path, monkeypatch, javac_calls):
-    source = jvm.SOURCE.read_bytes()
-    assert jvm.cache_key(source + b"\n") != jvm.cache_key(source)
+    srcs = jvm.sources()
+    keys = {jvm.cache_key({**srcs, name: text + b"\n"}) for name, text in srcs.items()}
+    assert len(keys) == len(srcs) == 3 and jvm.cache_key(srcs) not in keys
     first = jvm.build_jar(tmp_path)
-    edited = tmp_path / "src" / jvm.SOURCE.name
-    edited.parent.mkdir()
-    edited.write_bytes(source + b"// edited\n")
-    monkeypatch.setattr(jvm, "SOURCE", edited)
+    copy = tmp_path / "src"
+    shutil.copytree(jvm.SOURCE_DIR, copy, ignore=shutil.ignore_patterns("*.py", "__pycache__"))
+    (copy / "ShortHost.java").write_bytes(srcs["ShortHost.java"] + b"// edited\n")
+    monkeypatch.setattr(jvm, "SOURCE_DIR", copy)
     second = jvm.build_jar(tmp_path)
     assert second != first and first.exists() and second.exists()
     assert len(javac_calls) == 2

@@ -5,11 +5,11 @@ agree on every line and on which rows are render errors.
 The kernel parses ``.Log`` once per row into the values of the
 top-level keys the template reads (one Java UDF call, which returns no
 values without parsing when the first character cannot open an object),
-renders ``.Timestamp`` as a timestamp-to-string cast plus a zone that
-is a literal in a UTC session, and derives ShortHostId with
-``substring_index`` and ``startswith``; these cases pin its behaviour
-on the inputs where those choices could diverge from the reference or
-from the regex and ``date_format`` forms they replaced.
+renders ``.Timestamp`` as the text of a timestamp-to-string cast (a
+second Java UDF) plus a zone that is a literal in a UTC session, and
+derives ShortHostId from the partition key's bytes (a third); these
+cases pin its behaviour on the inputs where those choices could diverge
+from the reference or from the built-in forms they replaced.
 """
 
 from __future__ import annotations
@@ -520,12 +520,18 @@ def _optimized_plan(spark, zone):
 
 def test_utc_render_plan_has_no_regex_or_date_format(spark):
     """In a UTC session the envelope, the guarded payload parse and
-    ``{{.Timestamp}}`` reach the optimized plan with no regex and no
-    ``date_format``; another zone keeps the zone's ``date_format``."""
+    ``{{.Timestamp}}`` reach the optimized plan with no regex, no
+    ``date_format``, no ``substring_index`` and no timestamp-to-string
+    cast; another zone keeps the zone's ``date_format``."""
+    import re
+
     utc = _optimized_plan(spark, "UTC")
-    for name in ("date_format", "rlike", "regexp"):
+    for name in ("date_format", "rlike", "regexp", "substring_index"):
         assert name not in utc, name
     assert "+0000 utc" in utc
+    assert "klw_short_host" in utc and "klw_local_time" in utc
+    # the only timestamp column is approximateArrivalTimestamp (Timestamp)
+    assert not re.search(r"cast\([a-z_]*timestamp#\d+ as string\)", utc), utc
     assert "date_format" in _optimized_plan(spark, "America/Los_Angeles")
 
 
@@ -624,6 +630,165 @@ def test_short_host_id_via_substring_index(spark, tmp_path):
     ]
 
 
+# ---------------------------------------------------------------------------
+# The envelope UDFs (jvm/LocalTime.java, jvm/ShortHost.java) against the
+# built-in forms they replaced, kept here only as the oracles.
+# ---------------------------------------------------------------------------
+
+_UDF_ZONES = [
+    "UTC", "America/Los_Angeles", "Europe/Amsterdam", "Asia/Kathmandu",
+    "Australia/Lord_Howe", "+05:30",
+]
+
+_NEGATIVE_FRACTIONS = [-1, -999_999, -1_000_001, -123_456_789, -86_400_000_001]
+
+
+def _transition_micros(spark, zone):
+    """Instants around the zone's first two and last four transitions
+    (the end of LMT, DST gaps and overlaps), and 40 years before the
+    first (LMT)."""
+    rules = spark._jvm.java.time.ZoneId.of(zone).getRules()
+    secs = [t.toEpochSecond() for t in rules.getTransitions()]
+    picks = secs[:2] + secs[-4:]
+    out = [(t - 86_400 * 365 * 40) * 1_000_000 for t in secs[:1]]
+    for t in picks:
+        out += [t * 1_000_000 + d for d in (0, -1, 1, -1_000_000, 999_999, -1_000_001)]
+    return out
+
+
+def _local_time_vs_cast(spark, zone, micros):
+    """[(micros, UDF text, cast text)] in a session in ``zone``."""
+    from kinesis_log_watcher_spark import jvm
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        ts = F.timestamp_micros("us")
+        session_zone = F.date_format(F.timestamp_micros(F.lit(0)), "VV")
+        rows = (
+            spark.createDataFrame([(us,) for us in micros], "us long")
+            .select(
+                "us",
+                jvm.call(jvm.LOCAL_TIME, F.unix_micros(ts), session_zone)
+                .cast("string").alias("udf"),
+                ts.cast("string").alias("cast"),
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    return [(r.us, r.udf, r.cast) for r in rows]
+
+
+@pytest.mark.parametrize("zone", _UDF_ZONES)
+def test_local_time_matches_cast_on_edges(spark, zone):
+    """``klw_local_time`` prints the cast's text at the year edges, around
+    the zone's transitions, in the LMT era, on negative micros with a
+    fraction, and NULL for NULL."""
+    micros = _EDGE_MICROS + _NEGATIVE_FRACTIONS + _transition_micros(spark, zone)
+    rows = _local_time_vs_cast(spark, zone, micros)
+    assert len(rows) == len(micros)
+    for us, udf, cast in rows:
+        assert udf == cast, (zone, us)
+    got = {us: udf for us, udf, _ in rows}
+    assert got[None] is None
+    if zone == "UTC":
+        assert got[253402300800000000] == "+10000-01-01 00:00:00"
+        assert got[-62198755200000000] == "-0001-01-01 00:00:00"
+        assert got[-1_000_001] == "1969-12-31 23:59:58.999999"
+
+
+def test_local_time_matches_cast_property(spark):
+    """Over the whole micros range, and densely over the years the cast's
+    four-digit form covers, in every zone of the edge test."""
+    from hypothesis import HealthCheck, Phase, given, settings
+    from hypothesis import strategies as st
+
+    from conftest import property_examples
+
+    micros = st.one_of(
+        st.integers(-(2**63), 2**63 - 1),
+        st.integers(-62_135_596_800_000_000, 253_402_300_799_999_999),
+        st.none(),
+    )
+
+    @settings(
+        max_examples=property_examples(10), deadline=None, derandomize=True,
+        phases=[Phase.generate], suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(st.lists(micros, min_size=200, max_size=200))
+    def check(values):
+        for zone in _UDF_ZONES:
+            for us, udf, cast in _local_time_vs_cast(spark, zone, values):
+                assert udf == cast, (zone, us)
+
+    check()
+
+
+def _substring_index_host(s):
+    """ShortHostId as ``envelope.short_host_id`` derived it before
+    ``klw_short_host``."""
+    last = F.substring_index(s, ":", -1)
+    return (
+        F.when(last.startswith("task/"), F.substr(last, F.lit(6)))
+        .when(last.startswith("instance/"), F.substr(last, F.lit(10)))
+        .otherwise(last)
+    )
+
+
+def _short_host_vs_substring_index(spark, keys):
+    s = F.col("b").cast("string")
+    rows = (
+        spark.createDataFrame(
+            [(i, None if k is None else bytearray(k)) for i, k in enumerate(keys)],
+            "i int, b binary",
+        )
+        .select(
+            "i",
+            short_host_id(s).cast("binary").alias("udf"),
+            _substring_index_host(s).cast("binary").alias("old"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    return [(keys[r.i], r.udf, r.old) for r in rows]
+
+
+def test_short_host_matches_substring_index_property(spark):
+    """``klw_short_host`` equals the ``substring_index`` form byte for
+    byte: on arbitrary bytes, and on keys assembled from separators,
+    prefixes (repeated, cased, partial) and invalid UTF-8."""
+    from hypothesis import HealthCheck, Phase, given, settings
+    from hypothesis import strategies as st
+
+    from conftest import property_examples
+
+    parts = st.sampled_from([
+        b":", b"::", b"task/", b"instance/", b"task", b"TASK/", b"instance",
+        b"/", b"x", b"i-1", b"\xff", b"\xe2\x82", b"\xc3\xa9", b"\x00", b"",
+    ])
+    keys = st.one_of(
+        st.binary(max_size=40),
+        st.lists(parts, max_size=8).map(b"".join),
+        st.none(),
+    )
+
+    @settings(
+        max_examples=property_examples(10), deadline=None, derandomize=True,
+        phases=[Phase.generate], suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(st.lists(keys, min_size=200, max_size=200))
+    def check(values):
+        for key, udf, old in _short_host_vs_substring_index(spark, values):
+            assert udf == old, key
+
+    check()
+    fixed = _short_host_vs_substring_index(
+        spark, [None, b"task/task/x", b"a::instance/instance/", b"x:\xff:task/\xe2\x82"]
+    )
+    assert [udf for _, udf, _ in fixed] == [None, b"task/x", b"instance/", b"\xe2\x82"]
+
+
 def test_if_else_if_with_render(spark, tmp_path):
     payload = b'{"user": {"name": "ada"}, "k": 0, "lv": "b"}'
     got = _render_three_ways(
@@ -717,10 +882,8 @@ def _scan_vs_from_json(spark, payloads):
     with every value as bytes."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from kinesis_log_watcher_spark.jvm import ensure_payload_function
     from kinesis_log_watcher_spark.template import _hoisted_payload
 
-    ensure_payload_function(spark)
     s = F.col("LogEntry")
     schema = StructType(
         [StructField(k, StringType()) for k in _SCAN_KEYS]
@@ -856,11 +1019,11 @@ def test_payload_scan_matches_from_json_property(spark):
 
 
 def test_payload_function_loads_at_first_log_compile_in_a_new_session(spark):
-    from kinesis_log_watcher_spark.jvm import FUNCTION
+    from kinesis_log_watcher_spark.jvm import PAYLOAD as FUNCTION
 
     fresh = spark.newSession()
-    assert not fresh.catalog.functionExists(FUNCTION)
     env = with_envelope(_raw(fresh, [(TS, b'{"level":"warn"}'), (TS, b"x")]))
     compiled = compile_template("[{{.Log.level}}]")
     assert [r.line for r in compiled.apply(env).collect()] == ["[warn]"]
-    assert fresh.catalog.functionExists(FUNCTION)
+    # the Column carries the function: the session's catalog never has it
+    assert not fresh.catalog.functionExists(FUNCTION)
